@@ -22,11 +22,12 @@ def host_cpus() -> int:
 
 
 def driver_memory() -> str:
-    """A quarter of the host's memory, clamped to 1–2 GiB. The inputs are
-    small; a heap that fills to its cap keeps peak RSS steady run to run."""
+    """A quarter of the host's memory, clamped to 1–4 GiB. The JVM grows
+    its heap only as far as the work needs, and on these inputs that
+    stays below the cap, so peak RSS follows the program, not the cap."""
     with open("/proc/meminfo") as f:
         kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
-    return f"{max(1024, min(2048, kib // 4 // 1024))}m"
+    return f"{max(1024, min(4096, kib // 4 // 1024))}m"
 
 
 def start_session(root: str, work: str):
@@ -80,19 +81,34 @@ def jvm_pid() -> int | None:
     return None if proc is None else proc.pid
 
 
-class RssSampler:
-    """Peak summed anonymous RSS (heap, malloc, stacks; not mapped
-    files such as jars or memory-mapped shuffle blocks) of this process,
-    the JVM and the JVM's descendants (the Python worker daemon and its
-    workers). The peak is taken over a rolling median of ``window``
-    samples, so memory held for about a second counts and a lone
-    sub-second spike does not."""
+class MemorySampler:
+    """Peak memory the driver Python, the JVM and the Python workers (the
+    JVM's descendants) hold, sampled every ``interval`` seconds. A Python
+    process counts its anonymous RSS (heap, malloc, stacks; not mapped
+    files). The JVM counts its non-heap pools (metaspace, code cache)
+    plus its heap in use after the latest garbage collection: the heap's
+    RSS follows the collector's sizing, which grows toward the cap
+    whatever the program keeps, while the heap left after a collection
+    is what the program holds. The peak is taken over a rolling median of
+    ``window`` samples, so memory held for about a second counts and a
+    lone sub-second spike does not. ``peak_rss`` is the same over the
+    plain anonymous RSS of every process, JVM included."""
 
-    def __init__(self, roots: list[int], interval: float = 0.1, window: int = 9):
-        self.roots = roots
+    def __init__(self, spark, interval: float = 0.1, window: int = 9):
+        jvm = spark.sparkContext._jvm
+        mf = jvm.java.lang.management.ManagementFactory
+        self.memory = mf.getMemoryMXBean()
+        self.collectors = list(mf.getGarbageCollectorMXBeans())
+        self.heap_pools = [p.getName() for p in mf.getMemoryPoolMXBeans()
+                           if p.getType().toString() == "HEAP"]
+        self.jvm_pid = jvm_pid()
+        self.roots = [p for p in (os.getpid(), self.jvm_pid) if p]
         self.interval = interval
         self.recent: collections.deque[int] = collections.deque(maxlen=window)
-        self.peak = 0
+        self.recent_rss: collections.deque[int] = collections.deque(maxlen=window)
+        self.peak = self.peak_rss = 0
+        self._gc_counts: list[int] = []
+        self._heap_after_gc = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
@@ -114,18 +130,38 @@ class RssSampler:
                 todo.extend(children.get(pid, ()))
         return seen
 
-    def sample(self) -> int:
-        total = 0
+    def heap_after_gc(self) -> int:
+        """Heap bytes in use right after the most recent collection (read
+        again only when a collector's count has moved)."""
+        counts = [int(c.getCollectionCount()) for c in self.collectors]
+        if counts != self._gc_counts:
+            self._gc_counts = counts
+            infos = [c.getLastGcInfo() for c in self.collectors]
+            infos = [i for i in infos if i is not None]
+            if infos:
+                last = max(infos, key=lambda i: i.getEndTime())
+                after = last.getMemoryUsageAfterGc()
+                self._heap_after_gc = sum(int(after.get(p).getUsed()) for p in self.heap_pools)
+        return self._heap_after_gc
+
+    def sample(self) -> None:
+        python = jvm = 0
         for pid in self._tree():
             try:
                 with open(f"/proc/{pid}/status") as f:
-                    total += next(int(line.split()[1]) for line in f
-                                  if line.startswith("RssAnon:")) * 1024
+                    kib = next(int(line.split()[1]) for line in f if line.startswith("RssAnon:"))
             except (OSError, StopIteration, IndexError, ValueError):
                 continue
-        self.recent.append(total)
+            if pid == self.jvm_pid:
+                jvm = kib * 1024
+            else:
+                python += kib * 1024
+        held = (python + int(self.memory.getNonHeapMemoryUsage().getCommitted())
+                + self.heap_after_gc())
+        self.recent.append(held)
+        self.recent_rss.append(python + jvm)
         self.peak = max(self.peak, int(statistics.median(self.recent)))
-        return total
+        self.peak_rss = max(self.peak_rss, int(statistics.median(self.recent_rss)))
 
     def _run(self):
         while not self._stop.is_set():

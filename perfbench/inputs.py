@@ -140,7 +140,9 @@ def page_batch(rng: np.random.Generator, url_ids: np.ndarray, version: int) -> P
     urls, html, coords, counts = [], [], {}, {}
     for uid in url_ids:
         url = f"https://example.org/p/{int(uid):07d}"
-        k = int(rng.integers(1, 4))
+        # many coordinates per page: the PIP output of a small snapshot then
+        # holds enough points that its pair count hardly moves with the seed
+        k = int(rng.integers(8, 16))
         lon, lat = skewed_points(rng, k)
         metas, body, links, tags = [], [], [], []
         for lo, la in zip(lon, lat):

@@ -29,30 +29,29 @@ def contains(ring: np.ndarray, lon: np.ndarray, lat: np.ndarray) -> np.ndarray:
     return inside
 
 
-def pip_pairs(rings: list[np.ndarray], ids: np.ndarray, lon: np.ndarray,
-              lat: np.ndarray) -> list[set[int]]:
-    """For each point, the set of polygon ids containing it."""
-    out: list[set[int]] = [set() for _ in range(len(lon))]
-    for pid, ring in zip(ids, rings):
+def contained(rings: list[np.ndarray], lon: np.ndarray, lat: np.ndarray):
+    """(polygon index, indices of the points inside it) per polygon, with
+    a bounding-box prune before the ray cast."""
+    for j, ring in enumerate(rings):
         x0, y0 = ring.min(axis=0)
         x1, y1 = ring.max(axis=0)
         cand = np.flatnonzero((lon >= x0) & (lon <= x1) & (lat >= y0) & (lat <= y1))
-        if cand.size:
-            for i in cand[contains(ring, lon[cand], lat[cand])]:
-                out[i].add(int(pid))
-    return out
+        yield j, cand[contains(ring, lon[cand], lat[cand])] if cand.size else cand
+
+
+def pip_pairs(rings: list[np.ndarray], ids: np.ndarray, lon: np.ndarray,
+              lat: np.ndarray) -> list[list[int]]:
+    """For each point, the sorted ids of the polygons containing it."""
+    out: list[list[int]] = [[] for _ in range(len(lon))]
+    for j, inside in contained(rings, lon, lat):
+        for i in inside:
+            out[i].append(int(ids[j]))
+    return [sorted(p) for p in out]
 
 
 def pip_count(rings, lon, lat) -> int:
     """Total (point, polygon) containment pairs."""
-    total = 0
-    for ring in rings:
-        x0, y0 = ring.min(axis=0)
-        x1, y1 = ring.max(axis=0)
-        cand = np.flatnonzero((lon >= x0) & (lon <= x1) & (lat >= y0) & (lat <= y1))
-        if cand.size:
-            total += int(contains(ring, lon[cand], lat[cand]).sum())
-    return total
+    return sum(len(inside) for _, inside in contained(rings, lon, lat))
 
 
 def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:

@@ -99,15 +99,15 @@ class Phase:
     results: list = field(default_factory=list)   # UnitResult per completed unit
     latencies: list = field(default_factory=list)
     raised: int = 0                               # ops of units that raised
-    peak_rss: int = 0
+    peak_mem: int = 0
     storage: dict | None = None
 
 
-def run_phases(wl, inp, quota: int, phases: list[Phase]) -> None:
+def run_phases(wl, inp, units: range, phases: list[Phase]) -> None:
     """Run unit ``i`` of every phase before unit ``i + 1`` (one client,
     closed loop), so an untraced and a traced replay see the same
     warm-up state and their difference is the tracing overhead."""
-    for i in range(quota):
+    for i in units:
         for ph in phases:
             span = ph.tracer.start("unit", None, workload=wl.name, index=i) if ph.tracer else None
             u0 = time.perf_counter()
@@ -144,7 +144,7 @@ def main(argv=None) -> int:
         print(f"perfbench: the engine package is not importable from {ROOT}: {e}",
               file=sys.stderr)
         return 2
-    from harness import OpRunner, RssSampler, jvm_pid, median, start_session, stop_session
+    from harness import MemorySampler, OpRunner, median, start_session, stop_session
     from tracing import Tracer
     from workloads import WORKLOADS
 
@@ -170,23 +170,29 @@ def main(argv=None) -> int:
         w0 = time.perf_counter()
         warm_wl = type(wl)(spark, work, args.scale * wl.warm_scale)
         warm = warm_wl.generate(args.seed + WARM_SEED_OFFSET, "warm", 1)
-        run_phases(warm_wl, warm, 1, [Phase(warm_wl.start(warm, "warm"), OpRunner(spark, None))])
+        run_phases(warm_wl, warm, range(1),
+                   [Phase(warm_wl.start(warm, "warm"), OpRunner(spark, None))])
         warm_s = time.perf_counter() - w0
-        setup_s = session_s + median(gen_s) + warm_s
 
         phases.append(Phase(wl.start(inp, "untraced"), OpRunner(spark, None)))
         if args.trace:
             tracer = Tracer(uuid.uuid4().hex[:12])
             phases.append(Phase(wl.start(inp, "traced"), OpRunner(spark, tracer), tracer))
-        with RssSampler([p for p in (os.getpid(), jvm_pid()) if p]) as rss:
-            run_phases(wl, inp, quota, phases)
+        # each replay's primed units run untraced and untimed, but are checked
+        primes = [Phase(ph.state, OpRunner(spark, None)) for ph in phases]
+        run_phases(wl, inp, range(wl.primed), primes)
+        setup_s = session_s + median(gen_s) + warm_s + primes[0].wall_s
+        regime = wl.regime(inp)
+
+        with MemorySampler(spark) as mem:
+            run_phases(wl, inp, range(wl.primed, wl.primed + quota), phases)
         for ph in phases:
-            ph.peak_rss, ph.storage = rss.peak, wl.storage(ph.state)
+            ph.peak_mem, ph.storage = mem.peak, wl.storage(ph.state)
     finally:
         stop_session(spark)
 
     attempted = failed = 0
-    for ph in phases:
+    for ph in phases + primes:
         attempted += ph.raised + wl.ops_per_unit * len(ph.results)
         failed += ph.raised + sum(wl.check(inp, res) for res in ph.results)
 
@@ -194,16 +200,17 @@ def main(argv=None) -> int:
     join_s = sum(r.join_s for r in plain.results)
     tail_s, tail_pct, beyond = tail(plain.latencies) if plain.latencies else (0.0, 0.0, 0)
     e2e = {
-        "setup_s": setup_s, "wall_s": plain.wall_s, "peak_rss_mb": plain.peak_rss / 2**20,
+        "setup_s": setup_s, "wall_s": plain.wall_s, "peak_rss_mb": plain.peak_mem / 2**20,
         "join_rows_per_s": sum(r.join_rows for r in plain.results) / join_s if join_s else 0.0,
         "latency_p50_s": median(plain.latencies), "latency_tail_s": tail_s,
         "ops_per_s": wl.ops_per_unit * len(plain.results) / plain.wall_s,
     }
-    report = dict(e2e, workload=wl.name, seed=args.seed, units=quota, regime=wl.regime(inp),
-                  failed_ratio=failed / attempted, latency_tail_percentile=tail_pct,
+    report = dict(e2e, workload=wl.name, seed=args.seed, units=quota, regime=regime,
+                  failed_ratio=failed / attempted, peak_anon_rss_mb=mem.peak_rss / 2**20,
+                  latency_tail_percentile=tail_pct,
                   latency_samples=len(plain.latencies), latency_samples_beyond_tail=beyond,
                   setup_parts=dict(session_start_s=session_s, generate_write_s=median(gen_s),
-                                   warm_up_s=warm_s))
+                                   warm_up_s=warm_s, primed_s=primes[0].wall_s))
     if plain.storage:
         report.update(plain.storage)
 

@@ -10,6 +10,7 @@ file-backed tables.
 
 from __future__ import annotations
 
+import inspect
 import os
 import shutil
 from dataclasses import dataclass, field
@@ -20,11 +21,17 @@ import pyarrow.parquet as pq
 import inputs as gen
 import oracles
 
-# route budgets in the engine that these inputs sit beside (recorded in
-# each run's report so later route changes can see which side they are on)
-DRIVER_COVER_MAX_BYTES = 8 << 20
-BROADCAST_MAX_BYTES = 64 << 20
-POI_COLLECT_MAX_ROWS = 500_000
+
+def route_budgets() -> dict:
+    """The engine's route budgets these inputs sit beside, read from the
+    engine (recorded in each run's report so later route changes can see
+    which side of each gate a workload is on)."""
+    from sophox_spark.operators import knn, spatial_join
+
+    pip = inspect.signature(spatial_join.point_in_polygon_join).parameters
+    return dict(driver_cover_max_bytes=spatial_join._DRIVER_COVER_MAX_BYTES,
+                broadcast_max_bytes=pip["broadcast_max_bytes"].default,
+                poi_collect_max_rows=knn._POI_COLLECT_MAX_ROWS)
 
 
 def parquet_rows(path: str) -> int:
@@ -44,6 +51,7 @@ class Workload:
     ops_per_unit = 1           # ops counted as attempted per unit
     nominal_unit_s = 1.0       # sizes the unit quota for --seconds on a 4-core host
     warm_scale = 1.0           # warm-up input size relative to the timed inputs
+    primed = 0                 # leading units each replay runs untimed, as set-up
 
     def __init__(self, spark, work: str, scale: float = 1.0):
         self.spark = spark
@@ -100,12 +108,11 @@ class BulkGeojoin(Workload):
                     knn_check=np.sort(rng.choice(sample, min(200, len(sample)), replace=False)))
 
     def regime(self, inp) -> dict:
-        return dict(points=len(inp["lon"]), city_cell_share=gen.CITY_SHARE,
+        d = inp["dir"]
+        return dict(route_budgets(), points=len(inp["lon"]), city_cell_share=gen.CITY_SHARE,
                     polygons=len(inp["polys"].ids), polygon_wkb_bytes=inp["polys"].wkb_bytes,
-                    driver_cover_max_bytes=DRIVER_COVER_MAX_BYTES,
-                    broadcast_max_bytes=BROADCAST_MAX_BYTES, pois=len(inp["poi_lon"]),
-                    poi_collect_max_rows=POI_COLLECT_MAX_ROWS,
-                    knn_points=len(inp["knn_sample"]), is_local=False)
+                    pois=len(inp["poi_lon"]), knn_points=len(inp["knn_sample"]),
+                    is_local=self.read(f"{d}/points.parquet").isLocal())
 
     def unit(self, run, inp, state, i: int, parent=None) -> UnitResult:
         from sophox_spark.operators import knn, spatial_join, tiles
@@ -138,17 +145,23 @@ class BulkGeojoin(Workload):
         return res
 
     def check(self, inp, res: UnitResult) -> int:
-        """Failed ops among the unit's three outputs."""
+        """Failed ops among the unit's three outputs. The PIP output must
+        hold every containment pair once: its row count equals the pairs
+        over all points, and on the sample each point's polygon ids match
+        with their multiplicity."""
         failed = 0
         chk = inp["check"]
         lon, lat = inp["lon"][chk], inp["lat"][chk]
+        if "pip_total" not in inp:
+            inp["pip_total"] = oracles.pip_count(inp["polys"].rings, inp["lon"], inp["lat"])
         want = oracles.pip_pairs(inp["polys"].rings, inp["polys"].ids, lon, lat)
         t = pq.read_table(res.outputs["pip"], columns=["pt_id", "polygon_id"],
                           filters=[("pt_id", "in", chk.tolist())]).to_pydict()
-        got: dict[int, set] = {}
-        for p, g in zip(t["pt_id"], t["polygon_id"]):
-            got.setdefault(p, set()).add(g)
-        failed += any(got.get(int(p), set()) != w for p, w in zip(chk, want))
+        got: dict[int, list] = {}
+        for p, g in sorted(zip(t["pt_id"], t["polygon_id"])):
+            got.setdefault(p, []).append(g)
+        failed += (res.join_rows != inp["pip_total"]
+                   or any(got.get(int(p), []) != w for p, w in zip(chk, want)))
 
         kc = inp["knn_check"]
         want_knn = oracles.knn_ids(inp["lon"][kc], inp["lat"][kc],
@@ -176,6 +189,7 @@ class BulkGeojoin(Workload):
 class IncrementalIngest(Workload):
     name = "incremental_ingest"
     nominal_unit_s = 7.0
+    primed = 1                 # batch 0 fills the empty table; timed batches all merge
     n_buckets = 64
     recrawl_share = 0.2
 
@@ -184,9 +198,9 @@ class IncrementalIngest(Workload):
         d = os.path.join(self.work, tag)
         polys = gen.star_polygons(rng, 300)
         gen.write_polygons(f"{d}/polygons.parquet", polys)
-        per_batch = self.n(100, 5)
+        per_batch = self.n(20, 5)
         next_id, batches, input_bytes = 0, [], []
-        for b in range(n_units):
+        for b in range(self.primed + n_units):
             n_re = int(per_batch * self.recrawl_share) if b else 0
             re_ids = rng.choice(next_id, n_re, replace=False) if n_re else np.array([], int)
             ids = np.concatenate([re_ids, np.arange(next_id, next_id + per_batch - n_re)])
@@ -197,11 +211,13 @@ class IncrementalIngest(Workload):
         return dict(dir=d, polys=polys, batches=batches, input_bytes=input_bytes)
 
     def regime(self, inp) -> dict:
+        budgets = route_budgets()
         return dict(pages_per_batch=len(inp["batches"][0].urls), recrawl_share=self.recrawl_share,
-                    n_buckets=self.n_buckets, polygons=len(inp["polys"].ids),
-                    polygon_wkb_bytes=inp["polys"].wkb_bytes,
-                    driver_cover_max_bytes=DRIVER_COVER_MAX_BYTES,
-                    broadcast_max_bytes=BROADCAST_MAX_BYTES, is_local=False)
+                    n_buckets=self.n_buckets, primed_batches=self.primed,
+                    polygons=len(inp["polys"].ids), polygon_wkb_bytes=inp["polys"].wkb_bytes,
+                    driver_cover_max_bytes=budgets["driver_cover_max_bytes"],
+                    broadcast_max_bytes=budgets["broadcast_max_bytes"],
+                    is_local=self.read(f"{inp['dir']}/pages_0.parquet").isLocal())
 
     def start(self, inp, phase: str) -> dict:
         """A fresh table and manifest for one replay of the backlog."""
