@@ -8,12 +8,13 @@ import os
 import statistics
 import threading
 import time
+from typing import NamedTuple
 
 from tracing import PY_METRICS, StatusReader, Tracer
 
-OP_FIELDS = ("build_s", "action_s", "build_jobs", "action_jobs", "stages", "stages_skipped",
-             "task_s", "cpu_s", "shuffle_read_bytes", "shuffle_write_bytes", "spill_bytes",
-             "rows_out", "cached_bytes_left")
+OP_FIELDS = ("build_s", "action_s", "proc_cpu_s", "build_jobs", "action_jobs", "stages",
+             "stages_skipped", "task_s", "cpu_s", "shuffle_read_bytes", "shuffle_write_bytes",
+             "spill_bytes", "rows_out", "cached_bytes_left")
 PY_FIELDS = tuple(PY_METRICS.values())
 
 
@@ -74,6 +75,60 @@ def stop_session(spark) -> None:
         proc.wait(timeout=30)
 
 
+def process_tree(roots) -> set[int]:
+    """``roots`` and every live descendant of them."""
+    children: dict[int, list[int]] = {}
+    for name in os.listdir("/proc"):
+        if name.isdigit():
+            try:
+                with open(f"/proc/{name}/stat") as f:
+                    ppid = int(f.read().rsplit(")", 1)[1].split()[1])
+            except (OSError, IndexError, ValueError):
+                continue
+            children.setdefault(ppid, []).append(int(name))
+    seen, todo = set(), list(roots)
+    while todo:
+        pid = todo.pop()
+        if pid not in seen:
+            seen.add(pid)
+            todo.extend(children.get(pid, ()))
+    return seen
+
+
+_TICK = os.sysconf("SC_CLK_TCK")
+
+
+def cpu_seconds(pids) -> float:
+    """CPU time (user + system, of every thread, plus that of reaped
+    children) the processes ``pids`` have been given so far."""
+    ticks = 0
+    for pid in pids:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        ticks += sum(int(x) for x in fields[11:15])  # utime stime cutime cstime
+    return ticks / _TICK
+
+
+def steal_seconds() -> float:
+    """CPU time the hypervisor has taken from this machine's CPUs."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / _TICK
+
+
+class CpuClock:
+    """CPU seconds used by the run: the driver Python, the JVM and the
+    JVM's descendants (the Python workers)."""
+
+    def __init__(self):
+        self.roots = [p for p in (os.getpid(), jvm_pid()) if p]
+
+    def __call__(self) -> float:
+        return cpu_seconds(process_tree(self.roots))
+
+
 def jvm_pid() -> int | None:
     from pyspark import SparkContext
 
@@ -112,24 +167,6 @@ class MemorySampler:
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
-    def _tree(self) -> set[int]:
-        children: dict[int, list[int]] = {}
-        for name in os.listdir("/proc"):
-            if name.isdigit():
-                try:
-                    with open(f"/proc/{name}/stat") as f:
-                        ppid = int(f.read().rsplit(")", 1)[1].split()[1])
-                except (OSError, IndexError, ValueError):
-                    continue
-                children.setdefault(ppid, []).append(int(name))
-        seen, todo = set(), list(self.roots)
-        while todo:
-            pid = todo.pop()
-            if pid not in seen:
-                seen.add(pid)
-                todo.extend(children.get(pid, ()))
-        return seen
-
     def heap_after_gc(self) -> int:
         """Heap bytes in use right after the most recent collection (read
         again only when a collector's count has moved)."""
@@ -146,7 +183,7 @@ class MemorySampler:
 
     def sample(self) -> None:
         python = jvm = 0
-        for pid in self._tree():
+        for pid in process_tree(self.roots):
             try:
                 with open(f"/proc/{pid}/status") as f:
                     kib = next(int(line.split()[1]) for line in f if line.startswith("RssAnon:"))
@@ -179,33 +216,42 @@ class MemorySampler:
         self.sample()
 
 
+class Call(NamedTuple):
+    value: object
+    rows: int
+    build_s: float
+    action_s: float
+    cpu_s: float               # CPU seconds of the run's processes during build + action
+
+
 class OpRunner:
     """Runs one engine call as build (the public function returning a
     DataFrame) then action, after clearing Spark's cache. With a tracer
     it also records a span per call and the call's Spark footprint."""
 
-    def __init__(self, spark, tracer: Tracer | None):
+    def __init__(self, spark, clock: CpuClock, tracer: Tracer | None):
         self.spark = spark
+        self.clock = clock
         self.tracer = tracer
         self.reader = StatusReader(spark) if tracer is not None else None
         self.records: dict[str, list[dict]] = {}
 
-    def __call__(self, op: str, build, action, parent=None):
-        """``action(df)`` returns ``(rows_out, value)``; returns
-        ``(value, rows_out, build_s, action_s)``."""
+    def __call__(self, op: str, build, action, parent=None) -> Call:
+        """``action(df)`` returns ``(rows_out, value)``."""
         self.spark.catalog.clearCache()
         if self.tracer is None:
-            t0 = time.perf_counter()
+            c0, t0 = self.clock(), time.perf_counter()
             df = build()
             t1 = time.perf_counter()
             rows, value = action(df)
             t2 = time.perf_counter()
-            return value, rows, t1 - t0, t2 - t1
+            return Call(value, rows, t1 - t0, t2 - t1, self.clock() - c0)
         return self._traced(op, build, action, parent)
 
     def _traced(self, op, build, action, parent):
         sc = self.spark.sparkContext
         tracer, reader = self.tracer, self.reader
+        c0 = self.clock()
         span = tracer.start(op, parent)
         group = f"{tracer.run_id}/{span.span_id}"
         mark0 = reader.execution_mark()
@@ -219,10 +265,11 @@ class OpRunner:
         tracer.end(a)
         sc._jsc.clearJobGroup()
         tracer.end(span)
+        cpu_s = self.clock() - c0
         reader.sync()
         build_jobs, action_jobs = reader.jobs(f"{group}/build"), reader.jobs(f"{group}/action")
         rec = dict(build_s=b.duration, action_s=a.duration, build_jobs=len(build_jobs),
-                   action_jobs=len(action_jobs), rows_out=rows,
+                   action_jobs=len(action_jobs), rows_out=rows, proc_cpu_s=cpu_s,
                    cached_bytes_left=reader.cached_bytes())
         rec.update(reader.stage_totals(build_jobs + action_jobs))
         for f in PY_FIELDS:
@@ -238,7 +285,7 @@ class OpRunner:
                 rec["cell_join_rows"] += metrics.get("number of output rows") or 0.0
         span.attrs.update(rec)
         self.records.setdefault(op, []).append(rec)
-        return value, rows, b.duration, a.duration
+        return Call(value, rows, b.duration, a.duration, cpu_s)
 
 
 def median(values, default=0.0) -> float:

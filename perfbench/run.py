@@ -27,13 +27,15 @@ import traceback
 import uuid
 from dataclasses import dataclass, field
 
+import harness
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
-END_TO_END = {  # name -> unit; all lower-is-better except the rates
-    "setup_s": "s", "wall_s": "s", "peak_rss_mb": "MB", "join_rows_per_s": "rows/s",
-    "latency_p50_s": "s", "latency_tail_s": "s", "ops_per_s": "ops/s",
-}
+# name -> unit, all lower-is-better. Times are CPU seconds of the run's
+# processes, not wall time: the host takes CPU from this machine in
+# bursts (steal), and wall time carries those bursts into every figure.
+END_TO_END = {"setup_s": "s", "unit_cpu_s": "s", "peak_rss_mb": "MB"}
 ALL_OPS = ("point_in_polygon_join", "knn_join", "assign_point_tiles", "extract_mentions",
            "commit_batch", "read")
 PY_OPS = ("extract_mentions",)
@@ -98,25 +100,28 @@ class Phase:
     wall_s: float = 0.0                           # summed time of its units
     results: list = field(default_factory=list)   # UnitResult per completed unit
     latencies: list = field(default_factory=list)
+    cpu: list = field(default_factory=list)       # CPU seconds per completed unit
+    steal: list = field(default_factory=list)     # hypervisor-taken seconds per completed unit
     raised: int = 0                               # ops of units that raised
     peak_mem: int = 0
     storage: dict | None = None
 
 
-def run_phases(wl, inp, units: range, phases: list[Phase]) -> None:
+def run_phases(wl, inp, units: range, phases: list[Phase], clock) -> None:
     """Run unit ``i`` of every phase before unit ``i + 1`` (one client,
     closed loop), so an untraced and a traced replay see the same
     warm-up state and their difference is the tracing overhead."""
     for i in units:
         for ph in phases:
             span = ph.tracer.start("unit", None, workload=wl.name, index=i) if ph.tracer else None
-            u0 = time.perf_counter()
+            c0, s0, u0 = clock(), harness.steal_seconds(), time.perf_counter()
             try:
                 res = wl.unit(ph.runner, inp, ph.state, i, span)
             except Exception:  # an engine failure is a failed op, reported, not fatal
                 traceback.print_exc(file=sys.stderr)
                 res = None
             dt = time.perf_counter() - u0
+            dc, ds = clock() - c0, harness.steal_seconds() - s0
             if span is not None:
                 ph.tracer.end(span)
             ph.wall_s += dt
@@ -124,6 +129,8 @@ def run_phases(wl, inp, units: range, phases: list[Phase]) -> None:
                 ph.raised += wl.ops_per_unit
             else:
                 ph.latencies.append(dt)
+                ph.cpu.append(dc)
+                ph.steal.append(ds)
                 ph.results.append(res)
 
 
@@ -144,7 +151,7 @@ def main(argv=None) -> int:
         print(f"perfbench: the engine package is not importable from {ROOT}: {e}",
               file=sys.stderr)
         return 2
-    from harness import MemorySampler, OpRunner, median, start_session, stop_session
+    from harness import CpuClock, MemorySampler, OpRunner, median, start_session, stop_session
     from tracing import Tracer
     from workloads import WORKLOADS
 
@@ -158,34 +165,42 @@ def main(argv=None) -> int:
     t0 = time.perf_counter()
     spark = start_session(ROOT, work)
     session_s = time.perf_counter() - t0
+    clock = CpuClock()
+    session_cpu = clock()
     phases: list[Phase] = []
     try:
         wl = WORKLOADS[args.workload](spark, work, args.scale)
         quota = wl.quota(args.seconds)
-        gen_s = []
+        gen_s, gen_cpu = [], []
         for r in range(SETUP_REPEATS):
-            g0 = time.perf_counter()
+            c0, g0 = clock(), time.perf_counter()
             inp = wl.generate(args.seed, f"in{r}", quota)
             gen_s.append(time.perf_counter() - g0)
-        w0 = time.perf_counter()
-        warm_wl = type(wl)(spark, work, args.scale * wl.warm_scale)
-        warm = warm_wl.generate(args.seed + WARM_SEED_OFFSET, "warm", 1)
-        run_phases(warm_wl, warm, range(1),
-                   [Phase(warm_wl.start(warm, "warm"), OpRunner(spark, None))])
-        warm_s = time.perf_counter() - w0
+            gen_cpu.append(clock() - c0)
+        c0, w0 = clock(), time.perf_counter()
+        warm_wl = type(wl)(spark, work, args.scale)
+        warm = warm_wl.generate(args.seed + WARM_SEED_OFFSET, "warm", wl.warm_units)
+        run_phases(warm_wl, warm, range(wl.warm_units),
+                   [Phase(warm_wl.start(warm, "warm"), OpRunner(spark, clock, None))], clock)
+        warm_s, warm_cpu = time.perf_counter() - w0, clock() - c0
 
-        phases.append(Phase(wl.start(inp, "untraced"), OpRunner(spark, None)))
+        phases.append(Phase(wl.start(inp, "untraced"), OpRunner(spark, clock, None)))
         if args.trace:
             tracer = Tracer(uuid.uuid4().hex[:12])
-            phases.append(Phase(wl.start(inp, "traced"), OpRunner(spark, tracer), tracer))
+            phases.append(Phase(wl.start(inp, "traced"), OpRunner(spark, clock, tracer), tracer))
         # each replay's primed units run untraced and untimed, but are checked
-        primes = [Phase(ph.state, OpRunner(spark, None)) for ph in phases]
-        run_phases(wl, inp, range(wl.primed), primes)
-        setup_s = session_s + median(gen_s) + warm_s + primes[0].wall_s
+        primes = [Phase(ph.state, OpRunner(spark, clock, None)) for ph in phases]
+        run_phases(wl, inp, range(wl.primed), primes, clock)
+        prime_cpu = sum(primes[0].cpu)
+        # set-up cost: session start (the interpreter and the JVM from
+        # their start), one input generation (median of the repeats),
+        # the warm-up and the first replay's primed units
+        setup_cpu = session_cpu + median(gen_cpu) + warm_cpu + prime_cpu
+        setup_wall_s = session_s + median(gen_s) + warm_s + primes[0].wall_s
         regime = wl.regime(inp)
 
         with MemorySampler(spark) as mem:
-            run_phases(wl, inp, range(wl.primed, wl.primed + quota), phases)
+            run_phases(wl, inp, range(wl.primed, wl.primed + quota), phases, clock)
         for ph in phases:
             ph.peak_mem, ph.storage = mem.peak, wl.storage(ph.state)
     finally:
@@ -197,20 +212,31 @@ def main(argv=None) -> int:
         failed += ph.raised + sum(wl.check(inp, res) for res in ph.results)
 
     plain = phases[0]
+    join_rows = sum(r.join_rows for r in plain.results)
+    join_cpu = sum(r.join_cpu_s for r in plain.results)
     join_s = sum(r.join_s for r in plain.results)
-    tail_s, tail_pct, beyond = tail(plain.latencies) if plain.latencies else (0.0, 0.0, 0)
     e2e = {
-        "setup_s": setup_s, "wall_s": plain.wall_s, "peak_rss_mb": plain.peak_mem / 2**20,
-        "join_rows_per_s": sum(r.join_rows for r in plain.results) / join_s if join_s else 0.0,
-        "latency_p50_s": median(plain.latencies), "latency_tail_s": tail_s,
-        "ops_per_s": wl.ops_per_unit * len(plain.results) / plain.wall_s,
+        "setup_s": setup_cpu,
+        "unit_cpu_s": sum(plain.cpu) / len(plain.cpu) if plain.cpu else 0.0,
+        "peak_rss_mb": plain.peak_mem / 2**20,
     }
+    cpu_tail, cpu_pct, cpu_beyond = tail(plain.cpu) if plain.cpu else (0.0, 0.0, 0)
+    lat_tail, lat_pct, lat_beyond = tail(plain.latencies) if plain.latencies else (0.0, 0.0, 0)
+    wall = dict(wall_s=plain.wall_s, latency_p50_s=median(plain.latencies),
+                latency_tail_s=lat_tail, latency_tail_percentile=lat_pct,
+                latency_samples_beyond_tail=lat_beyond, ops_per_s=wl.ops_per_unit * len(plain.results)
+                / plain.wall_s if plain.wall_s else 0.0,
+                join_rows_per_s=join_rows / join_s if join_s else 0.0,
+                unit_s=plain.latencies, steal_s=sum(plain.steal), setup_wall_s=setup_wall_s)
     report = dict(e2e, workload=wl.name, seed=args.seed, units=quota, regime=regime,
                   failed_ratio=failed / attempted, peak_anon_rss_mb=mem.peak_rss / 2**20,
-                  latency_tail_percentile=tail_pct,
-                  latency_samples=len(plain.latencies), latency_samples_beyond_tail=beyond,
-                  setup_parts=dict(session_start_s=session_s, generate_write_s=median(gen_s),
-                                   warm_up_s=warm_s, primed_s=primes[0].wall_s))
+                  unit_cpu=plain.cpu, unit_cpu_p50_s=median(plain.cpu), unit_cpu_tail_s=cpu_tail,
+                  unit_cpu_tail_percentile=cpu_pct, unit_samples_beyond_tail=cpu_beyond,
+                  join_rows_per_cpu_s=join_rows / join_cpu if join_cpu else 0.0,
+                  wall_clock=wall,
+                  setup_cpu_parts=dict(session_start_s=session_cpu,
+                                       generate_write_s=median(gen_cpu),
+                                       warm_up_s=warm_cpu, primed_s=prime_cpu))
     if plain.storage:
         report.update(plain.storage)
 

@@ -39,7 +39,7 @@ def answer(tmp_path_factory):
 
 
 def result(out, pip_path, rows):
-    return UnitResult(rows, 1.0, dict(pip=pip_path, knn=f"{out}/knn.parquet",
+    return UnitResult(rows, 1.0, 1.0, dict(pip=pip_path, knn=f"{out}/knn.parquet",
                                       tiles=f"{out}/tiles.parquet"))
 
 

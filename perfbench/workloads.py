@@ -43,6 +43,7 @@ def parquet_rows(path: str) -> int:
 class UnitResult:
     join_rows: int             # PIP output pairs of the unit
     join_s: float              # PIP build + action time
+    join_cpu_s: float          # CPU seconds of the run's processes during the PIP call
     outputs: dict = field(default_factory=dict)
 
 
@@ -50,7 +51,7 @@ class Workload:
     name = ""
     ops_per_unit = 1           # ops counted as attempted per unit
     nominal_unit_s = 1.0       # sizes the unit quota for --seconds on a 4-core host
-    warm_scale = 1.0           # warm-up input size relative to the timed inputs
+    warm_units = 1             # untimed units on inputs from another seed, before set-up ends
     primed = 0                 # leading units each replay runs untimed, as set-up
 
     def __init__(self, spark, work: str, scale: float = 1.0):
@@ -80,7 +81,6 @@ class BulkGeojoin(Workload):
     name = "bulk_geojoin"
     ops_per_unit = 3           # PIP, kNN and tiles calls
     nominal_unit_s = 10.0
-    warm_scale = 0.2
     zooms = (10, 14)
     k = 3
 
@@ -126,22 +126,22 @@ class BulkGeojoin(Workload):
                 return parquet_rows(path), path
             return action
 
-        path, rows, b, a = run(
+        pip = run(
             "point_in_polygon_join",
             lambda: spatial_join.point_in_polygon_join(
                 self.read(f"{d}/points.parquet"), self.read(f"{d}/polygons.parquet"),
                 res=(8, 13), salt=4),
             write("pip"), parent)
-        res = UnitResult(rows, b + a, dict(pip=path))
+        res = UnitResult(pip.rows, pip.build_s + pip.action_s, pip.cpu_s, dict(pip=pip.value))
         res.outputs["knn"] = run(
             "knn_join",
             lambda: knn.knn_join(self.read(f"{d}/knn_points.parquet"),
                                  self.read(f"{d}/pois.parquet"), k=self.k, point_key="pt_id"),
-            write("knn"), parent)[0]
+            write("knn"), parent).value
         res.outputs["tiles"] = run(
             "assign_point_tiles",
             lambda: tiles.assign_point_tiles(self.read(f"{d}/points.parquet"), list(self.zooms)),
-            write("tiles"), parent)[0]
+            write("tiles"), parent).value
         return res
 
     def check(self, inp, res: UnitResult) -> int:
@@ -190,6 +190,7 @@ class IncrementalIngest(Workload):
     name = "incremental_ingest"
     nominal_unit_s = 7.0
     primed = 1                 # batch 0 fills the empty table; timed batches all merge
+    warm_units = 2             # a fill and a merge
     n_buckets = 64
     recrawl_share = 0.2
 
@@ -250,25 +251,25 @@ class IncrementalIngest(Workload):
             df.write.mode("overwrite").parquet(staged)
             return parquet_rows(staged), staged
 
-        _, n_extracted, _, _ = run(
+        n_extracted = run(
             "extract_mentions", lambda: extract.extract_mentions(self.read(f"{d}/pages_{i}.parquet")),
-            stage, parent)
+            stage, parent).rows
         version = run("commit_batch", lambda: table.commit_batch(self.read(staged), seqid=i),
-                      lambda v: (n_extracted, v), parent)[0]
+                      lambda v: (n_extracted, v), parent).value
         if run.tracer is not None:
             touched = [b for b, v in table.bucket_versions().items() if v == version]
             run.records["commit_batch"][-1].update(
                 buckets_touched_ratio=len(touched) / self.n_buckets,
                 bytes_written=gen.dir_bytes(f"{table.path}/v={version}")[1])
-        snap, n_snap, _, _ = run("read", table.read, lambda df: (df.count(), df), parent)
-        _, pairs, b, a = run(
+        snap = run("read", table.read, lambda df: (df.count(), df), parent)
+        pip = run(
             "point_in_polygon_join",
             lambda: spatial_join.point_in_polygon_join(
-                snap.where(F.col("lat").isNotNull()), self.read(f"{d}/polygons.parquet"),
+                snap.value.where(F.col("lat").isNotNull()), self.read(f"{d}/polygons.parquet"),
                 res=(8, 13), salt=4),
             lambda df: (df.count(), None), parent)
-        return UnitResult(pairs, b + a, dict(batch=i, extracted=n_extracted, snapshot=n_snap,
-                                             pairs=pairs))
+        return UnitResult(pip.rows, pip.build_s + pip.action_s, pip.cpu_s,
+                          dict(batch=i, extracted=n_extracted, snapshot=snap.rows, pairs=pip.rows))
 
     def expected(self, inp, upto: int):
         """(mentions per batch, snapshot mentions, snapshot PIP pairs) after
