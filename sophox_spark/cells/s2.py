@@ -173,16 +173,6 @@ def level_of(cell) -> np.ndarray:
     return MAX_LEVEL - bitpos // 2
 
 
-def to_token(cell) -> np.ndarray:
-    """Canonical hex token (trailing zeros stripped) for debug output."""
-    c = np.asarray(cell).astype(np.uint64)
-    out = []
-    for v in c:
-        h = format(int(v), "016x").rstrip("0")
-        out.append(h if h else "X")
-    return np.asarray(out, dtype=object)
-
-
 def decode_center(cell) -> tuple[np.ndarray, np.ndarray]:
     """Cell id → (lon, lat) of the cell center (tests/debug only)."""
     c = np.asarray(cell).astype(np.uint64)

@@ -29,14 +29,12 @@ from __future__ import annotations
 import re
 from urllib.parse import quote
 
-import numpy as np
 import pandas as pd
 
 KEY_RE = re.compile(r"^[0-9a-zA-Z_]([-:0-9a-zA-Z_]{0,58}[0-9a-zA-Z_])?$")
 WIKIDATA_RE = re.compile(r"^Q[1-9][0-9]{0,18}$")
 WIKIPEDIA_RE = re.compile(r"^([-a-z]+):(.+)$")
 WIKIPEDIA_SAFE = ";@$!*(),/~:#"
-DROPPED_KEYS = frozenset({"created_by"})
 
 
 def valid_keys(keys: pd.Series) -> pd.Series:
@@ -79,15 +77,6 @@ def wikipedia_urls(values: pd.Series) -> pd.Series:
 
     uniq = {v: conv(v) for v in values.dropna().unique()}
     return values.map(lambda v: uniq.get(v))
-
-
-def classify_keys(keys: pd.Series) -> pd.Series:
-    """'drop' | 'bad' | 'ok' per key (vectorized)."""
-    k = keys.astype("string")
-    out = np.where(
-        k.isin(DROPPED_KEYS), "drop", np.where(valid_keys(k), "ok", "bad")
-    )
-    return pd.Series(out, index=keys.index)
 
 
 # polygon classification (osm-to-pgsql/wikidata.lua:4-25,80-84): a way is

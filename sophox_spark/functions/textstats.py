@@ -62,26 +62,6 @@ def token_count(text: Column) -> Column:
     ).cast("long")
 
 
-PUNCT_CLASS = r"[.,!?;:]"
-
-
-def quality_score(text: Column) -> Column:
-    """Heuristic in [0,1]: length band + punctuation-density band +
-    mean-token-length band, equally weighted. Pure arithmetic (portable
-    to the SQL oracle)."""
-    n = F.length(text)
-    punct = F.length(text) - F.length(F.regexp_replace(text, PUNCT_CLASS, ""))
-    toks = token_count(text)
-    punct_ratio = punct / F.greatest(n, F.lit(1))
-    mean_tok = n / F.greatest(toks, F.lit(1))
-    len_ok = F.when((n >= 200) & (n <= 20000), 1.0).otherwise(
-        F.when(n >= 50, 0.5).otherwise(0.0)
-    )
-    punct_ok = F.when((punct_ratio >= 0.005) & (punct_ratio <= 0.1), 1.0).otherwise(0.5)
-    tok_ok = F.when((mean_tok >= 3.0) & (mean_tok <= 12.0), 1.0).otherwise(0.5)
-    return ((len_ok + punct_ok + tok_ok) / 3.0).alias("quality")
-
-
 def fingerprint(text: Column) -> Column:
     """Document fingerprint: md5 of the whitespace-normalized, lowercased
     text — the exact-dedup key (portable: DuckDB md5())."""

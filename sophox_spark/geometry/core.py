@@ -42,11 +42,6 @@ def force_rhr(rings: list[np.ndarray]) -> list[np.ndarray]:
     return [orient_ring(r, ccw=(i > 0)) for i, r in enumerate(rings)]
 
 
-def force_geojson(rings: list[np.ndarray]) -> list[np.ndarray]:
-    """RFC 7946 convention: exterior CCW, holes CW."""
-    return [orient_ring(r, ccw=(i == 0)) for i, r in enumerate(rings)]
-
-
 def rings_area_centroid(rings: list[tuple[np.ndarray, bool]]) -> tuple[float, float, float]:
     """(area, cx, cy) of a polygon given (ring, is_hole) pairs.
     Area-weighted centroid; holes subtract."""
@@ -134,10 +129,3 @@ def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
     dlat = lat2 - lat1
     a = np.sin(dlat / 2) ** 2 + np.cos(lat1) * np.cos(lat2) * np.sin(dlon / 2) ** 2
     return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(a, 0.0, 1.0)))
-
-
-def multipoint_centroid(lons: np.ndarray, lats: np.ndarray) -> tuple[float, float]:
-    """Relation location = arithmetic mean of member points — exactly the
-    reference's ``MultiPoint(...).centroid``
-    (/root/reference/osm2rdf/updateRelLoc.py:129-130)."""
-    return float(np.mean(lons)), float(np.mean(lats))

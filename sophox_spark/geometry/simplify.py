@@ -149,12 +149,3 @@ def tile_xyz(lon, lat, z: int) -> tuple[np.ndarray, np.ndarray]:
     lat_r = np.radians(lat)
     yt = np.floor((1.0 - np.arcsinh(np.tan(lat_r)) / np.pi) / 2.0 * n).astype(np.int64)
     return np.clip(xt, 0, n - 1), np.clip(yt, 0, n - 1)
-
-
-def tile_key(z, x, y) -> np.ndarray:
-    """Pack z/x/y into one int64 join key."""
-    return (
-        (np.asarray(z, np.int64) << 58)
-        | (np.asarray(x, np.int64) << 29)
-        | np.asarray(y, np.int64)
-    )

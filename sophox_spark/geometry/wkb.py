@@ -36,11 +36,6 @@ def point_wkb(lon: float, lat: float) -> bytes:
     return struct.pack("<BIdd", 1, POINT, lon, lat)
 
 
-def linestring_wkb(coords: np.ndarray) -> bytes:
-    coords = np.asarray(coords, dtype="<f8")
-    return struct.pack("<BII", 1, LINESTRING, len(coords)) + coords.tobytes()
-
-
 def _ring_bytes(ring: np.ndarray) -> bytes:
     ring = np.asarray(ring, dtype="<f8")
     if not np.array_equal(ring[0], ring[-1]):

@@ -4,31 +4,45 @@ SURVEY §2.3: the reference has no kNN operator of its own (nearest-POI
 lived in Blazegraph's geo service, absent submodule); the target spec
 defines it as H3 k-ring expansion ⋈ POI cells → top-k by haversine.
 
-Exactness: after joining candidates from rings ≤ r, a point's k-th
-nearest candidate is PROVEN nearest overall iff its distance is below
-the guarantee radius — the minimum ground distance from the point's
-cell to any cell outside the ring, conservatively
-``r * min(cell_width_m(lat), cell_height_m)``. Points that fail the
-guarantee escalate to a wider ring (driver loop, geometrically growing,
-bounded) — the same shrinking-worklist pattern the reference uses for
-relation-centroid fixpoints (/root/reference/osm2rdf/updateRelLoc.py:76-87).
+One algorithm, three levels; a window ranks each level's candidates by
+(distance, poi key):
 
-All distance math is native Spark expressions (JVM codegen, no Python);
-only the ring-cell enumeration is a (vectorized) pandas UDF.
+1. ring 1 at the density-adapted resolution r (most points resolve),
+2. ring 4's reach for the stragglers: ring 1 at resolution r − 2, whose
+   cells are 4× wider,
+3. the exhaustive scan — every POI is a candidate — for whatever is
+   left, so the result equals brute force.
+
+On the ring levels the POI dim (the small side) explodes to the 3×3
+neighborhood of its cell and each point joins on its OWN cell. Each
+ring level is materialized once (``localCheckpoint``); its resolved
+rows and the next level's worklist are filters over it.
+
+Exactness: after joining a point's ring-1 candidates, its k-th nearest
+candidate is PROVEN nearest overall iff its distance is below the
+guarantee radius — the minimum ground distance from the point's cell
+to any cell outside the 3×3 block, conservatively
+``min(cell_width_m(lat), cell_height_m)``. Points that fail the
+guarantee go on to the next level — the same shrinking-worklist pattern
+the reference uses for relation-centroid fixpoints
+(osm2rdf/updateRelLoc.py:76-87).
+
+Everything is native Spark expressions (JVM codegen): no rows cross to
+Python and the POI dim is never collected to the driver.
 """
 
 from __future__ import annotations
 
 import math
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
-
-from ..cells import grid
 
 EARTH_RADIUS_M = 6_371_008.8
 _DEG_LAT_M = math.pi * EARTH_RADIUS_M / 180.0
+
+#: read by no route any more, only by the benchmark's regime record; a
+#: later benchmark change drops that read
+_POI_COLLECT_MAX_ROWS = 500_000
 
 
 def haversine_m_expr(lon1, lat1, lon2, lat2):
@@ -42,47 +56,18 @@ def haversine_m_expr(lon1, lat1, lon2, lat2):
     return 2.0 * EARTH_RADIUS_M * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
 
 
-def ring_cells_col(lon_col: str, lat_col: str, res: int, k: int):
-    """array<long> of all cells within ring ``k`` of the point's cell."""
-
-    @F.pandas_udf("array<long>")
-    def _ring(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        cells = grid.encode(lon.to_numpy(), lat.to_numpy(), res)
-        src, ring = grid.k_ring(cells, k)
-        out: list[set[int]] = [set() for _ in range(len(cells))]
-        for s, c in zip(src.tolist(), ring.tolist()):
-            out[s].add(c)  # set: lon wrap at coarse res can repeat cells
-        return pd.Series([sorted(s) for s in out])
-
-    return _ring(F.col(lon_col), F.col(lat_col))
-
-
-def _guarantee_radius_m(res: int, ring: int, lat_col: str):
-    """Conservative min ground distance to outside the ring."""
+def _guarantee_radius_m(res: int, lat_col: str):
+    """Conservative min ground distance to outside the ring-1 block."""
     cell_h = 180.0 / (1 << res) * _DEG_LAT_M
     cell_w = F.lit(360.0 / (1 << res) * _DEG_LAT_M) * F.cos(F.radians(F.col(lat_col)))
-    return F.lit(float(ring)) * F.least(F.lit(cell_h), cell_w) * 0.999
-
-
-def _escalation_schedule(res: int) -> list[tuple[int, int]]:
-    """(res, ring) ladder: widen once at native res, then coarsen the
-    grid 4× per step (ring 4 at res r ≡ ring 16 at res r+2, but with
-    25 cells instead of 1089). The last level (res 1, ring 2) covers the
-    whole globe — the exhaustive fallback for isolated points."""
-    sched = [(res, 1), (res, 4)]
-    r = res - 2
-    while r > 1:
-        sched.append((r, 4))
-        r -= 2
-    sched.append((1, 2))
-    return sched
+    return F.least(F.lit(cell_h), cell_w) * 0.999
 
 
 def _density_adapted_res(pois_df, k: int, res: int, poi_lon: str, poi_lat: str) -> int:
     """Pick the starting resolution so a ring-1 (3×3 cell) neighborhood
-    is expected to hold ≥ ~4k POIs — most points then resolve in one
-    round instead of walking the whole coarsening ladder (each ladder
-    level is a full Spark job). One cheap agg on the small side."""
+    is expected to hold ≥ ~4k POIs — most points then resolve at the
+    first level instead of escalating (each level is a full Spark job).
+    One cheap agg on the small side."""
     row = pois_df.agg(
         F.count("*").alias("n"),
         F.min(poi_lon).alias("lon0"), F.max(poi_lon).alias("lon1"),
@@ -99,150 +84,32 @@ def _density_adapted_res(pois_df, k: int, res: int, poi_lon: str, poi_lat: str) 
     return max(2, min(res, r0))
 
 
-#: row cap for collecting the POI dim driver-side on the broadcast
-#: path. Budgeted for the DRIVER-side Python cost, not the payload
-#: arithmetic: collected Rows cost a few hundred bytes each and the
-#: ring build multiplies them (2·ring+1)² before Arrow conversion, so
-#: 500k rows ≈ low-hundreds of MB transient — well inside the 48 GB
-#: driver while still covering any dim the broadcast join itself
-#: could sensibly ship to every task
-_POI_COLLECT_MAX_ROWS = 500_000
-
-
-def _collect_poi_dim(base_pois):
-    """Bounded collect of the (already broadcast-sized) POI dim so the
-    density probe, the ring-expanded broadcast build and the straggler
-    dims come from driver memory (LocalTableScan) instead of each
-    re-deriving the dim with its own Spark job — the same driver-side
-    dim treatment spatial_join's covering and ``_rect_polys`` use.
-    Returns None (caller keeps the distributed path) when the dim
-    exceeds the cap or contains null/NaN coordinates, whose min/max
-    semantics differ between numpy and Spark aggregates."""
-    rows = base_pois.limit(_POI_COLLECT_MAX_ROWS + 1).collect()
-    if len(rows) > _POI_COLLECT_MAX_ROWS:
-        return None
-    for r in rows:
-        lon, lat = r[1], r[2]
-        if lon is None or lat is None or lon != lon or lat != lat:
-            return None
-    return rows
-
-
-def _density_adapted_res_local(rows, k: int, res: int) -> int:
-    """Driver-side replica of :func:`_density_adapted_res` over the
-    collected POI dim (same formula, Python IEEE doubles ≡ the Spark
-    agg's) — the stats job disappears."""
-    if not rows:
-        return res
-    lons = [r[1] for r in rows]
-    lats = [r[2] for r in rows]
-    area = max((max(lons) - min(lons)) * (max(lats) - min(lats)), 1e-9)
-    density = len(rows) / area
-    want = 4.0 * k
-    ratio = 583_200.0 * density / want
-    r0 = int(math.floor(math.log(max(ratio, 4.0), 4)))
-    return max(2, min(res, r0))
-
-
-def _local_ring_dim(spark, rows, key_type: str, poi_key: str, res: int, ring: int):
-    """numpy replica of :func:`_ring_expand_dim` over the collected dim
-    → an Arrow local relation (zero build jobs). Cell arithmetic uses
-    ``grid.encode``, pinned ≡ ``cell_expr`` by the plan tests."""
-    n = 1 << res
-    keys = np.array([r[0] for r in rows])
-    lon = np.array([r[1] for r in rows], dtype=np.float64)
-    lat = np.array([r[2] for r in rows], dtype=np.float64)
-    c = grid.encode(lon, lat, res)
-    keep = np.nonzero(c >= 0)[0]
-    c = c[keep]
-    x = (c // (1 << 29)) % (1 << 29)
-    y = c % (1 << 29)
-    idx_parts, cell_parts = [], []
-    for dx in range(-ring, ring + 1):
-        for dy in range(-ring, ring + 1):
-            ok = (y + dy >= 0) & (y + dy < n)
-            cell = (
-                np.int64(res) * (1 << 58)
-                + ((x[ok] + dx) % n) * (1 << 29)
-                + (y[ok] + dy)
-            )
-            idx_parts.append(keep[ok])
-            cell_parts.append(cell)
-    idx = np.concatenate(idx_parts) if idx_parts else np.empty(0, np.int64)
-    cells = np.concatenate(cell_parts) if cell_parts else np.empty(0, np.int64)
-    pdf = pd.DataFrame(
-        {
-            poi_key: keys[idx],
-            "__poi_lon": lon[idx],
-            "__poi_lat": lat[idx],
-            "__poi_cell": cells,
-        }
-    )
-    if 2 * ring + 1 > n:  # lon wrap can repeat cells — dedup on the
-        # SAME (key, cell) columns dropDuplicates uses on the
-        # distributed path (NOT the corpus row index, which would keep
-        # duplicate-keyed POIs the column path collapses)
-        pdf = pdf.drop_duplicates([poi_key, "__poi_cell"])
-    schema = (
-        f"{poi_key} {key_type}, __poi_lon double, __poi_lat double, "
-        "__poi_cell long"
-    )
-    return spark.createDataFrame(pdf, schema)
-
-
-def _local_cell_dim(spark, rows, key_type: str, poi_key: str, res: int):
-    """numpy replica of ``base_pois.withColumn(cell_expr(...))`` for the
-    straggler round — including the −1 cells of invalid coordinates
-    (they never match a constructed point cell, same as the column
-    expression path)."""
-    lon = np.array([r[1] for r in rows], dtype=np.float64)
-    lat = np.array([r[2] for r in rows], dtype=np.float64)
-    c = grid.encode(lon, lat, res) if len(rows) else np.empty(0, np.int64)
-    pdf = pd.DataFrame(
-        {
-            poi_key: [r[0] for r in rows],
-            "__poi_lon": lon,
-            "__poi_lat": lat,
-            "__poi_cell": c,
-        }
-    )
-    schema = (
-        f"{poi_key} {key_type}, __poi_lon double, __poi_lat double, "
-        "__poi_cell long"
-    )
-    return spark.createDataFrame(pdf, schema)
-
-
-def _ring_expand_dim(base_pois, poi_key: str, res: int, ring: int, n: int):
-    """Explode the POI dim to one row per (poi, cell whose ring-``ring``
+def _ring_expand_dim(base_pois, poi_key: str, res: int):
+    """Explode the POI dim to one row per (poi, cell whose ring-1
     neighborhood contains the poi) — the dim-side half of the k-ring
     join (guide §8: explode the small side, never the big one). A point
     then joins on its OWN cell: point_cell ∈ ring(poi_cell) ⟺
     poi_cell ∈ ring(point_cell), so the candidate pairs are identical
-    to exploding the point side. POIs with invalid coordinates
-    (cell −1) are dropped here — they were unreachable as candidates
-    before too (a −1 cell never equals any ring cell); invalid POINTS
-    now simply match nothing and resolve through the escalation /
-    exhaustive path instead of probing clamped garbage cells.
-    Output columns: ``poi_key, __poi_lon, __poi_lat, __poi_cell``."""
+    to exploding the point side. ``base_pois`` holds valid coordinates
+    only. Output columns: ``poi_key, __poi_lon, __poi_lat, __poi_cell``."""
     from .spatial_join import cell_expr
 
+    n = 1 << res  # ≥ 4 (res ≥ 2): the 3 lon offsets never wrap onto each other
     c = cell_expr("__poi_lon", "__poi_lat", res)
     x = (c / F.lit(1 << 29)).cast("long") % F.lit(1 << 29)
     y = c % F.lit(1 << 29)
-    exploded = (
+    return (
         base_pois.select(
             F.col(poi_key), "__poi_lon", "__poi_lat",
-            c.alias("__c"), x.alias("__x"), y.alias("__y"),
-        )
-        .filter(F.col("__c") >= 0)
-        .select(
-            "*",
-            F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("__dx"),
+            x.alias("__x"), y.alias("__y"),
         )
         .select(
             "*",
-            F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("__dy"),
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("__dx"),
+        )
+        .select(
+            "*",
+            F.explode(F.sequence(F.lit(-1), F.lit(1))).alias("__dy"),
         )
         .filter(
             (F.col("__y") + F.col("__dy") >= 0)
@@ -257,49 +124,6 @@ def _ring_expand_dim(base_pois, poi_key: str, res: int, ring: int, n: int):
             ).alias("__poi_cell"),
         )
     )
-    if 2 * ring + 1 > n:  # lon wrap can repeat cells at coarse res
-        exploded = exploded.dropDuplicates([poi_key, "__poi_cell"])
-    return exploded
-
-
-def _ring_expand_points(points_df, point_key, lon_col, lat_col, res, ring, n):
-    """Point-side ring expansion (one row per point × ring cell) — used
-    when the WORKLIST is the smaller side (straggler rounds), where
-    amplifying it is cheaper than re-exploding the POI dim at a wider
-    ring. Same cell arithmetic as the dim-side expansion."""
-    from .spatial_join import cell_expr
-
-    c = cell_expr(lon_col, lat_col, res)
-    x = (c / F.lit(1 << 29)).cast("long") % F.lit(1 << 29)
-    y = c % F.lit(1 << 29)
-    expanded = (
-        points_df.select(
-            "*", x.alias("__x"), y.alias("__y"),
-        )
-        .select(
-            "*",
-            F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("__dx"),
-        )
-        .select(
-            "*",
-            F.explode(F.sequence(F.lit(-ring), F.lit(ring))).alias("__dy"),
-        )
-        .filter(
-            (F.col("__y") + F.col("__dy") >= 0)
-            & (F.col("__y") + F.col("__dy") < n)
-        )
-        .select(
-            *points_df.columns,
-            (
-                F.lit(res).cast("long") * F.lit(1 << 58)
-                + F.pmod(F.col("__x") + F.col("__dx"), F.lit(n)) * F.lit(1 << 29)
-                + (F.col("__y") + F.col("__dy"))
-            ).alias("__poi_cell"),
-        )
-    )
-    if 2 * ring + 1 > n:  # lon wrap can repeat cells at coarse res
-        expanded = expanded.dropDuplicates([point_key, "__poi_cell"])
-    return expanded
 
 
 def knn_join(
@@ -313,255 +137,87 @@ def knn_join(
     lat_col: str = "lat",
     poi_lon: str = "lon",
     poi_lat: str = "lat",
-    broadcast_pois: bool = True,
-    adaptive_res: bool = True,
 ) -> DataFrame:
     """Exact k nearest POIs per point.
 
     Output: point columns ``point_key, lon, lat`` + ``poi_key, dist_m,
     rank``. Ties broken by ``poi_key`` (deterministic, FIXTURES.md §7).
-    Escalates through ``_escalation_schedule`` until every point's k-th
-    candidate is inside the guarantee radius; the final level is a
-    global scan, so the result equals brute force row-for-row.
-    ``adaptive_res`` starts the ladder at the POI-density-matched
-    resolution (results are identical at any resolution — only the
-    number of escalation rounds changes).
+    Ranks are per ``point_key``. ``poi_key`` must be unique in
+    ``pois_df``: it is the tie-break that makes the ranks, and so the
+    rows, deterministic. The
+    ladder starts at the POI-density-matched resolution (results are
+    identical at any resolution — only the number of points each level
+    resolves changes); the final level is a global scan, so the result
+    equals brute force row-for-row.
     """
     from .spatial_join import cell_expr
 
+    # invalid coordinates (NULL, NaN, out of range) never make a candidate
     base_pois = pois_df.select(
         F.col(poi_key),
         F.col(poi_lon).alias("__poi_lon"),
         F.col(poi_lat).alias("__poi_lat"),
-    )
-    # broadcast path: try ONE bounded collect of the dim up front — the
-    # density stats, the ring-expanded broadcast and the straggler dims
-    # then all come from driver memory (LocalTableScan, no build jobs)
-    # instead of each re-deriving the POI subquery
-    local_rows = None
-    key_type = pois_df.schema[poi_key].dataType.simpleString()
-    if broadcast_pois:
-        local_rows = _collect_poi_dim(base_pois)
-    if adaptive_res:
-        if local_rows is not None:
-            res = _density_adapted_res_local(local_rows, k, res)
-        else:
-            res = _density_adapted_res(pois_df, k, res, poi_lon, poi_lat)
-    spark = points_df.sparkSession
+    ).filter(cell_expr("__poi_lon", "__poi_lat", 0) >= 0)
+    res = _density_adapted_res(pois_df, k, res, poi_lon, poi_lat)
     remaining = points_df.select(point_key, lon_col, lat_col)
-    if broadcast_pois:
-        # BROADCAST-DIM SHAPE: ring-1 at the density-adapted res
-        # resolves the vast majority of points (guarantee-radius proof,
-        # unchanged); a ring-4 straggler round then resolves almost all
-        # of the rest with ~(2·4+1)²-cell candidate sets — measured 2
-        # orders of magnitude cheaper than sending the stragglers
-        # straight to the exhaustive scan (at 10× bench scale ~11% of
-        # points straggle after round 1: |stragglers| × |pois| pairs ≈
-        # 150M vs ~600k ring-4 candidates). Only what ring 4 still
-        # cannot prove goes to the exact exhaustive broadcast scan,
-        # whose cost is then bounded by the same argument that
-        # justified broadcast_pois. Each round short-circuits: when its
-        # worklist is empty the later plans are never even built (the
-        # isEmpty probe reuses the done-keys broadcast build, which
-        # also fills the round's persist cache). The non-broadcast path
-        # keeps the full coarsening ladder.
-        w = Window.partitionBy(point_key).orderBy(
-            F.col("dist_m").asc(), F.col(poi_key).asc()
-        )
-        wp = Window.partitionBy(point_key)
-        done_parts = []
-        rem = remaining
-        for ring in (1, 4):
-            lvl_res = res
-            n = 1 << lvl_res
-            if ring == 1:
-                # ring expansion on the DIM side (guide §8 "explode the
-                # small side"): each POI's cell explodes to its ring
-                # neighborhood inside the broadcast build and the POINT
-                # side joins on its own single cell — the big side
-                # carries no Generate and is never row-amplified before
-                # the join. Candidate pairs identical by ring symmetry:
-                # point_cell ∈ ring(poi_cell) ⟺ poi_cell ∈
-                # ring(point_cell) (dx,dy closed under negation; pmod
-                # lon wrap symmetric; a valid lat offset inverts to the
-                # POI's own valid lat).
-                pois_r = F.broadcast(
-                    _local_ring_dim(
-                        spark, local_rows, key_type, poi_key, lvl_res, ring
-                    )
-                    if local_rows is not None
-                    else _ring_expand_dim(base_pois, poi_key, lvl_res, ring, n)
-                )
-                cand = rem.withColumn(
-                    "__poi_cell", cell_expr(lon_col, lat_col, lvl_res)
-                ).join(pois_r, "__poi_cell")
-            else:
-                # straggler round: the worklist is now the SMALL side —
-                # explode its ring cells instead of 81×-amplifying the
-                # POI broadcast
-                pois_r = F.broadcast(
-                    _local_cell_dim(
-                        spark, local_rows, key_type, poi_key, lvl_res
-                    )
-                    if local_rows is not None
-                    else base_pois.withColumn(
-                        "__poi_cell",
-                        cell_expr("__poi_lon", "__poi_lat", lvl_res),
-                    )
-                )
-                cand = _ring_expand_points(
-                    rem, point_key, lon_col, lat_col, lvl_res, ring, n
-                ).join(pois_r, "__poi_cell")
-            cand = cand.withColumn(
-                "dist_m",
-                haversine_m_expr(
-                    F.col(lon_col), F.col(lat_col),
-                    F.col("__poi_lon"), F.col("__poi_lat"),
-                ),
-            )
-            # the done test (≥k candidates, k-th dist inside the
-            # guarantee radius) folds into window aggs over the SAME
-            # partitioning as the rank — no second groupBy shuffle, no
-            # separate stats job
-            guarantee = _guarantee_radius_m(lvl_res, ring, lat_col)
-            topk = (
-                cand.withColumn("rank", F.row_number().over(w))
-                .withColumn(
-                    "__nk",
-                    F.count(F.when(F.col("rank") <= k, F.lit(1))).over(wp),
-                )
-                .withColumn(
-                    "__maxd",
-                    F.max(F.when(F.col("rank") <= k, F.col("dist_m"))).over(wp),
-                )
-                .filter(F.col("rank") <= k)
-                .withColumn(
-                    "__done",
-                    (F.col("__nk") >= k) & (F.col("__maxd") < guarantee),
-                )
-                .select(
-                    point_key, lon_col, lat_col, poi_key,
-                    "dist_m", "rank", "__done",
-                )
-            )
-            # lazy persist: the candidate-join + window subtree feeds
-            # BOTH the done-rows branch and (via the broadcast
-            # done_keys build) the straggler anti-join, and Catalyst
-            # cannot reuse the exchange between them (column pruning
-            # makes the two subtrees canonically different). A lazy
-            # MEMORY_AND_DISK persist computes it once — the
-            # broadcast-build job fills the cache, the main action
-            # reads it — without the extra serialization job an eager
-            # localCheckpoint was measured to cost (~3 s cold). The
-            # cache is created and consumed inside this query's own
-            # action and holds only the ≤ k·|worklist| ranked rows;
-            # every recomputation is deterministic anyway (ranked ties
-            # fully broken by dist, poi_key)
-            topk = topk.persist()
-            done_keys = topk.filter("__done").select(point_key).distinct()
-            done_parts.append(topk.filter("__done").drop("__done"))
-            rem = rem.join(F.broadcast(done_keys), point_key, "left_anti")
-            if rem.isEmpty():
-                rem = None
-                break
-        if rem is not None:
-            if local_rows is not None:
-                exhaustive_pois = spark.createDataFrame(
-                    pd.DataFrame(
-                        {
-                            poi_key: [r[0] for r in local_rows],
-                            "__poi_lon": [r[1] for r in local_rows],
-                            "__poi_lat": [r[2] for r in local_rows],
-                        }
-                    ),
-                    f"{poi_key} {key_type}, __poi_lon double, __poi_lat double",
-                )
-            else:
-                exhaustive_pois = base_pois
-            done_parts.append(
-                brute_force_knn(
-                    rem, exhaustive_pois, k, point_key=point_key, poi_key=poi_key,
-                    lon_col=lon_col, lat_col=lat_col,
-                    poi_lon="__poi_lon", poi_lat="__poi_lat",
-                )
-            )
-        out = done_parts[0]
-        for part in done_parts[1:]:
-            out = out.unionByName(part)
-        return out
-    results = None
-    schedule = _escalation_schedule(res)
-    for li, (lvl_res, ring) in enumerate(schedule):
-        last = li == len(schedule) - 1
-        # dim-side k-ring (same symmetry argument as the broadcast
-        # path): the POI table — the small side — explodes to its
-        # (2r+1)² neighborhood and the worklist joins on its OWN cell,
-        # so on the non-broadcast (shuffle-join) route the big side
-        # ships |points| rows per level instead of (2r+1)²·|points|
-        # (guide §2.3: shuffle fewer bytes; ring 4 alone was a 81×
-        # amplification of the worklist)
-        n = 1 << lvl_res
-        pois = _ring_expand_dim(base_pois, poi_key, lvl_res, ring, n)
-        if broadcast_pois:
-            pois = F.broadcast(pois)
-        # total join key: an invalid-coordinate point (cell −1) adopts
-        # the level's (0,0) cell so the LAST level — whose dim covering
-        # spans the whole grid — still gives every point the documented
-        # global scan instead of silently dropping it
-        pc = cell_expr(lon_col, lat_col, lvl_res)
-        cand = (
-            remaining.withColumn(
-                "__poi_cell",
-                F.when(pc >= 0, pc).otherwise(F.lit(lvl_res << 58).cast("long")),
-            )
-            .join(pois, "__poi_cell")
-            .withColumn(
-                "dist_m",
-                haversine_m_expr(
-                    F.col(lon_col), F.col(lat_col),
-                    F.col("__poi_lon"), F.col("__poi_lat"),
-                ),
-            )
-        )
-        w = Window.partitionBy(point_key).orderBy(
-            F.col("dist_m").asc(), F.col(poi_key).asc()
-        )
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select(point_key, lon_col, lat_col, poi_key, "dist_m", "rank")
-        )
-        # materialize once: done_keys AND done both read topk — without
-        # this the candidate join + window runs twice per level
-        topk = topk.localCheckpoint(eager=True)
+    w = Window.partitionBy(point_key).orderBy(
+        F.col("dist_m").asc(), F.col(poi_key).asc()
+    )
+    wp = Window.partitionBy(point_key)
+    cols = [point_key, lon_col, lat_col, poi_key, "dist_m", "rank"]
+    parts = []
+    # ring 1 at res, then ring 1 at res − 2: one coarse cell spans four
+    # fine ones, so this is ring 4's guarantee radius — the same points
+    # resolve — from a dim exploded 9×, not 81×. None (or a grid of ≤ 2
+    # rows, which ring 1 spans whole) is the exhaustive scan.
+    for lvl_res in (res, res - 2, None):
+        last = lvl_res is None or lvl_res <= 1
         if last:
-            done_keys = topk.select(point_key).distinct()
+            cand = remaining.crossJoin(base_pois)
         else:
-            guarantee = _guarantee_radius_m(lvl_res, ring, lat_col)
-            stats = topk.groupBy(point_key, lon_col, lat_col).agg(
-                F.count("*").alias("__n"), F.max("dist_m").alias("__maxd")
-            )
-            done_keys = stats.filter(
-                (F.col("__n") >= k) & (F.col("__maxd") < guarantee)
-            ).select(point_key)
-        done = topk.join(F.broadcast(done_keys), point_key, "left_semi")
-        results = done if results is None else results.unionByName(done)
-        if last:
+            # dim-side k-ring: the worklist ships |points| rows, not
+            # 9·|points| (guide §2.3: shuffle fewer bytes). LEFT
+            # join: a point without candidates (an invalid one, cell −1,
+            # included) keeps one NULL-poi row, so the level's own rows
+            # say which points go on to the next
+            pois = _ring_expand_dim(base_pois, poi_key, lvl_res)
+            cand = remaining.withColumn(
+                "__poi_cell", cell_expr(lon_col, lat_col, lvl_res)
+            ).join(pois, "__poi_cell", "left")
+        cand = cand.withColumn(
+            "dist_m",
+            haversine_m_expr(
+                F.col(lon_col), F.col(lat_col), F.col("__poi_lon"), F.col("__poi_lat")
+            ),
+        )
+        topk = cand.withColumn("rank", F.row_number().over(w)).filter(
+            F.col("rank") <= k
+        )
+        if last:  # read once, by the caller's action: left lazy
+            parts.append(topk.select(*cols))
             break
-        remaining = remaining.join(F.broadcast(done_keys), point_key, "left_anti")
-        # materialize the shrinking worklist to keep later plans small
-        remaining = remaining.localCheckpoint(eager=True)
+        # ≥ k candidates and the k-th inside the guarantee radius; window
+        # aggs over the rank's own partitioning (no second shuffle)
+        done = (F.count(poi_key).over(wp) >= k) & (
+            F.max("dist_m").over(wp) < _guarantee_radius_m(lvl_res, lat_col)
+        )
+        # one materialization per level: the done rows and the next
+        # worklist are both filters over it
+        topk = (
+            topk.withColumn("__done", F.coalesce(done, F.lit(False)))
+            .select(*cols, "__done")
+            .localCheckpoint(eager=True)
+        )
+        parts.append(topk.filter("__done").drop("__done"))
+        remaining = topk.filter(~F.col("__done") & (F.col("rank") == 1)).select(
+            point_key, lon_col, lat_col
+        )
         if remaining.isEmpty():
             break
+    results = parts[0]
+    for part in parts[1:]:
+        results = results.unionByName(part)
     return results
-
-
-def _cell(poi_lon_expr: str, poi_lat_expr: str, res: int):
-    @F.pandas_udf("long")
-    def _enc(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(grid.encode(lon.to_numpy(), lat.to_numpy(), res))
-
-    return _enc(F.col(poi_lon_expr), F.col(poi_lat_expr))
 
 
 def brute_force_knn(points_df, pois_df, k, point_key="url", poi_key="poi_id",

@@ -147,11 +147,3 @@ def relation_member_locations(
             )
         )
     return m.join(locs, ["member_type", "member_ref"], "left")
-
-
-def relations_missing_loc(relations_df: DataFrame, rel_locs: DataFrame) -> DataFrame:
-    """J4 anti-join: relations without a resolved location
-    (FILTER NOT EXISTS, updateRelLoc.py:68-72)."""
-    return relations_df.join(
-        rel_locs.select(F.col("rel_id").alias("id")), "id", "left_anti"
-    )

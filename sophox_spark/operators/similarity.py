@@ -234,9 +234,8 @@ def ann_topk(
 
 def _bounded_corpus_collect(df: DataFrame, key: str, vec_col: str, dim: int):
     """ONE bounded collect that both answers the broadcast-budget
-    question and supplies the kernel's corpus (the knn
-    ``_collect_poi_dim`` pattern — the former separate count job
-    re-evaluated the whole upstream lineage twice). Returns the
+    question and supplies the kernel's corpus (the former separate
+    count job re-evaluated the whole upstream lineage twice). Returns the
     collected (key, vec) rows with NULL keys dropped — the join path
     drops them too (a NULL id never satisfies the equi-join /
     ``query_id != neighbor_id`` filter) — or None when the corpus is
@@ -314,7 +313,6 @@ def _ann_topk_broadcast(
     def gen(batches):
         ids_b, M_b, members_b = bc.value
         for pdf in batches:
-            pdf = pdf[pdf[key].notna()]
             if not len(pdf):
                 continue
             Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
@@ -351,8 +349,14 @@ def _ann_topk_broadcast(
             )
 
     # project to the two consumed columns so wide corpora don't ship
-    # unused payloads through Arrow
-    return df.select(key, vec_col).mapInPandas(gen, out_schema)
+    # unused payloads through Arrow; NULL keys drop JVM-side (as on the
+    # join path) so every batch keeps an int64 key column — a NULL in a
+    # batch would turn it float64 and corrupt ids ≥ 2^53
+    return (
+        df.select(key, vec_col)
+        .where(F.col(key).isNotNull())
+        .mapInPandas(gen, out_schema)
+    )
 
 
 def train_ivf_centroids(
@@ -507,7 +511,6 @@ def _ivf_topk_broadcast(
     def gen(batches):
         ids_b, M_b, members_b, C_b = bc.value
         for pdf in batches:
-            pdf = pdf[pdf[key].notna()]
             if not len(pdf):
                 continue
             Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
@@ -534,8 +537,14 @@ def _ivf_topk_broadcast(
             )
 
     # project to the two consumed columns so wide corpora don't ship
-    # unused payloads through Arrow
-    return df.select(key, vec_col).mapInPandas(gen, out_schema)
+    # unused payloads through Arrow; NULL keys drop JVM-side (as on the
+    # join path) so every batch keeps an int64 key column — a NULL in a
+    # batch would turn it float64 and corrupt ids ≥ 2^53
+    return (
+        df.select(key, vec_col)
+        .where(F.col(key).isNotNull())
+        .mapInPandas(gen, out_schema)
+    )
 
 
 def cosine_dup_pairs(

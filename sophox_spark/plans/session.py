@@ -18,6 +18,14 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, at most 48 GB. The JVM grows its
+    heap toward the cap under allocation pressure, and a cap the host
+    cannot back ends in the kernel killing the JVM mid-job."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(48 << 10, host_mb // 2)}m"
+
+
 def get_spark(
     app: str = "sophox_spark",
     cpus: int | None = None,
@@ -50,7 +58,8 @@ def get_spark(
     builder = SparkSession.builder
     if not inherit:
         builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
         )
     b = (
         builder.appName(app)

@@ -36,21 +36,3 @@ def aggregate_pageviews(parsed_df: DataFrame) -> DataFrame:
     return parsed_df.groupBy("project", "title").agg(
         F.sum("views").alias("views")
     )
-
-
-def wiki_urls(parsed_df: DataFrame) -> DataFrame:
-    """title → sitelink URL join key — the J3 VALUES-join preparation
-    (updatePageViewStats.py:176-184). Percent-encoding matches the
-    reference byte-for-byte via functions.normalize.wikipedia_urls."""
-    import pandas as pd
-    from pyspark.sql import functions as F2
-
-    from ..functions.normalize import wikipedia_urls
-
-    @F2.pandas_udf("string")
-    def to_url(vals: pd.Series) -> pd.Series:
-        return wikipedia_urls(vals)
-
-    return parsed_df.withColumn(
-        "url", to_url(F.concat(F.col("project"), F.lit(":"), F.col("title")))
-    )

@@ -483,25 +483,6 @@ def _split_keys_vals(kv: np.ndarray, n: int, strings: list[str]) -> list[dict]:
     return tags
 
 
-def _decode_info(data, strings: list[str]) -> dict:
-    out = {"version": 0, "ts_sec": 0, "changeset": 0, "uid": 0, "user": "",
-           "visible": True}
-    for field, _wt, val in _fields(data):
-        if field == 1:
-            out["version"] = val
-        elif field == 2:
-            out["ts_sec"] = val
-        elif field == 3:
-            out["changeset"] = val
-        elif field == 4:
-            out["uid"] = val
-        elif field == 5:
-            out["user"] = strings[val]
-        elif field == 6:
-            out["visible"] = bool(val)
-    return out
-
-
 def _decode_dense(data, strings, gran, lat_off, lon_off, date_gran) -> pd.DataFrame:
     ids = lat = lon = kv = None
     info = {}

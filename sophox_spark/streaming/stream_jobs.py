@@ -168,10 +168,12 @@ def sessionize_events(
     events extend the open session or close it (emitting the finished
     session row) and start a new one. The open session survives query
     restarts through the state store — pinned by a two-run checkpoint
-    test. Processing-time timeout flushes idle keys' sessions on later
-    triggers; with ``availableNow`` over a finite source, still-open
-    sessions remain in state (documented — they are not lost, they are
-    pending).
+    test. Sessions close on EVENT time: the stream carries a watermark
+    of ``gap`` behind the latest event, and a key's session times out
+    once the watermark passes its last event + ``gap``. An event older
+    than the watermark is late and dropped. With ``availableNow`` over
+    a finite source the query terminates; sessions whose gap the
+    watermark has not yet passed stay open in state (pending, not lost).
 
     Output rows (closed sessions only): ``key_col, session_start,
     session_end, n_events, sum_value``.
@@ -211,7 +213,7 @@ def sessionize_events(
                     else:
                         end, n, sv = max(end, t), n + 1, sv + float(v)
                 state.update((start, end, n, sv))
-                state.setTimeoutDuration(gap_minutes * 60_000)
+                state.setTimeoutTimestamp(end // 1000 + gap_minutes * 60_000)
         if closed:
             out = pd.DataFrame(
                 closed,
@@ -221,11 +223,13 @@ def sessionize_events(
             out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
             yield out
 
-    events_stream = events_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
+    events_stream = events_stream.withColumn(
+        ts_col, F.col(ts_col).cast("timestamp")
+    ).withWatermark(ts_col, f"{gap_minutes} minutes")
     return events_stream.groupBy(key_col).applyInPandasWithState(
         fn,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

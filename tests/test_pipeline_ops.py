@@ -460,6 +460,37 @@ class TestAnnBroadcastEquivalence:
         )
         assert fast_ann == norm(similarity.ann_topk(emb, k=3, dim=8).collect())
 
+    def test_broadcast_kernel_null_key_keeps_large_ids(self, spark, monkeypatch):
+        """A NULL key sharing a batch with ids ≥ 2^53 must not turn the
+        key column float64 on the fast path (that rounds the ids and
+        breaks self-exclusion): one partition holds every row, and
+        both kernels stay row-identical to the join path."""
+        big = 1 << 53
+        emb = spark.createDataFrame(
+            [
+                (big + 1, [1.0] * 8),
+                (big + 3, [1.0] * 7 + [0.9]),
+                (None, [1.0] * 6 + [0.8, 0.8]),
+                (5, [1.0] * 5 + [0.7] * 3),
+            ],
+            "vec_id long, embedding array<double>",
+        ).coalesce(1)
+
+        def rows(df):
+            return sorted(
+                (r.query_id, r.neighbor_id, round(r.cosine, 12), r.rank)
+                for r in df.collect()
+            )
+
+        fast_ivf = rows(similarity.ivf_topk(emb, k=3, n_lists=1, sample=4))
+        fast_ann = rows(similarity.ann_topk(emb, k=3, dim=8))
+        monkeypatch.setattr(similarity, "_IVF_BROADCAST_MAX_BYTES", 0)
+        join_ivf = rows(similarity.ivf_topk(emb, k=3, n_lists=1, sample=4))
+        join_ann = rows(similarity.ann_topk(emb, k=3, dim=8))
+        assert {q for q, *_ in join_ivf} == {big + 1, big + 3, 5}
+        assert fast_ivf == join_ivf
+        assert fast_ann == join_ann
+
 
 class TestIvf:
     def test_ivf_recall_clustered_vs_uniform(self, spark):

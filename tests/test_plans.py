@@ -103,13 +103,24 @@ class TestSpatialJoinPlan:
 
 
 class TestKnnPlan:
-    def test_candidate_path_native(self, spark, points):
+    def test_candidate_path_native(self, spark, points, monkeypatch):
         pois = synth.pois_df(spark, 200)
+        # each ring level is materialized, so its candidate plan is
+        # checked where knn_join hands it to localCheckpoint
+        levels = []
+        checkpoint = type(points).localCheckpoint
+
+        def record(df, *args, **kwargs):
+            levels.append(df)
+            return checkpoint(df, *args, **kwargs)
+
+        monkeypatch.setattr(type(points), "localCheckpoint", record)
         out = knn.knn_join(points, pois, k=2, point_key="pt_id")
         # the kNN plan must ship NO rows to python (native cell +
         # k-ring + haversine); unioned escalation levels stay JVM-side
-        assert explain.python_eval_nodes(out) == 0
-        assert explain.has_broadcast_join(out)
+        assert levels
+        assert all(explain.python_eval_nodes(df) == 0 for df in levels + [out])
+        assert all(explain.has_broadcast_join(df) for df in levels)
 
 
 if __name__ == "__main__":

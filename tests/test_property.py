@@ -1,8 +1,9 @@
-"""Property-based hardening (hypothesis): cell indexes and PIP kernels
-under adversarial coordinates — poles, antimeridian, degenerate
-polygons, tiny cells."""
+"""Property-based hardening (hypothesis): cell indexes, PIP kernels and
+the kNN join under adversarial coordinates — poles, antimeridian,
+degenerate polygons, tiny cells, distance ties."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from sophox_spark.cells import grid, s2
@@ -112,6 +113,72 @@ class TestPipProperties:
         inside = prep.contains(px, py, np.zeros(200, np.int64))
         pc = grid.encode(px[inside], py[inside], res)
         assert set(pc.tolist()) <= cellset
+
+
+KNN_SHAPES = ("clustered", "worldwide", "antimeridian", "colocated",
+              "k_over_pois", "empty_pois")
+
+
+@st.composite
+def knn_inputs(draw, shape):
+    """(points, pois, k) rows for one kNN shape. POI keys are unique and
+    drawn out of coordinate order, so the key tie-break is exercised."""
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    n_pts, n_pois = draw(st.integers(1, 30)), draw(st.integers(1, 25))
+    k = draw(st.integers(1, 4))
+    if shape == "k_over_pois":
+        n_pois, k = draw(st.integers(1, 3)), draw(st.integers(4, 6))
+    elif shape == "empty_pois":
+        n_pois = 0
+    # the res-13 grid cell holding a drawn coordinate
+    cw, ch = 360.0 / (1 << 13), 180.0 / (1 << 13)
+    x0 = np.floor((draw(st.floats(-179, 179)) + 180.0) / cw) * cw - 180.0
+    y0 = np.floor((draw(st.floats(-80, 80)) + 90.0) / ch) * ch - 90.0
+
+    def scatter(n):
+        if shape == "clustered":  # all inside that one cell
+            return (rng.uniform(x0 + 0.1 * cw, x0 + 0.9 * cw, n),
+                    rng.uniform(y0 + 0.1 * ch, y0 + 0.9 * ch, n))
+        if shape == "antimeridian":  # within 1.5° on either side of ±180
+            u = rng.uniform(0.0, 1.5, n)
+            side = rng.random(n) < 0.5
+            return np.where(side, 180.0 - u, u - 180.0), rng.uniform(-60, 60, n)
+        if shape == "colocated":
+            return rng.uniform(-12, 12, n), rng.uniform(38, 52, n)
+        return rng.uniform(-180, 180, n), rng.uniform(-90, 90, n)
+
+    lon, lat = scatter(n_pts)
+    if shape == "colocated":  # POIs stacked on 3 sites: exact distance ties
+        site = rng.integers(0, 3, n_pois)
+        plon, plat = rng.uniform(-10, 10, 3)[site], rng.uniform(40, 50, 3)[site]
+    else:
+        plon, plat = scatter(n_pois)
+    keys = rng.choice(10_000, n_pois, replace=False)
+    pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(lon, lat))]
+    pois = [(int(c), float(x), float(y)) for c, x, y in zip(keys, plon, plat)]
+    return pts, pois, k
+
+
+class TestKnnProperties:
+    """The one kNN algorithm equals the brute-force cross join row for
+    row: same (pt, poi, rank) rows, each exactly once."""
+
+    @pytest.mark.parametrize("shape", KNN_SHAPES)
+    @given(data=st.data())
+    @settings(max_examples=3, deadline=None)
+    def test_matches_brute_force(self, spark, shape, data):
+        from sophox_spark.operators import knn
+
+        pts, pois, k = data.draw(knn_inputs(shape))
+        pts_df = spark.createDataFrame(pts, "pt_id long, lon double, lat double")
+        pois_df = spark.createDataFrame(pois, "poi_id long, lon double, lat double")
+
+        def rows(df):
+            return sorted((r.pt_id, r.poi_id, r.rank) for r in df.collect())
+
+        want = rows(knn.brute_force_knn(pts_df, pois_df, k, point_key="pt_id"))
+        assert len(want) == len(pts) * min(k, len(pois))
+        assert rows(knn.knn_join(pts_df, pois_df, k, point_key="pt_id")) == want
 
 
 class TestCodecProperties:

@@ -125,7 +125,8 @@ class TestSessionize:
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        # availableNow over a finite source must finish on its own
+        assert q.awaitTermination(120)
         try:
             return spark.read.parquet(out_dir).toPandas()
         except Exception:
@@ -148,12 +149,16 @@ class TestSessionize:
         spark.createDataFrame(pdf).write.parquet(src)
         got = self._run(spark, src, str(tmp_path / "ck1"), str(tmp_path / "out1"))
         got = got.sort_values(["user_id", "session_start"]).reset_index(drop=True)
-        # closed sessions only; the trailing ones stay open in state
-        assert len(got) == 2
-        r1, r2 = got.iloc[0], got.iloc[1]
+        # closed sessions only: the watermark ends at 12:05 − 30 min =
+        # 11:35, past user 2's 11:00 + 30 min, so that session closes
+        # too; user 1's 12:00 session stays open in state
+        assert len(got) == 3
+        r1, r2, r3 = got.iloc[0], got.iloc[1], got.iloc[2]
         assert r1.user_id == 1 and r1.n_events == 2 and r1.sum_value == 3.0
         assert str(r1.session_end) == "2025-06-01 10:10:00"
         assert r2.user_id == 2 and r2.n_events == 1 and r2.sum_value == 5.0
+        assert r3.user_id == 2 and r3.n_events == 1 and r3.sum_value == 6.0
+        assert str(r3.session_start) == "2025-06-01 11:00:00"
 
     def test_state_survives_restart(self, spark, tmp_path):
         src = str(tmp_path / "ev2")
