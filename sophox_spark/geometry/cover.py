@@ -81,11 +81,20 @@ def _classify_cells(prep: PreparedPolygons, poly_idx, cells):
     return touched, interior
 
 
+def _reachable(cells, occupied, res):
+    """Mask of ``cells`` (all at ``res``) that are an ancestor-or-self
+    of some ``occupied`` cell — the only covering cells a point in
+    ``occupied`` can join on (a point's cell at a coarser res is the
+    bit-shifted parent of its finer cell, ``grid.parent``)."""
+    return np.isin(cells, np.unique(grid.parent(occupied, res)))
+
+
 def cover_polygons_adaptive(
     packed: PackedPolygons,
     res_min: int,
     res_max: int,
     max_cells_per_poly: int = 262_144,
+    occupied: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Quadtree covering: start at ``res_min``, emit fully-interior
     cells as soon as they classify (coarse), split boundary-touched
@@ -97,6 +106,9 @@ def cover_polygons_adaptive(
     interior acceptance happens at the coarsest possible level. Same
     superset + interior-correctness guarantees.
 
+    ``occupied`` (cells at ``res_max``, optional) prunes the quadtree
+    to where the points are: see ``refine_cells``.
+
     Returns (poly_idx, cell, fully_contained).
     """
     bb = packed.bbox
@@ -107,7 +119,7 @@ def cover_polygons_adaptive(
         bb[valid, 0], bb[valid, 1], bb[valid, 2], bb[valid, 3], res_min,
         max_cells=max_cells_per_poly * max(valid.size, 1),
     )
-    return refine_cells(packed, valid[src], cells, res_min, res_max)
+    return refine_cells(packed, valid[src], cells, res_min, res_max, occupied)
 
 
 def refine_cells(
@@ -116,12 +128,20 @@ def refine_cells(
     cells: np.ndarray,
     res_min: int,
     res_max: int,
+    occupied: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Quadtree refinement from given SEED cells at ``res_min``: the
     per-level classify/split loop of ``cover_polygons_adaptive``,
     callable on any (poly_idx, cell) subset — each seed cell refines
     independently, which is what lets the distributed builder spread
-    one huge polygon's covering across the cluster."""
+    one huge polygon's covering across the cluster.
+
+    OCCUPIED-CELL PRUNING: with ``occupied`` (the cells at ``res_max``
+    that the join's points fall in), each level first drops the
+    (poly, cell) pairs whose cell is no ancestor-or-self of an occupied
+    cell, before any classification. Every pair a point can join on is
+    kept with the same ``fully_contained`` flag, so candidate pairs and
+    join output are unchanged; only unreachable subtrees go away."""
     prep = PreparedPolygons(packed)
     poly_idx = np.asarray(poly_idx, np.int64)
     cells = np.asarray(cells, np.int64)
@@ -129,6 +149,9 @@ def refine_cells(
     out_c: list[np.ndarray] = []
     out_f: list[np.ndarray] = []
     for res in range(res_min, res_max + 1):
+        if occupied is not None:
+            keep = _reachable(cells, occupied, res)
+            poly_idx, cells = poly_idx[keep], cells[keep]
         touched, interior = _classify_cells(prep, poly_idx, cells)
         if interior.any():
             out_p.append(poly_idx[interior])
@@ -157,11 +180,16 @@ def refine_cells(
 
 
 def cover_polygons(
-    packed: PackedPolygons, res: int, max_cells_per_poly: int = 262_144
+    packed: PackedPolygons,
+    res: int,
+    max_cells_per_poly: int = 262_144,
+    occupied: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Returns (poly_idx, cell, fully_contained) arrays.
 
     poly_idx indexes into the packed batch (caller maps to polygon_id).
+    ``occupied`` (cells at ``res``, optional) keeps only the bbox seeds
+    some point falls in — the same pruning as ``refine_cells``.
     """
     prep = PreparedPolygons(packed)
     bb = packed.bbox
@@ -173,27 +201,11 @@ def cover_polygons(
         max_cells=max_cells_per_poly * max(valid.size, 1),
     )
     poly_idx = valid[src]
-    lon0, lat0, lon1, lat1 = grid.cell_bounds(cells)
-    # 1. does any boundary edge actually cross the cell? (exact
-    #    separating-axis segment×rect test — superset-safe, and far
-    #    tighter than seg-bbox overlap for long diagonal edges)
-    counts = prep.edge_count[poly_idx]
-    total = int(counts.sum())
-    touched = np.zeros(cells.size, dtype=bool)
-    if total:
-        pair = np.repeat(np.arange(cells.size, dtype=np.int64), counts)
-        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        local = np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
-        e = np.repeat(prep.edge_start[poly_idx], counts) + local
-        hit = _seg_rect_hit(prep, e, pair, lon0, lat0, lon1, lat1)
-        touched = np.bincount(pair[hit], minlength=cells.size) > 0
-    # 2. cells not touched by the boundary are all-in or all-out — decide
-    #    by center parity
-    cx, cy = grid.cell_center(cells)
-    interior = np.zeros(cells.size, dtype=bool)
-    untouched = ~touched
-    if untouched.any():
-        ui = np.flatnonzero(untouched)
-        interior[ui] = prep.contains(cx[ui], cy[ui], poly_idx[ui])
+    if occupied is not None:
+        keep = _reachable(cells, occupied, res)
+        poly_idx, cells = poly_idx[keep], cells[keep]
+    # boundary-touched cells are candidates; untouched cells are all-in
+    # or all-out, decided by center parity
+    touched, interior = _classify_cells(prep, poly_idx, cells)
     keep = touched | interior
     return poly_idx[keep], cells[keep], interior[keep]

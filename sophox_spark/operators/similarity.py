@@ -188,7 +188,13 @@ def ann_topk(
     bucket/probe math and the cosine einsum replicate the column
     kernels bit-for-bit, so output is row-identical to the join path
     (pinned by TestAnnBroadcastEquivalence). Larger corpora keep the
-    skinny (id, bucket) equi-join."""
+    skinny (id, bucket) equi-join.
+
+    EAGER: deciding the route collects up to the budget's row count of
+    the corpus to the driver here, at plan construction, even if the
+    returned DataFrame is never evaluated. The query side is read again
+    at action time, so a nondeterministic upstream can give the two
+    reads different rows."""
     rows = _bounded_corpus_collect(df, key, vec_col, dim)
     if rows is not None:
         return _ann_topk_broadcast(
@@ -444,7 +450,12 @@ def ivf_topk(
     and the probe/assignment replicate ``ivf_lists_col`` exactly, so
     the output is row-for-row identical to the join path (verified both
     directions at sf0.01/sf0.1). Larger corpora keep the skinny list
-    equi-join."""
+    equi-join.
+
+    EAGER: like ``ann_topk``, the route decision collects up to the
+    budget's row count of the corpus at plan construction (besides the
+    centroid training sample), and a nondeterministic upstream can give
+    that collect and the action-time query scan different rows."""
     C = train_ivf_centroids(df, n_lists, key, vec_col, sample=sample, seed=seed)
     rows = _bounded_corpus_collect(df, key, vec_col, len(C[0]))
     if rows is not None:

@@ -9,7 +9,12 @@ scale horizontally:
   1. COVER  (dim-side, once): polygons → ``polygon_cells(cell,
      polygon_id, fully_contained)`` at a chosen grid res, range-
      partitioned by cell — the north_rule's "polygon sides
-     range-partitioned by cell prefix".
+     range-partitioned by cell prefix". A small broadcast dim is
+     covered on the driver, and when the points plan is small too the
+     covering is PRUNED to the cells the points occupy (a bounded probe
+     collects them first): like the reference's per-query GiST lookup,
+     the covering then costs in proportion to where the points are, not
+     to the polygons' whole area.
   2. FILTER (fact-side): points get a cell id from a NATIVE expression
      (whole-stage codegen) and equi-join ``polygon_cells`` on ``cell`` — a plain
      Catalyst hash join; the dim side is broadcast when small. Skewed
@@ -18,12 +23,15 @@ scale horizontally:
      polygon_cells rows replicate ``salt`` ways, points pick one salt
      lane — a two-phase shuffle that caps any single task's pair count.
   3. ACCEPT/REFINE: pairs in ``fully_contained`` cells are inside by
-     construction (no Python at all — most of the area of big admin
-     polygons); boundary-cell pairs are ray-cast exactly in one Arrow
-     batch pass. With ``broadcast_dim`` the polygon WKB is a broadcast
-     map; on the shuffle path (dim too large to collect) each BOUNDARY
-     pair instead carries its polygon WKB through a co-partitioned left
-     join — fully distributed, no driver collect anywhere.
+     construction (most of the area of big admin polygons); boundary-
+     cell pairs are ray-cast exactly. With ``broadcast_dim`` the ray
+     cast runs in the JVM: a codegen'd higher-order filter over a
+     broadcast (polygon_id → edge list) table, no Python worker
+     (``covers=True`` keeps an Arrow pass over a broadcast WKB map for
+     its boundary-eps test). On the shuffle path (dim too large to
+     collect) each BOUNDARY pair instead carries its polygon WKB through
+     a co-partitioned left join into an Arrow ray-cast pass — fully
+     distributed, no driver collect anywhere.
 
 At 100 TB the only shuffles are the fact-side hash on ``cell`` (none at
 all when the dim broadcasts) plus, on the shuffle path, the boundary-
@@ -35,6 +43,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..cells import grid
@@ -54,6 +63,13 @@ _SEED_PARALLEL_MIN_BYTES = 128 << 10
 # sub-second work; bigger broadcastable dims keep the distributed
 # builder
 _DRIVER_COVER_MAX_BYTES = 8 << 20
+
+# occupied-cell pruning of the driver-built covering: a probe collects
+# at most this many point cells (more → no pruning). The probe only runs
+# when Catalyst estimates the points plan at ≤ 64 B a row of this cap —
+# a bigger plan would mostly hit the cap, and its probe is a Spark job of
+# its own (a 500k-point parquet input: ~0.6 CPU s a call)
+_PRUNE_MAX_CELLS = 16_384
 
 
 def cell_expr(lon_col: str, lat_col: str, res: int):
@@ -316,6 +332,33 @@ def _probe_polygon_dim(polygons_df, geom_col, id_col, max_bytes):
     return mapping, True, max_poly, total
 
 
+def _occupied_cells(points_df, lon_col, lat_col, res):
+    """Distinct valid cells at ``res`` of the points, for pruning the
+    driver-built covering — or None (no pruning) when the points plan
+    is a stream (it cannot be collected) or nondeterministic (the probe
+    and the join's action would read two different inputs), when
+    Catalyst's size estimate of it is over the byte budget (no job is
+    run to decide), or when the bounded probe finds more than
+    ``_PRUNE_MAX_CELLS`` points."""
+    if points_df.isStreaming:
+        return None
+    qe = points_df._jdf.queryExecution()
+    if not qe.analyzed().deterministic():
+        return None
+    est = int(qe.optimizedPlan().stats().sizeInBytes())
+    if est > _PRUNE_MAX_CELLS * 64:
+        return None
+    rows = (
+        points_df.select(cell_expr(lon_col, lat_col, res).alias("c"))
+        .where(F.col("c") >= 0)
+        .limit(_PRUNE_MAX_CELLS + 1)
+        .collect()
+    )
+    if len(rows) > _PRUNE_MAX_CELLS:
+        return None
+    return np.unique(np.fromiter((r[0] for r in rows), np.int64, len(rows)))
+
+
 def point_in_polygon_join(
     points_df: DataFrame,
     polygons_df: DataFrame,
@@ -340,13 +383,24 @@ def point_in_polygon_join(
     matches each polygon at most once).
 
     ``broadcast_dim=None`` (default) AUTO-ROUTES with a byte-bounded
-    streamed probe (``_probe_polygon_dim``): the dim streams through
-    ``toLocalIterator`` into the broadcast map and ABORTS the moment
-    ``broadcast_max_bytes`` is exceeded — one pass both decides the
-    route and materializes the broadcast side, so the small-dim case
-    pays no separate sizing job and a planet-scale dim is read at most
-    budget-deep, never fully scanned or OOM-collected. Pass
+    probe of the dim (``_probe_polygon_dim``) that both decides the
+    route and materializes the broadcast map: a local dim is collected
+    driver-side, a small one (≤ ``_PROBE_ROWS`` rows) is sized by one
+    bounded agg and collected once, and only a bigger dim streams
+    through ``toLocalIterator``, ABORTING the moment
+    ``broadcast_max_bytes`` is exceeded — a planet-scale dim is read at
+    most budget-deep, never fully scanned or OOM-collected. Pass
     ``broadcast_dim=True/False`` to force a path explicitly.
+
+    OCCUPIED-CELL PRUNING (driver-built covering only): the covering is
+    built only where the points are. A second eager, bounded probe —
+    run here, at plan construction — collects the cells of at most
+    ``_PRUNE_MAX_CELLS`` + 1 points at the finest res, and the quadtree
+    keeps only ancestors-or-self of those cells; candidate pairs and
+    output rows are unchanged. It is skipped (full covering) when the
+    points plan is nondeterministic (it would be read twice), when
+    Catalyst estimates it over the byte budget (no job runs then), or
+    when the probe finds more points than the cap.
 
     ``salt > 1`` replicates dim-side cell rows across ``salt`` lanes and
     routes each point to one lane — bounding the per-reducer pair
@@ -395,16 +449,24 @@ def point_in_polygon_join(
         dim_ids = sorted(poly_map)
         packed_dim = wkb.pack([poly_map[i] for i in dim_ids])
         ids_arr = np.asarray(dim_ids, dtype=np.int64)
+        occupied = _occupied_cells(
+            points_df, lon_col, lat_col, res[1] if isinstance(res, tuple) else res
+        )
         if isinstance(res, tuple):
-            pi, cells, full = cover.cover_polygons_adaptive(packed_dim, res[0], res[1])
+            pi, cells, full = cover.cover_polygons_adaptive(
+                packed_dim, res[0], res[1], occupied=occupied
+            )
         else:
-            pi, cells, full = cover.cover_polygons(packed_dim, res)
-        spark = points_df.sparkSession
-        polygon_cells_df = spark.createDataFrame(
-            pd.DataFrame(
-                {"cell": cells, id_col: ids_arr[pi], "fully_contained": full}
-            ),
-            schema=f"cell long, {id_col} long, fully_contained boolean",
+            pi, cells, full = cover.cover_polygons(packed_dim, res, occupied=occupied)
+        # one Arrow batch, no pandas hop (as the edge table below)
+        polygon_cells_df = points_df.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "cell": pa.array(cells, pa.int64()),
+                    id_col: pa.array(ids_arr[pi], pa.int64()),
+                    "fully_contained": pa.array(full, pa.bool_()),
+                }
+            )
         )
     if isinstance(res, tuple):
         res_min, res_max = res
@@ -471,8 +533,6 @@ def point_in_polygon_join(
         # hand the edge table to Spark as one Arrow batch: a
         # LocalTableScan the broadcast build reads driver-side (the
         # row-list form would round-trip through a pickled RDD)
-        import pyarrow as pa
-
         offsets = np.concatenate(
             ([0], np.cumsum(prep.edge_count))
         ).astype(np.int32)

@@ -62,6 +62,16 @@ class TestGrid:
         pc = grid.encode(pl, pb, 12)
         assert set(pc.tolist()) <= set(cells.tolist())
 
+    def test_parent_of_fine_cell_is_coarse_encode(self):
+        # the PIP covering's occupied-cell pruning relies on this: a
+        # point's cell at res r is the parent of its res-13 cell, also on
+        # the clamped edges lon = ±180 and lat = ±90
+        lon = np.concatenate([LONS, [-180.0, 180.0, -180.0, 180.0, 0.0, 0.0]])
+        lat = np.concatenate([LATS, [-90.0, 90.0, 90.0, -90.0, -90.0, 90.0]])
+        fine = grid.encode(lon, lat, 13)
+        for r in range(8, 14):
+            assert np.array_equal(grid.parent(fine, r), grid.encode(lon, lat, r))
+
     def test_prefix_bucket_stability(self):
         c = grid.encode(LONS, LATS, 15)
         b = grid.prefix_bucket(c, bits=8)

@@ -114,6 +114,38 @@ class TestPipProperties:
         pc = grid.encode(px[inside], py[inside], res)
         assert set(pc.tolist()) <= cellset
 
+    @given(star_polygons(), st.integers(0, 10_000), st.integers(1, 200))
+    @settings(max_examples=60, deadline=None)
+    def test_pruned_cover_is_filtered_full_cover(self, ring, seed, n_pts):
+        """Occupied-cell pruning keeps exactly the full covering's rows
+        whose cell is an ancestor-or-self of an occupied cell: same
+        cells, same flags, same order — for both covering kernels."""
+        from sophox_spark.geometry import cover
+
+        packed = wkb.pack([wkb.polygon_wkb([ring])])
+        rng = np.random.default_rng(seed)
+        bb = packed.bbox[0]
+        px = rng.uniform(bb[0] - 0.5, bb[2] + 0.5, n_pts)
+        py = rng.uniform(bb[1] - 0.5, bb[3] + 0.5, n_pts)
+
+        res_min, res_max = 6, 11
+        occ = np.unique(grid.encode(px, py, res_max))
+        reach = np.unique(
+            np.concatenate([grid.parent(occ, r) for r in range(res_min, res_max + 1)])
+        )
+        full = cover.cover_polygons_adaptive(packed, res_min, res_max)
+        pruned = cover.cover_polygons_adaptive(packed, res_min, res_max, occupied=occ)
+        keep = np.isin(full[1], reach)
+        for a, b in zip(full, pruned):
+            assert np.array_equal(a[keep], b)
+
+        occ = np.unique(grid.encode(px, py, 10))
+        full = cover.cover_polygons(packed, 10)
+        pruned = cover.cover_polygons(packed, 10, occupied=occ)
+        keep = np.isin(full[1], occ)
+        for a, b in zip(full, pruned):
+            assert np.array_equal(a[keep], b)
+
 
 KNN_SHAPES = ("clustered", "worldwide", "antimeridian", "colocated",
               "k_over_pois", "empty_pois")

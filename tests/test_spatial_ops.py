@@ -127,6 +127,47 @@ class TestPipJoin:
         )
         assert frac > 0.3
 
+    @staticmethod
+    def _spy_occupied(monkeypatch):
+        """Record, per driver-built covering, whether it was pruned."""
+        from sophox_spark.geometry import cover
+
+        seen = []
+        for name in ("cover_polygons", "cover_polygons_adaptive"):
+            def spy(*a, _kernel=getattr(cover, name), **kw):
+                seen.append(kw.get("occupied") is not None)
+                return _kernel(*a, **kw)
+
+            monkeypatch.setattr(cover, name, spy)
+        return seen
+
+    @pytest.mark.parametrize("res", [(8, 13), 13])
+    def test_pruned_covering_same_rows(self, spark, points, polygons, monkeypatch, res):
+        """The covering pruned to the points' cells joins to rows
+        identical to the full covering (a cap of 0 never prunes)."""
+        seen = self._spy_occupied(monkeypatch)
+        pruned = sorted(map(tuple, spatial_join.point_in_polygon_join(
+            points, polygons, res=res).collect()))
+        monkeypatch.setattr(spatial_join, "_PRUNE_MAX_CELLS", 0)
+        full = sorted(map(tuple, spatial_join.point_in_polygon_join(
+            points, polygons, res=res).collect()))
+        assert seen == [True, False]
+        assert pruned == full and len(full) > 0
+
+    def test_nondeterministic_points_not_pruned(self, spark, points, polygons, monkeypatch):
+        """A points plan with rand() would be read twice (probe, then
+        action) — it must take the full covering and return exactly the
+        unpruned result."""
+        jittered = points.withColumn("lon", F.col("lon") + (F.rand(7) - 0.5) * 1e-3)
+        seen = self._spy_occupied(monkeypatch)
+        got = sorted(map(tuple, spatial_join.point_in_polygon_join(
+            jittered, polygons, res=(8, 13)).collect()))
+        monkeypatch.setattr(spatial_join, "_PRUNE_MAX_CELLS", 0)
+        want = sorted(map(tuple, spatial_join.point_in_polygon_join(
+            jittered, polygons, res=(8, 13)).collect()))
+        assert seen == [False, False]
+        assert got == want and len(want) > 0
+
 
 class TestCoveringAutoRoute:
     def test_single_pass_equals_seed_parallel(self, spark, polygons):
