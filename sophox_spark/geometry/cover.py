@@ -104,7 +104,9 @@ def cover_polygons_adaptive(
     Compared to single-res covering at ``res_max``: the dim table
     shrinks from O(area/fine_cell) to O(perimeter/fine_cell) rows, and
     interior acceptance happens at the coarsest possible level. Same
-    superset + interior-correctness guarantees.
+    superset + interior-correctness guarantees. ``res_min == res_max``
+    is that single-res covering: the bbox cells at ``res_max`` that a
+    boundary edge touches or whose center is inside.
 
     ``occupied`` (cells at ``res_max``, optional) prunes the quadtree
     to where the points are: see ``refine_cells``.
@@ -178,34 +180,3 @@ def refine_cells(
         return (np.empty(0, np.int64),) * 2 + (np.empty(0, bool),)
     return np.concatenate(out_p), np.concatenate(out_c), np.concatenate(out_f)
 
-
-def cover_polygons(
-    packed: PackedPolygons,
-    res: int,
-    max_cells_per_poly: int = 262_144,
-    occupied: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Returns (poly_idx, cell, fully_contained) arrays.
-
-    poly_idx indexes into the packed batch (caller maps to polygon_id).
-    ``occupied`` (cells at ``res``, optional) keeps only the bbox seeds
-    some point falls in — the same pruning as ``refine_cells``.
-    """
-    prep = PreparedPolygons(packed)
-    bb = packed.bbox
-    valid = np.flatnonzero(np.isfinite(bb[:, 0]))
-    if valid.size == 0:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0, bool),)
-    src, cells = grid.cover_bbox(
-        bb[valid, 0], bb[valid, 1], bb[valid, 2], bb[valid, 3], res,
-        max_cells=max_cells_per_poly * max(valid.size, 1),
-    )
-    poly_idx = valid[src]
-    if occupied is not None:
-        keep = _reachable(cells, occupied, res)
-        poly_idx, cells = poly_idx[keep], cells[keep]
-    # boundary-touched cells are candidates; untouched cells are all-in
-    # or all-out, decided by center parity
-    touched, interior = _classify_cells(prep, poly_idx, cells)
-    keep = touched | interior
-    return poly_idx[keep], cells[keep], interior[keep]

@@ -22,6 +22,10 @@ import numpy as np
 
 from .wkb import PackedPolygons
 
+# ``covers`` boundary tolerance, shared with the JVM refine of
+# operators.spatial_join (both must accept the same points)
+COVERS_EPS = 1e-12
+
 
 def point_in_rings(px: float, py: float, rings) -> bool:
     """Scalar parity test against (ring, is_hole) pairs (test helper)."""
@@ -64,7 +68,7 @@ class PreparedPolygons:
         self.bbox = packed.bbox
         self.n_geoms = packed.n_geoms
 
-    def contains(self, px, py, poly_idx, covers: bool = False, eps: float = 1e-12):
+    def contains(self, px, py, poly_idx, covers: bool = False, eps: float = COVERS_EPS):
         """Vectorized parity test for M candidate pairs.
 
         px, py : (M,) point coords; poly_idx : (M,) geometry index.

@@ -20,9 +20,10 @@ rows and the next level's worklist are filters over it.
 
 Exactness: after joining a point's ring-1 candidates, its k-th nearest
 candidate is PROVEN nearest overall iff its distance is below the
-guarantee radius — the minimum ground distance from the point's cell
-to any cell outside the 3×3 block, conservatively
-``min(cell_width_m(lat), cell_height_m)``. Points that fail the
+guarantee radius — the minimum ground distance from the point to any
+cell outside the 3×3 block, bounded below by ``_guarantee_radius_m``
+(one cell height, or one cell width at the band's most poleward
+latitude, measured on the sphere). Points that fail the
 guarantee go on to the next level — the same shrinking-worklist pattern
 the reference uses for relation-centroid fixpoints
 (osm2rdf/updateRelLoc.py:76-87).
@@ -57,10 +58,21 @@ def haversine_m_expr(lon1, lat1, lon2, lat2):
 
 
 def _guarantee_radius_m(res: int, lat_col: str):
-    """Conservative min ground distance to outside the ring-1 block."""
-    cell_h = 180.0 / (1 << res) * _DEG_LAT_M
-    cell_w = F.lit(360.0 / (1 << res) * _DEG_LAT_M) * F.cos(F.radians(F.col(lat_col)))
-    return F.least(F.lit(cell_h), cell_w) * 0.999
+    """Conservative min ground distance to outside the ring-1 block.
+
+    A POI outside the block either lies a full cell height away in
+    latitude (great-circle distance ≥ R·|Δlat|), or inside the block's
+    latitude band but ≥ one cell width away in longitude. The band
+    reaches at most two cell heights poleward of the point, to
+    ``lat_max``, and the haversine gives d ≥ 2R·asin(cos(lat_max)·
+    sin(Δlon/2)) for any two points of the band. A band that touches a
+    pole guarantees nothing: a POI just beyond the pole is outside the
+    block's longitudes, whatever its distance."""
+    cell_h_deg = 180.0 / (1 << res)
+    half_w = math.radians(360.0 / (1 << res)) / 2.0
+    lat_max = F.least(F.abs(F.col(lat_col)) + 2.0 * cell_h_deg, F.lit(90.0))
+    ew = 2.0 * EARTH_RADIUS_M * F.asin(F.cos(F.radians(lat_max)) * math.sin(half_w))
+    return F.least(F.lit(cell_h_deg * _DEG_LAT_M), ew) * 0.999
 
 
 def _density_adapted_res(pois_df, k: int, res: int, poi_lon: str, poi_lat: str) -> int:

@@ -7,31 +7,32 @@ wd_only_sql.js:23-28); ours decomposes into Spark-native pieces that
 scale horizontally:
 
   1. COVER  (dim-side, once): polygons → ``polygon_cells(cell,
-     polygon_id, fully_contained)`` at a chosen grid res, range-
-     partitioned by cell — the north_rule's "polygon sides
-     range-partitioned by cell prefix". A small broadcast dim is
-     covered on the driver, and when the points plan is small too the
-     covering is PRUNED to the cells the points occupy (a bounded probe
-     collects them first): like the reference's per-query GiST lookup,
-     the covering then costs in proportion to where the points are, not
-     to the polygons' whole area.
-  2. FILTER (fact-side): points get a cell id from a NATIVE expression
-     (whole-stage codegen) and equi-join ``polygon_cells`` on ``cell`` — a plain
-     Catalyst hash join; the dim side is broadcast when small. Skewed
-     cells are AQE-split (spark.sql.adaptive.skewJoin) and, for the
-     pathological city-cell case, the dim is salted (``salt`` arg):
+     polygon_id, fully_contained)``, one quadtree covering between
+     ``res_min`` and ``res_max`` (a single res is the quadtree with
+     ``res_min == res_max``), range-partitionable by cell — the
+     north_rule's "polygon sides range-partitioned by cell prefix". A
+     small broadcast dim is covered on the driver, and when the points
+     plan is small too the covering is PRUNED to the cells the points
+     occupy (a bounded probe collects them first): like the reference's
+     per-query GiST lookup, the covering then costs in proportion to
+     where the points are, not to the polygons' whole area.
+  2. FILTER (fact-side): each point explodes to its ancestor cells from
+     ``res_min`` to ``res_max``, computed by a NATIVE expression
+     (whole-stage codegen), and equi-joins ``polygon_cells`` on ``cell``
+     — a plain Catalyst hash join; the dim side is broadcast when small.
+     Skewed cells are AQE-split (spark.sql.adaptive.skewJoin) and, for
+     the pathological city-cell case, the dim is salted (``salt`` arg):
      polygon_cells rows replicate ``salt`` ways, points pick one salt
      lane — a two-phase shuffle that caps any single task's pair count.
   3. ACCEPT/REFINE: pairs in ``fully_contained`` cells are inside by
      construction (most of the area of big admin polygons); boundary-
-     cell pairs are ray-cast exactly. With ``broadcast_dim`` the ray
-     cast runs in the JVM: a codegen'd higher-order filter over a
-     broadcast (polygon_id → edge list) table, no Python worker
-     (``covers=True`` keeps an Arrow pass over a broadcast WKB map for
-     its boundary-eps test). On the shuffle path (dim too large to
-     collect) each BOUNDARY pair instead carries its polygon WKB through
-     a co-partitioned left join into an Arrow ray-cast pass — fully
-     distributed, no driver collect anywhere.
+     cell pairs are ray-cast exactly. On a broadcast dim the ray cast —
+     and, with ``covers=True``, the boundary-eps test — runs in the
+     JVM: a codegen'd higher-order filter over a broadcast
+     (polygon_id → edge list) table, no Python worker. On the shuffle
+     path (dim too large to collect) each BOUNDARY pair instead carries
+     its polygon WKB through a co-partitioned left join into an Arrow
+     ray-cast pass — fully distributed, no driver collect anywhere.
 
 At 100 TB the only shuffles are the fact-side hash on ``cell`` (none at
 all when the dim broadcasts) plus, on the shuffle path, the boundary-
@@ -48,7 +49,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..cells import grid
 from ..geometry import cover, wkb
-from ..geometry.pip import PreparedPolygons
+from ..geometry.pip import COVERS_EPS, PreparedPolygons
 
 DEFAULT_RES = 13  # ≈ 2.4 km cells (H3 res-7 analog, grid.H3_ANALOG_RES)
 
@@ -108,44 +109,6 @@ def cell_col(lon_col: str, lat_col: str, res: int):
     return _enc(F.col(lon_col), F.col(lat_col))
 
 
-def build_polygon_cells(
-    polygons_df: DataFrame,
-    res: int = DEFAULT_RES,
-    geom_col: str = "geom",
-    id_col: str = "polygon_id",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Polygon dim → cell covering table, range-partitioned by cell so a
-    later non-broadcast join on ``cell`` is co-partitioned and file
-    skipping works on cell ranges when persisted."""
-    out_schema = f"cell long, {id_col} long, fully_contained boolean"
-
-    def gen(batches):
-        for pdf in batches:
-            packed = wkb.pack(pdf[geom_col].tolist())
-            poly_idx, cells, full = cover.cover_polygons(packed, res)
-            yield pd.DataFrame(
-                {
-                    "cell": cells,
-                    id_col: pdf[id_col].to_numpy()[poly_idx],
-                    "fully_contained": full,
-                }
-            )
-
-    # spread the covering work: one polygon row is cheap to ship, its
-    # covering fan-out is not — parallelize across cores
-    spark = polygons_df.sparkSession
-    n_slices = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    cells_df = (
-        polygons_df.select(id_col, geom_col)
-        .repartition(n_slices)
-        .mapInPandas(gen, out_schema)
-    )
-    if num_partitions:
-        cells_df = cells_df.repartitionByRange(num_partitions, "cell")
-    return cells_df
-
-
 def build_polygon_cells_adaptive(
     polygons_df: DataFrame,
     res_min: int = 9,
@@ -157,8 +120,9 @@ def build_polygon_cells_adaptive(
 ) -> DataFrame:
     """Quadtree (multi-resolution) covering dim: O(perimeter) rows
     instead of O(area) — coarse fully-contained cells carry most of the
-    polygon interior, fine cells trace the boundary. Same schema as
-    ``build_polygon_cells``; cell ids self-describe their resolution.
+    polygon interior, fine cells trace the boundary. Schema ``(cell,
+    id_col, fully_contained)``; cell ids self-describe their resolution,
+    and ``res_min == res_max`` is the single-resolution covering.
 
     SEED-PARALLEL (``seed_parallel=True``): phase 1 fans each polygon
     out to its bbox cover at ``res_min`` (one cheap pass); the
@@ -175,7 +139,8 @@ def build_polygon_cells_adaptive(
     the parallelism buys — ``point_in_polygon_join`` auto-selects the
     single-pass path when the probed dim has no polygon large enough
     to dominate a task (same auto-route philosophy as the broadcast
-    decision)."""
+    decision), and always at a single res, where the seeds already are
+    the whole covering."""
     out_schema = f"cell long, {id_col} long, fully_contained boolean"
     spark = polygons_df.sparkSession
     n_slices = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -368,7 +333,6 @@ def point_in_polygon_join(
     geom_col: str = "geom",
     id_col: str = "polygon_id",
     covers: bool = False,
-    broadcast_dim: bool | None = None,
     salt: int = 0,
     polygon_cells_df: DataFrame | None = None,
     broadcast_max_bytes: int = 64 << 20,
@@ -376,21 +340,22 @@ def point_in_polygon_join(
     """points ⋈ polygons on containment. Returns ``points_df`` columns +
     ``id_col`` (one output row per (point, containing polygon) pair).
 
-    ``res`` may be a single resolution or a ``(res_min, res_max)`` tuple
-    for the multi-resolution (quadtree) covering: the point side then
+    ``res`` is a ``(res_min, res_max)`` pair for the quadtree covering,
+    or one resolution ``r`` (the same as ``(r, r)``). The point side
     joins on the array of its ancestor cells (one native explode — a
     polygon's covering cells are disjoint regions, so each point still
     matches each polygon at most once).
 
-    ``broadcast_dim=None`` (default) AUTO-ROUTES with a byte-bounded
-    probe of the dim (``_probe_polygon_dim``) that both decides the
-    route and materializes the broadcast map: a local dim is collected
-    driver-side, a small one (≤ ``_PROBE_ROWS`` rows) is sized by one
-    bounded agg and collected once, and only a bigger dim streams
-    through ``toLocalIterator``, ABORTING the moment
+    The route is decided by a byte-bounded probe of the dim
+    (``_probe_polygon_dim``) that also materializes the broadcast map:
+    a local dim is collected driver-side, a small one (≤ ``_PROBE_ROWS``
+    rows) is sized by one bounded agg and collected once, and only a
+    bigger dim streams through ``toLocalIterator``, ABORTING the moment
     ``broadcast_max_bytes`` is exceeded — a planet-scale dim is read at
-    most budget-deep, never fully scanned or OOM-collected. Pass
-    ``broadcast_dim=True/False`` to force a path explicitly.
+    most budget-deep, never fully scanned or OOM-collected. A dim within
+    the budget broadcasts and refines in the JVM; a bigger one (or any
+    dim, with ``broadcast_max_bytes=0``) takes the shuffle join and the
+    partitioned Arrow refine.
 
     OCCUPIED-CELL PRUNING (driver-built covering only): the covering is
     built only where the points are. A second eager, bounded probe —
@@ -408,95 +373,55 @@ def point_in_polygon_join(
     Salting only applies to the SHUFFLE join path: a broadcast hash join
     has no reducers — every input partition probes the broadcast table
     locally, so cell skew cannot concentrate work, and salting would
-    only inflate the broadcast ``salt``-fold. With ``broadcast_dim``
-    the salt argument is therefore ignored.
+    only inflate the broadcast ``salt``-fold. On a broadcast dim the
+    salt argument is therefore ignored.
     """
-    poly_map = None
-    seed_parallel = True
-    total_dim_bytes = None
-    if broadcast_dim is None:
-        poly_map, broadcast_dim, max_poly_bytes, total_dim_bytes = _probe_polygon_dim(
-            polygons_df, geom_col, id_col, broadcast_max_bytes
-        )
-        # covering fan-out auto-route: the seed reshuffle only pays off
-        # when a single polygon's quadtree can dominate a task — for
-        # dims of small polygons the one-crossing local recursion wins
-        # (this was the sole r5 bench regression at sf0.1's 60 rects)
-        seed_parallel = not broadcast_dim or max_poly_bytes > _SEED_PARALLEL_MIN_BYTES
-    if broadcast_dim and poly_map is None:
-        # forced-broadcast caller: materialize the dim map driver-side
-        # (same bounded collect the auto-route would have done)
-        rows = polygons_df.select(id_col, geom_col).collect()
-        poly_map = {r[0]: bytes(r[1]) for r in rows if r[1] is not None}
-        total_dim_bytes = sum(len(b) for b in poly_map.values())
-    # DRIVER-SIDE COVERING (broadcast route only): the dim's WKB is
-    # already in driver memory, and the covering kernel is a vectorized
-    # numpy pass measured far cheaper than even ONE Spark stage of
-    # Python workers (the distributed builder pays a repartition
-    # shuffle + a mapInPandas crossing to parallelize sub-second work).
-    # The resulting dim table ships to executors through the same
-    # broadcast join it always used. Dims past the byte budget — or a
-    # caller-supplied covering — keep the distributed builder.
-    packed_dim = None  # PackedPolygons + sorted ids when driver-built
-    dim_ids = None
-    use_driver_cover = (
-        broadcast_dim
-        and polygon_cells_df is None
-        and poly_map is not None
-        and (total_dim_bytes or 0) <= _DRIVER_COVER_MAX_BYTES
+    res_min, res_max = res if isinstance(res, tuple) else (res, res)
+    poly_map, broadcast, max_poly_bytes, total_dim_bytes = _probe_polygon_dim(
+        polygons_df, geom_col, id_col, broadcast_max_bytes
     )
-    if use_driver_cover:
-        dim_ids = sorted(poly_map)
-        packed_dim = wkb.pack([poly_map[i] for i in dim_ids])
-        ids_arr = np.asarray(dim_ids, dtype=np.int64)
-        occupied = _occupied_cells(
-            points_df, lon_col, lat_col, res[1] if isinstance(res, tuple) else res
+    if broadcast:
+        dim_ids = np.asarray(sorted(poly_map), dtype=np.int64)
+        packed_dim = wkb.pack([poly_map[i] for i in dim_ids.tolist()])
+    if polygon_cells_df is None and broadcast and total_dim_bytes <= _DRIVER_COVER_MAX_BYTES:
+        # DRIVER-SIDE COVERING: the dim's WKB is already in driver
+        # memory, and the covering kernel is a vectorized numpy pass
+        # measured far cheaper than even ONE Spark stage of Python
+        # workers (the distributed builder pays a repartition shuffle +
+        # a mapInPandas crossing to parallelize sub-second work). The
+        # dim table ships to executors through the broadcast join, as
+        # one Arrow batch (no pandas hop).
+        occupied = _occupied_cells(points_df, lon_col, lat_col, res_max)
+        pi, cells, full = cover.cover_polygons_adaptive(
+            packed_dim, res_min, res_max, occupied=occupied
         )
-        if isinstance(res, tuple):
-            pi, cells, full = cover.cover_polygons_adaptive(
-                packed_dim, res[0], res[1], occupied=occupied
-            )
-        else:
-            pi, cells, full = cover.cover_polygons(packed_dim, res, occupied=occupied)
-        # one Arrow batch, no pandas hop (as the edge table below)
         polygon_cells_df = points_df.sparkSession.createDataFrame(
             pa.table(
                 {
                     "cell": pa.array(cells, pa.int64()),
-                    id_col: pa.array(ids_arr[pi], pa.int64()),
+                    id_col: pa.array(dim_ids[pi], pa.int64()),
                     "fully_contained": pa.array(full, pa.bool_()),
                 }
             )
         )
-    if isinstance(res, tuple):
-        res_min, res_max = res
-        pcells = (
-            polygon_cells_df
-            if polygon_cells_df is not None
-            else build_polygon_cells_adaptive(
-                polygons_df, res_min, res_max, geom_col, id_col,
-                seed_parallel=seed_parallel,
-            )
+    elif polygon_cells_df is None:
+        # covering fan-out auto-route: the seed reshuffle only pays off
+        # when a single polygon's quadtree can dominate a task — for
+        # dims of small polygons, and at a single res (the seeds are
+        # the covering), the one-crossing local recursion wins
+        polygon_cells_df = build_polygon_cells_adaptive(
+            polygons_df, res_min, res_max, geom_col, id_col,
+            seed_parallel=res_min < res_max
+            and (not broadcast or max_poly_bytes > _SEED_PARALLEL_MIN_BYTES),
         )
-        ancestors = F.array(
-            *[cell_expr(lon_col, lat_col, r) for r in range(res_min, res_max + 1)]
-        )
-        pts = points_df.withColumn("__cell", F.explode(ancestors)).filter(
-            F.col("__cell") >= 0
-        )
-    else:
-        pcells = (
-            polygon_cells_df
-            if polygon_cells_df is not None
-            else build_polygon_cells(polygons_df, res, geom_col, id_col)
-        )
-        pts = points_df.withColumn("__cell", cell_expr(lon_col, lat_col, res)).filter(
-            F.col("__cell") >= 0
-        )
-    dim = pcells.withColumnRenamed("cell", "__cell")
-    if broadcast_dim:
-        salt = 0
-    if salt > 1:
+    ancestors = F.array(
+        *[cell_expr(lon_col, lat_col, r) for r in range(res_min, res_max + 1)]
+    )
+    pts = points_df.withColumn("__cell", F.explode(ancestors)).filter(
+        F.col("__cell") >= 0
+    )
+    dim = polygon_cells_df.withColumnRenamed("cell", "__cell")
+    if salt > 1 and not broadcast:
         dim = dim.withColumn(
             "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
         )
@@ -506,47 +431,93 @@ def point_in_polygon_join(
         join_keys = ["__cell", "__salt"]
     else:
         join_keys = ["__cell"]
-    dimj = F.broadcast(dim) if broadcast_dim else dim
-    cand = pts.join(dimj, join_keys)
+    cand = pts.join(F.broadcast(dim) if broadcast else dim, join_keys)
 
-    out_cols = [c for c in points_df.columns] + [id_col]
-    if broadcast_dim and not covers:
-        # PURE-JVM REFINE: the even-odd ray cast is a fixed arithmetic
-        # fold over the polygon's edge list, so with the dim already
-        # collected it compiles to a codegen'd higher-order-function
-        # filter over a broadcast (polygon_id → edges array) row — the
-        # flagship path then has NO Python boundary at all (no
-        # ArrowEvalPython node, no worker startup, no Arrow transpose).
-        # The expression replicates PreparedPolygons.contains
-        # bit-for-bit: same bbox pre-reject, same crossing predicate
-        # ((y1>lat) != (y2>lat)), same IEEE evaluation order for the
-        # intercept x1 + ((lat-y1)/(y2-y1))*(x2-x1) — JVM and numpy
-        # doubles agree exactly on identical op sequences. Stale
-        # covering ids (caller-supplied polygon_cells_df) left-join no
-        # edge row: fully_contained pairs still pass, boundary pairs
-        # drop — the Python path's semantics.
-        if packed_dim is None:
-            dim_ids = sorted(poly_map)
-            packed_dim = wkb.pack([poly_map[i] for i in dim_ids])
-        prep = PreparedPolygons(packed_dim)
-        spark = points_df.sparkSession
-        # hand the edge table to Spark as one Arrow batch: a
-        # LocalTableScan the broadcast build reads driver-side (the
-        # row-list form would round-trip through a pickled RDD)
-        offsets = np.concatenate(
-            ([0], np.cumsum(prep.edge_count))
-        ).astype(np.int32)
-        edge_struct = pa.StructArray.from_arrays(
-            [pa.array(prep.x1, pa.float64()), pa.array(prep.y1, pa.float64()),
-             pa.array(prep.x2, pa.float64()), pa.array(prep.y2, pa.float64())],
-            names=["x1", "y1", "x2", "y2"],
-        )
-        edge_lists = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), edge_struct)
-        arrow_tbl = pa.table(
+    out_cols = points_df.columns + [id_col]
+    if broadcast:
+        return _refine_broadcast(
+            cand, packed_dim, dim_ids, lon_col, lat_col, id_col, covers
+        ).select(*out_cols)
+    # PARTITIONED REFINE: the dim is too big to collect/broadcast, so
+    # ship each boundary pair its polygon WKB through a left join
+    # conditioned on NOT fully_contained (accepted-interior pairs join
+    # nothing and carry no geometry) — single-pass, no driver collect,
+    # no plan diamond. Geometry bytes duplicate per *boundary* pair
+    # only; the ray-cast then needs no broadcast state at all.
+    out_schema = cand.select(*out_cols).schema
+    geoms = polygons_df.select(
+        F.col(id_col).alias("__geom_id"), F.col(geom_col).alias("__geom")
+    )
+    cand = cand.join(
+        geoms,
+        on=(F.col(id_col) == F.col("__geom_id")) & ~F.col("fully_contained"),
+        how="left",
+    )
+
+    def refine_partitioned(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ok = pdf["fully_contained"].to_numpy(copy=True)
+            need = np.flatnonzero(~ok)
+            if need.size:
+                sub = pdf.iloc[need]
+                # pack each polygon ONCE per batch
+                uniq = sub.drop_duplicates("__geom_id")[["__geom_id", "__geom"]]
+                blobs = [
+                    bytes(b) for b in uniq["__geom"] if b is not None
+                ]
+                ids = [
+                    i for i, b in zip(uniq["__geom_id"], uniq["__geom"])
+                    if b is not None
+                ]
+                if blobs:
+                    prep_b = PreparedPolygons(wkb.pack(blobs))
+                    idx_b = {p: i for i, p in enumerate(ids)}
+                    mapped = sub["__geom_id"].map(idx_b)
+                    known = mapped.notna().to_numpy()
+                    if known.any():
+                        subk = sub.iloc[known] if not known.all() else sub
+                        ok[need[known]] = prep_b.contains(
+                            subk[lon_col].to_numpy(),
+                            subk[lat_col].to_numpy(),
+                            mapped.to_numpy()[known].astype(np.int64),
+                            covers=covers,
+                        )
+            yield pdf.loc[ok, [f.name for f in out_schema.fields]]
+
+    return cand.mapInPandas(refine_partitioned, out_schema)
+
+
+def _refine_broadcast(cand, packed_dim, dim_ids, lon_col, lat_col, id_col, covers):
+    """PURE-JVM REFINE of broadcast-route candidate pairs: the even-odd
+    ray cast (and the ``covers`` boundary test) is a fixed arithmetic
+    fold over the polygon's edge list, so it compiles to a codegen'd
+    higher-order-function filter over a broadcast (polygon_id → edges
+    array) row — no ArrowEvalPython node, no worker startup, no Arrow
+    transpose. The expressions replicate ``PreparedPolygons.contains``
+    bit-for-bit: same bbox pre-reject, same crossing predicate
+    ((y1>lat) != (y2>lat)), same IEEE evaluation order for the
+    intercept x1 + ((lat-y1)/(y2-y1))*(x2-x1) and for ``_on_boundary``'s
+    cross, seg_len2 and dot — JVM and numpy doubles agree exactly on
+    identical op sequences. Stale covering ids (caller-supplied
+    polygon_cells_df) left-join no edge row: fully_contained pairs still
+    pass, boundary pairs drop — the partitioned refine's semantics."""
+    prep = PreparedPolygons(packed_dim)
+    # hand the edge table to Spark as one Arrow batch: a LocalTableScan
+    # the broadcast build reads driver-side (the row-list form would
+    # round-trip through a pickled RDD)
+    offsets = np.concatenate(([0], np.cumsum(prep.edge_count))).astype(np.int32)
+    edge_struct = pa.StructArray.from_arrays(
+        [pa.array(prep.x1, pa.float64()), pa.array(prep.y1, pa.float64()),
+         pa.array(prep.x2, pa.float64()), pa.array(prep.y2, pa.float64())],
+        names=["x1", "y1", "x2", "y2"],
+    )
+    edge_lists = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), edge_struct)
+    edges_df = cand.sparkSession.createDataFrame(
+        pa.table(
             {
-                id_col: pa.array(
-                    np.asarray(dim_ids, dtype=np.int64), pa.int64()
-                ),
+                id_col: pa.array(dim_ids, pa.int64()),
                 "__bx0": pa.array(prep.bbox[:, 0], pa.float64()),
                 "__by0": pa.array(prep.bbox[:, 1], pa.float64()),
                 "__bx1": pa.array(prep.bbox[:, 2], pa.float64()),
@@ -554,114 +525,30 @@ def point_in_polygon_join(
                 "__edges": edge_lists,
             }
         )
-        edges_df = spark.createDataFrame(arrow_tbl)
-        lon, lat = F.col(lon_col), F.col(lat_col)
+    )
+    lon, lat = F.col(lon_col), F.col(lat_col)
 
-        def _edge_hit(e):
-            crosses = (e["y1"] > lat) != (e["y2"] > lat)
-            xint = e["x1"] + ((lat - e["y1"]) / (e["y2"] - e["y1"])) * (e["x2"] - e["x1"])
-            return crosses & (lon < xint)
+    def _edge_hit(e):
+        crosses = (e["y1"] > lat) != (e["y2"] > lat)
+        xint = e["x1"] + ((lat - e["y1"]) / (e["y2"] - e["y1"])) * (e["x2"] - e["x1"])
+        return crosses & (lon < xint)
 
-        parity = (F.size(F.filter(F.col("__edges"), _edge_hit)) % 2) == 1
-        inside = F.col("fully_contained") | (
-            (lon >= F.col("__bx0")) & (lon <= F.col("__bx1"))
-            & (lat >= F.col("__by0")) & (lat <= F.col("__by1"))
-            & parity
-        )
+    def _on_edge(e):
+        dx, dy = e["x2"] - e["x1"], e["y2"] - e["y1"]
+        cross = (lon - e["x1"]) * dy - (lat - e["y1"]) * dx
+        seg_len2 = dx * dx + dy * dy
+        dot = (lon - e["x1"]) * dx + (lat - e["y1"]) * dy
         return (
-            cand.join(F.broadcast(edges_df), on=id_col, how="left")
-            .filter(inside)
-            .select(*out_cols)
-        )
-    out_schema = cand.select(*out_cols).schema
-    if not broadcast_dim:
-        # PARTITIONED REFINE: the dim is too big to collect/broadcast, so
-        # ship each boundary pair its polygon WKB through a left join
-        # conditioned on NOT fully_contained (accepted-interior pairs join
-        # nothing and carry no geometry) — single-pass, no driver collect,
-        # no plan diamond. Geometry bytes duplicate per *boundary* pair
-        # only; the ray-cast then needs no broadcast state at all.
-        geoms = polygons_df.select(
-            F.col(id_col).alias("__geom_id"), F.col(geom_col).alias("__geom")
-        )
-        cand = cand.join(
-            geoms,
-            on=(F.col(id_col) == F.col("__geom_id")) & ~F.col("fully_contained"),
-            how="left",
+            (F.abs(cross) <= F.lit(COVERS_EPS) * F.greatest(seg_len2, F.lit(1.0)))
+            & (dot >= -COVERS_EPS) & (dot <= seg_len2 + COVERS_EPS)
         )
 
-        def refine_partitioned(batches):
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                ok = pdf["fully_contained"].to_numpy(copy=True)
-                need = np.flatnonzero(~ok)
-                if need.size:
-                    sub = pdf.iloc[need]
-                    # pack each polygon ONCE per batch
-                    uniq = sub.drop_duplicates("__geom_id")[["__geom_id", "__geom"]]
-                    blobs = [
-                        bytes(b) for b in uniq["__geom"] if b is not None
-                    ]
-                    ids = [
-                        i for i, b in zip(uniq["__geom_id"], uniq["__geom"])
-                        if b is not None
-                    ]
-                    if blobs:
-                        prep_b = PreparedPolygons(wkb.pack(blobs))
-                        idx_b = {p: i for i, p in enumerate(ids)}
-                        mapped = sub["__geom_id"].map(idx_b)
-                        known = mapped.notna().to_numpy()
-                        if known.any():
-                            subk = sub.iloc[known] if not known.all() else sub
-                            ok[need[known]] = prep_b.contains(
-                                subk[lon_col].to_numpy(),
-                                subk[lat_col].to_numpy(),
-                                mapped.to_numpy()[known].astype(np.int64),
-                                covers=covers,
-                            )
-                yield pdf.loc[ok, [f.name for f in out_schema.fields]]
-
-        return cand.mapInPandas(refine_partitioned, out_schema)
-
-    # covers=True broadcast path: the boundary-eps test stays in the
-    # Arrow kernel (poly_map is always materialized on broadcast routes)
-    poly_bc = points_df.sparkSession.sparkContext.broadcast(poly_map)
-
-    def refine(batches):
-        # SINGLE-PASS accept/refine: every candidate pair flows through
-        # one Arrow crossing; fully_contained pairs pass by boolean mask
-        # (no geometry math), boundary pairs get the exact ray-cast.
-        # A sure/maybe DataFrame split would look cheaper but makes the
-        # plan a diamond — both union branches recompute the whole join
-        # (measured 3.9× slower at sf0.1×100). The broadcast dim is
-        # packed + edge-indexed ONCE per python worker (the
-        # STRtree-packed broadcast partition of the north_star).
-        prep = None
-        idx_of: dict = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if prep is None:
-                mapping = poly_bc.value
-                ids = sorted(mapping)
-                prep = PreparedPolygons(wkb.pack([mapping[i] for i in ids]))
-                idx_of = {p: i for i, p in enumerate(ids)}
-            ok = pdf["fully_contained"].to_numpy(copy=True)
-            need = np.flatnonzero(~ok)
-            if need.size:
-                sub = pdf.iloc[need]
-                mapped = sub[id_col].map(idx_of)
-                # ids in a caller-supplied polygon_cells_df but absent
-                # from polygons_df (stale covering) are non-matches, not
-                # executor crashes
-                known = mapped.notna().to_numpy()
-                if known.any():
-                    subk = sub.iloc[known] if not known.all() else sub
-                    ok[need[known]] = prep.contains(
-                        subk[lon_col].to_numpy(), subk[lat_col].to_numpy(),
-                        mapped.to_numpy()[known].astype(np.int64), covers=covers,
-                    )
-            yield pdf.loc[ok, [f.name for f in out_schema.fields]]
-
-    return cand.mapInPandas(refine, out_schema)
+    hit = (F.size(F.filter(F.col("__edges"), _edge_hit)) % 2) == 1
+    if covers:
+        hit = hit | F.exists(F.col("__edges"), _on_edge)
+    inside = F.col("fully_contained") | (
+        (lon >= F.col("__bx0")) & (lon <= F.col("__bx1"))
+        & (lat >= F.col("__by0")) & (lat <= F.col("__by1"))
+        & hit
+    )
+    return cand.join(F.broadcast(edges_df), on=id_col, how="left").filter(inside)

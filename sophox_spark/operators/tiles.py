@@ -108,8 +108,7 @@ def cover_polygon_tiles(
 def _cover_one_projected(proj, max_tiles_per_poly, z, pid):
     """Tile covering for ONE polygon already projected to the tile
     plane. Returns (gx, gy, interior, keep) over the bbox tile grid —
-    shared by ``cover_polygon_tiles`` and the fused
-    ``vector_tile_features`` single-pass path."""
+    shared by ``cover_polygon_tiles`` and ``vector_tile_features``."""
     packed = _pack_plane(proj)
     prep = PreparedPolygons(packed)
     bb = packed.bbox[0]
@@ -206,82 +205,44 @@ def rasterize_points(
 
 def vector_tile_features(
     polygons_df: DataFrame, z: int, extent: int = 4096,
-    geom_col="geom", id_col="polygon_id", broadcast_polys: bool = True,
+    geom_col="geom", id_col="polygon_id",
 ) -> DataFrame:
     """Per-(tile, polygon) vector feature rows with tile-local integer
     coordinates on an ``extent``×``extent`` grid (MVT-style; geometry is
     quantized, not clipped — renderer-side clipping assumed, documented
     divergence from MVT).
 
-    The covering fan-out (tiles × polygons) is always ≥ the polygon dim,
-    so with ``broadcast_polys=True`` (default) the covering AND the
-    per-tile quantization run FUSED in one partition pass over the
-    polygon dim — the polygon is decoded and projected once, its
-    covered tiles enumerated, and each tile's rings quantized, with no
-    covering↔geometry re-attach join and a single Python crossing
-    (formerly: covering mapInPandas → broadcast join → second
-    mapInPandas). Pass ``broadcast_polys=False`` for a polygon table
-    too large to broadcast — the covering is built separately and the
-    re-attach join shuffles both sides on ``id_col``."""
+    The covering AND the per-tile quantization run FUSED in one narrow
+    partition pass over the polygon dim: each polygon is decoded and
+    projected once, its covered tiles enumerated, and each tile's rings
+    quantized — no covering↔geometry re-attach join, no exchange, a
+    single Python crossing. Nothing is collected or broadcast, so the
+    pass serves a polygon dim of any size. ``cover_polygon_tiles``
+    gives the bare (tile, polygon) covering."""
     out_schema = f"tile long, {id_col} long, ring_idx int, coords_q array<long>"
     zkey = z << 58
 
-    if broadcast_polys:
-        def fused(batches):
-            for pdf in batches:
-                out = {"tile": [], id_col: [], "ring_idx": [], "coords_q": []}
-                for pid, blob in zip(pdf[id_col], pdf[geom_col]):
-                    if blob is None:
-                        continue
-                    polys_d = wkb.decode_one(bytes(blob))
-                    proj = [
-                        [_project_to_tile_plane(r, z) for r in rings]
-                        for rings in polys_d
-                    ]
-                    gx, gy, _interior, keep = _cover_one_projected(
-                        proj, 65536, z, pid
-                    )
-                    proj_rings = [r for rings in proj for r in rings]
-                    for tx, ty in zip(gx[keep].tolist(), gy[keep].tolist()):
-                        origin = np.array([tx, ty], dtype=np.float64)
-                        tile = zkey + (tx << 29) + ty
-                        for ri, pr in enumerate(proj_rings):
-                            q = simp.dedup_consecutive(
-                                np.round((pr - origin) * extent).astype(np.int64)
-                            )
-                            out["tile"].append(tile)
-                            out[id_col].append(pid)
-                            out["ring_idx"].append(ri)
-                            out["coords_q"].append([int(v) for xy in q for v in xy])
-                yield pd.DataFrame(out)
-
-        return polygons_df.select(id_col, geom_col).mapInPandas(fused, out_schema)
-
-    cov = cover_polygon_tiles(polygons_df, z, geom_col, id_col)
-    polys = polygons_df.select(id_col, geom_col)
-    joined = cov.join(polys, id_col)
-
-    def gen(batches):
+    def fused(batches):
         for pdf in batches:
-            out = {
-                "tile": [], id_col: [], "ring_idx": [], "coords_q": [],
-            }
-            # decode + project each polygon ONCE per batch, then emit a
-            # cheap subtract/round per covered tile (a polygon covering k
-            # tiles costs one decode, not k)
-            for pid, grp in pdf.groupby(id_col, sort=False):
-                blob = grp[geom_col].iloc[0]
+            out = {"tile": [], id_col: [], "ring_idx": [], "coords_q": []}
+            for pid, blob in zip(pdf[id_col], pdf[geom_col]):
+                if blob is None:
+                    continue
                 polys_d = wkb.decode_one(bytes(blob))
-                proj_rings = [
-                    _project_to_tile_plane(r, z)
+                proj = [
+                    [_project_to_tile_plane(r, z) for r in rings]
                     for rings in polys_d
-                    for r in rings
                 ]
-                for tile, tx, ty in zip(grp["tile"], grp["tile_x"], grp["tile_y"]):
+                gx, gy, _interior, keep = _cover_one_projected(
+                    proj, 65536, z, pid
+                )
+                proj_rings = [r for rings in proj for r in rings]
+                for tx, ty in zip(gx[keep].tolist(), gy[keep].tolist()):
                     origin = np.array([tx, ty], dtype=np.float64)
-                    for ri, proj in enumerate(proj_rings):
+                    tile = zkey + (tx << 29) + ty
+                    for ri, pr in enumerate(proj_rings):
                         q = simp.dedup_consecutive(
-                            np.round((proj - origin) * extent).astype(np.int64)
+                            np.round((pr - origin) * extent).astype(np.int64)
                         )
                         out["tile"].append(tile)
                         out[id_col].append(pid)
@@ -289,6 +250,4 @@ def vector_tile_features(
                         out["coords_q"].append([int(v) for xy in q for v in xy])
             yield pd.DataFrame(out)
 
-    return joined.mapInPandas(
-        gen, f"tile long, {id_col} long, ring_idx int, coords_q array<long>"
-    )
+    return polygons_df.select(id_col, geom_col).mapInPandas(fused, out_schema)

@@ -460,10 +460,21 @@ def _decode_strings(data) -> list[str]:
     ]
 
 
-_ELEMENT_COLS = [
-    "kind", "id", "version", "user", "ts", "changeset", "deleted",
-    "lon_nano", "lat_nano", "lon", "lat", "tags", "refs", "members",
-]
+# every decoded frame (nodes, ways, relations, empty) carries exactly
+# these dtypes, so concatenating frames of different kinds never leans on
+# pandas' dtype inference over all-NA columns; lon_nano/lat_nano are
+# nullable ints because ways and relations have none
+_ELEMENT_DTYPES = {
+    "kind": object, "id": np.int64, "version": np.int64, "user": object,
+    "ts": "datetime64[ns]", "changeset": np.int64, "deleted": bool,
+    "lon_nano": "Int64", "lat_nano": "Int64", "lon": np.float64,
+    "lat": np.float64, "tags": object, "refs": object, "members": object,
+}
+_ELEMENT_COLS = list(_ELEMENT_DTYPES)
+
+
+def _no_elements() -> pd.DataFrame:
+    return pd.DataFrame(columns=_ELEMENT_COLS).astype(_ELEMENT_DTYPES)
 
 
 def _split_keys_vals(kv: np.ndarray, n: int, strings: list[str]) -> list[dict]:
@@ -522,8 +533,8 @@ def _decode_dense(data, strings, gran, lat_off, lon_off, date_gran) -> pd.DataFr
             "ts": pd.to_datetime(ts * date_gran, unit="ms"),
             "changeset": changesets,
             "deleted": ~visible,
-            "lon_nano": lon_nano,
-            "lat_nano": lat_nano,
+            "lon_nano": pd.array(lon_nano, dtype="Int64"),
+            "lat_nano": pd.array(lat_nano, dtype="Int64"),
             # one correctly-rounded DIVISION (not *1e-9): nano/10^9 is then
             # bit-identical to any other single-division rendering of the
             # same decimal (e.g. lat4/10000.0 in SQL) — str() round-trips
@@ -626,7 +637,8 @@ def _decode_way_or_rel_batch(msgs, strings, kind: str, date_gran: int):
                  "role": strings[int(r)]}
                 for r, m, t in zip(roles, memids, types)
             ]
-    none_f = np.full(n, None, dtype=object)
+    no_nano = pd.array([None] * n, dtype="Int64")
+    no_deg = np.full(n, np.nan)
     return pd.DataFrame(
         {
             "kind": kind,
@@ -636,10 +648,10 @@ def _decode_way_or_rel_batch(msgs, strings, kind: str, date_gran: int):
             "ts": pd.to_datetime(ts_ms, unit="ms"),
             "changeset": changesets,
             "deleted": deleted,
-            "lon_nano": none_f,
-            "lat_nano": none_f,
-            "lon": none_f,
-            "lat": none_f,
+            "lon_nano": no_nano,
+            "lat_nano": no_nano,
+            "lon": no_deg,
+            "lat": no_deg,
             "tags": tags_col,
             "refs": refs_col,
             "members": members_col,
@@ -686,7 +698,7 @@ def decode_block(block: bytes) -> pd.DataFrame:
                 _decode_way_or_rel_batch(rel_msgs, strings, "relation", date_gran)
             )
     if not frames:
-        return pd.DataFrame(columns=_ELEMENT_COLS)
+        return _no_elements()
     return pd.concat(frames, ignore_index=True)[_ELEMENT_COLS]
 
 
@@ -700,7 +712,7 @@ def decode_file(path: str) -> pd.DataFrame:
             f.seek(off)
             frames.append(decode_block(_blob_block(f.read(size))))
     if not frames:
-        return pd.DataFrame(columns=_ELEMENT_COLS)
+        return _no_elements()
     return pd.concat(frames, ignore_index=True)
 
 

@@ -179,7 +179,7 @@ class TestCover:
         packed = wkb.pack([DONUT, STAR])
         prep = PreparedPolygons(packed)
         res = 12
-        poly_idx, cells, full = cover.cover_polygons(packed, res)
+        poly_idx, cells, full = cover.cover_polygons_adaptive(packed, res, res)
         cellset = {(int(p), int(c)) for p, c in zip(poly_idx, cells)}
         # random points inside each polygon must land in a covered cell
         px = rng.uniform(-12, 60, 5000)
@@ -200,7 +200,7 @@ class TestCover:
 
     def test_hole_cells_dropped(self):
         packed = wkb.pack([DONUT])
-        _, cells, _ = cover.cover_polygons(packed, 12)
+        _, cells, _ = cover.cover_polygons_adaptive(packed, 12, 12)
         # the very center of the hole must not be covered
         center_cell = int(grid.encode([0.0], [0.0], 12)[0])
         assert center_cell not in set(cells.tolist())

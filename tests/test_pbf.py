@@ -204,6 +204,7 @@ def _assert_nodes_roundtrip(orig: pd.DataFrame, got: pd.DataFrame):
     assert (got["ts"] == orig["ts"].dt.floor("s")).all()
 
 
+@pytest.mark.filterwarnings("error::FutureWarning")
 def test_roundtrip_all_kinds(tmp_path):
     path = str(tmp_path / "rt.osm.pbf")
     nodes, ways, rels = _nodes_pdf(), _ways_pdf(), _rels_pdf()
@@ -211,6 +212,14 @@ def test_roundtrip_all_kinds(tmp_path):
     assert n_blobs == 4 + 2 + 1  # ceil(50/16) + ceil(20/16) + ceil(10/16)
     out = pbf.decode_file(path)
     assert len(out) == 80
+    # node, way and relation blocks concatenate to fixed dtypes, whatever
+    # pandas infers for all-NA columns
+    assert {c: str(t) for c, t in out.dtypes.items()} == {
+        "kind": "object", "id": "int64", "version": "int64", "user": "object",
+        "ts": "datetime64[ns]", "changeset": "int64", "deleted": "bool",
+        "lon_nano": "Int64", "lat_nano": "Int64", "lon": "float64",
+        "lat": "float64", "tags": "object", "refs": "object", "members": "object",
+    }
 
     _assert_nodes_roundtrip(nodes, out[out["kind"] == "node"])
 

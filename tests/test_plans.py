@@ -60,7 +60,7 @@ class TestSpatialJoinPlan:
 
     def test_fact_side_not_shuffled_when_broadcast(self, spark, points):
         polygons = synth.admin_polygons_df(spark, 40)
-        pcells = spatial_join.build_polygon_cells(polygons, 13).localCheckpoint()
+        pcells = spatial_join.build_polygon_cells_adaptive(polygons, 13, 13).localCheckpoint()
         out = spatial_join.point_in_polygon_join(
             points, polygons, polygon_cells_df=pcells
         )
@@ -69,7 +69,7 @@ class TestSpatialJoinPlan:
 
     def test_no_python_on_broadcast_path(self, spark, points):
         polygons = synth.admin_polygons_df(spark, 40)
-        pcells = spatial_join.build_polygon_cells(polygons, 13).localCheckpoint()
+        pcells = spatial_join.build_polygon_cells_adaptive(polygons, 13, 13).localCheckpoint()
         out = spatial_join.point_in_polygon_join(
             points, polygons, polygon_cells_df=pcells
         )
@@ -78,19 +78,23 @@ class TestSpatialJoinPlan:
         # over broadcast edge arrays) are all native expressions
         assert explain.python_eval_nodes(out) == 0
 
-    def test_covers_refine_stays_python(self, spark, points):
-        # the boundary-eps covers test still runs in the Arrow kernel
+    def test_covers_refine_runs_in_jvm(self, spark, points):
+        # the boundary-eps covers test is a higher-order exists over the
+        # same broadcast edge arrays as the ray cast: no Python crossing
         polygons = synth.admin_polygons_df(spark, 40)
         out = spatial_join.point_in_polygon_join(points, polygons, covers=True)
-        assert explain.python_eval_nodes(out) == 1
+        assert explain.python_eval_nodes(out) == 0
+        assert explain.has_broadcast_join(out)
 
     def test_shuffle_path_when_not_broadcast(self, spark, points):
         polygons = synth.admin_polygons_df(spark, 40)
-        out = spatial_join.point_in_polygon_join(points, polygons, broadcast_dim=False)
+        out = spatial_join.point_in_polygon_join(
+            points, polygons, broadcast_max_bytes=0
+        )
         assert explain.count_exchanges(out) >= 1
 
     def test_auto_dispatch_engages_shuffle_above_budget(self, spark, points):
-        """Default broadcast_dim=None sizes the dim natively; a dim over
+        """The dim probe sizes the dim natively; a dim over
         ``broadcast_max_bytes`` takes the shuffle/partitioned-refine
         path — the defaults can never OOM-collect a planet-scale dim."""
         polygons = synth.admin_polygons_df(spark, 40)
@@ -129,7 +133,7 @@ if __name__ == "__main__":
 
 class TestRound2Plans:
     def test_vector_tiles_broadcast_single_pass(self, spark):
-        """broadcast_polys=True fuses covering + quantization into ONE
+        """vector_tile_features fuses covering + quantization into ONE
         partition pass over the polygon dim: no re-attach join, no
         exchange, a single python crossing (r7: formerly covering →
         broadcast join → second crossing)."""
@@ -138,14 +142,6 @@ class TestRound2Plans:
         assert not explain.has_sort_merge_join(out)
         assert explain.count_exchanges(out) == 0
         assert explain.python_eval_nodes(out) == 1
-
-    def test_vector_tiles_nonbroadcast_keeps_join(self, spark):
-        """broadcast_polys=False (dim too big to broadcast): the
-        covering fan-out re-attaches geometry through an id equi-join —
-        never a cartesian product."""
-        polygons = synth.admin_polygons_df(spark, 30)
-        out = tiles.vector_tile_features(polygons, z=7, broadcast_polys=False)
-        assert explain.python_eval_nodes(out) == 2
 
     def test_clipped_regions_distributed_no_driver_collect(self, spark):
         """The clip path is a cell-cover candidate EQUI-join: no

@@ -2,9 +2,13 @@
 the kNN join under adversarial coordinates — poles, antimeridian,
 degenerate polygons, tiny cells, distance ties."""
 
+import functools
+
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import DataFrame, functions as F
 
 from sophox_spark.cells import grid, s2
 from sophox_spark.geometry import wkb
@@ -104,7 +108,7 @@ class TestPipProperties:
         packed = wkb.pack([wkb.polygon_wkb([ring])])
         prep = PreparedPolygons(packed)
         res = 8
-        poly_idx, cells, full = cover.cover_polygons(packed, res)
+        poly_idx, cells, full = cover.cover_polygons_adaptive(packed, res, res)
         cellset = set(cells.tolist())
         rng = np.random.default_rng(1)
         bb = packed.bbox[0]
@@ -119,7 +123,7 @@ class TestPipProperties:
     def test_pruned_cover_is_filtered_full_cover(self, ring, seed, n_pts):
         """Occupied-cell pruning keeps exactly the full covering's rows
         whose cell is an ancestor-or-self of an occupied cell: same
-        cells, same flags, same order — for both covering kernels."""
+        cells, same flags, same order — multi-res and single-res."""
         from sophox_spark.geometry import cover
 
         packed = wkb.pack([wkb.polygon_wkb([ring])])
@@ -140,11 +144,101 @@ class TestPipProperties:
             assert np.array_equal(a[keep], b)
 
         occ = np.unique(grid.encode(px, py, 10))
-        full = cover.cover_polygons(packed, 10)
-        pruned = cover.cover_polygons(packed, 10, occupied=occ)
+        full = cover.cover_polygons_adaptive(packed, 10, 10)
+        pruned = cover.cover_polygons_adaptive(packed, 10, 10, occupied=occ)
         keep = np.isin(full[1], occ)
         for a, b in zip(full, pruned):
             assert np.array_equal(a[keep], b)
+
+
+@st.composite
+def pip_route_inputs(draw):
+    """(star rings, point rows) for the PIP route-equivalence test: the
+    points sit on the rings' vertices, on their edge midpoints and at
+    random spots around them, plus rows with NaN and NULL coordinates."""
+    rings = draw(st.lists(star_polygons(), min_size=1, max_size=3))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    xy = []
+    for ring in rings:
+        xy += [ring[:-1], (ring[:-1] + ring[1:]) / 2.0,
+               rng.uniform(ring.min(0) - 0.5, ring.max(0) + 0.5, (30, 2))]
+    pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(np.concatenate(xy))]
+    n = len(pts)
+    pts += [(n, float("nan"), 1.0), (n + 1, 1.0, float("nan")),
+            (n + 2, None, 1.0), (n + 3, None, None)]
+    return rings, pts
+
+
+class TestPipRouteProperties:
+    """Every route of ``point_in_polygon_join`` returns the brute-force
+    ``PreparedPolygons.contains`` rows, each pair exactly once: the
+    broadcast JVM refine and the partitioned Arrow refine
+    (``broadcast_max_bytes=0``), ``covers`` False and True, ``res`` 13
+    and (8, 13), with the covering derived or (at (8, 13)) supplied by
+    the caller. The supplied covering also carries a stale polygon id:
+    its boundary cells must drop, and its fully-contained cell is
+    trusted as the covering states."""
+
+    STALE = 10_000
+
+    @given(pip_route_inputs())
+    @settings(max_examples=3, deadline=None)
+    def test_routes_match_brute_force(self, spark, inp):
+        from sophox_spark.geometry import cover
+        from sophox_spark.operators import spatial_join
+
+        rings, pts = inp
+        blobs = [wkb.polygon_wkb([r]) for r in rings]
+        ids = np.arange(len(rings), dtype=np.int64) * 7 + 3
+        polys = spark.createDataFrame(
+            pd.DataFrame({"polygon_id": ids, "geom": blobs}), "polygon_id long, geom binary"
+        )
+        pts_df = spark.createDataFrame(pts, "pt_id long, lon double, lat double")
+        pt_ids = np.array([p[0] for p in pts])
+        px = np.array([np.nan if p[1] is None else p[1] for p in pts])
+        py = np.array([np.nan if p[2] is None else p[2] for p in pts])
+        packed = wkb.pack(blobs)
+        prep = PreparedPolygons(packed)
+        valid = np.flatnonzero(np.isfinite(px) & np.isfinite(py))
+
+        def brute(covers):
+            return [
+                (int(pt), int(pid))
+                for gi, pid in enumerate(ids)
+                for pt in pt_ids[prep.contains(px, py, np.full(px.size, gi), covers=covers)]
+            ]
+
+        runs, wants = [], []
+        for res in (13, (8, 13)):
+            lo, hi = res if isinstance(res, tuple) else (res, res)
+            pcells = [(None, [])]
+            if lo < hi:
+                pi, cells, full = cover.cover_polygons_adaptive(packed, lo, hi)
+                # stale id: boundary rows on the cells of the first three
+                # valid points, one fully-contained row on the fourth's
+                fine = grid.encode(px[valid], py[valid], hi)
+                supplied = spark.createDataFrame(
+                    [(int(c), int(p), bool(f)) for c, p, f in zip(cells, ids[pi], full)]
+                    + [(int(c), self.STALE, i == 3) for i, c in enumerate(fine[:4])],
+                    "cell long, polygon_id long, fully_contained boolean",
+                )
+                trusted = [(int(pt), self.STALE) for pt in pt_ids[valid][fine == fine[3]]]
+                pcells.append((supplied, trusted))
+            for covers in (False, True):
+                for budget in (64 << 20, 0):
+                    for supplied, extra in pcells:
+                        runs.append(spatial_join.point_in_polygon_join(
+                            pts_df, polys, res=res, covers=covers,
+                            polygon_cells_df=supplied, broadcast_max_bytes=budget,
+                        ).select(F.lit(len(wants)).alias("run"), "pt_id", "polygon_id"))
+                        wants.append(((res, covers, budget, supplied is not None),
+                                      sorted(brute(covers) + extra)))
+        # one action for all runs: each run's plan is built as the
+        # caller's would be; only the job launch is shared
+        rows = functools.reduce(DataFrame.unionAll, runs).collect()
+        for i, (label, want) in enumerate(wants):
+            got = sorted((r.pt_id, r.polygon_id) for r in rows if r.run == i)
+            assert got == want, label
 
 
 KNN_SHAPES = ("clustered", "worldwide", "antimeridian", "colocated",

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from sophox_spark.geometry import simplify as simp, wkb
 from sophox_spark.geometry.pip import PreparedPolygons, point_in_rings
 from sophox_spark.operators import dissolve, knn, spatial_join, tiles
+from sophox_spark.plans import explain
 from sophox_spark.sources import synth
 
 
@@ -55,19 +56,21 @@ class TestPipJoin:
         plain = spatial_join.point_in_polygon_join(points, polygons)
         # salt only applies on the shuffle path (broadcast ignores it)
         salted = spatial_join.point_in_polygon_join(
-            points, polygons, salt=8, broadcast_dim=False
+            points, polygons, salt=8, broadcast_max_bytes=0
         )
         a = {(r.pt_id, r.polygon_id) for r in plain.collect()}
         b = {(r.pt_id, r.polygon_id) for r in salted.collect()}
         assert a == b
 
     def test_no_broadcast_same_result(self, spark, points, polygons):
-        out = spatial_join.point_in_polygon_join(points, polygons, broadcast_dim=False)
+        out = spatial_join.point_in_polygon_join(
+            points, polygons, broadcast_max_bytes=0
+        )
         got = {(r.pt_id, r.polygon_id) for r in out.collect()}
         assert got == oracle_pip(points.toPandas(), polygons.toPandas())
 
     def test_auto_dispatch_over_budget_same_result(self, spark, points, polygons):
-        """broadcast_dim=None + a 1-byte budget: the sizing agg must
+        """A 1-byte budget: the sizing agg must
         route to the partitioned-refine path (no driver collect of the
         dim) and still match the brute-force oracle."""
         out = spatial_join.point_in_polygon_join(
@@ -101,7 +104,7 @@ class TestPipJoin:
             ),
             "pt_id long, lon double, lat double",
         )
-        out = spatial_join.point_in_polygon_join(pts, polys, broadcast_dim=False)
+        out = spatial_join.point_in_polygon_join(pts, polys, broadcast_max_bytes=0)
         got = {(r.pt_id, r.polygon_id) for r in out.collect()}
         assert got == {(int(i), int(i)) for i in sel}
 
@@ -118,10 +121,42 @@ class TestPipJoin:
         got = {(r.pt_id, r.polygon_id) for r in out.collect()}
         assert got == oracle_pip(points.toPandas(), polygons.toPandas())
 
+    def test_covers_boundary_points_jvm_matches_numpy(self, spark):
+        """covers=True on a broadcast dim refines in the JVM (no Python
+        node) and returns the numpy ``contains`` rows, for both ``covers``
+        settings, for points on vertices, on edges and just off an edge."""
+        ring = np.array([[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]])
+        polys = spark.createDataFrame(
+            pd.DataFrame({"polygon_id": [5], "geom": [wkb.polygon_wkb([ring])]}),
+            "polygon_id long, geom binary",
+        )
+        xy = np.array([
+            [0, 0], [2, 0], [2, 2], [0, 2],          # vertices
+            [1, 0], [2, 1], [1, 2], [0, 1],          # edge midpoints
+            [1, 1], [3, 1],                          # inside, outside
+            [1, -1e-13], [1, -1e-9], [2 + 1e-13, 1.5],
+        ], dtype=np.float64)
+        pts = spark.createDataFrame(
+            pd.DataFrame({"pt_id": np.arange(len(xy)), "lon": xy[:, 0], "lat": xy[:, 1]}),
+            "pt_id long, lon double, lat double",
+        )
+        prep = PreparedPolygons(wkb.pack([wkb.polygon_wkb([ring])]))
+        for covers in (False, True):
+            out = spatial_join.point_in_polygon_join(pts, polys, covers=covers)
+            assert explain.python_eval_nodes(out) == 0
+            got = sorted(r.pt_id for r in out.collect())
+            want = np.flatnonzero(
+                prep.contains(xy[:, 0], xy[:, 1], np.zeros(len(xy), np.int64), covers=covers)
+            ).tolist()
+            assert got == want
+        # every vertex and edge point is covered; the bbox pre-reject
+        # drops the points just outside it
+        assert want == [0, 1, 2, 3, 4, 5, 6, 7, 8]
+
     def test_fully_contained_short_circuits(self, spark, points, polygons):
         # the covering must classify a meaningful interior share for the
         # big city polygon — otherwise every pair pays Python refinement
-        pc = spatial_join.build_polygon_cells(polygons, res=13)
+        pc = spatial_join.build_polygon_cells_adaptive(polygons, 13, 13)
         frac = (
             pc.groupBy().agg(F.avg(F.col("fully_contained").cast("double"))).collect()[0][0]
         )
@@ -133,12 +168,13 @@ class TestPipJoin:
         from sophox_spark.geometry import cover
 
         seen = []
-        for name in ("cover_polygons", "cover_polygons_adaptive"):
-            def spy(*a, _kernel=getattr(cover, name), **kw):
-                seen.append(kw.get("occupied") is not None)
-                return _kernel(*a, **kw)
+        kernel = cover.cover_polygons_adaptive
 
-            monkeypatch.setattr(cover, name, spy)
+        def spy(*a, **kw):
+            seen.append(kw.get("occupied") is not None)
+            return kernel(*a, **kw)
+
+        monkeypatch.setattr(cover, "cover_polygons_adaptive", spy)
         return seen
 
     @pytest.mark.parametrize("res", [(8, 13), 13])
@@ -246,6 +282,25 @@ class TestKnn:
         g = {(r.pt_id, r.poi_id, r.rank) for r in got.collect()}
         w = {(r.pt_id, r.poi_id, r.rank) for r in want.collect()}
         assert g == w
+
+    def test_neighbor_across_the_pole(self, spark):
+        """Five POIs worldwide start the ladder at res 2, whose polar
+        cell reaches the pole: the second-nearest POI (35.5° away, just
+        beyond the pole) lies outside the point's 3×3 block yet nearer
+        than one cell width at the point's latitude, so the ring level
+        must not call the point resolved."""
+        pts = spark.createDataFrame(
+            [(0, -27.6, -53.4)], "pt_id long, lon double, lat double"
+        )
+        pois = spark.createDataFrame(
+            [(1, 126.9, -88.7), (2, 40.7, -55.6), (3, 3.4, -39.3),
+             (4, 150.0, 60.0), (5, -150.0, 10.0)],
+            "poi_id long, lon double, lat double",
+        )
+        got = knn.knn_join(pts, pois, k=2, point_key="pt_id")
+        want = knn.brute_force_knn(pts, pois, k=2, point_key="pt_id")
+        assert [(r.poi_id, r.rank) for r in got.orderBy("rank").collect()] == [(3, 1), (1, 2)]
+        assert {(r.poi_id, r.rank) for r in want.collect()} == {(3, 1), (1, 2)}
 
     def test_isolated_points_escalate(self, spark):
         # 1 poi far away from all points → needs many rings, still exact
