@@ -5480,7 +5480,7 @@ FROM lp GROUP BY doc_id
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the end-to-end spatial pipeline at sf0.001 — derive
     skewed geo points from the events table, PIP-join them (cell-cover
-    equi-join + Arrow ray-cast refine, salted) against synthetic admin
+    equi-join + JVM ray-cast refine, salted) against synthetic admin
     polygons, and stamp every match with its raster tile + grid cell."""
     from sophox_spark.operators import spatial_join, tiles
     from sophox_spark.operators.spatial_join import cell_col

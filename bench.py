@@ -7,7 +7,7 @@ Prints ONE JSON line:
 
 The headline metric (BASELINE.json) is spatial-join throughput in
 joined rows/sec — measured on the flagship PIP pipeline (cell-cover
-equi-join + salted skew lanes + Arrow ray-cast refine) over the skewed
+equi-join + salted skew lanes + JVM ray-cast refine) over the skewed
 derived point set. Scaling-efficiency evidence (N vs 4N cores) is a
 separate two-process run: tools/bench_scaling.py → BENCH/BASELINE.md.
 """

@@ -9,7 +9,7 @@ regions tiling service), re-expressed Spark-first:
   pandas UDFs / ``applyInPandas`` (no per-row Python anywhere).
 - Spatial predicates via the filter-then-refine convention: a coarse
   hierarchical-cell equi-join (plain Catalyst hash join, broadcastable,
-  co-partitionable) followed by exact ray-cast refinement in an Arrow UDF.
+  co-partitionable) followed by exact ray-cast refinement in the JVM.
 - Incremental ingestion as idempotent micro-batch MERGE emulation with a
   checkpoint/lineage manifest (the reference keeps its watermark *in the
   store*: /root/reference/osm2rdf/RdfUpdateHandler.py:59-66).

@@ -12,8 +12,10 @@ algorithms runs them at memory speed.
 STRICT FALLBACK CONTRACT: the kernels are a pure accelerator. If no
 compiler is present, compilation fails, the library fails to load, or
 the load-time self-test does not produce byte-identical output, every
-caller silently keeps its pure-Python/numpy path (which remains the
-equivalence oracle in tests). The compiled object is cached in the
+caller keeps its pure-Python/numpy path (which remains the equivalence
+oracle in tests). The outcome is logged once on the
+``sophox_spark.native`` logger: INFO when loaded, WARNING with the
+reason on fallback. The compiled object is cached in the
 system temp dir keyed by a hash of the C source; concurrent compiles
 (e.g. 32 Spark python workers on first use) race benignly — each
 writes its own temp file and ``os.replace``s it atomically.
@@ -23,6 +25,7 @@ from __future__ import annotations
 
 import ctypes
 import hashlib
+import logging
 import os
 import subprocess
 import tempfile
@@ -347,6 +350,7 @@ long long jpeg_scan_ac_refine(
 _lock = threading.Lock()
 _lib = None
 _tried = False
+_log = logging.getLogger("sophox_spark.native")
 
 
 def _u8(a):
@@ -435,10 +439,13 @@ def get_lib():
                 ctypes.c_int, ctypes.c_int, ctypes.c_int,
             ]
             cand.jpeg_scan_ac_refine.restype = ctypes.c_longlong
-            if _self_test(cand):
-                lib = cand
-        except Exception:
-            lib = None
+            if not _self_test(cand):
+                raise RuntimeError("self-test output differs from the Python path")
+            lib = cand
+        except Exception as e:
+            _log.warning("native kernels unavailable, using Python paths: %r", e)
+        else:
+            _log.info("native kernels loaded from %s", so_path)
         _lib = lib
         _tried = True
         return _lib

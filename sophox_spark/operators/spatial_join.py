@@ -26,17 +26,19 @@ scale horizontally:
      lane — a two-phase shuffle that caps any single task's pair count.
   3. ACCEPT/REFINE: pairs in ``fully_contained`` cells are inside by
      construction (most of the area of big admin polygons); boundary-
-     cell pairs are ray-cast exactly. On a broadcast dim the ray cast —
-     and, with ``covers=True``, the boundary-eps test — runs in the
-     JVM: a codegen'd higher-order filter over a broadcast
-     (polygon_id → edge list) table, no Python worker. On the shuffle
-     path (dim too large to collect) each BOUNDARY pair instead carries
-     its polygon WKB through a co-partitioned left join into an Arrow
-     ray-cast pass — fully distributed, no driver collect anywhere.
+     cell pairs are ray-cast exactly — and, with ``covers=True``, get
+     the boundary-eps test — in the JVM on every route: a codegen'd
+     higher-order filter over a (polygon_id → bbox, edge list) table,
+     left-joined to the boundary pairs. Routes differ only in how that
+     edge table reaches the pairs: a small dim's table is built on the
+     driver and broadcast; a dim too large to collect builds it in one
+     narrow Arrow pass over the polygons and shuffle-joins it on
+     ``polygon_id`` — no driver collect, and no point row ever crosses
+     into Python.
 
 At 100 TB the only shuffles are the fact-side hash on ``cell`` (none at
 all when the dim broadcasts) plus, on the shuffle path, the boundary-
-pair ⋈ polygon-geometry hash on ``polygon_id``; refinement cost is
+pair ⋈ edge-table hash on ``polygon_id``; refinement cost is
 proportional to *boundary* candidate pairs only.
 """
 
@@ -73,13 +75,16 @@ _DRIVER_COVER_MAX_BYTES = 8 << 20
 _PRUNE_MAX_CELLS = 16_384
 
 
-def cell_expr(lon_col: str, lat_col: str, res: int):
-    """NATIVE column expression for grid.encode — identical IEEE double
-    arithmetic to the numpy kernel (same ops in the same order), but
-    whole-stage-codegen'd JVM-side: the hot path ships no rows to
-    Python. Invalid coords → -1 (loc:error semantics)."""
-    n = float(1 << res)
-    n_max = (1 << res) - 1
+def _cells(lon_col: str, lat_col: str, res_min: int, res_max: int):
+    """NATIVE columns for grid.encode at each res in ``res_min..res_max``
+    (invalid coords → -1, loc:error semantics), whole-stage-codegen'd
+    JVM-side: the hot path ships no rows to Python. One clamped ``x``,
+    ``y`` at ``res_max`` — identical IEEE double arithmetic to the numpy
+    kernel (same ops in the same order); each coarser cell shifts both
+    right by ``k = res_max - r``. Exact: scaling by 2^res is exact in
+    IEEE arithmetic, so floor(v·2^res_max) >> k == floor(v·2^r)."""
+    n = float(1 << res_max)
+    n_max = (1 << res_max) - 1
     lon, lat = F.col(lon_col), F.col(lat_col)
     x = F.greatest(
         F.lit(0).cast("long"),
@@ -89,12 +94,28 @@ def cell_expr(lon_col: str, lat_col: str, res: int):
         F.lit(0).cast("long"),
         F.least(F.lit(n_max).cast("long"), F.floor((lat + 90.0) / 180.0 * n).cast("long")),
     )
-    cell = F.lit(res).cast("long") * F.lit(1 << 58) + x * F.lit(1 << 29) + y
     bad = (
         lon.isNull() | lat.isNull() | F.isnan(lon) | F.isnan(lat)
         | (lon < -180.0) | (lon > 180.0) | (lat < -90.0) | (lat > 90.0)
     )
-    return F.when(bad, F.lit(-1).cast("long")).otherwise(cell)
+    return [
+        F.when(bad, F.lit(-1).cast("long")).otherwise(
+            F.lit(r << 58).cast("long")
+            + F.shiftleft(F.shiftright(x, res_max - r), 29)
+            + F.shiftright(y, res_max - r)
+        )
+        for r in range(res_min, res_max + 1)
+    ]
+
+
+def cell_expr(lon_col: str, lat_col: str, res: int):
+    """NATIVE column expression for grid.encode at ``res``."""
+    return _cells(lon_col, lat_col, res, res)[0]
+
+
+def ancestor_cells(lon_col: str, lat_col: str, res_min: int, res_max: int):
+    """NATIVE array of a point's cells at ``res_min..res_max``."""
+    return F.array(*_cells(lon_col, lat_col, res_min, res_max))
 
 
 def cell_col(lon_col: str, lat_col: str, res: int):
@@ -313,15 +334,16 @@ def _occupied_cells(points_df, lon_col, lat_col, res):
     est = int(qe.optimizedPlan().stats().sizeInBytes())
     if est > _PRUNE_MAX_CELLS * 64:
         return None
-    rows = (
+    cells = (
         points_df.select(cell_expr(lon_col, lat_col, res).alias("c"))
         .where(F.col("c") >= 0)
         .limit(_PRUNE_MAX_CELLS + 1)
-        .collect()
+        .toArrow()
+        .column("c")
     )
-    if len(rows) > _PRUNE_MAX_CELLS:
+    if len(cells) > _PRUNE_MAX_CELLS:
         return None
-    return np.unique(np.fromiter((r[0] for r in rows), np.int64, len(rows)))
+    return np.unique(cells.to_numpy())
 
 
 def point_in_polygon_join(
@@ -353,9 +375,10 @@ def point_in_polygon_join(
     bigger dim streams through ``toLocalIterator``, ABORTING the moment
     ``broadcast_max_bytes`` is exceeded — a planet-scale dim is read at
     most budget-deep, never fully scanned or OOM-collected. A dim within
-    the budget broadcasts and refines in the JVM; a bigger one (or any
-    dim, with ``broadcast_max_bytes=0``) takes the shuffle join and the
-    partitioned Arrow refine.
+    the budget broadcasts its covering and its edge table; a bigger one
+    (or any dim, with ``broadcast_max_bytes=0``) takes the shuffle join
+    and builds its edge table in one Arrow pass over the polygons. Both
+    routes refine in the JVM with the same ``_refine`` filter.
 
     OCCUPIED-CELL PRUNING (driver-built covering only): the covering is
     built only where the points are. A second eager, bounded probe —
@@ -414,12 +437,9 @@ def point_in_polygon_join(
             seed_parallel=res_min < res_max
             and (not broadcast or max_poly_bytes > _SEED_PARALLEL_MIN_BYTES),
         )
-    ancestors = F.array(
-        *[cell_expr(lon_col, lat_col, r) for r in range(res_min, res_max + 1)]
-    )
-    pts = points_df.withColumn("__cell", F.explode(ancestors)).filter(
-        F.col("__cell") >= 0
-    )
+    pts = points_df.withColumn(
+        "__cell", F.explode(ancestor_cells(lon_col, lat_col, res_min, res_max))
+    ).filter(F.col("__cell") >= 0)
     dim = polygon_cells_df.withColumnRenamed("cell", "__cell")
     if salt > 1 and not broadcast:
         dim = dim.withColumn(
@@ -433,99 +453,74 @@ def point_in_polygon_join(
         join_keys = ["__cell"]
     cand = pts.join(F.broadcast(dim) if broadcast else dim, join_keys)
 
-    out_cols = points_df.columns + [id_col]
     if broadcast:
-        return _refine_broadcast(
-            cand, packed_dim, dim_ids, lon_col, lat_col, id_col, covers
-        ).select(*out_cols)
-    # PARTITIONED REFINE: the dim is too big to collect/broadcast, so
-    # ship each boundary pair its polygon WKB through a left join
-    # conditioned on NOT fully_contained (accepted-interior pairs join
-    # nothing and carry no geometry) — single-pass, no driver collect,
-    # no plan diamond. Geometry bytes duplicate per *boundary* pair
-    # only; the ray-cast then needs no broadcast state at all.
-    out_schema = cand.select(*out_cols).schema
-    geoms = polygons_df.select(
-        F.col(id_col).alias("__geom_id"), F.col(geom_col).alias("__geom")
-    )
-    cand = cand.join(
-        geoms,
-        on=(F.col(id_col) == F.col("__geom_id")) & ~F.col("fully_contained"),
-        how="left",
+        edges_df = F.broadcast(
+            points_df.sparkSession.createDataFrame(_edge_table(packed_dim, dim_ids))
+        )
+    else:
+        edges_df = polygons_df.select(
+            F.col(id_col).cast("long"), geom_col
+        ).mapInArrow(_edge_batches, _EDGE_SCHEMA)
+    return _refine(cand, edges_df, lon_col, lat_col, id_col, covers).select(
+        *points_df.columns, id_col
     )
 
-    def refine_partitioned(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ok = pdf["fully_contained"].to_numpy(copy=True)
-            need = np.flatnonzero(~ok)
-            if need.size:
-                sub = pdf.iloc[need]
-                # pack each polygon ONCE per batch
-                uniq = sub.drop_duplicates("__geom_id")[["__geom_id", "__geom"]]
-                blobs = [
-                    bytes(b) for b in uniq["__geom"] if b is not None
-                ]
-                ids = [
-                    i for i, b in zip(uniq["__geom_id"], uniq["__geom"])
-                    if b is not None
-                ]
-                if blobs:
-                    prep_b = PreparedPolygons(wkb.pack(blobs))
-                    idx_b = {p: i for i, p in enumerate(ids)}
-                    mapped = sub["__geom_id"].map(idx_b)
-                    known = mapped.notna().to_numpy()
-                    if known.any():
-                        subk = sub.iloc[known] if not known.all() else sub
-                        ok[need[known]] = prep_b.contains(
-                            subk[lon_col].to_numpy(),
-                            subk[lat_col].to_numpy(),
-                            mapped.to_numpy()[known].astype(np.int64),
-                            covers=covers,
-                        )
-            yield pdf.loc[ok, [f.name for f in out_schema.fields]]
 
-    return cand.mapInPandas(refine_partitioned, out_schema)
+_EDGE_SCHEMA = (
+    "__eid long, __bx0 double, __by0 double, __bx1 double, __by1 double, "
+    "__edges array<struct<x1:double,y1:double,x2:double,y2:double>>"
+)
 
 
-def _refine_broadcast(cand, packed_dim, dim_ids, lon_col, lat_col, id_col, covers):
-    """PURE-JVM REFINE of broadcast-route candidate pairs: the even-odd
-    ray cast (and the ``covers`` boundary test) is a fixed arithmetic
-    fold over the polygon's edge list, so it compiles to a codegen'd
-    higher-order-function filter over a broadcast (polygon_id → edges
-    array) row — no ArrowEvalPython node, no worker startup, no Arrow
-    transpose. The expressions replicate ``PreparedPolygons.contains``
-    bit-for-bit: same bbox pre-reject, same crossing predicate
-    ((y1>lat) != (y2>lat)), same IEEE evaluation order for the
-    intercept x1 + ((lat-y1)/(y2-y1))*(x2-x1) and for ``_on_boundary``'s
-    cross, seg_len2 and dot — JVM and numpy doubles agree exactly on
-    identical op sequences. Stale covering ids (caller-supplied
-    polygon_cells_df) left-join no edge row: fully_contained pairs still
-    pass, boundary pairs drop — the partitioned refine's semantics."""
-    prep = PreparedPolygons(packed_dim)
-    # hand the edge table to Spark as one Arrow batch: a LocalTableScan
-    # the broadcast build reads driver-side (the row-list form would
-    # round-trip through a pickled RDD)
+def _edge_table(packed, ids) -> pa.Table:
+    """The refine's edge table (``_EDGE_SCHEMA``): one row per polygon
+    of ``packed`` — its id, its bbox and its edge list, in
+    ``PreparedPolygons`` order."""
+    prep = PreparedPolygons(packed)
     offsets = np.concatenate(([0], np.cumsum(prep.edge_count))).astype(np.int32)
     edge_struct = pa.StructArray.from_arrays(
         [pa.array(prep.x1, pa.float64()), pa.array(prep.y1, pa.float64()),
          pa.array(prep.x2, pa.float64()), pa.array(prep.y2, pa.float64())],
         names=["x1", "y1", "x2", "y2"],
     )
-    edge_lists = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), edge_struct)
-    edges_df = cand.sparkSession.createDataFrame(
-        pa.table(
-            {
-                id_col: pa.array(dim_ids, pa.int64()),
-                "__bx0": pa.array(prep.bbox[:, 0], pa.float64()),
-                "__by0": pa.array(prep.bbox[:, 1], pa.float64()),
-                "__bx1": pa.array(prep.bbox[:, 2], pa.float64()),
-                "__by1": pa.array(prep.bbox[:, 3], pa.float64()),
-                "__edges": edge_lists,
-            }
-        )
+    return pa.table(
+        {
+            "__eid": ids,
+            "__bx0": pa.array(prep.bbox[:, 0], pa.float64()),
+            "__by0": pa.array(prep.bbox[:, 1], pa.float64()),
+            "__bx1": pa.array(prep.bbox[:, 2], pa.float64()),
+            "__by1": pa.array(prep.bbox[:, 3], pa.float64()),
+            "__edges": pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), edge_struct),
+        }
     )
+
+
+def _edge_batches(batches):
+    """``mapInArrow`` body over (id, WKB) polygon rows: one edge-table
+    batch per input batch; NULL geometries emit no row."""
+    for batch in batches:
+        batch = batch.filter(batch.column(1).is_valid())
+        if batch.num_rows:
+            yield from _edge_table(
+                wkb.pack(batch.column(1).to_pylist()), batch.column(0)
+            ).to_batches()
+
+
+def _refine(cand, edges_df, lon_col, lat_col, id_col, covers):
+    """PURE-JVM REFINE of candidate pairs: the even-odd ray cast (and
+    the ``covers`` boundary test) is a fixed arithmetic fold over the
+    polygon's edge list, so it compiles to a codegen'd higher-order
+    filter over the edge table (``_EDGE_SCHEMA``) — no Python node on
+    the point side, whether ``edges_df`` arrives broadcast or
+    shuffle-joined on the polygon id. The expressions replicate
+    ``PreparedPolygons.contains`` bit-for-bit: same bbox pre-reject,
+    same crossing predicate ((y1>lat) != (y2>lat)), same IEEE evaluation
+    order for the intercept x1 + ((lat-y1)/(y2-y1))*(x2-x1) and for
+    ``_on_boundary``'s cross, seg_len2 and dot — JVM and numpy doubles
+    agree exactly on identical op sequences. Only boundary pairs join
+    an edge row: fully_contained pairs pass without geometry. A
+    boundary pair whose polygon has no edge row (a NULL geometry, or a
+    stale id in a caller-supplied ``polygon_cells_df``) drops."""
     lon, lat = F.col(lon_col), F.col(lat_col)
 
     def _edge_hit(e):
@@ -551,4 +546,5 @@ def _refine_broadcast(cand, packed_dim, dim_ids, lon_col, lat_col, id_col, cover
         & (lat >= F.col("__by0")) & (lat <= F.col("__by1"))
         & hit
     )
-    return cand.join(F.broadcast(edges_df), on=id_col, how="left").filter(inside)
+    on = (F.col(id_col) == F.col("__eid")) & ~F.col("fully_contained")
+    return cand.join(edges_df, on=on, how="left").filter(inside)

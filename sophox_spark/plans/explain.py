@@ -8,6 +8,8 @@ formatted plan and check the operators that must (not) appear.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
@@ -56,18 +58,20 @@ def count_exchanges(df: DataFrame) -> int:
     )
 
 
-def python_eval_nodes(df: DataFrame) -> int:
-    """ArrowEvalPython / BatchEvalPython / MapInPandas / FlatMapGroupsInPandas
-    operator count — how often rows cross into Python. Counts the
+def python_node_inputs(df: DataFrame) -> list[str]:
+    """Input column list of each ArrowEvalPython / BatchEvalPython /
+    MapInPandas / MapInArrow / FlatMapGroupsInPandas node — where rows
+    cross into Python, and which columns they carry. Reads the
     detail-section node headers '(N) Op' so each physical node counts
     once (the tree view repeats the name)."""
-    import re
-
-    plan = formatted_plan(df)
-    return len(
-        re.findall(
-            r"^\(\d+\) (?:ArrowEvalPython|BatchEvalPython|MapInPandas|FlatMapGroupsInPandas)",
-            plan,
-            re.M,
-        )
+    return re.findall(
+        r"^\(\d+\) (?:ArrowEvalPython|BatchEvalPython|MapInPandas|MapInArrow"
+        r"|FlatMapGroupsInPandas)\n(?:.*\n)*?Input \[\d+\]: \[(.*)\]",
+        formatted_plan(df),
+        re.M,
     )
+
+
+def python_eval_nodes(df: DataFrame) -> int:
+    """How often rows cross into Python: the Python node count."""
+    return len(python_node_inputs(df))

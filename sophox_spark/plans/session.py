@@ -57,9 +57,16 @@ def get_spark(
     inherit = os.environ.get("SPARK_GRAFT_INHERIT_MASTER") == "1"
     builder = SparkSession.builder
     if not inherit:
+        # python workers import the package from its parent directory,
+        # so a session started from any cwd runs its Python stages
+        # (spark-submit ships the package through --py-files instead)
+        pkg_parent = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         builder = builder.master(f"local[{cpus}]").config(
             "spark.driver.memory",
             os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_memory()),
+        ).config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(filter(None, [pkg_parent, os.environ.get("PYTHONPATH")])),
         )
     b = (
         builder.appName(app)

@@ -114,3 +114,25 @@ class TestNativeJpeg:
         bad = enc[:i] + b"\xff\xd9"
         with pytest.raises(jpeg.JpegFormatError, match="restart"):
             jpeg.decode(bad)
+
+
+class TestNativeLogging:
+    def _records(self, caplog):
+        return [r for r in caplog.records if r.name == "sophox_spark.native"]
+
+    def test_fallback_logged_once(self, monkeypatch, caplog):
+        monkeypatch.setattr(_native, "_lib", None)
+        monkeypatch.setattr(_native, "_tried", False)
+        monkeypatch.setattr(_native, "_self_test", lambda lib: False)
+        caplog.set_level("INFO", logger="sophox_spark.native")
+        assert all(_native.get_lib() is None for _ in range(3))
+        recs = self._records(caplog)
+        assert [r.levelname for r in recs] == ["WARNING"]
+        assert "self-test" in recs[0].getMessage()
+
+    def test_load_logged_once(self, monkeypatch, caplog):
+        monkeypatch.setattr(_native, "_lib", None)
+        monkeypatch.setattr(_native, "_tried", False)
+        caplog.set_level("INFO", logger="sophox_spark.native")
+        assert all(_native.get_lib() is not None for _ in range(3))
+        assert [r.levelname for r in self._records(caplog)] == ["INFO"]

@@ -2,6 +2,8 @@
 happen (SURVEY §4) — pushdown, pruning, broadcast strategy, JVM-only
 hot paths, partial aggregation."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -86,6 +88,19 @@ class TestSpatialJoinPlan:
         assert explain.python_eval_nodes(out) == 0
         assert explain.has_broadcast_join(out)
 
+    def test_partitioned_refine_no_python_on_point_side(self, spark, points):
+        # over budget, the edge table is built by one Arrow pass over the
+        # polygons and shuffle-joined to the pairs; the refine itself is
+        # the JVM filter, so no Python node reads a point column
+        polygons = synth.admin_polygons_df(spark, 40)
+        out = spatial_join.point_in_polygon_join(
+            points, polygons, broadcast_max_bytes=0
+        )
+        inputs = explain.python_node_inputs(out)
+        assert "MapInArrow" in explain.formatted_plan(out) and inputs
+        for cols in inputs:
+            assert not re.search(r"\b(pt_id|lon|lat)#", cols), cols
+
     def test_shuffle_path_when_not_broadcast(self, spark, points):
         polygons = synth.admin_polygons_df(spark, 40)
         out = spatial_join.point_in_polygon_join(
@@ -104,6 +119,13 @@ class TestSpatialJoinPlan:
         assert explain.count_exchanges(out) >= 1
         small = spatial_join.point_in_polygon_join(points, polygons)
         assert explain.has_broadcast_join(small)
+
+
+class TestPythonNodeCount:
+    def test_map_in_arrow_counted(self, spark):
+        out = spark.range(10).mapInArrow(lambda batches: batches, "id long")
+        assert "MapInArrow" in explain.formatted_plan(out)
+        assert explain.python_eval_nodes(out) == 1
 
 
 class TestKnnPlan:

@@ -152,6 +152,49 @@ class TestPipProperties:
 
 
 @st.composite
+def ancestor_inputs(draw):
+    """(res_min, res_max, rows): random coordinates plus the grid's hard
+    cases — lon ±180 / lat ±90 and their nextafter neighbours on both
+    sides, an exact res_max cell edge and its neighbours, NaN and NULL."""
+    res_max = draw(st.integers(0, grid.MAX_RES))
+    res_min = draw(st.integers(0, res_max))
+    i = draw(st.integers(0, 1 << res_max))
+
+    def hard(bound, edge):
+        vals = [0.0, -bound, bound, edge]
+        return vals + [float(np.nextafter(v, d)) for v in vals[1:] for d in (-np.inf, np.inf)]
+
+    hard_lon = hard(180.0, i / (1 << res_max) * 360.0 - 180.0)
+    hard_lat = hard(90.0, i / (1 << res_max) * 180.0 - 90.0)
+    rows = [(x, y) for x in hard_lon for y in hard_lat]
+    rows += draw(st.lists(st.tuples(lons, lats), max_size=20))
+    rows += [(float("nan"), 1.0), (1.0, float("nan")), (None, 1.0), (1.0, None)]
+    return res_min, res_max, rows
+
+
+class TestAncestorCellProperties:
+    """``ancestor_cells`` (one clamped x, y at res_max, coarser cells by
+    shifts) equals ``grid.encode`` at every res in res_min..res_max."""
+
+    @given(ancestor_inputs())
+    @settings(max_examples=20, deadline=None)
+    def test_matches_encode(self, spark, inp):
+        from sophox_spark.operators.spatial_join import ancestor_cells
+
+        res_min, res_max, rows = inp
+        df = spark.createDataFrame(rows, "lon double, lat double")
+        got = np.array(
+            [r[0] for r in df.select(ancestor_cells("lon", "lat", res_min, res_max)).collect()]
+        )
+        lon = np.array([np.nan if x is None else x for x, _ in rows])
+        lat = np.array([np.nan if y is None else y for _, y in rows])
+        want = np.stack(
+            [grid.encode(lon, lat, r) for r in range(res_min, res_max + 1)], axis=1
+        )
+        assert np.array_equal(got, want)
+
+
+@st.composite
 def pip_route_inputs(draw):
     """(star rings, point rows) for the PIP route-equivalence test: the
     points sit on the rings' vertices, on their edge midpoints and at
@@ -172,12 +215,12 @@ def pip_route_inputs(draw):
 class TestPipRouteProperties:
     """Every route of ``point_in_polygon_join`` returns the brute-force
     ``PreparedPolygons.contains`` rows, each pair exactly once: the
-    broadcast JVM refine and the partitioned Arrow refine
-    (``broadcast_max_bytes=0``), ``covers`` False and True, ``res`` 13
-    and (8, 13), with the covering derived or (at (8, 13)) supplied by
-    the caller. The supplied covering also carries a stale polygon id:
-    its boundary cells must drop, and its fully-contained cell is
-    trusted as the covering states."""
+    broadcast route and the shuffle route (``broadcast_max_bytes=0``),
+    both refined by the one JVM filter, ``covers`` False and True,
+    ``res`` 13 and (8, 13), with the covering derived or (at (8, 13))
+    supplied by the caller. The supplied covering also carries a stale
+    polygon id: its boundary cells must drop, and its fully-contained
+    cell is trusted as the covering states."""
 
     STALE = 10_000
 

@@ -38,3 +38,28 @@ def test_spark_submit_pyfiles(tmp_path):
     assert result["rows"] == 1000
     assert result["master"] == "local[4]"
     assert result["query"] == "q_geo_pip_rects"
+
+
+def test_local_session_from_any_cwd():
+    """A local session started outside the checkout, with no PYTHONPATH,
+    runs a Python stage: get_spark puts the package on the workers'
+    path."""
+    script = (
+        "import sys; sys.path.insert(0, %r)\n"
+        "from sophox_spark.plans import get_spark\n"
+        "from sophox_spark.operators.spatial_join import cell_col\n"
+        "spark = get_spark('cwd_probe', cpus=2, shuffle_partitions=2)\n"
+        "df = spark.createDataFrame([(0.0, 0.0), (13.4, 52.5)], 'lon double, lat double')\n"
+        "print(sorted(r[0] for r in df.select(cell_col('lon', 'lat', 13)).collect()))\n"
+    ) % REPO
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, timeout=240, cwd="/tmp", env=env,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    from sophox_spark.cells import grid
+
+    want = sorted(grid.encode([0.0, 13.4], [0.0, 52.5], 13).tolist())
+    assert out.stdout.strip().splitlines()[-1] == str(want)

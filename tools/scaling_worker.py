@@ -4,7 +4,7 @@ cluster size (a Spark session pins local[N] for the process lifetime).
 
 Job: derive the skewed point set from events at sf0.1, replicate ×K for
 a CPU-bound problem size, PIP-join against 200 synthetic admin polygons
-(cell-cover equi-join + salted skew lanes + Arrow ray-cast refine), and
+(cell-cover equi-join + salted skew lanes + JVM ray-cast refine), and
 stamp raster tiles. Prints one JSON line {cpus, elapsed_sec, rows}.
 """
 
