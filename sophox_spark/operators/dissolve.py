@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..cells import grid
 from ..geometry import clip, core, simplify as simp, wkb
+from ..plans import route
 
 
 def dissolve(
@@ -38,16 +39,15 @@ def dissolve(
     key: str = "wikidata",
     geom_col: str = "geom",
     merge_overlaps: bool = True,
-    bounded: bool | None = None,
 ) -> DataFrame:
     """group polygons by ``key`` → one multipolygon per key.
     Output: ``key, geom (multipolygon WKB), n_parts``.
 
-    TWO-PHASE: a map-side ``mapInPandas`` pass first merges all parts of
-    a key *within each partition batch* into one multipolygon partial,
-    so the shuffle ships one row per (partition, key) — a hot wikidata
-    id with 10⁵ raw rows moves ≤ numPartitions partials, never the raw
-    rows, to its final reducer (the Spark analog of partial aggregation
+    TWO-PHASE, on every input: a map-side ``mapInPandas`` pass first
+    merges all parts of a key *within each partition batch* into one
+    multipolygon partial, so the shuffle ships one row per (partition,
+    key) — a hot wikidata id with 10⁵ raw rows moves ≤ numPartitions
+    partials, never the raw rows, to its final reducer (the Spark analog of partial aggregation
     for an ST_Union-shaped agg).
 
     ``merge_overlaps`` gives true ST_Union semantics: OVERLAPPING parts
@@ -67,9 +67,7 @@ def dissolve(
         blob, n = merger(pdf[geom_col])
         return pd.DataFrame({key: [pdf[key].iloc[0]], geom_col: [blob], "n_parts": [n]})
 
-    partials = _dissolve_partials(
-        polygons_df, key, geom_col, merge_overlaps, bounded=bounded
-    )
+    partials = _dissolve_partials(polygons_df, key, geom_col, merge_overlaps)
     return partials.groupBy(key).applyInPandas(final, schema)
 
 
@@ -87,31 +85,13 @@ def _blob_merger(merge_overlaps: bool):
     return _merge_blobs
 
 
-def _dissolve_partials(polygons_df, key, geom_col, merge_overlaps, bounded=None):
+def _dissolve_partials(polygons_df, key, geom_col, merge_overlaps):
     """Map-side partial of :func:`dissolve` — one merged multipolygon
     per (partition batch, key). Shared by ``dissolve`` and the fused
-    ``regions_geojson`` final pass.
-
-    The partial exists to bound shuffle volume for hot keys at scale
-    (≤ numPartitions partials per key instead of raw rows). A LOCAL
-    relation is already bounded by driver memory, so its rows feed the
-    reduce-side merge directly and one Python crossing disappears.
-    ``bounded`` lets a caller assert boundedness when a narrow
-    transformation (e.g. a broadcast semi-join, which only ever drops
-    rows) hides the localness of the underlying relation from
-    ``isLocal()``. Merge grouping was already partition-layout-dependent
-    (partials batch by input partition); skipping the partial is the
-    grouping a one-row-per-batch layout produces — verified
-    output-identical to the prior code on every declared fixture (which
-    never co-batches same-key parts), and degenerate-contact outcomes
-    remain within the operator's documented layout-dependence
-    envelope."""
+    ``regions_geojson`` final pass. It bounds shuffle volume for hot
+    keys at scale (≤ numPartitions partials per key instead of raw
+    rows)."""
     schema = f"{key} string, {geom_col} binary, n_parts long"
-    try:
-        if bounded if bounded is not None else polygons_df.isLocal():
-            return polygons_df.select(key, geom_col)
-    except Exception:  # pragma: no cover - defensive
-        pass
     merger = _blob_merger(merge_overlaps)
 
     def partial(batches):
@@ -235,7 +215,6 @@ def clipped_regions(
     water_df: DataFrame,
     id_col: str = "polygon_id",
     geom_col: str = "geom",
-    broadcast_water_max_bytes: int = 64 << 20,
 ) -> DataFrame:
     """SO1 with GEOMETRY output — the reference's ``water=1`` regions
     mode, ``ST_Difference(geom, ST_Union(water))``
@@ -247,9 +226,10 @@ def clipped_regions(
     Two physical paths, same semantics (identity-tested), same design as
     spatial_join's broadcast/shuffle split:
 
-    * water WKB ≤ ``broadcast_water_max_bytes`` (one bounded stats job
-      decides): collect + broadcast the water dim, one mapInPandas over
-      regions — zero shuffles, the per-dim fast path.
+    * water that ``route.bounded_collect`` brings to the driver (WKB
+      within ``route.MAX_COLLECT_BYTES``, sized on the executors
+      first): broadcast the water dim, one mapInPandas over regions —
+      zero shuffles, the per-dim fast path.
     * larger water (planet hydrography is not small): FULLY DISTRIBUTED,
       no driver collect of geometry — both sides bbox-covered with grid
       cells at a data-adapted resolution, candidate (region, water)
@@ -276,17 +256,9 @@ def clipped_regions(
         .select(F.xxhash64(geom_col).alias("__wid"), F.col(geom_col).alias("__wgeom"))
         .dropDuplicates(["__wid"])  # identical waters subtract once (= union)
     )
-    # Path decision from ONE native scalar agg — sum(length(wkb)) is
-    # whole-stage-codegen'd JVM work, no WKB decode, no Python crossing;
-    # the common small-water case pays nothing else. Bbox-span stats
-    # (which DO decode geometry in Arrow batches) are computed only when
-    # actually going distributed, where they size the covering grid.
-    w_bytes = (
-        water.select(F.sum(F.length("__wgeom")).alias("b")).collect()[0][0]
-        or 0
-    )
-    if w_bytes <= broadcast_water_max_bytes:
-        return _clipped_regions_broadcast(regions, water, id_col, geom_col)
+    w_table = route.bounded_collect(water, F.length("__wgeom"), "clipped_regions")
+    if w_table is not None:
+        return _clipped_regions_broadcast(regions, w_table, id_col, geom_col)
     w_avg = (
         water.select(F.lit(0).cast("long").alias("nbytes"),
                      F.col("__wgeom").alias("g"))
@@ -333,11 +305,11 @@ def _clip_cover_res(w_avg: float | None, r_max: float | None) -> int:
     return max(3, min(res, cap, grid.MAX_RES - 4))
 
 
-def _clipped_regions_broadcast(regions, water, id_col, geom_col) -> DataFrame:
-    """Small-water fast path: collected + broadcast dim, zero shuffles.
-    Same kernel and water order as the distributed path."""
-    rows = water.orderBy("__wid").select("__wgeom").collect()
-    blobs = [bytes(r[0]) for r in rows]
+def _clipped_regions_broadcast(regions, w_table, id_col, geom_col) -> DataFrame:
+    """Small-water fast path: the collected water table, sorted by
+    ``__wid`` on the driver and broadcast — zero shuffles. Same kernel
+    and water order as the distributed path."""
+    blobs = w_table.sort_by("__wid").column("__wgeom").to_pylist()
     w_bc = regions.sparkSession.sparkContext.broadcast(blobs)
 
     def gen(batches):
@@ -450,14 +422,7 @@ def regions_geojson(
     # regroup rows that were already keyed by ``key``  (guide §2.4:
     # operations keyed the same way share one exchange). Identical
     # output: the merge is the same associative _blob_merger.
-    # The semi-join only drops rows, so the INPUT's localness decides
-    # boundedness — isLocal() on the joined frame would always be False
-    # and a no-op partial crossing would run for every local fixture.
-    try:
-        bounded = polygons_df.isLocal()
-    except Exception:  # pragma: no cover - defensive
-        bounded = None
-    partials = _dissolve_partials(selected, key, geom_col, True, bounded=bounded)
+    partials = _dissolve_partials(selected, key, geom_col, True)
     merger = _blob_merger(True)
 
     def to_feature(pdf: pd.DataFrame) -> pd.DataFrame:

@@ -104,12 +104,10 @@ def _ring_expand_dim(base_pois, poi_key: str, res: int):
     poi_cell ∈ ring(point_cell), so the candidate pairs are identical
     to exploding the point side. ``base_pois`` holds valid coordinates
     only. Output columns: ``poi_key, __poi_lon, __poi_lat, __poi_cell``."""
-    from .spatial_join import cell_expr
+    from .spatial_join import _cell_xy
 
     n = 1 << res  # ≥ 4 (res ≥ 2): the 3 lon offsets never wrap onto each other
-    c = cell_expr("__poi_lon", "__poi_lat", res)
-    x = (c / F.lit(1 << 29)).cast("long") % F.lit(1 << 29)
-    y = c % F.lit(1 << 29)
+    x, y = _cell_xy("__poi_lon", "__poi_lat", res)
     return (
         base_pois.select(
             F.col(poi_key), "__poi_lon", "__poi_lat",

@@ -20,7 +20,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..plans import route
 
 
 def _dot_expr(a: str, b: str):
@@ -179,12 +183,13 @@ def ann_topk(
     count per query is bounded by bucket sizes × tables × probes, not n.
     Output: (query_id, neighbor_id, cosine, rank).
 
-    Route: a corpus inside ``_IVF_BROADCAST_MAX_BYTES`` (the size class
-    the join plan already broadcast twice for vector re-attach) runs as
-    one mapInPandas over the query side against the broadcast corpus +
-    its precomputed table buckets: multiprobe, candidate union-dedup,
-    exact cosine and per-query top-k all local — no bucket-join pair
-    materialization, no Arrow pair crossing, no window shuffle. The
+    Route: a corpus that ``route.bounded_collect`` brings to the driver
+    (within ``route.MAX_COLLECT_BYTES`` at ``dim`` float64s a row) runs
+    as one mapInPandas over the query side against the broadcast
+    corpus + its precomputed table buckets: multiprobe, candidate
+    union-dedup, exact cosine and per-query top-k all local — no
+    bucket-join pair materialization, no Arrow pair crossing, no window
+    shuffle. The
     bucket/probe math and the cosine einsum replicate the column
     kernels bit-for-bit, so output is row-identical to the join path
     (pinned by TestAnnBroadcastEquivalence). Larger corpora keep the
@@ -195,10 +200,10 @@ def ann_topk(
     returned DataFrame is never evaluated. The query side is read again
     at action time, so a nondeterministic upstream can give the two
     reads different rows."""
-    rows = _bounded_corpus_collect(df, key, vec_col, dim)
-    if rows is not None:
+    corpus = _corpus_collect(df, key, vec_col, dim * 8 + 16, "ann_topk")
+    if corpus is not None:
         return _ann_topk_broadcast(
-            df, k, key, vec_col, dim, n_planes, n_tables, n_probes, seed, rows
+            df, k, key, vec_col, dim, n_planes, n_tables, n_probes, seed, corpus
         )
     # candidate generation and the union-over-tables dedup carry ONLY
     # (id, bucket) / (query_id, neighbor_id) — the embedding payloads
@@ -238,24 +243,35 @@ def ann_topk(
     )
 
 
-def _bounded_corpus_collect(df: DataFrame, key: str, vec_col: str, dim: int):
-    """ONE bounded collect that both answers the broadcast-budget
-    question and supplies the kernel's corpus (the former separate
-    count job re-evaluated the whole upstream lineage twice). Returns the
-    collected (key, vec) rows with NULL keys dropped — the join path
-    drops them too (a NULL id never satisfies the equi-join /
-    ``query_id != neighbor_id`` filter) — or None when the corpus is
-    empty, oversized, or non-integral-keyed (callers keep the
-    distributed join)."""
-    key_type = df.schema[key].dataType.simpleString()
-    if key_type not in ("bigint", "int", "smallint", "tinyint"):
+def _corpus_collect(df: DataFrame, key: str, vec_col: str, nbytes, op: str):
+    """The corpus of a broadcast kernel: (ids int64, (n, dim) float64
+    matrix) from ``route.bounded_collect`` at ``nbytes`` a row, NULL
+    keys dropped JVM-side (the join paths drop them too: a NULL id
+    never satisfies an equi-join or an id comparison) — or None when
+    the corpus is empty, oversized or non-integral-keyed (callers keep
+    the distributed join)."""
+    if df.schema[key].dataType.simpleString() not in _INTEGRAL:
         return None
-    max_rows = _IVF_BROADCAST_MAX_BYTES // (dim * 8 + 16)
-    rows = df.select(key, vec_col).limit(max_rows + 1).collect()
-    if len(rows) > max_rows:  # oversize test BEFORE the null drop — a
-        return None           # truncated collect must never pose as the
-    rows = [r for r in rows if r[0] is not None]  # full corpus
-    return rows or None
+    table = route.bounded_collect(
+        df.select(key, vec_col).where(F.col(key).isNotNull()), nbytes, op
+    )
+    if table is None or not table.num_rows:
+        return None
+    return table.column(key).to_numpy().astype(np.int64), _matrix(table.column(vec_col))
+
+
+_INTEGRAL = ("bigint", "int", "smallint", "tinyint")
+
+
+def _matrix(vecs: pa.ChunkedArray) -> np.ndarray:
+    """(n, dim) float64 matrix of a non-empty Arrow column of
+    equal-length vectors (NULL or ragged vectors raise, as ``np.stack``
+    does)."""
+    lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+    if (lens != lens[0]).any():
+        raise ValueError(f"{vecs.type} column holds NULL or unequal-length vectors")
+    flat = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(vecs), -1)
 
 
 def _score_topk(q, qid, cand, ids_b, M_b, k, out_q, out_n, out_c, out_r):
@@ -286,7 +302,7 @@ def _score_topk(q, qid, cand, ids_b, M_b, k, out_q, out_n, out_c, out_r):
 
 def _ann_topk_broadcast(
     df: DataFrame, k: int, key: str, vec_col: str, dim: int,
-    n_planes: int, n_tables: int, n_probes: int, seed: int, rows,
+    n_planes: int, n_tables: int, n_probes: int, seed: int, corpus,
 ) -> DataFrame:
     """Broadcast-corpus ANN kernel (see ``ann_topk`` route comment).
 
@@ -300,8 +316,7 @@ def _ann_topk_broadcast(
     weights = (1 << np.arange(n_planes)).astype(np.int64)
     table_off = np.arange(n_tables, dtype=np.int64) << 32
 
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    M = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    ids, M = corpus
     bits = ((M @ planes) >= 0.0).reshape(len(M), n_tables, n_planes)
     corpus_buckets = bits @ weights + table_off  # (n, n_tables)
     members: dict[int, list[int]] = {}
@@ -414,13 +429,6 @@ def ivf_lists_col(vec_col: str, centroids: np.ndarray, nprobe: int = 1):
     return _lists(F.col(vec_col))
 
 
-#: corpus byte budget for the IVF broadcast fast path (vectors ×
-#: float64); matches the session's autoBroadcastJoinThreshold default —
-#: the same size class the old plan already broadcast TWICE (query and
-#: corpus vector re-attach joins)
-_IVF_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
-
-
 def ivf_topk(
     df: DataFrame,
     k: int = 3,
@@ -438,10 +446,10 @@ def ivf_topk(
     equi-join is the only shuffle and list sizes are ~n/n_lists.
     Output: (query_id, neighbor_id, cosine, rank).
 
-    Route: when the corpus fits ``_IVF_BROADCAST_MAX_BYTES`` (the same
-    size class the join plan already broadcast twice for the vector
-    re-attach), the whole probe runs as ONE mapInPandas over the query
-    side against the broadcast corpus matrix: probe lists, candidate
+    Route: when ``route.bounded_collect`` brings the corpus to the
+    driver (within ``route.MAX_COLLECT_BYTES``), the whole probe runs
+    as ONE mapInPandas over the query side against the broadcast
+    corpus matrix: probe lists, candidate
     gather, exact cosine and the per-query top-k all happen locally —
     no candidate-pair materialization (~0.37·n² rows at nprobe=6/16),
     no Arrow pair crossing, no window shuffle (guide §2.1: remove the
@@ -457,9 +465,9 @@ def ivf_topk(
     centroid training sample), and a nondeterministic upstream can give
     that collect and the action-time query scan different rows."""
     C = train_ivf_centroids(df, n_lists, key, vec_col, sample=sample, seed=seed)
-    rows = _bounded_corpus_collect(df, key, vec_col, len(C[0]))
-    if rows is not None:
-        return _ivf_topk_broadcast(df, C, k, key, vec_col, nprobe, rows)
+    corpus = _corpus_collect(df, key, vec_col, len(C[0]) * 8 + 16, "ivf_topk")
+    if corpus is not None:
+        return _ivf_topk_broadcast(df, C, k, key, vec_col, nprobe, corpus)
     # the list equi-join ships (id, list) only; vectors re-attach per
     # candidate pair by id and the exact-cosine rerank runs in one
     # Arrow batch (guide §8 / §4.2 — formerly the embedding payloads
@@ -495,11 +503,11 @@ def ivf_topk(
 
 def _ivf_topk_broadcast(
     df: DataFrame, C: np.ndarray, k: int, key: str, vec_col: str, nprobe: int,
-    rows,
+    corpus,
 ) -> DataFrame:
     """Broadcast-corpus IVF kernel (see ``ivf_topk`` route comment).
 
-    Takes the already-collected corpus rows, assigns each vector to
+    Takes the already-collected corpus, assigns each vector to
     its list with the SAME normalized-argmax numpy ops as
     ``ivf_lists_col``, then streams the query side through one
     mapInPandas: per query, gather the members of its ``nprobe``
@@ -507,8 +515,7 @@ def _ivf_topk_broadcast(
     ``query_id != neighbor_id`` filter); scoring/top-k via
     ``_score_topk`` — exact because a query's full candidate set is
     present locally."""
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    M = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    ids, M = corpus
     Cm = np.ascontiguousarray(C)
     Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
     assign = np.argsort(-(Mn @ Cm.T), axis=1)[:, 0]
@@ -579,6 +586,9 @@ def cosine_dup_pairs(
     mode='exact' — broadcast self-join over the full corpus: the
     labeled exactness baseline / oracle path, same framing as
     ``cosine_topk`` (quadratic; small inputs or verification only).
+    The corpus reaches the driver only through
+    ``route.bounded_collect``; a corpus over ``route.MAX_COLLECT_BYTES``
+    (or with non-integral keys) runs as an expression crossJoin instead.
 
     mode='lsh' — the scale path: multi-table random-hyperplane buckets
     (seeded, deterministic); vectors sharing any (table, bucket) key
@@ -603,24 +613,23 @@ def cosine_dup_pairs(
     vb = base.select(
         F.col("__id").alias("b"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb")
     )
-    key_type = df.schema[key].dataType.simpleString()
-    if mode == "exact" and key_type not in ("bigint", "int", "smallint", "tinyint"):
-        # non-integral keys keep the expression crossJoin path
-        cand = va.crossJoin(F.broadcast(vb)).filter(F.col("a") < F.col("b"))
+    corpus = None
+    if mode == "exact":
+        corpus = _corpus_collect(
+            df, key, vec_col, F.size(vec_col) * 8 + 16, "cosine_dup_pairs"
+        )
+    if mode == "exact" and corpus is None:
+        # non-integral keys and a corpus over the collect budget keep
+        # the expression crossJoin path (Spark broadcasts a side only
+        # when its size estimate allows)
+        cand = va.crossJoin(vb).filter(F.col("a") < F.col("b"))
     elif mode == "exact":
         # quadratic by contract (the labeled exactness baseline), but
         # the n² inner product runs as ONE numpy matmul per Arrow batch
         # against the broadcast corpus matrix instead of 2M interpreted
         # HOF folds over materialized crossJoin rows (guide §4.2 —
-        # measured 26 s → <2 s on the sf0.1 fixture). The corpus
-        # collect is the same byte budget the old crossJoin(broadcast)
-        # already required.
-        rows = df.select(key, vec_col).collect()
-        ids_all = np.asarray([r[0] for r in rows], dtype=np.int64)
-        mat = (
-            np.stack([np.asarray(r[1], np.float64) for r in rows])
-            if rows else np.zeros((0, 1))
-        )
+        # measured 26 s → <2 s on the sf0.1 fixture).
+        ids_all, mat = corpus
         norms_all = np.sqrt(np.einsum("ij,ij->i", mat, mat))
         bc = df.sparkSession.sparkContext.broadcast((ids_all, mat, norms_all))
         thr = float(threshold)
@@ -650,8 +659,10 @@ def cosine_dup_pairs(
                              "cosine": sims[ri, ci]}
                         )
 
-        return df.select(key, vec_col).mapInPandas(
-            gen, "a long, b long, cosine double"
+        return (
+            df.select(key, vec_col)
+            .where(F.col(key).isNotNull())
+            .mapInPandas(gen, "a long, b long, cosine double")
         )
     elif mode == "lsh":
         if dim is None:

@@ -10,12 +10,16 @@ scale horizontally:
      polygon_id, fully_contained)``, one quadtree covering between
      ``res_min`` and ``res_max`` (a single res is the quadtree with
      ``res_min == res_max``), range-partitionable by cell — the
-     north_rule's "polygon sides range-partitioned by cell prefix". A
-     small broadcast dim is covered on the driver, and when the points
-     plan is small too the covering is PRUNED to the cells the points
-     occupy (a bounded probe collects them first): like the reference's
-     per-query GiST lookup, the covering then costs in proportion to
-     where the points are, not to the polygons' whole area.
+     north_rule's "polygon sides range-partitioned by cell prefix". The
+     route is decided once, by ``route.bounded_collect`` of the dim's
+     (id, WKB) rows under the engine's one collect budget: a dim that
+     fits arrives on the driver as one Arrow table and broadcasts, a
+     bigger one is never collected. A small broadcast dim is covered
+     on the driver, and when the points plan is small too the covering
+     is PRUNED to the cells the points occupy (a bounded probe collects
+     them first): like the reference's per-query GiST lookup, the
+     covering then costs in proportion to where the points are, not to
+     the polygons' whole area.
   2. FILTER (fact-side): each point explodes to its ancestor cells from
      ``res_min`` to ``res_max``, computed by a NATIVE expression
      (whole-stage codegen), and equi-joins ``polygon_cells`` on ``cell``
@@ -47,11 +51,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..cells import grid
 from ..geometry import cover, wkb
 from ..geometry.pip import COVERS_EPS, PreparedPolygons
+from ..plans import route
 
 DEFAULT_RES = 13  # ≈ 2.4 km cells (H3 res-7 analog, grid.H3_ANALOG_RES)
 
@@ -75,25 +81,27 @@ _DRIVER_COVER_MAX_BYTES = 8 << 20
 _PRUNE_MAX_CELLS = 16_384
 
 
+def _cell_xy(lon_col: str, lat_col: str, res: int):
+    """NATIVE clamped grid ``x``, ``y`` of a point at ``res`` —
+    identical IEEE double arithmetic to the numpy kernel (same ops in
+    the same order)."""
+    n = float(1 << res)
+    n_max = F.lit((1 << res) - 1).cast("long")
+    zero = F.lit(0).cast("long")
+    x = F.floor((F.col(lon_col) + 180.0) / 360.0 * n).cast("long")
+    y = F.floor((F.col(lat_col) + 90.0) / 180.0 * n).cast("long")
+    return F.greatest(zero, F.least(n_max, x)), F.greatest(zero, F.least(n_max, y))
+
+
 def _cells(lon_col: str, lat_col: str, res_min: int, res_max: int):
     """NATIVE columns for grid.encode at each res in ``res_min..res_max``
     (invalid coords → -1, loc:error semantics), whole-stage-codegen'd
     JVM-side: the hot path ships no rows to Python. One clamped ``x``,
-    ``y`` at ``res_max`` — identical IEEE double arithmetic to the numpy
-    kernel (same ops in the same order); each coarser cell shifts both
+    ``y`` at ``res_max`` (``_cell_xy``); each coarser cell shifts both
     right by ``k = res_max - r``. Exact: scaling by 2^res is exact in
     IEEE arithmetic, so floor(v·2^res_max) >> k == floor(v·2^r)."""
-    n = float(1 << res_max)
-    n_max = (1 << res_max) - 1
+    x, y = _cell_xy(lon_col, lat_col, res_max)
     lon, lat = F.col(lon_col), F.col(lat_col)
-    x = F.greatest(
-        F.lit(0).cast("long"),
-        F.least(F.lit(n_max).cast("long"), F.floor((lon + 180.0) / 360.0 * n).cast("long")),
-    )
-    y = F.greatest(
-        F.lit(0).cast("long"),
-        F.least(F.lit(n_max).cast("long"), F.floor((lat + 90.0) / 180.0 * n).cast("long")),
-    )
     bad = (
         lon.isNull() | lat.isNull() | F.isnan(lon) | F.isnan(lat)
         | (lon < -180.0) | (lon > 180.0) | (lat < -90.0) | (lat > 90.0)
@@ -245,79 +253,6 @@ def build_polygon_cells_adaptive(
     return cells_df
 
 
-_PROBE_ROWS = 4096  # row bound for the single-job fast probe
-
-
-def _probe_polygon_dim(polygons_df, geom_col, id_col, max_bytes):
-    """Byte-bounded auto-route probe. Three tiers:
-
-    LOCAL-RELATION PATH: a dim built with ``createDataFrame`` (the
-    common synthetic/admin fixture) executes as a LocalTableScan —
-    ``collect`` runs driver-side with no Spark job at all, and the rows
-    are already held in driver memory, so collecting them adds nothing.
-
-    FAST PATH (small distributed dim): ONE cheap job computes
-    count/sum/max of wkb length over ``limit(_PROBE_ROWS + 1)`` rows
-    (sizing executor-side first, so an over-budget dim of a few huge
-    polygons is never collected); when the dim has at most
-    ``_PROBE_ROWS`` rows and fits the byte budget, a single ``collect``
-    materializes the broadcast {id: wkb} map. ``toLocalIterator``
-    here would launch one sequential job per partition — measured as
-    the dominant constant cost of the sf0.1 flagship (32 near-empty
-    partitions for 60 polygons).
-
-    BIG-DIM PATH: stream through ``toLocalIterator`` accumulating the
-    map and ABORT the moment the byte budget is exceeded — a
-    planet-scale dim is read at most ``max_bytes`` + one partition
-    deep, never fully scanned or OOM-collected.
-
-    Returns (mapping, fits, max_polygon_bytes, total_bytes); ``mapping``
-    is None when the dim doesn't fit, ``max_polygon_bytes`` /
-    ``total_bytes`` cover only the rows actually probed (exact whenever
-    ``fits``)."""
-    dim = polygons_df.select(id_col, geom_col)
-    try:
-        is_local = dim.isLocal()
-    except Exception:  # pragma: no cover - defensive
-        is_local = False
-    mapping: dict = {}
-    total = 0
-    max_poly = 0
-    if is_local:
-        for r in dim.collect():
-            g = r[1]
-            if g is None:
-                continue
-            total += len(g)
-            max_poly = max(max_poly, len(g))
-            mapping[r[0]] = bytes(g)
-            if total > max_bytes:
-                return None, False, max_poly, total
-        return mapping, True, max_poly, total
-    stats = dim.limit(_PROBE_ROWS + 1).agg(
-        F.count(F.lit(1)), F.sum(F.length(geom_col)), F.max(F.length(geom_col))
-    ).first()
-    n_rows = int(stats[0] or 0)
-    if n_rows <= _PROBE_ROWS:
-        total, max_poly = int(stats[1] or 0), int(stats[2] or 0)
-        if total > max_bytes:
-            return None, False, max_poly, total
-        for r in dim.collect():
-            if r[1] is not None:
-                mapping[r[0]] = bytes(r[1])
-        return mapping, True, max_poly, total
-    for r in dim.toLocalIterator():
-        g = r[1]
-        if g is None:
-            continue
-        total += len(g)
-        max_poly = max(max_poly, len(g))
-        if total > max_bytes:
-            return None, False, max_poly, total
-        mapping[r[0]] = bytes(g)
-    return mapping, True, max_poly, total
-
-
 def _occupied_cells(points_df, lon_col, lat_col, res):
     """Distinct valid cells at ``res`` of the points, for pruning the
     driver-built covering — or None (no pruning) when the points plan
@@ -357,7 +292,7 @@ def point_in_polygon_join(
     covers: bool = False,
     salt: int = 0,
     polygon_cells_df: DataFrame | None = None,
-    broadcast_max_bytes: int = 64 << 20,
+    broadcast_max_bytes: int = route.MAX_COLLECT_BYTES,
 ) -> DataFrame:
     """points ⋈ polygons on containment. Returns ``points_df`` columns +
     ``id_col`` (one output row per (point, containing polygon) pair).
@@ -368,17 +303,18 @@ def point_in_polygon_join(
     polygon's covering cells are disjoint regions, so each point still
     matches each polygon at most once).
 
-    The route is decided by a byte-bounded probe of the dim
-    (``_probe_polygon_dim``) that also materializes the broadcast map:
-    a local dim is collected driver-side, a small one (≤ ``_PROBE_ROWS``
-    rows) is sized by one bounded agg and collected once, and only a
-    bigger dim streams through ``toLocalIterator``, ABORTING the moment
-    ``broadcast_max_bytes`` is exceeded — a planet-scale dim is read at
-    most budget-deep, never fully scanned or OOM-collected. A dim within
-    the budget broadcasts its covering and its edge table; a bigger one
-    (or any dim, with ``broadcast_max_bytes=0``) takes the shuffle join
-    and builds its edge table in one Arrow pass over the polygons. Both
-    routes refine in the JVM with the same ``_refine`` filter.
+    ``id_col`` must be unique per polygon row (as ``knn_join``'s
+    ``poi_key``).
+
+    The route is decided by ``route.bounded_collect`` of the dim's
+    (id, WKB) rows: the WKB is sized on the executors first, so a dim
+    over ``broadcast_max_bytes`` is never collected, and a planet-scale
+    one is read at most budget-deep. A dim within the budget arrives
+    as one Arrow table and broadcasts its covering and its edge table;
+    a bigger one (or any dim, with ``broadcast_max_bytes=0``) takes the
+    shuffle join and builds its edge table in one Arrow pass over the
+    polygons. Both routes refine in the JVM with the same ``_refine``
+    filter.
 
     OCCUPIED-CELL PRUNING (driver-built covering only): the covering is
     built only where the points are. A second eager, bounded probe —
@@ -400,13 +336,20 @@ def point_in_polygon_join(
     salt argument is therefore ignored.
     """
     res_min, res_max = res if isinstance(res, tuple) else (res, res)
-    poly_map, broadcast, max_poly_bytes, total_dim_bytes = _probe_polygon_dim(
-        polygons_df, geom_col, id_col, broadcast_max_bytes
+    dim_table = route.bounded_collect(
+        polygons_df.select(id_col, geom_col).where(
+            F.col(id_col).isNotNull() & F.col(geom_col).isNotNull()
+        ),
+        F.length(geom_col), "point_in_polygon_join", broadcast_max_bytes,
     )
+    broadcast = dim_table is not None
     if broadcast:
-        dim_ids = np.asarray(sorted(poly_map), dtype=np.int64)
-        packed_dim = wkb.pack([poly_map[i] for i in dim_ids.tolist()])
-    if polygon_cells_df is None and broadcast and total_dim_bytes <= _DRIVER_COVER_MAX_BYTES:
+        dim_ids = dim_table.column(id_col).to_numpy().astype(np.int64)
+        packed_dim = wkb.pack(dim_table.column(geom_col).to_pylist())
+        wkb_lens = pc.binary_length(dim_table.column(geom_col))
+    if polygon_cells_df is None and broadcast and (
+        (pc.sum(wkb_lens).as_py() or 0) <= _DRIVER_COVER_MAX_BYTES
+    ):
         # DRIVER-SIDE COVERING: the dim's WKB is already in driver
         # memory, and the covering kernel is a vectorized numpy pass
         # measured far cheaper than even ONE Spark stage of Python
@@ -435,7 +378,7 @@ def point_in_polygon_join(
         polygon_cells_df = build_polygon_cells_adaptive(
             polygons_df, res_min, res_max, geom_col, id_col,
             seed_parallel=res_min < res_max
-            and (not broadcast or max_poly_bytes > _SEED_PARALLEL_MIN_BYTES),
+            and (not broadcast or (pc.max(wkb_lens).as_py() or 0) > _SEED_PARALLEL_MIN_BYTES),
         )
     pts = points_df.withColumn(
         "__cell", F.explode(ancestor_cells(lon_col, lat_col, res_min, res_max))

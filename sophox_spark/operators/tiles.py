@@ -26,19 +26,28 @@ from ..geometry.pip import PreparedPolygons
 MAX_MERCATOR_LAT = 85.05112878
 
 
-def tile_cols(lon_col: str, lat_col: str, z: int):
-    """(tile_x, tile_y) native-expression columns at zoom ``z``."""
+def _tile_plane(lon_col: str, lat_col: str, z: int):
+    """Continuous web-mercator tile-plane (x, y) native columns at zoom
+    ``z`` (x right, y down) — the Spark twin of
+    ``_project_to_tile_plane``."""
     n = F.lit(float(1 << z))
     lat = F.greatest(
         F.lit(-MAX_MERCATOR_LAT), F.least(F.lit(MAX_MERCATOR_LAT), F.col(lat_col))
     )
-    xt = F.floor((F.col(lon_col) + 180.0) / 360.0 * n)
     lat_r = F.radians(lat)
     # asinh(t) = ln(t + sqrt(t²+1)) — spelled out for engine portability
     asinh_tan = F.log(F.tan(lat_r) + F.sqrt(F.tan(lat_r) * F.tan(lat_r) + 1.0))
-    yt = F.floor((1.0 - asinh_tan / float(np.pi)) / 2.0 * n)
-    clamp = lambda c: F.greatest(F.lit(0), F.least(F.lit((1 << z) - 1), c.cast("long")))  # noqa: E731
-    return clamp(xt), clamp(yt)
+    return (F.col(lon_col) + 180.0) / 360.0 * n, (1.0 - asinh_tan / float(np.pi)) / 2.0 * n
+
+
+def _clamp(c, hi: int):
+    return F.greatest(F.lit(0).cast("long"), F.least(F.lit(hi).cast("long"), c.cast("long")))
+
+
+def tile_cols(lon_col: str, lat_col: str, z: int):
+    """(tile_x, tile_y) native-expression columns at zoom ``z``."""
+    fx, fy = _tile_plane(lon_col, lat_col, z)
+    return _clamp(F.floor(fx), (1 << z) - 1), _clamp(F.floor(fy), (1 << z) - 1)
 
 
 def tile_key_col(z: int, x, y):
@@ -182,18 +191,10 @@ def rasterize_points(
     floor math + one two-phase groupBy; at scale this is the canonical
     map-tile pre-aggregation (reduces 10^12 points to bounded
     tiles×extent² cells)."""
-    n = F.lit(float(1 << z))
-    lat = F.greatest(
-        F.lit(-MAX_MERCATOR_LAT), F.least(F.lit(MAX_MERCATOR_LAT), F.col(lat_col))
-    )
-    fx = (F.col(lon_col) + 180.0) / 360.0 * n
-    asinh_tan = F.log(F.tan(F.radians(lat)) + F.sqrt(F.tan(F.radians(lat)) * F.tan(F.radians(lat)) + 1.0))
-    fy = (1.0 - asinh_tan / float(np.pi)) / 2.0 * n
-    clamp = lambda c: F.greatest(F.lit(0).cast("long"), F.least(F.lit((1 << z) - 1).cast("long"), c.cast("long")))  # noqa: E731
-    xt, yt = clamp(F.floor(fx)), clamp(F.floor(fy))
-    pclamp = lambda c: F.greatest(F.lit(0).cast("long"), F.least(F.lit(extent - 1).cast("long"), c.cast("long")))  # noqa: E731
-    px = pclamp(F.floor((fx - xt) * extent))
-    py = pclamp(F.floor((fy - yt) * extent))
+    fx, fy = _tile_plane(lon_col, lat_col, z)
+    xt, yt = _clamp(F.floor(fx), (1 << z) - 1), _clamp(F.floor(fy), (1 << z) - 1)
+    px = _clamp(F.floor((fx - xt) * extent), extent - 1)
+    py = _clamp(F.floor((fy - yt) * extent), extent - 1)
     return (
         df.select(
             xt.alias("tile_x"), yt.alias("tile_y"), px.alias("px"), py.alias("py")

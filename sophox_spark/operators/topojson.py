@@ -151,7 +151,8 @@ def regions_topojson(
     quantize_q: int = 10_000,
 ) -> DataFrame:
     """The /regions?format=topojson flow (server.js:184-210): id
-    semi-join → dissolve → per-key simplification (all distributed) →
+    semi-join → two-phase ``dissolve`` → per-key simplification (all
+    distributed) →
     single-task topology over the bounded response set, quantized on the
     COLLECTION grid so shared borders between different ids dedupe into
     shared arcs.
@@ -160,15 +161,7 @@ def regions_topojson(
     ``n_arcs``, ``n_shared_arcs`` (arcs referenced more than once).
     """
     selected = polygons_df.join(F.broadcast(ids_df), key, "left_semi")
-    # the semi-join only drops rows: the INPUT's localness decides
-    # whether the map-side dissolve partial is needed (see
-    # dissolve._dissolve_partials — a local fixture skips the no-op
-    # partial crossing)
-    try:
-        bounded = polygons_df.isLocal()
-    except Exception:  # pragma: no cover - defensive
-        bounded = None
-    dissolved = dissolve(selected, key=key, geom_col=geom_col, bounded=bounded)
+    dissolved = dissolve(selected, key=key, geom_col=geom_col)
 
     def simplify_partial(batches):
         # distributed per-key simplification; quantization must wait for

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from sophox_spark.manifest import Manifest
 from sophox_spark.operators import dedup, multimodal, resumable, similarity, spatial_join
+from sophox_spark.plans import route
 from sophox_spark.sources import synth
 
 
@@ -231,6 +232,18 @@ class TestCosineDup:
         clusters = dict(got)
         assert clusters[2000] == 0 and clusters[1000] == 0
 
+    def test_exact_over_budget_same_pairs(self, spark, monkeypatch):
+        """A corpus over the collect budget takes the expression
+        crossJoin instead of the broadcast matmul: the same pairs on a
+        fixture whose cosines sit clear of the threshold (the planted
+        near-dups far above 0.8, the uniform random pairs near 0.5)."""
+        fix = self._fixture(spark)
+        fast = similarity.cosine_dup_pairs(fix, threshold=0.8, mode="exact").collect()
+        monkeypatch.setattr(route, "MAX_COLLECT_BYTES", 0)
+        slow = similarity.cosine_dup_pairs(fix, threshold=0.8, mode="exact").collect()
+        assert {(r.a, r.b) for r in slow} == {(r.a, r.b) for r in fast}
+        assert len(fast) == 50
+
     def test_lsh_empty_input(self, spark):
         fix = self._fixture(spark).filter("vec_id < 0")
         out = similarity.cosine_dup_pairs(fix, mode="lsh")
@@ -404,7 +417,7 @@ class TestAnnBroadcastEquivalence:
 
         fast_ivf = similarity.ivf_topk(emb, k=3).collect()
         fast_ann = similarity.ann_topk(emb, k=3).collect()
-        monkeypatch.setattr(similarity, "_IVF_BROADCAST_MAX_BYTES", 0)
+        monkeypatch.setattr(route, "MAX_COLLECT_BYTES", 0)
         join_ivf = similarity.ivf_topk(emb, k=3).collect()
         join_ann = similarity.ann_topk(emb, k=3).collect()
         assert sorted(map(tuple, fast_ivf)) == sorted(map(tuple, join_ivf))
@@ -454,7 +467,7 @@ class TestAnnBroadcastEquivalence:
 
         fast_ivf = norm(similarity.ivf_topk(emb, k=3, n_lists=1, sample=4).collect())
         fast_ann = norm(similarity.ann_topk(emb, k=3, dim=8).collect())
-        monkeypatch.setattr(similarity, "_IVF_BROADCAST_MAX_BYTES", 0)
+        monkeypatch.setattr(route, "MAX_COLLECT_BYTES", 0)
         assert fast_ivf == norm(
             similarity.ivf_topk(emb, k=3, n_lists=1, sample=4).collect()
         )
@@ -484,7 +497,7 @@ class TestAnnBroadcastEquivalence:
 
         fast_ivf = rows(similarity.ivf_topk(emb, k=3, n_lists=1, sample=4))
         fast_ann = rows(similarity.ann_topk(emb, k=3, dim=8))
-        monkeypatch.setattr(similarity, "_IVF_BROADCAST_MAX_BYTES", 0)
+        monkeypatch.setattr(route, "MAX_COLLECT_BYTES", 0)
         join_ivf = rows(similarity.ivf_topk(emb, k=3, n_lists=1, sample=4))
         join_ann = rows(similarity.ann_topk(emb, k=3, dim=8))
         assert {q for q, *_ in join_ivf} == {big + 1, big + 3, 5}

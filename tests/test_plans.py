@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sophox_spark.operators import knn, spatial_join, tiles
-from sophox_spark.plans import explain
+from sophox_spark.plans import explain, route
 from sophox_spark.sources import synth
 
 SF = "/root/testdata/sf0.01"
@@ -165,7 +165,7 @@ class TestRound2Plans:
         assert explain.count_exchanges(out) == 0
         assert explain.python_eval_nodes(out) == 1
 
-    def test_clipped_regions_distributed_no_driver_collect(self, spark):
+    def test_clipped_regions_distributed_no_driver_collect(self, spark, monkeypatch):
         """The clip path is a cell-cover candidate EQUI-join: no
         cartesian/nested-loop product anywhere in the plan, and the
         water side reaches the clip through the join — the only
@@ -178,7 +178,9 @@ class TestRound2Plans:
             "wikidata", "w"
         ).selectExpr("polygon_id", "geom")
         water = polygons.filter("kind = 'water'").selectExpr("polygon_id", "geom")
-        out = dissolve.clipped_regions(regions, water, broadcast_water_max_bytes=0)
+        with monkeypatch.context() as m:
+            m.setattr(route, "MAX_COLLECT_BYTES", 0)
+            out = dissolve.clipped_regions(regions, water)
         plan = explain.formatted_plan(out)
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
@@ -191,3 +193,38 @@ class TestRound2Plans:
         # the small-dim fast path is zero-shuffle
         fast = dissolve.clipped_regions(regions, water)
         assert explain.count_exchanges(fast) == 0
+
+
+class TestRouteLog:
+    def test_one_record_per_routed_call(self, spark, points, caplog):
+        """Every broadcast route decides through ``route.bounded_collect``
+        and logs exactly one record of it on ``sophox_spark.route``."""
+        import logging
+
+        from sophox_spark.operators import dissolve, similarity
+
+        polygons = synth.admin_polygons_df(spark, 30)
+        regions = polygons.filter("kind = 'admin'").selectExpr("polygon_id", "geom")
+        water = polygons.filter("kind = 'water'").selectExpr("polygon_id", "geom")
+        emb = spark.read.parquet(f"{SF}/embeddings.parquet").filter("vec_id < 200")
+        calls = {
+            "point_in_polygon_join": lambda: spatial_join.point_in_polygon_join(
+                points, polygons
+            ),
+            "ann_topk": lambda: similarity.ann_topk(emb, k=3),
+            "ivf_topk": lambda: similarity.ivf_topk(emb, k=3),
+            "clipped_regions": lambda: dissolve.clipped_regions(regions, water),
+            "cosine_dup_pairs": lambda: similarity.cosine_dup_pairs(emb, mode="exact"),
+        }
+        for op, call in calls.items():
+            caplog.clear()
+            with caplog.at_level(logging.DEBUG, logger="sophox_spark.route"):
+                call()
+            recs = [r for r in caplog.records if r.name == "sophox_spark.route"]
+            assert [(r.op, r.route) for r in recs] == [(op, "collect")]
+            assert 0 < recs[0].bytes <= recs[0].budget == route.MAX_COLLECT_BYTES
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger="sophox_spark.route"):
+            spatial_join.point_in_polygon_join(points, polygons, broadcast_max_bytes=0)
+        recs = [r for r in caplog.records if r.name == "sophox_spark.route"]
+        assert [(r.route, r.budget) for r in recs] == [("distributed", 0)]

@@ -5,13 +5,14 @@ filter-then-refine machinery — row-for-row equality (north_rule)."""
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 import pytest
 from pyspark.sql import functions as F
 
 from sophox_spark.geometry import simplify as simp, wkb
 from sophox_spark.geometry.pip import PreparedPolygons, point_in_rings
 from sophox_spark.operators import dissolve, knn, spatial_join, tiles
-from sophox_spark.plans import explain
+from sophox_spark.plans import explain, route
 from sophox_spark.sources import synth
 
 
@@ -227,49 +228,94 @@ class TestCoveringAutoRoute:
             if r.geom is not None
         }
         for dim in (polygons, polygons.repartition(4)):
-            # both the local-relation shortcut and the one-job fast path
-            mapping, fits, max_poly, total = spatial_join._probe_polygon_dim(
-                dim, "geom", "polygon_id", 64 << 20
+            table = route.bounded_collect(
+                dim.select("polygon_id", "geom"), F.length("geom"), "test", 64 << 20
             )
-            assert fits
+            assert table is not None
+            mapping = {
+                i: g for i, g in zip(table.column("polygon_id").to_pylist(),
+                                     table.column("geom").to_pylist())
+                if g is not None
+            }
             assert mapping == want
-            assert max_poly == max(len(g) for g in want.values())
-            assert total == sum(len(g) for g in want.values())
+            lens = pc.binary_length(table.column("geom"))
+            assert pc.max(lens).as_py() == max(len(g) for g in want.values())
+            assert pc.sum(lens).as_py() == sum(len(g) for g in want.values())
 
-    def test_probe_fast_path_over_budget_no_collect(self, spark, polygons):
+    def test_probe_fast_path_over_budget_no_collect(self, spark, polygons, monkeypatch):
         """A dim of few huge polygons over budget must be refused via the
-        executor-side sizing agg, never collected."""
-        mapping, fits, max_poly, _ = spatial_join._probe_polygon_dim(
-            polygons.repartition(4), "geom", "polygon_id", 1
+        executor-side sizing probe, never collected."""
+        collected = _spy_driver_columns(monkeypatch, polygons)
+        table = route.bounded_collect(
+            polygons.repartition(4).select("polygon_id", "geom"),
+            F.length("geom"), "test", 1,
         )
-        assert mapping is None and not fits and max_poly > 0
+        assert table is None
+        assert collected and not any("geom" in cols for cols in collected)
 
-    def test_probe_streams_big_dim(self, spark):
-        """> _PROBE_ROWS rows (repartitioned so the local-relation
-        shortcut does not apply): the probe must fall back to the
-        bounded toLocalIterator stream and abort once over budget."""
-        n = spatial_join._PROBE_ROWS + 64
-        ii = np.arange(n)
-        blobs = [
-            wkb.polygon_wkb(
-                [np.array([[a, 0.0], [a + 0.4, 0.0], [a + 0.4, 0.4], [a, 0.4]])]
-            )
-            for a in (ii % 300) * 0.5 - 75.0
-        ]
-        polys = spark.createDataFrame(
-            pd.DataFrame({"polygon_id": ii, "geom": blobs}),
-            "polygon_id long, geom binary",
-        ).repartition(4)
-        mapping, fits, _, _ = spatial_join._probe_polygon_dim(
-            polys, "geom", "polygon_id", 1024
+    def test_probe_streams_big_dim(self, spark, monkeypatch):
+        """> _PROBE_ROWS rows: the sizes must stream through the bounded
+        toLocalIterator and abort once over budget, no payload
+        collected; within budget every row comes back."""
+        polys, blobs = _many_small_polygons(spark, route._PROBE_ROWS + 64)
+        collected = _spy_driver_columns(monkeypatch, polys)
+        assert route.bounded_collect(polys, F.length("geom"), "test", 1024) is None
+        # the probe's rows fit, the whole input does not: the stream aborts
+        past_probe = (route._PROBE_ROWS + 8) * len(blobs[0])
+        assert route.bounded_collect(polys, F.length("geom"), "test", past_probe) is None
+        assert ["length(geom)"] in collected
+        assert not any("geom" in cols for cols in collected)
+        table = route.bounded_collect(polys, F.length("geom"), "test", 64 << 20)
+        assert table is not None and table.num_rows == len(blobs)
+        lens = pc.binary_length(table.column("geom"))
+        assert pc.max(lens).as_py() == max(len(b) for b in blobs)
+        assert pc.sum(lens).as_py() == sum(len(b) for b in blobs)
+
+    def test_collect_streamed_input_within_budget_returns_every_row(
+        self, spark, monkeypatch
+    ):
+        """An input larger than the probe but inside the budget takes
+        the streamed sizing and then returns every row, unchanged."""
+        polys, blobs = _many_small_polygons(spark, 2 * route._PROBE_ROWS + 1)
+        collected = _spy_driver_columns(monkeypatch, polys)
+        table = route.bounded_collect(
+            polys, F.length("geom"), "test", sum(len(b) for b in blobs)
         )
-        assert mapping is None and not fits
-        mapping, fits, max_poly, total = spatial_join._probe_polygon_dim(
-            polys, "geom", "polygon_id", 64 << 20
+        assert ["length(geom)"] in collected  # the streamed sizes
+        assert table is not None
+        got = dict(zip(table.column("polygon_id").to_pylist(),
+                       table.column("geom").to_pylist()))
+        assert got == dict(enumerate(blobs))
+
+
+def _many_small_polygons(spark, n):
+    """``n`` small squares as a 4-partition (polygon_id, geom) dim."""
+    blobs = [
+        wkb.polygon_wkb(
+            [np.array([[a, 0.0], [a + 0.4, 0.0], [a + 0.4, 0.4], [a, 0.4]])]
         )
-        assert fits and len(mapping) == n
-        assert max_poly == max(len(b) for b in blobs)
-        assert total == sum(len(b) for b in blobs)
+        for a in (np.arange(n) % 300) * 0.5 - 75.0
+    ]
+    polys = spark.createDataFrame(
+        pd.DataFrame({"polygon_id": np.arange(n), "geom": blobs}),
+        "polygon_id long, geom binary",
+    ).repartition(4)
+    return polys, blobs
+
+
+def _spy_driver_columns(monkeypatch, df):
+    """Record the columns of every DataFrame (of ``df``'s class) brought
+    to the driver by ``toArrow`` or ``toLocalIterator``."""
+    seen = []
+    for name in ("toArrow", "toLocalIterator"):
+        orig = getattr(type(df), name)
+
+        def spy(frame, *a, _orig=orig, **kw):
+            seen.append(list(frame.columns))
+            return _orig(frame, *a, **kw)
+
+        monkeypatch.setattr(type(df), name, spy)
+    return seen
 
 
 class TestKnn:
@@ -400,7 +446,7 @@ class TestDissolve:
         assert r.n_parts == 100_000
         assert len(wkb.decode_one(bytes(r.geom))) == 100_000
 
-    def test_clipped_regions_matches_sequential_bruteforce(self, spark):
+    def test_clipped_regions_matches_sequential_bruteforce(self, spark, monkeypatch):
         """The distributed cell-candidate clip must equal the sequential
         every-region-×-every-water reference on a fixture with crossing,
         disjoint, contained, shared-edge, and HOLED water (islands in
@@ -440,12 +486,12 @@ class TestDissolve:
             "geom binary",
         ).repartition(3)
 
-        # broadcast_water_max_bytes=0 forces the DISTRIBUTED path; the
+        # a collect budget of 0 forces the DISTRIBUTED path; the
         # default takes the broadcast fast path — both must agree with
         # the sequential reference AND each other
-        res = dissolve.clipped_regions(
-            rdf, wdf, broadcast_water_max_bytes=0
-        ).collect()
+        with monkeypatch.context() as m:
+            m.setattr(route, "MAX_COLLECT_BYTES", 0)
+            res = dissolve.clipped_regions(rdf, wdf).collect()
         got = {r.polygon_id: (r.area, r.n_rings, r.n_fallbacks) for r in res}
         got_geom = {r.polygon_id: bytes(r.geom) for r in res}
         fast = dissolve.clipped_regions(rdf, wdf).collect()

@@ -27,7 +27,7 @@ def main() -> None:
     sys.path.insert(0, "/root/repo")
     from sophox_spark.geometry import wkb
     from sophox_spark.operators import dissolve
-    from sophox_spark.plans import get_spark
+    from sophox_spark.plans import get_spark, route
 
     n_water = int(sys.argv[1]) if len(sys.argv) > 1 else 10_000
     n_regions = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000
@@ -63,9 +63,8 @@ def main() -> None:
     ).repartition(32).localCheckpoint()
 
     t0 = time.time()
-    out = dissolve.clipped_regions(
-        regions, water, broadcast_water_max_bytes=0
-    )
+    route.MAX_COLLECT_BYTES = 0  # force the distributed path
+    out = dissolve.clipped_regions(regions, water)
     agg = out.agg(
         {"area": "sum", "n_fallbacks": "sum", "polygon_id": "count"}
     ).collect()[0]
