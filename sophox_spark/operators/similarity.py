@@ -1,19 +1,27 @@
 """Similarity search over embedding columns (array<float>).
 
-Three paths per the build spec:
+Three searches:
   * brute-force cosine top-k — the exactness baseline. Dot products are
     native ``zip_with``/``aggregate`` exprs (JVM, no Python).
   * LSH-bucketed ANN — random-hyperplane signatures (seeded,
-    deterministic) in a vectorized pandas UDF, bucket equi-join with
-    query-side multi-probe, exact re-rank inside buckets. At 10^12 rows
-    the bucket join is the only shuffle. The DEFAULT scale path: needs
-    no training pass, and on clusterless (uniform) data its multi-probe
-    recall (0.95 measured) beats IVF at equal candidate budgets.
+    deterministic) with query-side multi-probe, exact re-rank of the
+    candidates. The DEFAULT scale path: needs no training pass, and on
+    clusterless (uniform) data its multi-probe recall (0.95 measured)
+    beats IVF at equal candidate budgets.
   * IVF — spherical k-means coarse quantizer trained on a bounded
     sample, nprobe-list search. Wins when embeddings CLUSTER (real text
     encoders do): recall ≈ coverage of the probed lists, so clustered
     data reaches >0.9 at nprobe/n_lists ≈ 1/8 while uniform data needs
     probing ~recall fraction of the corpus (both measured in tests).
+
+Each index is one numpy KEY FUNCTION ``keys(m, probes) -> (n, p) int64``
+over a float64 matrix of vectors: a corpus row is filed under
+``keys(m, 1)``, a query probes ``keys(m, probes)``, and its candidates
+are the other rows filed under a probed key. ``_keyed_topk`` runs both
+indexes: a corpus that ``route.bounded_collect`` brings to the driver is
+broadcast and probed in one mapInPandas, a larger one takes an
+(id, key) equi-join. Both routes call the same key function and the
+same ``_cosines``.
 """
 
 from __future__ import annotations
@@ -45,6 +53,20 @@ def _norm_expr(a: str):
     )
 
 
+def _stack(vecs: pd.Series) -> np.ndarray:
+    """(n, dim) float64 matrix of a batch of equal-length vectors."""
+    return np.stack(vecs.to_numpy()).astype(np.float64)
+
+
+def _cosines(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise cosine of two (n, dim) float64 matrices; 0/0 is NaN."""
+    num = np.einsum("ij,ij->i", A, B)
+    den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
+        np.einsum("ij,ij->i", B, B)
+    )
+    return num / den
+
+
 def _pair_cosine_col(a_col: str, b_col: str):
     """Vectorized pair cosine: one Arrow batch → numpy row-wise dots
     (guide §4.2) — replaces the interpreted per-element HOF fold on
@@ -58,15 +80,23 @@ def _pair_cosine_col(a_col: str, b_col: str):
     def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
         if not len(va):
             return pd.Series(np.empty(0, np.float64))
-        A = np.stack(va.to_numpy()).astype(np.float64)
-        B = np.stack(vb.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
-            np.einsum("ij,ij->i", B, B)
-        )
-        return pd.Series(num / den)
+        return pd.Series(_cosines(_stack(va), _stack(vb)))
 
     return _cos(F.col(a_col), F.col(b_col))
+
+
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best neighbours of each query among ``pairs``
+    (query_id, neighbor_id, cosine): cosine descending, NULL last, ties
+    by neighbor_id. Output: (query_id, neighbor_id, cosine, rank)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
 
 
 def cosine_topk(
@@ -91,156 +121,123 @@ def cosine_topk(
     pairs = pairs.withColumn(
         "cosine", _dot_expr("__qv", "__cv") / (F.col("__qn") * F.col("__cn"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(pairs, k)
+
+
+def _lsh_keys(dim: int, n_planes: int, n_tables: int, seed: int):
+    """Multi-table random-hyperplane LSH as a key function. Table t's
+    bucket carries t in the high bits, so (table, bucket) is one key;
+    ``keys(m, 1)`` is a row's bucket in each table. Multi-table LSH is
+    what makes hyperplane ANN recall usable — collision probability per
+    table p = (1-θ/π)^planes, overall 1-(1-p)^tables.
+
+    ``keys(m, probes)`` adds, per table, the ``probes − 1`` buckets
+    reached by flipping the lowest-|margin| hyperplane bits (multi-probe
+    LSH: a point close to a hyperplane most likely lost its true
+    neighbours across exactly that bit). Only queries probe, so the
+    index stays one bucket per table and row."""
+    planes = np.random.default_rng(seed).standard_normal((dim, n_tables * n_planes))
+    weights = (1 << np.arange(n_planes)).astype(np.int64)
+    tables = np.arange(n_tables, dtype=np.int64) << 32
+
+    def keys(m: np.ndarray, probes: int) -> np.ndarray:
+        proj = (m @ planes).reshape(len(m), n_tables, n_planes)
+        base = (proj >= 0.0) @ weights + tables
+        order = np.argsort(np.abs(proj), axis=2).astype(np.int64)
+        flips = [
+            base ^ (np.int64(1) << order[:, :, p])
+            for p in range(min(probes - 1, n_planes))
+        ]
+        return np.concatenate([base, *flips], axis=1)
+
+    return keys
+
+
+def _ivf_keys(centroids: np.ndarray):
+    """IVF as a key function: a row's keys are the ids of its ``probes``
+    nearest centroid lists by cosine; ``keys(m, 1)`` is its own list."""
+    C = np.ascontiguousarray(centroids)
+
+    def keys(m: np.ndarray, probes: int) -> np.ndarray:
+        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+        return np.argsort(-(m @ C.T), axis=1)[:, :probes]
+
+    return keys
+
+
+def _keys_col(vec_col: str, keys, probes: int):
+    """array<long> column of ``keys(m, probes)`` per row: the join
+    route's call of a key function."""
+
+    @F.pandas_udf("array<long>")
+    def _keys(vecs: pd.Series) -> pd.Series:
+        return pd.Series(list(keys(_stack(vecs), probes)))
+
+    return _keys(F.col(vec_col))
 
 
 def hyperplane_signature_col(vec_col: str, dim: int, n_planes: int = 16, seed: int = 42):
-    """Deterministic random-hyperplane LSH signature (int bucket id).
-    Vectorized: one matmul per Arrow batch."""
-    planes = np.random.default_rng(seed).standard_normal((dim, n_planes))
-
-    @F.pandas_udf("long")
-    def _sig(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim)
-        bits = (m @ planes) >= 0.0  # (batch, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        return pd.Series(bits @ weights)
-
-    return _sig(F.col(vec_col))
+    """Deterministic random-hyperplane LSH signature (long bucket id):
+    the one-table LSH key. Vectorized: one matmul per Arrow batch."""
+    return _keys_col(vec_col, _lsh_keys(dim, n_planes, 1, seed), 1)[0]
 
 
-def multitable_signature_col(
-    vec_col: str, dim: int, n_planes: int, n_tables: int, seed: int = 42
-):
-    """array<long> of per-table bucket ids: table t's bucket carries t
-    in the high bits so (table, bucket) is one join key. Multi-table
-    LSH is what makes hyperplane ANN recall usable — collision prob
-    per table p = (1-θ/π)^planes, overall 1-(1-p)^tables."""
-    planes = np.random.default_rng(seed).standard_normal((dim, n_tables * n_planes))
-
-    @F.pandas_udf("array<long>")
-    def _sig(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())  # (batch, dim)
-        bits = ((m @ planes) >= 0.0).reshape(len(m), n_tables, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        buckets = bits @ weights  # (batch, n_tables)
-        buckets += (np.arange(n_tables, dtype=np.int64) << 32)
-        return pd.Series(list(buckets))
-
-    return _sig(F.col(vec_col))
-
-
-def multiprobe_signature_col(
-    vec_col: str, dim: int, n_planes: int, n_tables: int,
-    n_probes: int = 3, seed: int = 42,
-):
-    """Query-side MULTI-PROBE buckets: per table, the base bucket plus
-    the ``n_probes−1`` buckets reached by flipping the lowest-|margin|
-    hyperplane bits (the classic multi-probe LSH trick: a point close to
-    a hyperplane most likely lost its true neighbors across exactly that
-    bit). Corpus-side indexing stays single-bucket, so the index size is
-    unchanged — only query fan-out grows, by n_probes×."""
-    planes = np.random.default_rng(seed).standard_normal((dim, n_tables * n_planes))
-
-    @F.pandas_udf("array<long>")
-    def _sig(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy())
-        proj = (m @ planes).reshape(len(m), n_tables, n_planes)
-        weights = (1 << np.arange(n_planes)).astype(np.int64)
-        base = (proj >= 0.0) @ weights + (np.arange(n_tables, dtype=np.int64) << 32)
-        order = np.argsort(np.abs(proj), axis=2)
-        cols = [base]
-        for p in range(min(n_probes - 1, n_planes)):
-            flip = order[:, :, p].astype(np.int64)
-            cols.append(base ^ (np.int64(1) << flip))
-        return pd.Series(list(np.concatenate(cols, axis=1)))
-
-    return _sig(F.col(vec_col))
+def _candidates(df: DataFrame, key: str, vec_col: str, keys, probes: int, dim: int):
+    """(query_id, neighbor_id) of every two rows with different ids
+    where a key of the query's ``keys(m, probes)`` is one of the
+    neighbour's ``keys(m, 1)``. Only (id, key) rows cross the join; the
+    vectors re-attach by id afterwards (guide §8: decide with small
+    rows, attach the heavy bytes once). A pair found under several keys
+    is deduplicated only when a corpus row carries more than one key:
+    with one (IVF, one-table LSH) the probed keys are distinct, so each
+    pair meets once and the join needs no second shuffle."""
+    q = df.select(
+        F.col(key).alias("query_id"),
+        F.explode(_keys_col(vec_col, keys, probes)).alias("__key"),
+    )
+    c = df.select(
+        F.col(key).alias("neighbor_id"),
+        F.explode(_keys_col(vec_col, keys, 1)).alias("__key"),
+    )
+    cand = (
+        q.join(c, "__key")
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
+    )
+    if keys(np.zeros((1, dim)), 1).shape[1] > 1:
+        cand = cand.dropDuplicates(["query_id", "neighbor_id"])
+    return cand
 
 
-def ann_topk(
-    df: DataFrame,
-    k: int = 3,
-    key: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 5,
-    n_tables: int = 12,
-    n_probes: int = 3,
-    seed: int = 42,
+def _keyed_topk(
+    df: DataFrame, k: int, key: str, vec_col: str, keys, probes: int, dim: int,
+    op: str,
 ) -> DataFrame:
-    """Approximate self-join top-k: multi-table hyperplane LSH buckets
-    with query-side multi-probe, exact cosine re-rank over the union of
-    bucket candidates. Recall vs ``cosine_topk`` measured in tests. At
-    scale the only shuffle is the (table, bucket) equi-join; candidate
-    count per query is bounded by bucket sizes × tables × probes, not n.
+    """Self-join top-k over a keyed index: each row's candidates are
+    the other rows filed under one of its ``keys(m, probes)``; they are
+    ranked by exact cosine, then neighbor_id.
     Output: (query_id, neighbor_id, cosine, rank).
 
     Route: a corpus that ``route.bounded_collect`` brings to the driver
-    (within ``route.MAX_COLLECT_BYTES`` at ``dim`` float64s a row) runs
-    as one mapInPandas over the query side against the broadcast
-    corpus + its precomputed table buckets: multiprobe, candidate
-    union-dedup, exact cosine and per-query top-k all local — no
-    bucket-join pair materialization, no Arrow pair crossing, no window
-    shuffle. The
-    bucket/probe math and the cosine einsum replicate the column
-    kernels bit-for-bit, so output is row-identical to the join path
-    (pinned by TestAnnBroadcastEquivalence). Larger corpora keep the
-    skinny (id, bucket) equi-join.
-
-    EAGER: deciding the route collects up to the budget's row count of
-    the corpus to the driver here, at plan construction, even if the
-    returned DataFrame is never evaluated. The query side is read again
-    at action time, so a nondeterministic upstream can give the two
-    reads different rows."""
-    corpus = _corpus_collect(df, key, vec_col, dim * 8 + 16, "ann_topk")
+    (within ``route.MAX_COLLECT_BYTES`` at ``dim`` float64s a row) is
+    broadcast with its key → members table, and the query side streams
+    past it in one mapInPandas (``_broadcast_topk``): no candidate-pair
+    rows, no Arrow pair crossing, no window shuffle. A larger corpus,
+    or one with non-integral keys, takes the ``_candidates`` equi-join
+    and ``_rank_topk``. TestAnnBroadcastEquivalence pins the two routes
+    row-identical."""
+    corpus = _corpus_collect(df, key, vec_col, dim * 8 + 16, op)
     if corpus is not None:
-        return _ann_topk_broadcast(
-            df, k, key, vec_col, dim, n_planes, n_tables, n_probes, seed, corpus
-        )
-    # candidate generation and the union-over-tables dedup carry ONLY
-    # (id, bucket) / (query_id, neighbor_id) — the embedding payloads
-    # never ride through the bucket join or the dropDuplicates shuffle
-    # (guide §8: decide with small rows, attach the heavy bytes once);
-    # vectors re-attach per unique pair by id, then one Arrow batch
-    # computes the exact-cosine rerank
-    a = df.select(
-        F.col(key).alias("query_id"),
-        F.explode(
-            multiprobe_signature_col(vec_col, dim, n_planes, n_tables, n_probes, seed)
-        ).alias("__bucket"),
-    )
-    b = df.select(
-        F.col(key).alias("neighbor_id"),
-        F.explode(
-            multitable_signature_col(vec_col, dim, n_planes, n_tables, seed)
-        ).alias("__bucket"),
-    )
-    cand = (
-        a.join(b, "__bucket")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .dropDuplicates(["query_id", "neighbor_id"])  # union over tables
-    )
+        return _broadcast_topk(df, k, key, vec_col, keys, probes, corpus)
     va = df.select(F.col(key).alias("query_id"), F.col(vec_col).alias("__qv"))
     vb = df.select(F.col(key).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    pairs = cand.join(va, "query_id").join(vb, "neighbor_id")
-    pairs = pairs.withColumn("cosine", _pair_cosine_col("__qv", "__cv"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    pairs = (
+        _candidates(df, key, vec_col, keys, probes, dim)
+        .join(va, "query_id")
+        .join(vb, "neighbor_id")
+        .withColumn("cosine", _pair_cosine_col("__qv", "__cv"))
     )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _rank_topk(pairs, k)
 
 
 def _corpus_collect(df: DataFrame, key: str, vec_col: str, nbytes, op: str):
@@ -264,67 +261,36 @@ _INTEGRAL = ("bigint", "int", "smallint", "tinyint")
 
 
 def _matrix(vecs: pa.ChunkedArray) -> np.ndarray:
-    """(n, dim) float64 matrix of a non-empty Arrow column of
-    equal-length vectors (NULL or ragged vectors raise, as ``np.stack``
-    does)."""
+    """(n, dim) float64 matrix of an Arrow column of equal-length
+    vectors, (0, 0) when empty (NULL or ragged vectors raise, as
+    ``np.stack`` does)."""
     lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
-    if (lens != lens[0]).any():
+    dim = lens[0] if len(lens) else 0
+    if (lens != dim).any():
         raise ValueError(f"{vecs.type} column holds NULL or unequal-length vectors")
     flat = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
-    return flat.astype(np.float64).reshape(len(vecs), -1)
+    return flat.astype(np.float64).reshape(len(vecs), dim)
 
 
-def _score_topk(q, qid, cand, ids_b, M_b, k, out_q, out_n, out_c, out_r):
-    """Shared per-query scorer of both broadcast kernels: exact
-    ``_pair_cosine_col`` einsum cosine over the candidate indices,
-    local top-k by (cosine desc, neighbor_id asc). A 0/0 cosine (an
-    all-zero vector) is NaN here, but on the join path the pandas-UDF
-    Arrow conversion turns NaN into NULL and ``desc()`` is NULLS
-    LAST — so the sort key maps NaN to +inf (ranks last, ties broken
-    by neighbor_id like Spark's all-NULL tie group), keeping the two
-    routes row-identical (pinned by the zero-vector case in
-    TestAnnBroadcastEquivalence)."""
-    Cc = M_b[cand]
-    A = np.broadcast_to(q, Cc.shape)
-    num = np.einsum("ij,ij->i", A, Cc)
-    den = np.sqrt(np.einsum("ij,ij->i", A, A)) * np.sqrt(
-        np.einsum("ij,ij->i", Cc, Cc)
-    )
-    cos = num / den
-    nid = ids_b[cand]
-    skey = np.where(np.isnan(cos), np.inf, -cos)
-    order = np.lexsort((nid, skey))[:k]
-    out_q.extend([qid] * len(order))
-    out_n.extend(nid[order].tolist())
-    out_c.extend(cos[order].tolist())
-    out_r.extend(range(1, len(order) + 1))
-
-
-def _ann_topk_broadcast(
-    df: DataFrame, k: int, key: str, vec_col: str, dim: int,
-    n_planes: int, n_tables: int, n_probes: int, seed: int, corpus,
+def _broadcast_topk(
+    df: DataFrame, k: int, key: str, vec_col: str, keys, probes: int, corpus
 ) -> DataFrame:
-    """Broadcast-corpus ANN kernel (see ``ann_topk`` route comment).
+    """The broadcast route of ``_keyed_topk``. The corpus is filed
+    under ``keys(M, 1)`` on the driver; per query, the candidates are
+    the ``np.unique`` of the members of its probed keys minus the rows
+    sharing its id, ranked locally by (cosine desc, neighbor_id asc).
 
-    Corpus-side single-bucket assignment replicates
-    ``multitable_signature_col`` and the query-side probe replicates
-    ``multiprobe_signature_col`` with the same rng/planes/weights ops;
-    candidate union over probed buckets is deduped with np.unique
-    (order-insensitive, same set the dropDuplicates produced), self
-    dropped by ID equality; scoring/top-k via ``_score_topk``."""
-    planes = np.random.default_rng(seed).standard_normal((dim, n_tables * n_planes))
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-    table_off = np.arange(n_tables, dtype=np.int64) << 32
-
+    A 0/0 cosine (an all-zero vector) is NaN here, but on the join
+    route the pandas-UDF Arrow conversion turns NaN into NULL and
+    ``desc()`` is NULLS LAST — so the sort key maps NaN to +inf (ranks
+    last, ties broken by neighbor_id like Spark's all-NULL tie group),
+    pinned by the zero-vector case in TestAnnBroadcastEquivalence."""
     ids, M = corpus
-    bits = ((M @ planes) >= 0.0).reshape(len(M), n_tables, n_planes)
-    corpus_buckets = bits @ weights + table_off  # (n, n_tables)
-    members: dict[int, list[int]] = {}
-    for i, bs in enumerate(corpus_buckets):
-        for b in bs.tolist():
-            members.setdefault(b, []).append(i)
-    members_idx = {b: np.array(v, dtype=np.int64) for b, v in members.items()}
-    bc = df.sparkSession.sparkContext.broadcast((ids, M, members_idx))
+    filed = keys(M, 1)
+    order = np.argsort(filed, axis=None, kind="stable")
+    uniq, starts = np.unique(filed.ravel()[order], return_index=True)
+    members = dict(zip(uniq.tolist(), np.split(order // filed.shape[1], starts[1:])))
+    bc = df.sparkSession.sparkContext.broadcast((ids, M, members))
     key_type = df.schema[key].dataType.simpleString()
     out_schema = (
         f"query_id {key_type}, neighbor_id {key_type}, cosine double, rank int"
@@ -336,30 +302,20 @@ def _ann_topk_broadcast(
         for pdf in batches:
             if not len(pdf):
                 continue
-            Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            proj = (Q @ planes).reshape(len(Q), n_tables, n_planes)
-            base = (proj >= 0.0) @ weights + table_off
-            order_p = np.argsort(np.abs(proj), axis=2)
-            probes = [base]
-            for p in range(min(n_probes - 1, n_planes)):
-                flip = order_p[:, :, p].astype(np.int64)
-                probes.append(base ^ (np.int64(1) << flip))
-            probe_buckets = np.concatenate(probes, axis=1)  # (batch, tables*probes)
+            Q = _stack(pdf[vec_col])
             out_q, out_n, out_c, out_r = [], [], [], []
-            qids = pdf[key].to_numpy()
-            for i in range(len(pdf)):
-                qid = int(qids[i])
+            for qid, q, probed in zip(pdf[key].tolist(), Q, keys(Q, probes).tolist()):
                 cand = np.unique(
-                    np.concatenate(
-                        [members_b.get(int(b), empty) for b in probe_buckets[i]]
-                    )
+                    np.concatenate([empty] + [members_b.get(b, empty) for b in probed])
                 )
                 cand = cand[ids_b[cand] != qid]
-                if len(cand):
-                    _score_topk(
-                        Q[i], qid, cand, ids_b, M_b, k,
-                        out_q, out_n, out_c, out_r,
-                    )
+                nid = ids_b[cand]
+                cos = _cosines(np.broadcast_to(q, (len(cand), len(q))), M_b[cand])
+                top = np.lexsort((nid, np.where(np.isnan(cos), np.inf, -cos)))[:k]
+                out_q.extend([qid] * len(top))
+                out_n.extend(nid[top].tolist())
+                out_c.extend(cos[top].tolist())
+                out_r.extend(range(1, len(top) + 1))
             yield pd.DataFrame(
                 {
                     "query_id": out_q,
@@ -371,13 +327,41 @@ def _ann_topk_broadcast(
 
     # project to the two consumed columns so wide corpora don't ship
     # unused payloads through Arrow; NULL keys drop JVM-side (as on the
-    # join path) so every batch keeps an int64 key column — a NULL in a
+    # join route) so every batch keeps an int64 key column — a NULL in a
     # batch would turn it float64 and corrupt ids ≥ 2^53
     return (
         df.select(key, vec_col)
         .where(F.col(key).isNotNull())
         .mapInPandas(gen, out_schema)
     )
+
+
+def ann_topk(
+    df: DataFrame,
+    k: int = 3,
+    key: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int = 64,
+    n_planes: int = 5,
+    n_tables: int = 12,
+    n_probes: int = 3,
+    seed: int = 42,
+) -> DataFrame:
+    """Approximate self-join top-k: multi-table hyperplane LSH buckets
+    with query-side multi-probe, exact cosine re-rank over the union of
+    bucket candidates. Recall vs ``cosine_topk`` measured in tests. At
+    scale candidates come from the skinny (bucket, id) equi-join;
+    candidate count per query is bounded by bucket sizes × tables ×
+    probes, not n. Routes as ``_keyed_topk``.
+    Output: (query_id, neighbor_id, cosine, rank).
+
+    EAGER: deciding the route collects up to the budget's row count of
+    the corpus to the driver here, at plan construction, even if the
+    returned DataFrame is never evaluated. The query side is read again
+    at action time, so a nondeterministic upstream can give the two
+    reads different rows."""
+    keys = _lsh_keys(dim, n_planes, n_tables, seed)
+    return _keyed_topk(df, k, key, vec_col, keys, n_probes, dim, "ann_topk")
 
 
 def train_ivf_centroids(
@@ -393,10 +377,15 @@ def train_ivf_centroids(
     trained on a BOUNDED deterministic sample (orderBy(key).limit —
     standard IVF practice: at 10^12 rows you train on ~10^6 sampled
     vectors and broadcast the centroids, never the corpus). Returns a
-    unit-normalized (n_lists, dim) centroid matrix."""
-    rows = df.select(key, vec_col).orderBy(key).limit(sample).collect()
-    X = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    unit-normalized (lists, dim) centroid matrix with ``n_lists`` lists,
+    or as many as the sample has vectors when it has fewer: (0, 0) for
+    an empty input."""
+    table = df.select(key, vec_col).orderBy(key).limit(sample).toArrow()
+    X = _matrix(table.column(vec_col))
+    if not len(X):
+        return X
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    n_lists = min(n_lists, len(X))
     rng = np.random.default_rng(seed)
     C = X[rng.choice(len(X), size=n_lists, replace=False)]
     for _ in range(iters):
@@ -413,22 +402,6 @@ def train_ivf_centroids(
     return C
 
 
-def ivf_lists_col(vec_col: str, centroids: np.ndarray, nprobe: int = 1):
-    """array<int> of the ``nprobe`` nearest centroid list ids (cosine).
-    ``nprobe=1`` is the corpus-side assignment; queries probe more."""
-    C = np.ascontiguousarray(centroids)
-
-    @F.pandas_udf("array<int>")
-    def _lists(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        sim = m @ C.T
-        top = np.argsort(-sim, axis=1)[:, :nprobe].astype(np.int32)
-        return pd.Series(list(top))
-
-    return _lists(F.col(vec_col))
-
-
 def ivf_topk(
     df: DataFrame,
     k: int = 3,
@@ -443,125 +416,18 @@ def ivf_topk(
     path beside brute-force and LSH): corpus vectors live in ONE
     centroid list each; queries probe their ``nprobe`` nearest lists;
     exact cosine re-rank inside the probed lists. At scale the list
-    equi-join is the only shuffle and list sizes are ~n/n_lists.
-    Output: (query_id, neighbor_id, cosine, rank).
-
-    Route: when ``route.bounded_collect`` brings the corpus to the
-    driver (within ``route.MAX_COLLECT_BYTES``), the whole probe runs
-    as ONE mapInPandas over the query side against the broadcast
-    corpus matrix: probe lists, candidate
-    gather, exact cosine and the per-query top-k all happen locally —
-    no candidate-pair materialization (~0.37·n² rows at nprobe=6/16),
-    no Arrow pair crossing, no window shuffle (guide §2.1: remove the
-    shuffle, don't tune it). Per-pair cosine uses the identical
-    ``einsum("ij,ij->i")`` float64 formulation as ``_pair_cosine_col``
-    and the probe/assignment replicate ``ivf_lists_col`` exactly, so
-    the output is row-for-row identical to the join path (verified both
-    directions at sf0.01/sf0.1). Larger corpora keep the skinny list
-    equi-join.
+    equi-join is the only shuffle and list sizes are ~n/n_lists. A
+    corpus with fewer vectors than ``n_lists`` gets one list a vector.
+    Routes as ``_keyed_topk``. Output: (query_id, neighbor_id, cosine,
+    rank).
 
     EAGER: like ``ann_topk``, the route decision collects up to the
     budget's row count of the corpus at plan construction (besides the
     centroid training sample), and a nondeterministic upstream can give
     that collect and the action-time query scan different rows."""
     C = train_ivf_centroids(df, n_lists, key, vec_col, sample=sample, seed=seed)
-    corpus = _corpus_collect(df, key, vec_col, len(C[0]) * 8 + 16, "ivf_topk")
-    if corpus is not None:
-        return _ivf_topk_broadcast(df, C, k, key, vec_col, nprobe, corpus)
-    # the list equi-join ships (id, list) only; vectors re-attach per
-    # candidate pair by id and the exact-cosine rerank runs in one
-    # Arrow batch (guide §8 / §4.2 — formerly the embedding payloads
-    # rode through the list join and the cosine was an interpreted
-    # per-element fold)
-    corpus = df.select(F.col(key).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    queries = df.select(F.col(key).alias("query_id"), F.col(vec_col).alias("__qv"))
-    corpus_l = df.select(
-        F.col(key).alias("neighbor_id"),
-        F.element_at(ivf_lists_col(vec_col, C, 1), 1).alias("__list"),
-    )
-    queries_l = df.select(
-        F.col(key).alias("query_id"),
-        F.explode(ivf_lists_col(vec_col, C, nprobe)).alias("__list"),
-    )
-    pairs = (
-        queries_l.join(corpus_l, "__list")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id")
-        .join(queries, "query_id")
-        .join(corpus, "neighbor_id")
-        .withColumn("cosine", _pair_cosine_col("__qv", "__cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _ivf_topk_broadcast(
-    df: DataFrame, C: np.ndarray, k: int, key: str, vec_col: str, nprobe: int,
-    corpus,
-) -> DataFrame:
-    """Broadcast-corpus IVF kernel (see ``ivf_topk`` route comment).
-
-    Takes the already-collected corpus, assigns each vector to
-    its list with the SAME normalized-argmax numpy ops as
-    ``ivf_lists_col``, then streams the query side through one
-    mapInPandas: per query, gather the members of its ``nprobe``
-    probed lists, drop self by ID equality (matching the join path's
-    ``query_id != neighbor_id`` filter); scoring/top-k via
-    ``_score_topk`` — exact because a query's full candidate set is
-    present locally."""
-    ids, M = corpus
-    Cm = np.ascontiguousarray(C)
-    Mn = M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-    assign = np.argsort(-(Mn @ Cm.T), axis=1)[:, 0]
-    members = {j: np.nonzero(assign == j)[0] for j in range(len(Cm))}
-    bc = df.sparkSession.sparkContext.broadcast((ids, M, members, Cm))
-    key_type = df.schema[key].dataType.simpleString()
-    out_schema = (
-        f"query_id {key_type}, neighbor_id {key_type}, cosine double, rank int"
-    )
-
-    def gen(batches):
-        ids_b, M_b, members_b, C_b = bc.value
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            Q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            Qn = np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)
-            probe = np.argsort(-((Q / Qn) @ C_b.T), axis=1)[:, :nprobe]
-            out_q, out_n, out_c, out_r = [], [], [], []
-            qids = pdf[key].to_numpy()
-            for i in range(len(pdf)):
-                qid = int(qids[i])
-                cand = np.concatenate([members_b[int(j)] for j in probe[i]])
-                cand = cand[ids_b[cand] != qid]
-                if len(cand):
-                    _score_topk(
-                        Q[i], qid, cand, ids_b, M_b, k,
-                        out_q, out_n, out_c, out_r,
-                    )
-            yield pd.DataFrame(
-                {
-                    "query_id": out_q,
-                    "neighbor_id": out_n,
-                    "cosine": out_c,
-                    "rank": pd.array(out_r, dtype="int32"),
-                }
-            )
-
-    # project to the two consumed columns so wide corpora don't ship
-    # unused payloads through Arrow; NULL keys drop JVM-side (as on the
-    # join path) so every batch keeps an int64 key column — a NULL in a
-    # batch would turn it float64 and corrupt ids ≥ 2^53
-    return (
-        df.select(key, vec_col)
-        .where(F.col(key).isNotNull())
-        .mapInPandas(gen, out_schema)
+    return _keyed_topk(
+        df, k, key, vec_col, _ivf_keys(C), nprobe, C.shape[1], "ivf_topk"
     )
 
 
@@ -590,11 +456,12 @@ def cosine_dup_pairs(
     ``route.bounded_collect``; a corpus over ``route.MAX_COLLECT_BYTES``
     (or with non-integral keys) runs as an expression crossJoin instead.
 
-    mode='lsh' — the scale path: multi-table random-hyperplane buckets
-    (seeded, deterministic); vectors sharing any (table, bucket) key
-    meet in ONE narrow equi-join carrying only (id, bucket) — the
-    vectors rejoin by id afterwards, so the bucket shuffle never moves
-    embedding payloads. The exact cosine filter then keeps only true
+    mode='lsh' — the scale path: the multi-table random-hyperplane keys
+    of ``ann_topk`` (seeded, deterministic, no probing); vectors sharing
+    any (table, bucket) key meet in the ``_candidates`` equi-join, which
+    carries only (id, key) — the vectors rejoin by id afterwards, so
+    the bucket shuffle never moves embedding payloads. The exact cosine
+    filter then keeps only true
     near-dups: NO false positives ever; recall is the LSH collision
     probability 1 - (1 - (1-θ/π)^planes)^tables, which for near-dup
     angles (θ → 0) is ~1 (measured in tests). Candidate volume per
@@ -604,15 +471,8 @@ def cosine_dup_pairs(
     cluster assignment needs connectivity, not every pair.
     Output: (a, b, cosine).
     """
-    base = df.select(
-        F.col(key).alias("__id"), F.col(vec_col).alias("__v")
-    ).withColumn("__n", _norm_expr("__v"))
-    va = base.select(
-        F.col("__id").alias("a"), F.col("__v").alias("__va"), F.col("__n").alias("__na")
-    )
-    vb = base.select(
-        F.col("__id").alias("b"), F.col("__v").alias("__vb"), F.col("__n").alias("__nb")
-    )
+    va = df.select(F.col(key).alias("a"), F.col(vec_col).alias("__va"))
+    vb = df.select(F.col(key).alias("b"), F.col(vec_col).alias("__vb"))
     corpus = None
     if mode == "exact":
         corpus = _corpus_collect(
@@ -642,9 +502,7 @@ def cosine_dup_pairs(
             for pdf in batches:
                 if not len(pdf) or not len(ids_c):
                     continue
-                A_all = np.stack(
-                    [np.asarray(v, np.float64) for v in pdf[vec_col]]
-                )
+                A_all = _stack(pdf[vec_col])
                 aid_all = pdf[key].to_numpy()
                 for s0 in range(0, len(A_all), chunk):
                     A = A_all[s0:s0 + chunk]
@@ -672,18 +530,11 @@ def cosine_dup_pairs(
                     "a", "b", F.lit(0.0).alias("cosine")
                 )
             dim = len(first[0])
-        ids = df.select(
-            F.col(key).alias("__id"),
-            F.explode(
-                multitable_signature_col(vec_col, dim, n_planes, n_tables, seed)
-            ).alias("__bucket"),
-        )
+        keys = _lsh_keys(dim, n_planes, n_tables, seed)
         cand = (
-            ids.select(F.col("__id").alias("a"), "__bucket")
-            .join(ids.select(F.col("__id").alias("b"), "__bucket"), "__bucket")
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b")
-            .distinct()  # union over tables
+            _candidates(df, key, vec_col, keys, 1, dim)
+            .filter(F.col("query_id") < F.col("neighbor_id"))
+            .select(F.col("query_id").alias("a"), F.col("neighbor_id").alias("b"))
             .join(va, "a")
             .join(vb, "b")
         )

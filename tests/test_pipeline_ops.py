@@ -504,6 +504,84 @@ class TestAnnBroadcastEquivalence:
         assert fast_ivf == join_ivf
         assert fast_ann == join_ann
 
+    @staticmethod
+    def _both_routes(monkeypatch, caplog, call):
+        """Sorted rows of ``call()`` on the broadcast route, then on the
+        join route (budget 0), each asserted to take that route."""
+        import logging
+
+        runs = []
+        for budget in (route.MAX_COLLECT_BYTES, 0):
+            monkeypatch.setattr(route, "MAX_COLLECT_BYTES", budget)
+            caplog.clear()
+            with caplog.at_level(logging.DEBUG, logger="sophox_spark.route"):
+                df = call()
+            recs = [r.route for r in caplog.records if r.name == "sophox_spark.route"]
+            assert recs == ["collect" if budget else "distributed"]
+            runs.append(sorted(map(tuple, df.collect())))
+        return runs
+
+    @staticmethod
+    def _emb(spark):
+        """500 seeded random 64-dim vectors with ids 0..499."""
+        rng = np.random.default_rng(17)
+        vecs = [v.tolist() for v in rng.standard_normal((500, 64))]
+        return spark.createDataFrame(
+            pd.DataFrame({"vec_id": range(500), "embedding": vecs}),
+            "vec_id long, embedding array<double>",
+        )
+
+    def test_nprobe_over_n_lists(self, spark, monkeypatch, caplog):
+        emb = self._emb(spark)
+        fast, join = self._both_routes(
+            monkeypatch, caplog,
+            lambda: similarity.ivf_topk(emb, k=3, n_lists=4, nprobe=9),
+        )
+        assert len(fast) == 3 * 500
+        assert fast == join
+
+    def test_probes_over_n_planes(self, spark, monkeypatch, caplog):
+        emb = self._emb(spark)
+        fast, join = self._both_routes(
+            monkeypatch, caplog,
+            lambda: similarity.ann_topk(emb, k=3, n_planes=2, n_tables=3, n_probes=5),
+        )
+        assert len(fast) == 3 * 500
+        assert fast == join
+
+    def test_int_keys(self, spark, monkeypatch, caplog):
+        emb = self._emb(spark).select(
+            F.col("vec_id").cast("int").alias("vec_id"), "embedding"
+        )
+        for call in (
+            lambda: similarity.ivf_topk(emb, k=3),
+            lambda: similarity.ann_topk(emb, k=3),
+        ):
+            assert call().schema["query_id"].dataType.simpleString() == "int"
+            fast, join = self._both_routes(monkeypatch, caplog, call)
+            assert fast and fast == join
+
+    def test_duplicate_vectors_tie_by_neighbor_id(self, spark, monkeypatch, caplog):
+        """Each vector appears under ids i and i + 1000: a query's copy
+        ranks first, then each other vector's two ids tie on cosine and
+        the smaller id ranks first."""
+        base = self._emb(spark).filter("vec_id < 40")
+        emb = base.unionByName(base.selectExpr("vec_id + 1000 AS vec_id", "embedding"))
+        for call in (
+            lambda: similarity.ivf_topk(emb, k=3, n_lists=4, nprobe=4),
+            lambda: similarity.ann_topk(emb, k=3),
+        ):
+            fast, join = self._both_routes(monkeypatch, caplog, call)
+            assert fast == join
+            by_query = {}
+            for q, n, c, r in fast:
+                by_query.setdefault(q, {})[r] = (n, c)
+            assert len(by_query) == 80
+            for q, ranked in by_query.items():
+                assert ranked[1][0] == (q + 1000 if q < 1000 else q - 1000)
+                (n2, c2), (n3, c3) = ranked[2], ranked[3]
+                assert c2 == c3 and n3 == n2 + 1000
+
 
 class TestIvf:
     def test_ivf_recall_clustered_vs_uniform(self, spark):
@@ -533,6 +611,36 @@ class TestIvf:
         au = similarity.ivf_topk(uni, k=3, n_lists=16, nprobe=6).toPandas()
         su = {(r.query_id, r.neighbor_id) for r in au.itertuples()}
         assert len(eu & su) / len(eu) > 0.55
+
+    def test_fewer_vectors_than_lists_is_exact(self, spark, monkeypatch):
+        """Five vectors under the default 16 lists: one list a vector,
+        so the default nprobe=6 probes every list and both routes return
+        ``cosine_topk``'s neighbours and ranks."""
+        rng = np.random.default_rng(5)
+        emb = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "vec_id": range(5),
+                    "embedding": [rng.standard_normal(8).tolist() for _ in range(5)],
+                }
+            ),
+            "vec_id long, embedding array<double>",
+        )
+
+        def ranks(df):
+            return sorted((r.query_id, r.neighbor_id, r.rank) for r in df.collect())
+
+        want = ranks(similarity.cosine_topk(emb, emb, k=3))
+        assert len(want) == 15
+        assert ranks(similarity.ivf_topk(emb, k=3)) == want
+        monkeypatch.setattr(route, "MAX_COLLECT_BYTES", 0)
+        assert ranks(similarity.ivf_topk(emb, k=3)) == want
+
+    def test_empty_corpus(self, spark):
+        emb = spark.createDataFrame([], "vec_id long, embedding array<double>")
+        out = similarity.ivf_topk(emb, k=3)
+        assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
+        assert out.count() == 0
 
 
 class TestDuplicateClusters:
