@@ -1706,7 +1706,7 @@ def _instantiate_template(
 class SparqlUpdateEngine(SparqlEngine):
     """SPARQL UPDATE as a pure function: ``update()`` returns the NEW
     triple set (RDF set semantics — duplicates collapse). The caller
-    commits it through SnapshotTable / PartitionedSnapshotTable, turning
+    commits it through PartitionedSnapshotTable, turning
     the endpoint's in-place mutation into a versioned table commit —
     the Spark-native S9 sink."""
 

@@ -12,13 +12,15 @@ persists the high-watermark seqid transactionally with the data
   ST1/ST3 offsets       → manifest.last_seqid(); replay-safe skip
   ST2 watermark         → manifest row (seqid, max event ts, row count)
   snapshot atomicity    → versioned table dirs {path}/v=N; readers pick
-                          the latest manifest-recorded version (no
-                          Iceberg jars in this container — this is the
-                          snapshot-commit emulation, documented).
-                          PartitionedSnapshotTable adds DELTA commits:
-                          hash-bucketed layout where a batch rewrites
-                          only buckets containing its keys — O(touched)
-                          per micro-batch, not O(table)
+                          each bucket's latest manifest-recorded version
+                          (no Iceberg jars in this container — this is
+                          the snapshot-commit emulation, documented).
+                          One table, PartitionedSnapshotTable: a
+                          hash-bucketed layout keyed by the table's own
+                          keys, where a change batch rewrites only the
+                          buckets holding its keys (O(touched) per
+                          micro-batch, not O(table)) and a full replace
+                          rewrites every bucket
 
 The fixpoint derived-view job (ST7, relation centroids with rel→rel
 chains and cycles, updateRelLoc.py:62-88,159-161) lives here too.
@@ -28,7 +30,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
 from ..manifest import Manifest
 from ..operators.osm_geometry import relation_member_locations
@@ -46,7 +48,7 @@ def dedup_latest(batch_df: DataFrame, keys: list[str], order_by: list[str]) -> D
 
 
 def merge_upsert(
-    base_df: DataFrame,
+    base_df: DataFrame | None,
     batch_df: DataFrame,
     keys: list[str],
     delete_col: str | None = None,
@@ -54,11 +56,14 @@ def merge_upsert(
     """MERGE INTO emulation (J9): delete-then-insert per key.
     Rows of ``batch_df`` replace base rows with the same key; rows
     flagged by ``delete_col`` are removed entirely. Idempotent: applying
-    the same batch twice yields the identical table."""
-    kept = base_df.join(batch_df.select(*keys).distinct(), keys, "left_anti")
+    the same batch twice yields the identical table. A ``None`` base is
+    an empty table: the result is the batch's inserts."""
     inserts = batch_df
     if delete_col is not None:
         inserts = inserts.filter(~F.col(delete_col)).drop(delete_col)
+    if base_df is None:
+        return inserts
+    kept = base_df.join(batch_df.select(*keys).distinct(), keys, "left_anti")
     return kept.unionByName(inserts.select(*base_df.columns))
 
 
@@ -71,6 +76,9 @@ class PartitionedSnapshotTable:
     not O(table). This is the no-Iceberg emulation of partition-level
     MERGE, matching the reference's touch-only-changed-subjects update
     loop (RdfUpdateHandler.py:42-57) at table-file granularity.
+    ``keys`` are the table's merge keys: buckets hash them, and
+    ``commit_batch`` (and ``apply_change_batches``) merge by them.
+    ``commit`` is a full replace: a version that rewrites every bucket.
 
     Layout: ``{path}/v={N}/__bucket={b}/…`` — version N's directory
     holds files ONLY for the buckets it touched. The manifest unit
@@ -196,6 +204,12 @@ class PartitionedSnapshotTable:
     def read(self) -> DataFrame | None:
         return self._read_buckets(None)
 
+    def commit(self, df: DataFrame, seqid: int, watermark=None) -> int:
+        """Full replace: ``df`` becomes the whole table, as a version
+        that rewrites every bucket. Returns the new version number."""
+        df = df.withColumn("__bucket", self._bucket_col())
+        return self._write(df, range(self.n_buckets), seqid, watermark)
+
     def commit_batch(
         self,
         batch_df: DataFrame,
@@ -205,29 +219,26 @@ class PartitionedSnapshotTable:
     ) -> int:
         """Delta commit: MERGE ``batch_df`` into only the buckets its
         keys hash to. Returns the new version number."""
-        v = (self.current_version() or 0) + 1
         batch = batch_df.withColumn("__bucket", self._bucket_col())
         touched = sorted(
             r[0] for r in batch.select("__bucket").distinct().collect()
         )
-        if not touched:
-            self.manifest.record(f"table:{self.name}", f"v{v}@", seqid, watermark, 0)
-            self._cv_cache = v
-            return v
         base = self._read_buckets(set(touched))
-        if base is None:
-            merged = batch
-            if delete_col is not None:
-                merged = merged.filter(~F.col(delete_col)).drop(delete_col)
-        else:
+        if base is not None:
             base = base.withColumn("__bucket", self._bucket_col())
-            merged = merge_upsert(base, batch, self.keys, delete_col=delete_col)
-        out_dir = f"{self.path}/v={v}"
-        merged.write.partitionBy("__bucket").mode("errorifexists").parquet(out_dir)
-        try:
-            n = self.spark.read.parquet(out_dir).count()  # O(touched buckets)
-        except Exception:
-            n = 0  # merged content entirely empty (all rows deleted)
+        merged = merge_upsert(base, batch, self.keys, delete_col=delete_col)
+        return self._write(merged, touched, seqid, watermark)
+
+    def _write(self, merged: DataFrame, touched, seqid: int, watermark) -> int:
+        """Write the next version (the ``touched`` buckets of ``merged``),
+        then record it. The manifest row counts the rows as the write
+        emits them, so nothing is read back."""
+        v = (self.current_version() or 0) + 1
+        obs = Observation()
+        merged.observe(obs, F.count(F.lit(1)).alias("n")).write.partitionBy(
+            "__bucket"
+        ).mode("errorifexists").parquet(f"{self.path}/v={v}")
+        n = obs.get["n"]
         unit = f"v{v}@{','.join(map(str, touched))}"
         self.manifest.record(f"table:{self.name}", unit, seqid, watermark, n)
         if self._bv_cache is not None:
@@ -245,49 +256,20 @@ class PartitionedSnapshotTable:
         return v
 
 
-class SnapshotTable:
-    """Versioned parquet table with manifest-committed snapshots."""
-
-    def __init__(self, spark: SparkSession, path: str, manifest: Manifest, name: str):
-        self.spark = spark
-        self.path = path
-        self.manifest = manifest
-        self.name = name
-
-    def current_version(self) -> int | None:
-        units = self.manifest.completed_units(f"table:{self.name}")
-        versions = [int(u[1:]) for u in units if u.startswith("v")]
-        return max(versions) if versions else None
-
-    def read(self) -> DataFrame | None:
-        v = self.current_version()
-        if v is None:
-            return None
-        return self.spark.read.parquet(f"{self.path}/v={v}")
-
-    def commit(self, df: DataFrame, seqid: int, watermark=None) -> int:
-        v = (self.current_version() or 0) + 1
-        df.write.mode("overwrite").parquet(f"{self.path}/v={v}")
-        n = self.spark.read.parquet(f"{self.path}/v={v}").count()
-        self.manifest.record(f"table:{self.name}", f"v{v}", seqid, watermark, n)
-        return v
-
-
 def apply_change_batches(
     spark: SparkSession,
-    table: SnapshotTable,
+    table: PartitionedSnapshotTable,
     changes_df: DataFrame,
-    keys: list[str] = ("id",),
     seq_col: str = "seqid",
     ts_col: str = "ts",
     version_cols: list[str] | None = None,
 ) -> dict:
-    """Consume a change stream batch-by-batch with ST1-ST5 semantics.
+    """Consume a change stream batch-by-batch with ST1-ST5 semantics,
+    keyed by ``table.keys``.
 
     Batches with ``seqid <= last applied`` are skipped (at-least-once
     replay, no-op by idempotence). Returns per-batch apply/skip stats —
     the A5 counter analog."""
-    keys = list(keys)
     version_cols = version_cols or ["version", ts_col]
     last = table.manifest.last_seqid(f"table:{table.name}") or -1
     seqids = [
@@ -300,26 +282,10 @@ def apply_change_batches(
             stats["skipped"].append(seq)
             continue
         batch = changes_df.filter(F.col(seq_col) == seq)
-        batch = dedup_latest(batch, keys, version_cols)
+        batch = dedup_latest(batch, table.keys, version_cols)
         upserts = batch.withColumn("__del", F.col("op") == "delete")
         wm = batch.agg(F.max(ts_col)).collect()[0][0]
-        if isinstance(table, PartitionedSnapshotTable):
-            # delta path: only buckets holding this batch's keys rewrite
-            table.commit_batch(
-                upserts.drop(seq_col, "op"), seq, wm, delete_col="__del"
-            )
-        else:
-            base = table.read()
-            if base is None:
-                merged = upserts.filter(~F.col("__del")).drop("__del", seq_col, "op")
-            else:
-                merged = merge_upsert(
-                    base,
-                    upserts.drop(seq_col, "op"),
-                    keys,
-                    delete_col="__del",
-                )
-            table.commit(merged, seq, wm)
+        table.commit_batch(upserts.drop(seq_col, "op"), seq, wm, delete_col="__del")
         last = seq
         stats["applied"].append(seq)
     return stats

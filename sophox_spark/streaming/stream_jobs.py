@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .incremental import SnapshotTable, apply_change_batches
+from .incremental import PartitionedSnapshotTable, apply_change_batches
 
 CHANGES_SCHEMA = (
     "seqid long, op string, id long, version int, user string, ts timestamp, "
@@ -26,14 +26,14 @@ CHANGES_SCHEMA = (
 def stream_changes_ingest(
     spark: SparkSession,
     changes_dir: str,
-    table: SnapshotTable,
+    table: PartitionedSnapshotTable,
     checkpoint_dir: str,
 ):
     """readStream(parquet) → foreachBatch → idempotent seqid-guarded
-    upsert. Replays after a restart are no-ops (ST3/ST4): the manifest
-    seqid guard inside apply_change_batches skips applied batches, so
-    at-least-once delivery from the stream becomes effectively-once in
-    the table."""
+    upsert by ``table.keys``. Replays after a restart are no-ops
+    (ST3/ST4): the manifest seqid guard inside apply_change_batches skips
+    applied batches, so at-least-once delivery from the stream becomes
+    effectively-once in the table."""
 
     def apply_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
@@ -54,7 +54,7 @@ def stream_changes_ingest(
 def stream_osc_ingest(
     spark: SparkSession,
     osc_dir: str,
-    table: SnapshotTable,
+    table: PartitionedSnapshotTable,
     checkpoint_dir: str,
 ):
     """The reference's 60 s replication poll (RdfUpdateHandler.py:104-146)
@@ -66,10 +66,21 @@ def stream_osc_ingest(
     effectively-once table commits.
 
     The diff sequence number comes from the file name (osmosis state
-    numbering); per-id conflicts within a batch resolve by (version, ts)
-    like OSM element versions do.
+    numbering); per-element conflicts within a batch resolve by
+    (version, ts) like OSM element versions do.
+
+    OSM node/way/relation id spaces OVERLAP — a way with the same
+    numeric id as a node is a different element — so ``table`` must be
+    keyed by ``("kind", "id")`` (osm2rdf keys RDF subjects by prefixed
+    kind for the same reason); any other keys raise ``ValueError``
+    before the stream starts.
     """
     from ..sources import osc
+
+    if table.keys != ["kind", "id"]:
+        raise ValueError(
+            f"stream_osc_ingest needs a table keyed by ('kind', 'id'), got {tuple(table.keys)}"
+        )
 
     files = (
         spark.readStream.format("binaryFile")
@@ -115,16 +126,7 @@ def stream_osc_ingest(
                 f"a numeric sequence in the name: {sorted(bad)[:5]}",
                 stacklevel=2,
             )
-        # OSM node/way/relation id spaces OVERLAP — a way with the same
-        # numeric id as a node is a different element, so the upsert key
-        # must be (kind, id), not id alone (osm2rdf keys RDF subjects by
-        # prefixed kind for the same reason).
-        apply_change_batches(
-            spark,
-            table,
-            changes.filter(F.col("seqid").isNotNull()),
-            keys=("kind", "id"),
-        )
+        apply_change_batches(spark, table, changes.filter(F.col("seqid").isNotNull()))
 
     return (
         files.writeStream.foreachBatch(apply_batch)

@@ -39,7 +39,7 @@ def oracle_state(changes_pdf):
 class TestApplyChanges:
     def test_matches_sequential_oracle(self, spark, changes, tmp_path):
         man = Manifest(spark, str(tmp_path / "manifest"))
-        table = incremental.SnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
+        table = incremental.PartitionedSnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
         stats = incremental.apply_change_batches(spark, table, changes)
         assert stats["applied"] == [1000, 1001, 1002, 1003, 1004]
         got = {
@@ -52,7 +52,7 @@ class TestApplyChanges:
         # synth adds a same-seqid duplicate with higher version and
         # name 'dup-win-{b}' — that row must win within its batch
         man = Manifest(spark, str(tmp_path / "manifest"))
-        table = incremental.SnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
+        table = incremental.PartitionedSnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
         incremental.apply_change_batches(spark, table, changes.filter("seqid = 1000"))
         pdf = changes.filter("seqid = 1000").toPandas()
         dup_id = pdf[pdf["tags"].map(lambda t: t["name"].startswith("dup-win"))]["id"].iloc[0]
@@ -62,7 +62,7 @@ class TestApplyChanges:
 
     def test_replay_is_noop(self, spark, changes, tmp_path):
         man = Manifest(spark, str(tmp_path / "manifest"))
-        table = incremental.SnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
+        table = incremental.PartitionedSnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
         incremental.apply_change_batches(spark, table, changes)
         before = sorted(map(tuple, table.read().drop("tags").collect()))
         v_before = table.current_version()
@@ -77,11 +77,11 @@ class TestApplyChanges:
 
     def test_resume_mid_stream(self, spark, changes, tmp_path):
         man = Manifest(spark, str(tmp_path / "manifest"))
-        table = incremental.SnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
+        table = incremental.PartitionedSnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
         incremental.apply_change_batches(spark, table, changes.filter("seqid <= 1002"))
         # "restart": new objects, same manifest path → resumes after 1002
         man2 = Manifest(spark, str(tmp_path / "manifest"))
-        table2 = incremental.SnapshotTable(spark, str(tmp_path / "tbl"), man2, "nodes")
+        table2 = incremental.PartitionedSnapshotTable(spark, str(tmp_path / "tbl"), man2, "nodes")
         assert man2.last_seqid("table:nodes") == 1002
         stats = incremental.apply_change_batches(spark, table2, changes)
         assert stats["applied"] == [1003, 1004]
@@ -90,7 +90,7 @@ class TestApplyChanges:
 
     def test_manifest_metrics(self, spark, changes, tmp_path):
         man = Manifest(spark, str(tmp_path / "manifest"))
-        table = incremental.SnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
+        table = incremental.PartitionedSnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
         incremental.apply_change_batches(spark, table, changes)
         m = man.metrics("table:nodes").toPandas()
         assert len(m) == 5  # one lineage row per committed version
@@ -311,3 +311,116 @@ class TestPartitionedSnapshotTable:
         assert {
             r.id: (r.version, r.tags["name"]) for r in table.read().collect()
         } == state
+
+
+class TestOneSnapshotTable:
+    """The table owns its merge keys, and a commit counts the rows it
+    writes instead of reading its own version back."""
+
+    @staticmethod
+    def _rows_in(version_dir):
+        import glob
+        import os
+
+        import pyarrow.parquet as pq
+
+        files = glob.glob(os.path.join(version_dir, "**", "*.parquet"), recursive=True)
+        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+    def test_kind_id_keys_keep_both_kinds(self, spark, tmp_path):
+        from sophox_spark.streaming import stream_jobs
+
+        schema = "seqid long, op string, kind string, id long, version int, ts timestamp, name string"
+        t0 = pd.Timestamp("2024-01-01")
+        changes = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "seqid": [1, 1, 2],
+                    "op": ["upsert"] * 3,
+                    "kind": ["node", "way", "node"],
+                    "id": [5, 5, 5],
+                    "version": [1, 1, 2],
+                    "ts": [t0, t0, t0 + pd.Timedelta(seconds=1)],
+                    "name": ["node five", "way five", "node five v2"],
+                }
+            ),
+            schema,
+        )
+        man = Manifest(spark, str(tmp_path / "manifest"))
+        table = incremental.PartitionedSnapshotTable(
+            spark, str(tmp_path / "tbl"), man, "osm", keys=("kind", "id"), n_buckets=8
+        )
+        stats = incremental.apply_change_batches(spark, table, changes)
+        assert stats["applied"] == [1, 2]
+        got = {(r.kind, r.id): (r.version, r.name) for r in table.read().collect()}
+        assert got == {("node", 5): (2, "node five v2"), ("way", 5): (1, "way five")}
+
+        # an id-keyed table would merge a way into the node with its id
+        id_keyed = incremental.PartitionedSnapshotTable(
+            spark, str(tmp_path / "tbl_id"), man, "osm_id"
+        )
+        (tmp_path / "diffs").mkdir()
+        active = list(spark.streams.active)
+        with pytest.raises(ValueError, match="kind"):
+            stream_jobs.stream_osc_ingest(
+                spark, str(tmp_path / "diffs"), id_keyed, str(tmp_path / "ckpt")
+            )
+        assert list(spark.streams.active) == active
+        assert not (tmp_path / "ckpt").exists()
+
+    def test_commit_counts_rows_as_written(self, spark, tmp_path, monkeypatch):
+        from pyspark.sql.readwriter import DataFrameReader
+
+        root = str(tmp_path / "tbl")
+        man = Manifest(spark, str(tmp_path / "manifest"))
+        table = incremental.PartitionedSnapshotTable(spark, root, man, "t", n_buckets=4)
+        reads = []
+        real_parquet = DataFrameReader.parquet
+
+        def spy(self, *paths, **kw):
+            reads.extend(paths)
+            return real_parquet(self, *paths, **kw)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", spy)
+        schema = "id long, val long, __del boolean"
+
+        def batch(rows):
+            return spark.createDataFrame(pd.DataFrame(rows, columns=["id", "val", "__del"]), schema)
+
+        def committed(v, commit):
+            reads.clear()
+            assert commit() == v
+            own = f"{root}/v={v}"
+            assert not [p for p in reads if p == own or p.startswith(own + "/")], reads
+            row = man.read().filter(F.col("unit").startswith(f"v{v}@")).collect()
+            assert len(row) == 1
+            assert row[0].row_count == self._rows_in(own)
+            return row[0]
+
+        state = {i: i for i in range(20)}
+        committed(1, lambda: table.commit_batch(
+            batch([(i, i, False) for i in state]), seqid=1, delete_col="__del"))
+        updates = [(0, 100, False), (1, 101, False), (50, 150, False), (2, None, True)]
+        committed(2, lambda: table.commit_batch(batch(updates), seqid=2, delete_col="__del"))
+        for i, val, dead in updates:
+            state.pop(i) if dead else state.__setitem__(i, val)
+
+        # delete every key of one bucket: the version records 0 rows and
+        # the bucket's older rows stay gone
+        b = sorted(table.bucket_versions())[0]
+        gone = [r.id for r in spark.read.parquet(f"{root}/v={table.bucket_versions()[b]}/__bucket={b}").collect()]
+        assert gone
+        row = committed(3, lambda: table.commit_batch(
+            batch([(i, None, True) for i in gone]), seqid=3, delete_col="__del"))
+        assert row.unit == f"v3@{b}" and row.row_count == 0
+        for i in gone:
+            state.pop(i)
+        fresh = incremental.PartitionedSnapshotTable(spark, root, man, "t", n_buckets=4)
+        for t in (table, fresh):
+            assert {r.id: r.val for r in t.read().collect()} == state
+
+        # a full replace rewrites every bucket and counts the whole table
+        full = spark.createDataFrame(pd.DataFrame({"id": [7, 8], "val": [1, 2]}), "id long, val long")
+        row = committed(4, lambda: table.commit(full, seqid=4))
+        assert row.unit == "v4@0,1,2,3" and row.row_count == 2
+        assert {r.id: r.val for r in table.read().collect()} == {7: 1, 8: 2}

@@ -169,7 +169,9 @@ def test_stream_osc_ingest_end_to_end(spark, tmp_path):
     from sophox_spark.streaming import incremental, stream_jobs
 
     man = Manifest(spark, str(tmp_path / "manifest"))
-    table = incremental.SnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
+    table = incremental.PartitionedSnapshotTable(
+        spark, str(tmp_path / "tbl"), man, "nodes", keys=("kind", "id")
+    )
     base = spark.createDataFrame(
         pd.DataFrame(
             {

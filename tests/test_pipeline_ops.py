@@ -370,7 +370,7 @@ class TestTaginfo:
         import json
 
         from sophox_spark.sources import taginfo
-        from sophox_spark.streaming.incremental import SnapshotTable
+        from sophox_spark.streaming.incremental import PartitionedSnapshotTable
 
         rows = [
             {"key": "highway", "count_all": 900, "count_nodes": 100,
@@ -397,7 +397,9 @@ class TestTaginfo:
         assert {r.key for r in resolved.collect()} == {"highway", "name"}
 
         man = Manifest(spark, str(tmp_path / "man"))
-        table = SnapshotTable(spark, str(tmp_path / "usage"), man, "usage")
+        table = PartitionedSnapshotTable(
+            spark, str(tmp_path / "usage"), man, "usage", keys=("key",)
+        )
         v1 = taginfo.usage_stats_overwrite(stats, key_items, table)
         # second refresh fully replaces the first (SO3 delete-then-insert)
         v2 = taginfo.usage_stats_overwrite(stats.filter("key = 'name'"), key_items, table)

@@ -21,7 +21,7 @@ class TestStreamingIngest:
             changes.filter(f"seqid = {seq}").coalesce(1).write.mode("append").parquet(cdir)
 
         man = Manifest(spark, str(tmp_path / "manifest"))
-        table = incremental.SnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
+        table = incremental.PartitionedSnapshotTable(spark, str(tmp_path / "tbl"), man, "nodes")
         q = stream_jobs.stream_changes_ingest(
             spark, cdir, table, str(tmp_path / "ckpt")
         )
@@ -30,7 +30,7 @@ class TestStreamingIngest:
 
         # batch reference result
         man2 = Manifest(spark, str(tmp_path / "manifest2"))
-        table2 = incremental.SnapshotTable(spark, str(tmp_path / "tbl2"), man2, "nodes")
+        table2 = incremental.PartitionedSnapshotTable(spark, str(tmp_path / "tbl2"), man2, "nodes")
         incremental.apply_change_batches(spark, table2, changes)
         want = {r.id: r.tags["name"] for r in table2.read().collect()}
         assert got == want
