@@ -128,7 +128,9 @@ def children(cell: int) -> np.ndarray:
 
 def k_ring(cell, k: int) -> tuple[np.ndarray, np.ndarray]:
     """All cells within Chebyshev distance ``k`` of each input cell
-    (the H3 ``k_ring`` analog backing kNN expansion, SURVEY §2.3 J8/W4).
+    (the H3 ``k_ring`` analog, SURVEY §2.3 J8/W4) — the numpy reference
+    for grid neighborhoods. kNN does not call it: ``knn._ring_expand_dim``
+    builds its ring-1 neighborhood as a native Spark expression.
 
     Longitude wraps around the antimeridian; latitude rows outside the
     poles are dropped. Returns ``(src_index, ring_cells)`` in explode

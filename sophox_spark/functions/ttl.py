@@ -58,8 +58,6 @@ PREFIXES = [
     "prefix osmm: <https://www.openstreetmap.org/meta/>",
 ]
 
-TYPE_PREFIX = {"n": "osmnode:", "w": "osmway:", "r": "osmrel:"}
-
 
 def file_header() -> str:
     return "\n".join("@" + p + " ." for p in PREFIXES) + "\n\n"

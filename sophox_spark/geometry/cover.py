@@ -25,6 +25,12 @@ from ..cells import grid
 from .pip import PreparedPolygons
 from .wkb import PackedPolygons
 
+# (cell, edge) pairs the cell classifier expands at once. A whole
+# quadtree level at once page-faults in fresh temporaries as large as
+# cells × edges (one smooth 20k-vertex polygon at res 8..13: 2.9 GB
+# peak, ~3 s of system CPU); runs of 16k pairs stay small and reused
+_PAIR_CHUNK = 1 << 14
+
 
 def _seg_rect_hit(prep, e, pair, lon0, lat0, lon1, lat1):
     """EXACT segment×cell-rect intersection for expanded (cell, edge)
@@ -59,8 +65,9 @@ def _seg_rect_hit(prep, e, pair, lon0, lat0, lon1, lat1):
     return hit
 
 
-def _classify_cells(prep: PreparedPolygons, poly_idx, cells):
-    """(touched_by_boundary, interior) flags for candidate cells."""
+def _classify_chunk(prep: PreparedPolygons, poly_idx, cells):
+    """(touched_by_boundary, interior) flags for candidate cells: every
+    (cell, edge) pair is expanded and tested."""
     lon0, lat0, lon1, lat1 = grid.cell_bounds(cells)
     counts = prep.edge_count[poly_idx]
     total = int(counts.sum())
@@ -81,6 +88,20 @@ def _classify_cells(prep: PreparedPolygons, poly_idx, cells):
     return touched, interior
 
 
+def _classify_cells(prep: PreparedPolygons, poly_idx, cells):
+    """``_classify_chunk`` over runs of cells of about ``_PAIR_CHUNK``
+    (cell, edge) pairs each, so the pair arrays stay bounded for a
+    polygon of any size (a cell with more edges is a run of its own)."""
+    counts = prep.edge_count[poly_idx]
+    first = np.cumsum(counts) - counts
+    cut = np.r_[0, np.flatnonzero(np.diff(first // _PAIR_CHUNK)) + 1, cells.size]
+    flags = [
+        _classify_chunk(prep, poly_idx[a:b], cells[a:b])
+        for a, b in zip(cut[:-1], cut[1:])
+    ]
+    return np.concatenate([t for t, _ in flags]), np.concatenate([i for _, i in flags])
+
+
 def _reachable(cells, occupied, res):
     """Mask of ``cells`` (all at ``res``) that are an ancestor-or-self
     of some ``occupied`` cell — the only covering cells a point in
@@ -96,57 +117,42 @@ def cover_polygons_adaptive(
     max_cells_per_poly: int = 262_144,
     occupied: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Quadtree covering: start at ``res_min``, emit fully-interior
-    cells as soon as they classify (coarse), split boundary-touched
-    cells into their 4 children, recurse to ``res_max`` where remaining
-    boundary cells are emitted with fully_contained=False.
+    """Quadtree covering: start at each polygon's bbox cells at
+    ``res_min``, emit fully-interior cells as soon as they classify
+    (coarse), split boundary-touched cells into their 4 children,
+    recurse to ``res_max`` where remaining boundary cells are emitted
+    with fully_contained=False. The one covering kernel of the PIP join:
+    ``spatial_join._cover_table`` calls it on the driver for a collected
+    dim, and per Arrow batch on the executors for a bigger one.
 
     Compared to single-res covering at ``res_max``: the dim table
     shrinks from O(area/fine_cell) to O(perimeter/fine_cell) rows, and
     interior acceptance happens at the coarsest possible level. Same
     superset + interior-correctness guarantees. ``res_min == res_max``
     is that single-res covering: the bbox cells at ``res_max`` that a
-    boundary edge touches or whose center is inside.
-
-    ``occupied`` (cells at ``res_max``, optional) prunes the quadtree
-    to where the points are: see ``refine_cells``.
-
-    Returns (poly_idx, cell, fully_contained).
-    """
-    bb = packed.bbox
-    valid = np.flatnonzero(np.isfinite(bb[:, 0]))
-    if valid.size == 0:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0, bool),)
-    src, cells = grid.cover_bbox(
-        bb[valid, 0], bb[valid, 1], bb[valid, 2], bb[valid, 3], res_min,
-        max_cells=max_cells_per_poly * max(valid.size, 1),
-    )
-    return refine_cells(packed, valid[src], cells, res_min, res_max, occupied)
-
-
-def refine_cells(
-    packed: PackedPolygons,
-    poly_idx: np.ndarray,
-    cells: np.ndarray,
-    res_min: int,
-    res_max: int,
-    occupied: np.ndarray | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Quadtree refinement from given SEED cells at ``res_min``: the
-    per-level classify/split loop of ``cover_polygons_adaptive``,
-    callable on any (poly_idx, cell) subset — each seed cell refines
-    independently, which is what lets the distributed builder spread
-    one huge polygon's covering across the cluster.
+    boundary edge touches or whose center is inside. Geometries with
+    no vertices (NULL WKB) get no cells.
 
     OCCUPIED-CELL PRUNING: with ``occupied`` (the cells at ``res_max``
     that the join's points fall in), each level first drops the
     (poly, cell) pairs whose cell is no ancestor-or-self of an occupied
     cell, before any classification. Every pair a point can join on is
     kept with the same ``fully_contained`` flag, so candidate pairs and
-    join output are unchanged; only unreachable subtrees go away."""
+    join output are unchanged; only unreachable subtrees go away.
+
+    Returns (poly_idx, cell, fully_contained).
+    """
+    empty = (np.empty(0, np.int64),) * 2 + (np.empty(0, bool),)
+    bb = packed.bbox
+    valid = np.flatnonzero(np.isfinite(bb[:, 0]))
+    if valid.size == 0:
+        return empty
+    src, cells = grid.cover_bbox(
+        bb[valid, 0], bb[valid, 1], bb[valid, 2], bb[valid, 3], res_min,
+        max_cells=max_cells_per_poly * max(valid.size, 1),
+    )
+    poly_idx = valid[src]
     prep = PreparedPolygons(packed)
-    poly_idx = np.asarray(poly_idx, np.int64)
-    cells = np.asarray(cells, np.int64)
     out_p: list[np.ndarray] = []
     out_c: list[np.ndarray] = []
     out_f: list[np.ndarray] = []
@@ -177,6 +183,5 @@ def refine_cells(
         poly_idx = np.tile(poly_idx[ti], 4)
         cells = grid.from_xy(child_x, child_y, res + 1)
     if not out_c:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0, bool),)
+        return empty
     return np.concatenate(out_p), np.concatenate(out_c), np.concatenate(out_f)
-

@@ -207,9 +207,6 @@ def _emit_clipped(out, id_col, geom_col, pid, parts, n_fb):
     out["n_fallbacks"].append(n_fb)
 
 
-_CLIP_OUT_COLS = ("area", "n_rings", "n_fallbacks")
-
-
 def clipped_regions(
     regions_df: DataFrame,
     water_df: DataFrame,

@@ -693,8 +693,7 @@ def parse_select(query: str) -> dict:
 class SparqlEngine:
     """Executes the parsed subset against a (s, p, o) triples DataFrame."""
 
-    def __init__(self, triples: DataFrame, endpoints: dict | None = None,
-                 materialize: bool | None = None):
+    def __init__(self, triples: DataFrame, endpoints: dict | None = None):
         # optional named-graph column: a (s, p, o, g) quads store
         # enables GRAPH <iri> / GRAPH ?var; the default graph is the
         # DISTINCT union of all named graphs (documented subset)
@@ -712,12 +711,9 @@ class SparqlEngine:
         # file/relation-backed store the re-scan is the BETTER plan: a
         # checkpoint wall would break predicate pushdown of pattern
         # constants into the scan (plan-tested), and each pattern then
-        # reads only its predicate's rows. ``materialize=None``
-        # auto-routes on whether the plan crosses into Python;
-        # True/False force it.
-        if materialize is None:
-            materialize = self._has_python_stage(triples)
-        if materialize:
+        # reads only its predicate's rows. The route is decided by
+        # whether the plan crosses into Python.
+        if self._has_python_stage(triples):
             self.triples = self.triples.localCheckpoint(eager=False)
             if self.quads is not None:
                 self.quads = self.quads.localCheckpoint(eager=False)

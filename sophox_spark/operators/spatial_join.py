@@ -10,16 +10,20 @@ scale horizontally:
      polygon_id, fully_contained)``, one quadtree covering between
      ``res_min`` and ``res_max`` (a single res is the quadtree with
      ``res_min == res_max``), range-partitionable by cell — the
-     north_rule's "polygon sides range-partitioned by cell prefix". The
-     route is decided once, by ``route.bounded_collect`` of the dim's
-     (id, WKB) rows under the engine's one collect budget: a dim that
-     fits arrives on the driver as one Arrow table and broadcasts, a
-     bigger one is never collected. A small broadcast dim is covered
-     on the driver, and when the points plan is small too the covering
-     is PRUNED to the cells the points occupy (a bounded probe collects
-     them first): like the reference's per-query GiST lookup, the
-     covering then costs in proportion to where the points are, not to
-     the polygons' whole area.
+     north_rule's "polygon sides range-partitioned by cell prefix". It
+     has one builder, ``_cover_table``, an Arrow function over packed
+     polygons; the dim's size decides where it runs. A dim whose
+     (id, WKB) rows fit the engine's one collect budget
+     (``route.bounded_collect``) arrives on the driver as one Arrow
+     table and broadcasts; up to ``_DRIVER_COVER_MAX_BYTES`` of WKB it
+     is covered there too. When the points plan is small as well, the
+     driver's covering is PRUNED to the cells the points occupy (a
+     bounded probe collects them first): like the reference's
+     per-query GiST lookup, the covering then costs in proportion to
+     where the points are, not to the polygons' whole area. A bigger
+     dim is covered by the same builder per Arrow batch, in one
+     ``mapInArrow`` over the polygons (``build_polygon_cells_adaptive``);
+     a dim over the collect budget is never collected.
   2. FILTER (fact-side): each point explodes to its ancestor cells from
      ``res_min`` to ``res_max``, computed by a NATIVE expression
      (whole-stage codegen), and equi-joins ``polygon_cells`` on ``cell``
@@ -60,10 +64,6 @@ from ..geometry.pip import COVERS_EPS, PreparedPolygons
 from ..plans import route
 
 DEFAULT_RES = 13  # ≈ 2.4 km cells (H3 res-7 analog, grid.H3_ANALOG_RES)
-
-# a polygon's WKB must exceed this (~8k vertices) before the
-# seed-parallel covering's reshuffle beats one-task-local recursion
-_SEED_PARALLEL_MIN_BYTES = 128 << 10
 
 # broadcast-route dims up to this many WKB bytes build their cell
 # covering ON THE DRIVER (single vectorized numpy pass over geometry
@@ -145,112 +145,56 @@ def build_polygon_cells_adaptive(
     geom_col: str = "geom",
     id_col: str = "polygon_id",
     num_partitions: int | None = None,
-    seed_parallel: bool = True,
 ) -> DataFrame:
-    """Quadtree (multi-resolution) covering dim: O(perimeter) rows
-    instead of O(area) — coarse fully-contained cells carry most of the
-    polygon interior, fine cells trace the boundary. Schema ``(cell,
-    id_col, fully_contained)``; cell ids self-describe their resolution,
-    and ``res_min == res_max`` is the single-resolution covering.
+    """Quadtree (multi-resolution) covering dim, built on the executors:
+    O(perimeter) rows instead of O(area) — coarse fully-contained cells
+    carry most of the polygon interior, fine cells trace the boundary.
+    Schema ``(cell, id_col, fully_contained)``; cell ids self-describe
+    their resolution, and ``res_min == res_max`` is the
+    single-resolution covering. NULL geometries get no cells.
 
-    SEED-PARALLEL (``seed_parallel=True``): phase 1 fans each polygon
-    out to its bbox cover at ``res_min`` (one cheap pass); the
-    (polygon, seed-cell) rows then reshuffle so phase 2 refines every
-    seed independently. One country-sized polygon no longer serializes
-    in a single task — its quadtree spreads across the whole cluster,
-    and output rows are identical to the single-task recursion (each
-    seed's subtree is independent).
-
-    ``seed_parallel=False`` runs the whole quadtree per polygon in ONE
-    Arrow crossing (polygons spread across tasks, recursion local).
-    The seed reshuffle duplicates each polygon's WKB once per seed
-    cell, so for dims of small polygons the fan-out costs more than
-    the parallelism buys — ``point_in_polygon_join`` auto-selects the
-    single-pass path when the probed dim has no polygon large enough
-    to dominate a task (same auto-route philosophy as the broadcast
-    decision), and always at a single res, where the seeds already are
-    the whole covering."""
-    out_schema = f"cell long, {id_col} long, fully_contained boolean"
+    The polygons spread round-robin over the shuffle partitions and
+    cross into Python once, in Arrow batches: each batch is covered by
+    ``_cover_table``, the builder the driver route calls on a collected
+    dim, so both routes emit the same rows. ``num_partitions``
+    range-partitions the result by cell."""
     spark = polygons_df.sparkSession
     n_slices = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    if not seed_parallel:
-        def one_pass(batches):
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                packed = wkb.pack(pdf[geom_col].tolist())
-                pi, cells, full = cover.cover_polygons_adaptive(
-                    packed, res_min, res_max
-                )
-                yield pd.DataFrame(
-                    {
-                        "cell": cells,
-                        id_col: pdf[id_col].to_numpy()[pi],
-                        "fully_contained": full,
-                    }
-                )
+    def cover_batches(batches):
+        for batch in batches:
+            packed = wkb.pack(batch.column(1).to_pylist())
+            yield from _cover_table(
+                packed, batch.select([0]), res_min, res_max
+            ).to_batches()
 
-        cells_df = (
-            polygons_df.select(id_col, geom_col)
-            .repartition(n_slices)
-            .mapInPandas(one_pass, out_schema)
-        )
-        if num_partitions:
-            cells_df = cells_df.repartitionByRange(num_partitions, "cell")
-        return cells_df
-
-    def seeds(batches):
-        for pdf in batches:
-            packed = wkb.pack(pdf[geom_col].tolist())
-            bb = packed.bbox
-            valid = np.flatnonzero(np.isfinite(bb[:, 0]))
-            if valid.size == 0:
-                continue
-            src, cells = grid.cover_bbox(
-                bb[valid, 0], bb[valid, 1], bb[valid, 2], bb[valid, 3],
-                res_min, max_cells=262_144 * max(valid.size, 1),
-            )
-            pi = valid[src]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy()[pi],
-                    "geom": pdf[geom_col].to_numpy()[pi],
-                    "cell": cells,
-                }
-            )
-
-    def refine(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # pack each distinct polygon once per batch, map seeds to
-            # its slot
-            uniq = pdf.drop_duplicates(id_col)
-            packed = wkb.pack(uniq["geom"].tolist())
-            slot = {p: i for i, p in enumerate(uniq[id_col])}
-            seed_slots = pdf[id_col].map(slot).to_numpy(np.int64)
-            pi, cells, full = cover.refine_cells(
-                packed, seed_slots, pdf["cell"].to_numpy(np.int64),
-                res_min, res_max,
-            )
-            yield pd.DataFrame(
-                {
-                    "cell": cells,
-                    id_col: uniq[id_col].to_numpy()[pi],
-                    "fully_contained": full,
-                }
-            )
-
-    seeds_df = polygons_df.select(id_col, geom_col).mapInPandas(
-        seeds, f"{id_col} long, geom binary, cell long"
-    )
-    cells_df = seeds_df.repartition(n_slices).mapInPandas(
-        refine, out_schema
+    cells_df = (
+        polygons_df.select(F.col(id_col).cast("long"), geom_col)
+        .repartition(n_slices)
+        .mapInArrow(cover_batches, f"cell long, {id_col} long, fully_contained boolean")
     )
     if num_partitions:
         cells_df = cells_df.repartitionByRange(num_partitions, "cell")
     return cells_df
+
+
+def _cover_table(packed, ids, res_min, res_max, occupied=None) -> pa.Table:
+    """The PIP join's covering (``cell long, <id_col> long,
+    fully_contained boolean``) of the polygons of ``packed``:
+    ``cover.cover_polygons_adaptive`` between ``res_min`` and
+    ``res_max``, pruned to ``occupied`` when given. ``ids`` is a
+    one-column Arrow table or batch of long ids, one row per polygon of
+    ``packed``; its column name names the id column."""
+    pi, cells, full = cover.cover_polygons_adaptive(
+        packed, res_min, res_max, occupied=occupied
+    )
+    return pa.table(
+        {
+            "cell": pa.array(cells, pa.int64()),
+            ids.schema.names[0]: ids.column(0).take(pi),
+            "fully_contained": pa.array(full, pa.bool_()),
+        }
+    )
 
 
 def _occupied_cells(points_df, lon_col, lat_col, res):
@@ -310,11 +254,15 @@ def point_in_polygon_join(
     (id, WKB) rows: the WKB is sized on the executors first, so a dim
     over ``broadcast_max_bytes`` is never collected, and a planet-scale
     one is read at most budget-deep. A dim within the budget arrives
-    as one Arrow table and broadcasts its covering and its edge table;
-    a bigger one (or any dim, with ``broadcast_max_bytes=0``) takes the
-    shuffle join and builds its edge table in one Arrow pass over the
-    polygons. Both routes refine in the JVM with the same ``_refine``
-    filter.
+    as one Arrow table and broadcasts its covering and its edge table,
+    both built on the driver (a broadcast dim of more than
+    ``_DRIVER_COVER_MAX_BYTES`` of WKB builds its covering on the
+    executors instead); a bigger one (or any dim, with
+    ``broadcast_max_bytes=0``) takes the shuffle join and builds its
+    covering and its edge table each in one Arrow pass over the
+    polygons. Either way the covering comes from ``_cover_table`` and
+    the edge table from ``_edge_table``, and both routes refine in the
+    JVM with the same ``_refine`` filter.
 
     OCCUPIED-CELL PRUNING (driver-built covering only): the covering is
     built only where the points are. A second eager, bounded probe —
@@ -337,48 +285,32 @@ def point_in_polygon_join(
     """
     res_min, res_max = res if isinstance(res, tuple) else (res, res)
     dim_table = route.bounded_collect(
-        polygons_df.select(id_col, geom_col).where(
+        polygons_df.select(F.col(id_col).cast("long"), geom_col).where(
             F.col(id_col).isNotNull() & F.col(geom_col).isNotNull()
         ),
         F.length(geom_col), "point_in_polygon_join", broadcast_max_bytes,
     )
     broadcast = dim_table is not None
     if broadcast:
-        dim_ids = dim_table.column(id_col).to_numpy().astype(np.int64)
         packed_dim = wkb.pack(dim_table.column(geom_col).to_pylist())
-        wkb_lens = pc.binary_length(dim_table.column(geom_col))
     if polygon_cells_df is None and broadcast and (
-        (pc.sum(wkb_lens).as_py() or 0) <= _DRIVER_COVER_MAX_BYTES
+        (pc.sum(pc.binary_length(dim_table.column(geom_col))).as_py() or 0)
+        <= _DRIVER_COVER_MAX_BYTES
     ):
         # DRIVER-SIDE COVERING: the dim's WKB is already in driver
         # memory, and the covering kernel is a vectorized numpy pass
         # measured far cheaper than even ONE Spark stage of Python
-        # workers (the distributed builder pays a repartition shuffle +
-        # a mapInPandas crossing to parallelize sub-second work). The
-        # dim table ships to executors through the broadcast join, as
-        # one Arrow batch (no pandas hop).
-        occupied = _occupied_cells(points_df, lon_col, lat_col, res_max)
-        pi, cells, full = cover.cover_polygons_adaptive(
-            packed_dim, res_min, res_max, occupied=occupied
-        )
+        # workers. The table ships to executors through the broadcast
+        # join, as one Arrow batch (no pandas hop).
         polygon_cells_df = points_df.sparkSession.createDataFrame(
-            pa.table(
-                {
-                    "cell": pa.array(cells, pa.int64()),
-                    id_col: pa.array(dim_ids[pi], pa.int64()),
-                    "fully_contained": pa.array(full, pa.bool_()),
-                }
+            _cover_table(
+                packed_dim, dim_table.select([id_col]), res_min, res_max,
+                occupied=_occupied_cells(points_df, lon_col, lat_col, res_max),
             )
         )
     elif polygon_cells_df is None:
-        # covering fan-out auto-route: the seed reshuffle only pays off
-        # when a single polygon's quadtree can dominate a task — for
-        # dims of small polygons, and at a single res (the seeds are
-        # the covering), the one-crossing local recursion wins
         polygon_cells_df = build_polygon_cells_adaptive(
-            polygons_df, res_min, res_max, geom_col, id_col,
-            seed_parallel=res_min < res_max
-            and (not broadcast or (pc.max(wkb_lens).as_py() or 0) > _SEED_PARALLEL_MIN_BYTES),
+            polygons_df, res_min, res_max, geom_col, id_col
         )
     pts = points_df.withColumn(
         "__cell", F.explode(ancestor_cells(lon_col, lat_col, res_min, res_max))
@@ -398,7 +330,9 @@ def point_in_polygon_join(
 
     if broadcast:
         edges_df = F.broadcast(
-            points_df.sparkSession.createDataFrame(_edge_table(packed_dim, dim_ids))
+            points_df.sparkSession.createDataFrame(
+                _edge_table(packed_dim, dim_table.column(id_col))
+            )
         )
     else:
         edges_df = polygons_df.select(

@@ -161,9 +161,6 @@ def _fields(buf) -> Iterator[tuple[int, int, object]]:
         yield field, wt, val
 
 
-_U64_MASK = (1 << 64) - 1
-
-
 def _decode_varints_py(data) -> list[int]:
     out = []
     view = memoryview(data)

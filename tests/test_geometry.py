@@ -205,6 +205,23 @@ class TestCover:
         center_cell = int(grid.encode([0.0], [0.0], 12)[0])
         assert center_cell not in set(cells.tolist())
 
+    @pytest.mark.parametrize("chunk", [1, 7, 1000])
+    def test_chunked_classification_same_covering(self, monkeypatch, chunk):
+        """Classifying cells in runs of ``_PAIR_CHUNK`` (cell, edge)
+        pairs emits the covering of classifying each level at once:
+        same cells, same flags, same order."""
+        packed = wkb.pack([DONUT, STAR, None, wkb.polygon_wkb([square(5, 5, 2)])])
+        pts = np.random.default_rng(3)
+        occ = grid.encode(pts.uniform(-12, 60, 300), pts.uniform(-12, 30, 300), 11)
+        for res_min, res_max, occupied in ((6, 11, None), (6, 11, occ), (10, 10, None)):
+            monkeypatch.setattr(cover, "_PAIR_CHUNK", 1 << 40)
+            want = cover.cover_polygons_adaptive(packed, res_min, res_max, occupied=occupied)
+            monkeypatch.setattr(cover, "_PAIR_CHUNK", chunk)
+            got = cover.cover_polygons_adaptive(packed, res_min, res_max, occupied=occupied)
+            assert want[1].size > 0
+            for a, b in zip(want, got):
+                assert np.array_equal(a, b)
+
 
 class TestSimplify:
     def test_effective_area_monotone_filterable(self):

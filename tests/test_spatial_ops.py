@@ -207,19 +207,34 @@ class TestPipJoin:
 
 
 class TestCoveringAutoRoute:
-    def test_single_pass_equals_seed_parallel(self, spark, polygons):
-        """seed_parallel=False (one Arrow crossing, local recursion) must
-        emit the IDENTICAL covering rows as the seed-parallel two-phase
-        fan-out — each seed's quadtree subtree is independent."""
-        a = spatial_join.build_polygon_cells_adaptive(
-            polygons, 8, 12, seed_parallel=True
+    @pytest.mark.parametrize("res", [(8, 12), 12], ids=["res8-12", "res12"])
+    def test_executor_covering_equals_kernel(self, spark, res):
+        """The executor-built covering (one mapInArrow over the dim's
+        partitions) emits exactly the rows, fully_contained flags
+        included, of ``cover.cover_polygons_adaptive`` over the whole
+        dim at once — for a dim with a NULL geometry, a polygon with a
+        hole and a multipolygon, spread over several partitions."""
+        from sophox_spark.geometry import cover
+
+        pdf = synth.admin_polygons_pdf(12)[["polygon_id", "geom"]]
+        pdf = pd.concat(
+            [pdf, pd.DataFrame({"polygon_id": [99], "geom": [None]})],
+            ignore_index=True,
         )
-        b = spatial_join.build_polygon_cells_adaptive(
-            polygons, 8, 12, seed_parallel=False
+        dim = spark.createDataFrame(pdf, "polygon_id long, geom binary").repartition(3)
+        assert dim.rdd.getNumPartitions() >= 2
+        res_min, res_max = res if isinstance(res, tuple) else (res, res)
+        got = sorted(map(tuple, spatial_join.build_polygon_cells_adaptive(
+            dim, res_min, res_max).collect()))
+        pi, cells, full = cover.cover_polygons_adaptive(
+            wkb.pack(pdf["geom"].tolist()), res_min, res_max
         )
-        ra = {(r.cell, r.polygon_id, r.fully_contained) for r in a.collect()}
-        rb = {(r.cell, r.polygon_id, r.fully_contained) for r in b.collect()}
-        assert ra == rb and len(ra) > 0
+        want = sorted(zip(
+            cells.tolist(), pdf["polygon_id"].to_numpy()[pi].tolist(), full.tolist()
+        ))
+        assert got == want
+        assert {p for _, p, _ in want} == set(range(12))
+        assert any(f for _, _, f in want) and not all(f for _, _, f in want)
 
     def test_probe_fast_path_small_dim(self, spark, polygons):
         want = {
