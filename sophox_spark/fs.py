@@ -26,17 +26,23 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs_and_path(spark, path)
-    return bool(fs.exists(p)) and bool(fs.getFileStatus(p).isDirectory())
-
-
 def list_names(spark: SparkSession, path: str) -> list[str]:
     """Child entry names of a directory ([] if it doesn't exist)."""
     fs, p = _fs_and_path(spark, path)
     if not fs.exists(p):
         return []
     return [st.getPath().getName() for st in fs.listStatus(p)]
+
+
+def stamps(spark: SparkSession, paths) -> tuple:
+    """``(path, length, modification time)`` of each file, as the
+    filesystem reports it now."""
+    out = []
+    for path in paths:
+        fs, p = _fs_and_path(spark, path)
+        st = fs.getFileStatus(p)
+        out.append((path, int(st.getLen()), int(st.getModificationTime())))
+    return tuple(out)
 
 
 def any_file_with_suffix(spark: SparkSession, path: str, suffix: str) -> bool:

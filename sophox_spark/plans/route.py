@@ -6,8 +6,10 @@ Every operator with a broadcast route (``point_in_polygon_join``,
 :func:`bounded_collect`, under the one budget ``MAX_COLLECT_BYTES``:
 the rows arrive as one Arrow table when they fit, and the operator
 takes its distributed route when they do not. Each call logs one DEBUG
-record on ``sophox_spark.route`` with the op, the route, the bytes seen
-and the budget.
+record on ``sophox_spark.route`` (:func:`log`) with the op, the route,
+the bytes seen and the budget; a route that reuses an earlier call's
+collect (the PIP join's prepared-dim memo) logs ``route="memo"``
+through the same function instead.
 """
 
 from __future__ import annotations
@@ -61,9 +63,13 @@ def bounded_collect(
                     break
         if seen <= budget:
             table = df.toArrow()
-    route = "distributed" if table is None else "collect"
-    _log.debug(
-        "%s: route=%s bytes=%d budget=%d", op, route, seen, budget,
-        extra={"op": op, "route": route, "bytes": seen, "budget": budget},
-    )
+    log(op, "distributed" if table is None else "collect", seen, budget)
     return table
+
+
+def log(op: str, route: str, nbytes: int, budget: int) -> None:
+    """The one DEBUG record of a routed call on ``sophox_spark.route``."""
+    _log.debug(
+        "%s: route=%s bytes=%d budget=%d", op, route, nbytes, budget,
+        extra={"op": op, "route": route, "bytes": nbytes, "budget": budget},
+    )

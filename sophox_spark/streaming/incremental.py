@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions 
 from ..manifest import Manifest
 from ..operators.osm_geometry import relation_member_locations
 
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
 
 def dedup_latest(batch_df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:
     """ST5/ST8: keep only the newest row per key within a batch (the
@@ -92,9 +94,11 @@ class PartitionedSnapshotTable:
     bucket→version map as of that version), so ``bucket_versions()``
     collects only the latest snapshot row plus the ≤ compact_every
     delta rows after it — read cost stays O(compact_every), it does
-    NOT grow with commit history. Bucket-directory existence probes go
-    through the Hadoop FileSystem API (sophox_spark/fs.py), so the same
-    code path serves file://, hdfs:// and s3a:// table locations.
+    NOT grow with commit history. Bucket directories are found by one
+    listing per version directory through the Hadoop FileSystem API
+    (sophox_spark/fs.py), so the same code path serves file://, hdfs://
+    and s3a:// table locations, and a read lists them on the driver
+    only (no Spark listing job).
     """
 
     def __init__(
@@ -186,20 +190,37 @@ class PartitionedSnapshotTable:
     def _read_buckets(self, buckets) -> DataFrame | None:
         from .. import fs
 
-        m = self.bucket_versions()
+        wanted = {
+            b: v for b, v in self.bucket_versions().items()
+            if buckets is None or b in buckets
+        }
         # a touched bucket whose merged content is empty writes no dir
         # (partitionBy emits only present values) — that's a valid empty
-        # bucket, not a missing file. Existence probes go through the
-        # Hadoop FS API so cluster schemes (hdfs://, s3a://) work.
+        # bucket, not a missing file. One listing per version dir, through
+        # the Hadoop FS API so cluster schemes (hdfs://, s3a://) work.
+        present = {
+            v: set(fs.list_names(self.spark, f"{self.path}/v={v}"))
+            for v in set(wanted.values())
+        }
         paths = [
-            p
-            for b, v in m.items()
-            if (buckets is None or b in buckets)
-            and fs.is_dir(self.spark, p := f"{self.path}/v={v}/__bucket={b}")
+            f"{self.path}/v={v}/__bucket={b}"
+            for b, v in wanted.items()
+            if f"__bucket={b}" in present[v]
         ]
         if not paths:
             return None
-        return self.spark.read.parquet(*paths)
+        # the dirs were just listed here: keep Spark from listing them
+        # again in a distributed job (it does above the threshold's
+        # path count, default 32)
+        old = self.spark.conf.get(_LISTING_THRESHOLD, None)
+        self.spark.conf.set(_LISTING_THRESHOLD, str(len(paths)))
+        try:
+            return self.spark.read.parquet(*paths)
+        finally:
+            if old is None:
+                self.spark.conf.unset(_LISTING_THRESHOLD)
+            else:
+                self.spark.conf.set(_LISTING_THRESHOLD, old)
 
     def read(self) -> DataFrame | None:
         return self._read_buckets(None)

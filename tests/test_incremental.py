@@ -281,6 +281,26 @@ class TestPartitionedSnapshotTable:
         assert len(man.completed_units("table:t")) >= n_commits
         assert table.current_version() == n_commits
 
+    def test_read_over_listing_threshold_runs_no_listing_job(self, spark, tmp_path, jobs_of):
+        """A read of more bucket dirs than Spark's parallel-listing
+        threshold (32) lists them on the driver only — no listing job —
+        and returns every row; the threshold conf is left as it was."""
+        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        before = spark.conf.get(key, None)
+        man = Manifest(spark, str(tmp_path / "manifest"))
+        table = incremental.PartitionedSnapshotTable(
+            spark, str(tmp_path / "tbl"), man, "t", n_buckets=48
+        )
+        schema = "id long, val long"
+        table.commit(spark.createDataFrame([(i, i) for i in range(400)], schema), seqid=1)
+        table.commit_batch(spark.createDataFrame([(5, -5), (400, 4)], schema), seqid=2)
+        assert len(table.bucket_versions()) > 32
+        snap, jobs = jobs_of(table.read)
+        assert not [d for d in jobs if d.startswith("Listing leaf files")], jobs
+        want = sorted([(i, -5 if i == 5 else i) for i in range(400)] + [(400, 4)])
+        assert sorted((r.id, r.val) for r in snap.collect()) == want
+        assert spark.conf.get(key, None) == before
+
     def test_compaction_replay_still_noop(self, spark, changes, tmp_path):
         """Seqid-guarded replay stays a no-op across snapshot rows."""
         man = Manifest(spark, str(tmp_path / "manifest"))

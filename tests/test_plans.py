@@ -207,6 +207,7 @@ class TestRouteLog:
         regions = polygons.filter("kind = 'admin'").selectExpr("polygon_id", "geom")
         water = polygons.filter("kind = 'water'").selectExpr("polygon_id", "geom")
         emb = spark.read.parquet(f"{SF}/embeddings.parquet").filter("vec_id < 200")
+        spatial_join._memo(spark).clear()
         calls = {
             "point_in_polygon_join": lambda: spatial_join.point_in_polygon_join(
                 points, polygons
@@ -228,3 +229,10 @@ class TestRouteLog:
             spatial_join.point_in_polygon_join(points, polygons, broadcast_max_bytes=0)
         recs = [r for r in caplog.records if r.name == "sophox_spark.route"]
         assert [(r.route, r.budget) for r in recs] == [("distributed", 0)]
+        # the same dim again: the prepared-dim memo answers, one record
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger="sophox_spark.route"):
+            calls["point_in_polygon_join"]()
+        recs = [r for r in caplog.records if r.name == "sophox_spark.route"]
+        assert [(r.op, r.route) for r in recs] == [("point_in_polygon_join", "memo")]
+        assert 0 < recs[0].bytes <= recs[0].budget == route.MAX_COLLECT_BYTES

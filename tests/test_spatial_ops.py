@@ -3,9 +3,13 @@
 Oracles are brute-force numpy/Spark computations independent of the
 filter-then-refine machinery — row-for-row equality (north_rule)."""
 
+import logging
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pyarrow.compute as pc
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -176,6 +180,7 @@ class TestPipJoin:
             return kernel(*a, **kw)
 
         monkeypatch.setattr(cover, "cover_polygons_adaptive", spy)
+        monkeypatch.setattr(spatial_join, "_memo", lambda spark: spatial_join._DimMemo())
         return seen
 
     @pytest.mark.parametrize("res", [(8, 13), 13])
@@ -204,6 +209,123 @@ class TestPipJoin:
             jittered, polygons, res=(8, 13)).collect()))
         assert seen == [False, False]
         assert got == want and len(want) > 0
+
+
+class TestPipDimMemo:
+    """The broadcast route prepares a collected dim once per session and
+    reuses it while the dim is the same (plan, columns, input files'
+    length and modification time); a hit returns the rows of a miss."""
+
+    @pytest.fixture(autouse=True)
+    def _empty_memo(self, spark):
+        spatial_join._memo(spark).clear()
+
+    @staticmethod
+    def _write(path, pdf):
+        pq.write_table(
+            pa.Table.from_pandas(pdf[["polygon_id", "geom"]], preserve_index=False), path
+        )
+
+    @staticmethod
+    def _count_calls(monkeypatch, module, name):
+        calls = []
+        real = getattr(module, name)
+
+        def spy(*a, **kw):
+            calls.append(a)
+            return real(*a, **kw)
+
+        monkeypatch.setattr(module, name, spy)
+        return calls
+
+    @staticmethod
+    def _join(caplog, *args, **kwargs):
+        """(sorted (pt_id, polygon_id) rows, [route of each route record])."""
+        caplog.clear()
+        with caplog.at_level(logging.DEBUG, logger="sophox_spark.route"):
+            out = spatial_join.point_in_polygon_join(*args, **kwargs)
+        routes = [r.route for r in caplog.records if r.name == "sophox_spark.route"]
+        return sorted((r.pt_id, r.polygon_id) for r in out.collect()), routes
+
+    def test_second_call_runs_no_dim_job(self, spark, points, tmp_path, jobs_of, monkeypatch):
+        path = str(tmp_path / "polys.parquet")
+        pdf = synth.admin_polygons_pdf(40)
+        self._write(path, pdf)
+        edge_builds = self._count_calls(monkeypatch, spatial_join, "_edge_table")
+        runs = []
+        for _ in range(2):
+            dim = spark.read.parquet(path)
+            out, jobs = jobs_of(
+                lambda: spatial_join.point_in_polygon_join(points, dim, res=(8, 13))
+            )
+            runs.append((len(jobs), {(r.pt_id, r.polygon_id) for r in out.collect()}))
+        (first, rows1), (second, rows2) = runs
+        assert first - second == 2  # the size probe and the payload collect
+        assert len(edge_builds) == 1
+        assert rows1 == rows2 == oracle_pip(points.toPandas(), pdf)
+
+    def test_rewritten_file_misses(self, spark, points, tmp_path, caplog):
+        """A pyarrow rewrite keeps the file's name; its new length
+        still misses the memo, and the join reads the new polygons."""
+        path = str(tmp_path / "polys.parquet")
+        pdf = synth.admin_polygons_pdf(40)
+        self._write(path, pdf)
+        _, routes = self._join(caplog, points, spark.read.parquet(path))
+        assert routes == ["collect"]
+        fewer = pdf.iloc[::2]
+        self._write(path, fewer)
+        got, routes = self._join(caplog, points, spark.read.parquet(path))
+        assert routes == ["collect"]
+        assert set(got) == oracle_pip(points.toPandas(), fewer) and got
+
+    def test_changed_res_rebuilds_only_the_covering(self, spark, points, tmp_path, monkeypatch):
+        path = str(tmp_path / "polys.parquet")
+        pdf = synth.admin_polygons_pdf(40)
+        self._write(path, pdf)
+        spatial_join.point_in_polygon_join(points, spark.read.parquet(path), res=13)
+        collects = self._count_calls(monkeypatch, route, "bounded_collect")
+        edge_builds = self._count_calls(monkeypatch, spatial_join, "_edge_table")
+        covers = self._count_calls(monkeypatch, spatial_join, "_cover_table")
+        out = spatial_join.point_in_polygon_join(points, spark.read.parquet(path), res=(8, 13))
+        got = {(r.pt_id, r.polygon_id) for r in out.collect()}
+        assert (len(collects), len(edge_builds), len(covers)) == (0, 0, 1)
+        assert got == oracle_pip(points.toPandas(), pdf)
+
+    def test_nondeterministic_dim_never_memoised(self, spark, points, polygons, caplog):
+        dim = polygons.withColumn("r", F.rand(3))
+        first, routes1 = self._join(caplog, points, dim)
+        second, routes2 = self._join(caplog, points, dim)
+        assert routes1 == routes2 == ["collect"]
+        assert first == second and first
+
+    def test_local_relations_differ_by_content(self, spark, points, caplog):
+        pdf = synth.admin_polygons_pdf(40)[["polygon_id", "geom"]]
+        a, b = pdf.iloc[:20], pdf.iloc[20:]
+        schema = "polygon_id long, geom binary"
+        _, routes = self._join(caplog, points, spark.createDataFrame(a, schema))
+        assert routes == ["collect"]
+        got, routes = self._join(caplog, points, spark.createDataFrame(b, schema))
+        assert routes == ["collect"]
+        assert set(got) == oracle_pip(points.toPandas(), b) and got
+        _, routes = self._join(caplog, points, spark.createDataFrame(a, schema))
+        assert routes == ["memo"]
+
+    @pytest.mark.parametrize("pruned", [True, False], ids=["pruned", "full"])
+    def test_hit_rows_equal_miss_rows(self, spark, points, tmp_path, caplog, monkeypatch, pruned):
+        """A miss and a hit, at res (8, 13) with ``covers`` and ``salt``:
+        the same rows; a call that does not prune reuses the full
+        covering the miss built."""
+        path = str(tmp_path / "polys.parquet")
+        self._write(path, synth.admin_polygons_pdf(40))
+        if not pruned:
+            monkeypatch.setattr(spatial_join, "_PRUNE_MAX_CELLS", 0)
+        covers = self._count_calls(monkeypatch, spatial_join, "_cover_table")
+        kw = dict(res=(8, 13), covers=True, salt=4)
+        miss, routes1 = self._join(caplog, points, spark.read.parquet(path), **kw)
+        hit, routes2 = self._join(caplog, points, spark.read.parquet(path), **kw)
+        assert (routes1, routes2) == (["collect"], ["memo"])
+        assert hit == miss and miss
+        assert len(covers) == (2 if pruned else 1)
 
 
 class TestCoveringAutoRoute:
