@@ -21,11 +21,6 @@ def _fs_and_path(spark: SparkSession, path: str):
     return fs, jpath
 
 
-def exists(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs_and_path(spark, path)
-    return bool(fs.exists(p))
-
-
 def list_names(spark: SparkSession, path: str) -> list[str]:
     """Child entry names of a directory ([] if it doesn't exist)."""
     fs, p = _fs_and_path(spark, path)

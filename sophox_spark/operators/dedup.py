@@ -87,8 +87,6 @@ def minhash_lsh_pairs(
     single-task sort at bucket/salt rows — dense-bucket skew handling,
     north_rule) and the per-lane minima are chained across lanes, so
     the bucket stays one connected component. Still linear output."""
-    if mode not in ("pairs", "chain"):
-        raise ValueError(f"unknown mode {mode!r}")
     rows_per_band = n_hashes // bands
     sig = minhash_signatures(df, key, text_col, n_hashes)
     band_cols = [
@@ -107,62 +105,39 @@ def minhash_lsh_pairs(
             ])
         ).alias("bs"),
     ).select(key, "bs.band", "bs.sig")
-    if mode == "chain":
-        if chain_salt > 1:
-            st = stacked.withColumn(
-                "__lane", F.pmod(F.xxhash64(key), F.lit(chain_salt))
-            )
-            wl = Window.partitionBy("band", "sig", "__lane").orderBy(key)
-            lane_pairs = (
-                st.withColumn("__prev", F.lag(key).over(wl))
-                .filter(F.col("__prev").isNotNull())
-                .select(
-                    "band",
-                    F.col("__prev").alias("a"),
-                    F.col(key).alias("b"),
-                )
-            )
-            mins = st.groupBy("band", "sig", "__lane").agg(
-                F.min(key).alias("__m")
-            )
-            wm = Window.partitionBy("band", "sig").orderBy("__m")
-            links = (
-                mins.withColumn("__prev", F.lag("__m").over(wm))
-                .filter(F.col("__prev").isNotNull())
-                .select(
-                    "band",
-                    F.col("__prev").alias("a"),
-                    F.col("__m").alias("b"),
-                )
-            )
-            return lane_pairs.unionByName(links).distinct()
-        w = Window.partitionBy("band", "sig").orderBy(key)
+    pairs = _bucket_pairs(stacked, ["band", "sig"], key, mode, chain_salt)
+    return pairs.select("band", "a", "b").distinct()
+
+
+def _bucket_pairs(
+    df: DataFrame, bucket: list[str], key: str, mode: str, chain_salt: int
+) -> DataFrame:
+    """Candidate pairs ``(*bucket, a, b)`` with a < b among the ``key``
+    values that share a ``bucket`` value — every pair (``mode='pairs'``)
+    or the chain of consecutive ids (``mode='chain'``), split into
+    ``chain_salt`` hash lanes whose minima are chained across lanes when
+    ``chain_salt > 1``."""
+    if mode not in ("pairs", "chain"):
+        raise ValueError(f"unknown mode {mode!r}")
+    if mode == "pairs":
+        a = df.select(*bucket, F.col(key).alias("a"))
+        b = df.select(*bucket, F.col(key).alias("b"))
+        return a.join(b, bucket).filter(F.col("a") < F.col("b"))
+
+    def chain(rows: DataFrame, lanes: list[str], col: str) -> DataFrame:
+        w = Window.partitionBy(*lanes).orderBy(col)
         return (
-            stacked.withColumn("__prev", F.lag(key).over(w))
+            rows.withColumn("__prev", F.lag(col).over(w))
             .filter(F.col("__prev").isNotNull())
-            .select(
-                "band",
-                F.col("__prev").alias("a"),
-                F.col(key).alias("b"),
-            )
-            .distinct()
+            .select(*bucket, F.col("__prev").alias("a"), F.col(col).alias("b"))
         )
-    a = stacked.alias("a")
-    b = stacked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{key}") < F.col(f"b.{key}")),
-        )
-        .select(
-            F.col("a.band").alias("band"),
-            F.col(f"a.{key}").alias("a"),
-            F.col(f"b.{key}").alias("b"),
-        )
-        .distinct()
-    )
+
+    if chain_salt <= 1:
+        return chain(df, bucket, key)
+    lanes = [*bucket, "__lane"]
+    st = df.withColumn("__lane", F.pmod(F.xxhash64(key), F.lit(chain_salt)))
+    mins = st.groupBy(*lanes).agg(F.min(key).alias("__m"))
+    return chain(st, lanes, key).unionByName(chain(mins, bucket, "__m"))
 
 
 def simhash16(df: DataFrame, key: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -380,47 +355,14 @@ def winnow_candidates(
     bucket/salt rows; the per-lane minima are chained across lanes so
     the bucket stays one component (same construction as
     ``minhash_lsh_pairs``)."""
-    if mode not in ("pairs", "chain"):
-        raise ValueError(f"unknown mode {mode!r}")
+    if mode == "chain" and min_shared != 1:
+        raise ValueError(
+            "min_shared must be 1 in chain mode — dropping chain "
+            "edges breaks component equality with pairs mode"
+        )
     fps = winnow_fingerprints(df, key, text_col, k, w)
-    if mode == "chain":
-        if min_shared != 1:
-            raise ValueError(
-                "min_shared must be 1 in chain mode — dropping chain "
-                "edges breaks component equality with pairs mode"
-            )
-        st = fps.select("fp", F.col(key).alias("d"))
-        if chain_salt > 1:
-            st = st.withColumn(
-                "__lane", F.pmod(F.xxhash64("d"), F.lit(chain_salt))
-            )
-            wl = Window.partitionBy("fp", "__lane").orderBy("d")
-            lane_pairs = (
-                st.withColumn("__prev", F.lag("d").over(wl))
-                .filter(F.col("__prev").isNotNull())
-                .select("fp", F.col("__prev").alias("a"), F.col("d").alias("b"))
-            )
-            mins = st.groupBy("fp", "__lane").agg(F.min("d").alias("__m"))
-            wm = Window.partitionBy("fp").orderBy("__m")
-            links = (
-                mins.withColumn("__prev", F.lag("__m").over(wm))
-                .filter(F.col("__prev").isNotNull())
-                .select("fp", F.col("__prev").alias("a"), F.col("__m").alias("b"))
-            )
-            chained = lane_pairs.unionByName(links)
-        else:
-            wspec = Window.partitionBy("fp").orderBy("d")
-            chained = (
-                st.withColumn("__prev", F.lag("d").over(wspec))
-                .filter(F.col("__prev").isNotNull())
-                .select("fp", F.col("__prev").alias("a"), F.col("d").alias("b"))
-            )
-        return chained.groupBy("a", "b").agg(F.count("*").alias("n_shared"))
-    fa = fps.select("fp", F.col(key).alias("a"))
-    fb = fps.select("fp", F.col(key).alias("b"))
     return (
-        fa.join(fb, "fp")
-        .filter(F.col("a") < F.col("b"))
+        _bucket_pairs(fps, ["fp"], key, mode, chain_salt)
         .groupBy("a", "b")
         .agg(F.count("*").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)

@@ -19,6 +19,13 @@ encoding rules:
   LineTo=2, ClosePath=7; coordinate deltas zigzag-encoded, cursor
   carried across rings within a feature
 
+The protobuf wire layer (varints, zigzag, field keys and the bounds-
+checked field reader) is ``functions/protobuf.py``, shared with the OSM
+PBF source; this module holds the MVT message layout. Decoding fails
+loud: truncated or over-long wire data, unknown wire types and unknown
+geometry commands raise ``MvtFormatError``, and so does encoding a
+feature id outside uint64.
+
 Subset notes (documented): one layer per tile, empty tag tables,
 polygon features only, rings emitted in input order (winding left to
 the producer, like the quantizer upstream). ClosePath implies the ring
@@ -32,39 +39,23 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..functions.protobuf import (
+    VARINT,
+    DecodeError,
+    fields,
+    key,
+    len_delim,
+    read_varint,
+    unzigzag,
+    varint,
+    zigzag,
+)
+
 POLYGON = 3
 
 
 class MvtFormatError(ValueError):
     """Malformed or out-of-subset MVT input."""
-
-
-def _varint(v: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _zigzag(v: int) -> int:
-    return (v << 1) ^ (v >> 63)
-
-
-def _unzigzag(v: int) -> int:
-    return (v >> 1) ^ -(v & 1)
-
-
-def _field(num: int, wire: int) -> bytes:
-    return _varint((num << 3) | wire)
-
-
-def _ld(num: int, payload: bytes) -> bytes:
-    return _field(num, 2) + _varint(len(payload)) + payload
 
 
 def _encode_geometry(rings) -> bytes:
@@ -78,17 +69,17 @@ def _encode_geometry(rings) -> bytes:
             r = r[:-1]  # ClosePath implies the closing segment
         if len(r) < 3:
             raise MvtFormatError("polygon ring needs >= 3 distinct points")
-        out += _varint((1 << 3) | 1)  # MoveTo, count 1
-        out += _varint(_zigzag(int(r[0, 0]) - cx))
-        out += _varint(_zigzag(int(r[0, 1]) - cy))
+        out += varint((1 << 3) | 1)  # MoveTo, count 1
+        out += varint(zigzag(int(r[0, 0]) - cx))
+        out += varint(zigzag(int(r[0, 1]) - cy))
         cx, cy = int(r[0, 0]), int(r[0, 1])
         n = len(r) - 1
-        out += _varint((n << 3) | 2)  # LineTo, count n
+        out += varint((n << 3) | 2)  # LineTo, count n
         for x, y in r[1:]:
-            out += _varint(_zigzag(int(x) - cx))
-            out += _varint(_zigzag(int(y) - cy))
+            out += varint(zigzag(int(x) - cx))
+            out += varint(zigzag(int(y) - cy))
             cx, cy = int(x), int(y)
-        out += _varint((1 << 3) | 7)  # ClosePath
+        out += varint((1 << 3) | 7)  # ClosePath
     return bytes(out)
 
 
@@ -96,62 +87,21 @@ def encode_tile(
     features, layer_name: str = "layer", extent: int = 4096,
 ) -> bytes:
     """``features``: iterable of (feature_id, rings) → one-layer MVT
-    tile bytes."""
+    tile bytes. A feature id is a uint64."""
     body = bytearray()
-    body += _field(15, 0) + _varint(2)  # version
-    body += _ld(1, layer_name.encode("utf-8"))
+    body += key(15, VARINT) + varint(2)  # version
+    body += len_delim(1, layer_name.encode("utf-8"))
     for fid, rings in features:
+        fid = int(fid)
+        if not 0 <= fid < 1 << 64:
+            raise MvtFormatError(f"feature id {fid} is not a uint64")
         feat = bytearray()
-        feat += _field(1, 0) + _varint(int(fid))
-        feat += _field(3, 0) + _varint(POLYGON)
-        feat += _ld(4, _encode_geometry(rings))
-        body += _ld(2, bytes(feat))
-    body += _field(5, 0) + _varint(extent)
-    return bytes(_ld(3, bytes(body)))
-
-
-def _read_varint(data: bytes, i: int) -> tuple[int, int]:
-    v = 0
-    shift = 0
-    while True:
-        if i >= len(data):
-            raise MvtFormatError("truncated varint")
-        b = data[i]
-        i += 1
-        v |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return v, i
-        shift += 7
-        if shift > 63:
-            raise MvtFormatError("varint too long")
-
-
-def _walk_fields(data: bytes):
-    i = 0
-    while i < len(data):
-        key, i = _read_varint(data, i)
-        num, wire = key >> 3, key & 7
-        if wire == 0:
-            v, i = _read_varint(data, i)
-            yield num, v
-        elif wire == 2:
-            ln, i = _read_varint(data, i)
-            if i + ln > len(data):
-                raise MvtFormatError("truncated length-delimited field")
-            yield num, data[i : i + ln]
-            i += ln
-        elif wire == 5:
-            if i + 4 > len(data):
-                raise MvtFormatError("truncated fixed32 field")
-            yield num, data[i : i + 4]
-            i += 4
-        elif wire == 1:
-            if i + 8 > len(data):
-                raise MvtFormatError("truncated fixed64 field")
-            yield num, data[i : i + 8]
-            i += 8
-        else:
-            raise MvtFormatError(f"unsupported wire type {wire}")
+        feat += key(1, VARINT) + varint(fid)
+        feat += key(3, VARINT) + varint(POLYGON)
+        feat += len_delim(4, _encode_geometry(rings))
+        body += len_delim(2, bytes(feat))
+    body += key(5, VARINT) + varint(extent)
+    return bytes(len_delim(3, bytes(body)))
 
 
 def _decode_geometry(data: bytes) -> list[np.ndarray]:
@@ -162,14 +112,14 @@ def _decode_geometry(data: bytes) -> list[np.ndarray]:
     cx = cy = 0
     i = 0
     while i < len(data):
-        cmd, i = _read_varint(data, i)
+        cmd, i = read_varint(data, i)
         cid, count = cmd & 7, cmd >> 3
         if cid in (1, 2):  # MoveTo / LineTo
             for _ in range(count):
-                dx, i = _read_varint(data, i)
-                dy, i = _read_varint(data, i)
-                cx += _unzigzag(dx)
-                cy += _unzigzag(dy)
+                dx, i = read_varint(data, i)
+                dy, i = read_varint(data, i)
+                cx += unzigzag(dx)
+                cy += unzigzag(dy)
                 if cid == 1 and cur:
                     rings.append(np.array(cur, np.int64))
                     cur = []
@@ -188,32 +138,35 @@ def _decode_geometry(data: bytes) -> list[np.ndarray]:
 
 def decode_tile(data: bytes) -> list[dict]:
     """MVT bytes → layers: {name, version, extent, features:
-    [(id, type, rings)]}."""
+    [(id, type, rings)]}. Malformed wire data raises ``MvtFormatError``."""
     layers = []
-    for num, val in _walk_fields(data):
-        if num != 3:
-            continue
-        layer = {"name": "", "version": 0, "extent": 4096, "features": []}
-        for lnum, lval in _walk_fields(val):
-            if lnum == 15:
-                layer["version"] = lval
-            elif lnum == 1:
-                layer["name"] = lval.decode("utf-8")
-            elif lnum == 5:
-                layer["extent"] = lval
-            elif lnum == 2:
-                fid = 0
-                ftype = 0
-                rings: list[np.ndarray] = []
-                for fnum, fval in _walk_fields(lval):
-                    if fnum == 1:
-                        fid = fval
-                    elif fnum == 3:
-                        ftype = fval
-                    elif fnum == 4:
-                        rings = _decode_geometry(fval)
-                layer["features"].append((fid, ftype, rings))
-        layers.append(layer)
+    try:
+        for num, _wt, val in fields(data):
+            if num != 3:
+                continue
+            layer = {"name": "", "version": 0, "extent": 4096, "features": []}
+            for lnum, _lwt, lval in fields(val):
+                if lnum == 15:
+                    layer["version"] = lval
+                elif lnum == 1:
+                    layer["name"] = bytes(lval).decode("utf-8")
+                elif lnum == 5:
+                    layer["extent"] = lval
+                elif lnum == 2:
+                    fid = 0
+                    ftype = 0
+                    rings: list[np.ndarray] = []
+                    for fnum, _fwt, fval in fields(lval):
+                        if fnum == 1:
+                            fid = fval
+                        elif fnum == 3:
+                            ftype = fval
+                        elif fnum == 4:
+                            rings = _decode_geometry(fval)
+                    layer["features"].append((fid, ftype, rings))
+            layers.append(layer)
+    except DecodeError as e:
+        raise MvtFormatError(str(e)) from e
     return layers
 
 

@@ -23,6 +23,12 @@ fileblock framing, zlib-compressed blobs, DenseNodes delta coding):
 * ``Info``: 1 version, 2 timestamp, 3 changeset, 4 uid, 5 user_sid,
   6 visible
 
+The protobuf wire layer is ``functions/protobuf.py`` (shared with the MVT
+tile sink); this module holds the PBF message layout and the framing. Every
+read is bounds-checked: a short read of a blob's header length, header or
+payload, and a field or varint cut short inside a message, raise
+``protobuf.DecodeError`` instead of decoding into wrong rows.
+
 Coordinates: ``deg = 1e-9 * (offset + granularity * stored)``; the decoder
 also surfaces the exact integer nanodegrees (``lon_nano``/``lat_nano``) so
 downstream parity checks never touch float formatting.
@@ -49,168 +55,40 @@ from __future__ import annotations
 import os
 import struct
 import zlib
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
-# ---------------------------------------------------------------------------
-# protobuf wire primitives
-# ---------------------------------------------------------------------------
-
-_WT_VARINT = 0
-_WT_I64 = 1
-_WT_LEN = 2
-_WT_I32 = 5
-
-
-def _varint(n: int) -> bytes:
-    """Unsigned LEB128 (values are masked to 64 bits like protobuf)."""
-    n &= (1 << 64) - 1
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _wrap64(n: int) -> int:
-    """Two's-complement wrap to int64 — protobuf sint64 semantics; delta
-    chains whose jumps exceed ±2^63 wrap on encode and unwrap on decode."""
-    return ((n + (1 << 63)) & ((1 << 64) - 1)) - (1 << 63)
-
-
-def _zigzag(n: int) -> int:
-    n = _wrap64(n)
-    return ((n << 1) ^ (n >> 63)) & ((1 << 64) - 1)
-
-
-def _unzigzag64(v: np.ndarray) -> np.ndarray:
-    """Vectorized zigzag decode of a uint64 array → int64."""
-    return ((v >> np.uint64(1)).astype(np.int64)) ^ -(v & np.uint64(1)).astype(
-        np.int64
-    )
-
-
-def _key(field: int, wt: int) -> bytes:
-    return _varint((field << 3) | wt)
-
-
-def _len_delim(field: int, payload: bytes) -> bytes:
-    return _key(field, _WT_LEN) + _varint(len(payload)) + payload
-
-
-def _packed(field: int, values, signed: bool = False, delta: bool = False) -> bytes:
-    """Packed repeated scalar field (the only repeated encoding we emit)."""
-    vals = [int(v) for v in values]
-    if delta:
-        prev = 0
-        deltas = []
-        for v in vals:
-            deltas.append(v - prev)
-            prev = v
-        vals = deltas
-    if signed:
-        vals = [_zigzag(v) for v in vals]
-    payload = b"".join(_varint(v) for v in vals)
-    return _len_delim(field, payload)
-
-
-def _read_varint(buf, pos: int) -> tuple[int, int]:
-    result = 0
-    shift = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result & ((1 << 64) - 1), pos
-        shift += 7
-
-
-def _fields(buf) -> Iterator[tuple[int, int, object]]:
-    """Iterate (field_no, wire_type, value) over one message.
-
-    LEN fields yield a memoryview slice; varints yield ints. I64/I32 yield
-    raw bytes (unused by this format but consumed for forward-compat).
-    """
-    view = memoryview(buf)
-    pos = 0
-    end = len(view)
-    while pos < end:
-        tag, pos = _read_varint(view, pos)
-        field, wt = tag >> 3, tag & 7
-        if wt == _WT_VARINT:
-            val, pos = _read_varint(view, pos)
-        elif wt == _WT_LEN:
-            n, pos = _read_varint(view, pos)
-            val = view[pos : pos + n]
-            pos += n
-        elif wt == _WT_I64:
-            val = view[pos : pos + 8]
-            pos += 8
-        elif wt == _WT_I32:
-            val = view[pos : pos + 4]
-            pos += 4
-        else:  # pragma: no cover - malformed input
-            raise ValueError(f"unsupported wire type {wt}")
-        yield field, wt, val
-
-
-def _decode_varints_py(data) -> list[int]:
-    out = []
-    view = memoryview(data)
-    pos, n = 0, len(view)
-    while pos < n:
-        v, pos = _read_varint(view, pos)
-        out.append(v)
-    return out
-
-
-def decode_packed_u64(data) -> np.ndarray:
-    """Vectorized packed-varint decode → uint64 array.
-
-    Groups bytes at continuation-bit boundaries and folds each group with
-    ``np.add.reduceat`` — no per-value Python loop. >64-bit overflow wraps,
-    matching protobuf 64-bit truncation. Tiny runs (way refs, tag key/val
-    ids — a handful of bytes) skip numpy entirely: array setup overhead
-    dominates below ~64 bytes (measured 1.7× overall decode speedup).
-    """
-    if len(data) <= 64:
-        return np.array(_decode_varints_py(data), np.uint64)
-    b = np.frombuffer(data, np.uint8)
-    if b.size == 0:
-        return np.empty(0, np.uint64)
-    is_end = b < 0x80
-    idx = np.arange(b.size, dtype=np.int64)
-    # group id for every byte: number of completed varints before it
-    grp = np.zeros(b.size, np.int64)
-    np.cumsum(is_end[:-1], out=grp[1:])
-    starts = np.empty(int(is_end.sum()), np.int64)
-    starts[0] = 0
-    np.copyto(starts[1:], idx[is_end][:-1] + 1)
-    shift = ((idx - starts[grp]) * 7).astype(np.uint64)
-    contrib = (b & np.uint8(0x7F)).astype(np.uint64) << shift
-    return np.add.reduceat(contrib, starts)
+from ..functions.protobuf import (
+    VARINT,
+    DecodeError,
+    decode_packed_u64,
+    decode_varints,
+    fields,
+    key,
+    len_delim,
+    packed,
+    read_field,
+    unzigzag,
+    unzigzag64,
+    varint,
+    wrap64,
+)
 
 
 def _packed_i64(data, signed: bool, delta: bool) -> np.ndarray:
     if len(data) <= 64:  # tiny-run fast path (see decode_packed_u64)
-        vals = _decode_varints_py(data)
+        vals = decode_varints(data)
         if signed:
-            vals = [(v >> 1) ^ -(v & 1) for v in vals]
+            vals = [unzigzag(v) for v in vals]
         else:
             vals = [v - (1 << 64) if v >= (1 << 63) else v for v in vals]
         if delta:
             acc = 0
-            vals = [acc := _wrap64(acc + v) for v in vals]
+            vals = [acc := wrap64(acc + v) for v in vals]
         return np.array(vals, np.int64)
     v = decode_packed_u64(data)
-    out = _unzigzag64(v) if signed else v.astype(np.int64)
+    out = unzigzag64(v) if signed else v.astype(np.int64)
     if delta:
         out = np.cumsum(out)
     return out
@@ -237,16 +115,16 @@ class _StringTable:
         return i
 
     def encode(self) -> bytes:
-        return b"".join(_len_delim(1, item) for item in self._items)
+        return b"".join(len_delim(1, item) for item in self._items)
 
 
 def _info(st: _StringTable, row) -> bytes:
-    out = _key(1, _WT_VARINT) + _varint(int(row["version"]))
-    out += _key(2, _WT_VARINT) + _varint(int(row["ts_sec"]))
-    out += _key(3, _WT_VARINT) + _varint(int(row["changeset"]))
-    out += _key(4, _WT_VARINT) + _varint(int(row.get("uid", 0)))
-    out += _key(5, _WT_VARINT) + _varint(st.add(str(row["user"])))
-    out += _key(6, _WT_VARINT) + _varint(0 if row.get("deleted", False) else 1)
+    out = key(1, VARINT) + varint(int(row["version"]))
+    out += key(2, VARINT) + varint(int(row["ts_sec"]))
+    out += key(3, VARINT) + varint(int(row["changeset"]))
+    out += key(4, VARINT) + varint(int(row.get("uid", 0)))
+    out += key(5, VARINT) + varint(st.add(str(row["user"])))
+    out += key(6, VARINT) + varint(0 if row.get("deleted", False) else 1)
     return out
 
 
@@ -271,31 +149,31 @@ def _dense_nodes(st: _StringTable, pdf: pd.DataFrame, granularity: int) -> bytes
             has_tags = True
         kv.append(0)
     info = (
-        _packed(1, pdf["version"].to_numpy(np.int64))
-        + _packed(2, pdf["ts_sec"].to_numpy(np.int64), signed=True, delta=True)
-        + _packed(3, pdf["changeset"].to_numpy(np.int64), signed=True, delta=True)
-        + _packed(4, pdf.get("uid", pd.Series(0, index=pdf.index)).to_numpy(np.int64),
+        packed(1, pdf["version"].to_numpy(np.int64))
+        + packed(2, pdf["ts_sec"].to_numpy(np.int64), signed=True, delta=True)
+        + packed(3, pdf["changeset"].to_numpy(np.int64), signed=True, delta=True)
+        + packed(4, pdf.get("uid", pd.Series(0, index=pdf.index)).to_numpy(np.int64),
                   signed=True, delta=True)
-        + _packed(5, [st.add(str(u)) for u in pdf["user"]], signed=True, delta=True)
-        + _packed(6, (~pdf["deleted"].to_numpy(bool)).astype(np.int64))
+        + packed(5, [st.add(str(u)) for u in pdf["user"]], signed=True, delta=True)
+        + packed(6, (~pdf["deleted"].to_numpy(bool)).astype(np.int64))
     )
-    dense = _packed(1, ids, signed=True, delta=True)
-    dense += _len_delim(5, info)
-    dense += _packed(8, lat, signed=True, delta=True)
-    dense += _packed(9, lon, signed=True, delta=True)
+    dense = packed(1, ids, signed=True, delta=True)
+    dense += len_delim(5, info)
+    dense += packed(8, lat, signed=True, delta=True)
+    dense += packed(9, lon, signed=True, delta=True)
     if has_tags:
-        dense += _packed(10, kv)
-    return _len_delim(2, dense)  # PrimitiveGroup.dense
+        dense += packed(10, kv)
+    return len_delim(2, dense)  # PrimitiveGroup.dense
 
 
 def _way_msg(st: _StringTable, row) -> bytes:
     keys, vals = _tag_ids(st, row["tags"])
-    out = _key(1, _WT_VARINT) + _varint(int(row["id"]))
+    out = key(1, VARINT) + varint(int(row["id"]))
     if keys:
-        out += _packed(2, keys) + _packed(3, vals)
-    out += _len_delim(4, _info(st, row))
-    out += _packed(8, row["refs"], signed=True, delta=True)
-    return _len_delim(3, out)  # PrimitiveGroup.ways
+        out += packed(2, keys) + packed(3, vals)
+    out += len_delim(4, _info(st, row))
+    out += packed(8, row["refs"], signed=True, delta=True)
+    return len_delim(3, out)  # PrimitiveGroup.ways
 
 
 _MEMBER_TYPE = {"n": 0, "w": 1, "r": 2, "node": 0, "way": 1, "relation": 2}
@@ -305,29 +183,29 @@ _MEMBER_TYPE_NAMES = np.array(["n", "w", "r"])
 def _relation_msg(st: _StringTable, row) -> bytes:
     keys, vals = _tag_ids(st, row["tags"])
     members = row["members"] or []
-    out = _key(1, _WT_VARINT) + _varint(int(row["id"]))
+    out = key(1, VARINT) + varint(int(row["id"]))
     if keys:
-        out += _packed(2, keys) + _packed(3, vals)
-    out += _len_delim(4, _info(st, row))
+        out += packed(2, keys) + packed(3, vals)
+    out += len_delim(4, _info(st, row))
     if len(members):
-        out += _packed(8, [st.add(m["role"]) for m in members])
-        out += _packed(9, [int(m["ref"]) for m in members], signed=True, delta=True)
-        out += _packed(10, [_MEMBER_TYPE[m["type"]] for m in members])
-    return _len_delim(4, out)  # PrimitiveGroup.relations
+        out += packed(8, [st.add(m["role"]) for m in members])
+        out += packed(9, [int(m["ref"]) for m in members], signed=True, delta=True)
+        out += packed(10, [_MEMBER_TYPE[m["type"]] for m in members])
+    return len_delim(4, out)  # PrimitiveGroup.relations
 
 
 def _blob(block: bytes, compress: bool) -> bytes:
     if compress:
-        payload = _key(2, _WT_VARINT) + _varint(len(block))
-        payload += _len_delim(3, zlib.compress(block))
+        payload = key(2, VARINT) + varint(len(block))
+        payload += len_delim(3, zlib.compress(block))
     else:
-        payload = _len_delim(1, block)
+        payload = len_delim(1, block)
     return payload
 
 
 def _fileblock(kind: str, block: bytes, compress: bool) -> bytes:
     blob = _blob(block, compress)
-    header = _len_delim(1, kind.encode()) + _key(3, _WT_VARINT) + _varint(len(blob))
+    header = len_delim(1, kind.encode()) + key(3, VARINT) + varint(len(blob))
     return struct.pack(">I", len(header)) + header + blob
 
 
@@ -363,17 +241,17 @@ def write_pbf(
     """
     n_blobs = 0
     with open(path, "wb") as f:
-        header = _len_delim(4, b"OsmSchema-V0.6") + _len_delim(4, b"DenseNodes")
-        header += _len_delim(16, b"sophox_spark")
+        header = len_delim(4, b"OsmSchema-V0.6") + len_delim(4, b"DenseNodes")
+        header += len_delim(16, b"sophox_spark")
         f.write(_fileblock("OSMHeader", header, compress))
 
         def emit(group: bytes) -> None:
             nonlocal n_blobs
             block = (
-                _len_delim(1, _st.encode())
-                + _len_delim(2, group)  # PrimitiveBlock.primitivegroup
-                + _key(17, _WT_VARINT) + _varint(granularity)
-                + _key(18, _WT_VARINT) + _varint(1000)
+                len_delim(1, _st.encode())
+                + len_delim(2, group)  # PrimitiveBlock.primitivegroup
+                + key(17, VARINT) + varint(granularity)
+                + key(18, VARINT) + varint(1000)
             )
             f.write(_fileblock("OSMData", block, compress))
             n_blobs += 1
@@ -415,44 +293,61 @@ def index_blob_spans(path: str) -> list[tuple[int, int, str]]:
 
     Reads ~30 bytes per blob and seeks past the data — the driver-side cost
     for a planet dump is ~50k seeks, no decompression. The spans are then
-    distributed so each task reads only its own byte ranges.
+    distributed so each task reads only its own byte ranges. A file cut
+    short inside any blob raises ``DecodeError``.
     """
     spans = []
     with open(path, "rb") as f:
-        while True:
-            raw = f.read(4)
-            if len(raw) < 4:
-                break
-            hlen = struct.unpack(">I", raw)[0]
-            header = f.read(hlen)
+        file_size = os.fstat(f.fileno()).st_size
+        while raw := f.read(4):
+            hlen = struct.unpack(">I", _full(raw, 4, "blob header length"))[0]
+            header = _full(f.read(hlen), hlen, "blob header")
             btype, dsize = "", 0
-            for field, _wt, val in _fields(header):
+            for field, _wt, val in fields(header):
                 if field == 1:
                     btype = bytes(val).decode()
                 elif field == 3:
                     dsize = val
-            spans.append((f.tell(), dsize, btype))
+            offset = f.tell()
+            if offset + dsize > file_size:
+                raise DecodeError(
+                    f"truncated blob: {file_size - offset} of {dsize} bytes"
+                )
+            spans.append((offset, dsize, btype))
             f.seek(dsize, 1)
     return spans
+
+
+def _full(data: bytes, n: int, what: str) -> bytes:
+    """``data`` when a read returned all ``n`` bytes asked for."""
+    if len(data) != n:
+        raise DecodeError(f"truncated {what}: {len(data)} of {n} bytes")
+    return data
+
+
+def _read_blob(f, offset: int, size: int) -> pd.DataFrame:
+    """The elements of the blob whose payload is at ``offset``."""
+    f.seek(offset)
+    return decode_block(_blob_block(_full(f.read(size), size, "blob")))
 
 
 def _blob_block(data: bytes) -> bytes:
     """Blob → uncompressed block bytes."""
     raw = None
-    for field, _wt, val in _fields(data):
+    for field, _wt, val in fields(data):
         if field == 1:
             raw = bytes(val)
         elif field == 3:
             raw = zlib.decompress(bytes(val))
     if raw is None:
-        raise ValueError("blob has neither raw nor zlib_data")
+        raise DecodeError("blob has neither raw nor zlib_data")
     return raw
 
 
 def _decode_strings(data) -> list[str]:
     return [
         bytes(val).decode("utf-8")
-        for field, _wt, val in _fields(data)
+        for field, _wt, val in fields(data)
         if field == 1
     ]
 
@@ -494,11 +389,11 @@ def _split_keys_vals(kv: np.ndarray, n: int, strings: list[str]) -> list[dict]:
 def _decode_dense(data, strings, gran, lat_off, lon_off, date_gran) -> pd.DataFrame:
     ids = lat = lon = kv = None
     info = {}
-    for field, _wt, val in _fields(data):
+    for field, _wt, val in fields(data):
         if field == 1:
             ids = _packed_i64(val, signed=True, delta=True)
         elif field == 5:
-            for f2, _w2, v2 in _fields(val):
+            for f2, _w2, v2 in fields(val):
                 info[f2] = v2
         elif field == 8:
             lat = _packed_i64(val, signed=True, delta=True)
@@ -547,12 +442,13 @@ def _decode_dense(data, strings, gran, lat_off, lon_off, date_gran) -> pd.DataFr
 def _decode_way_or_rel_batch(msgs, strings, kind: str, date_gran: int):
     """All way/relation messages of one group → one DataFrame.
 
-    BATCHED: the field walk is inlined (no generator frames), values
-    accumulate into COLUMN lists, and per-row costs move to one
-    vectorized pass each (timestamps via a single ``pd.to_datetime``
-    over int64 millis, no per-row ``pd.Timestamp``) — ~3× over the old
-    one-dict-per-message decode; wire semantics unchanged (readers stay
-    pinned to the hand-encoded spec literals in tests)."""
+    BATCHED: the field walk is a loop over ``read_field`` (no generator
+    frames), values accumulate into COLUMN lists, and per-row costs move
+    to one vectorized pass each (timestamps via a single
+    ``pd.to_datetime`` over int64 millis, no per-row ``pd.Timestamp``) —
+    ~3× over the old one-dict-per-message decode; wire semantics
+    unchanged (readers stay pinned to the hand-encoded spec literals in
+    tests)."""
     n = len(msgs)
     ids = np.zeros(n, np.int64)
     versions = np.zeros(n, np.int64)
@@ -564,28 +460,12 @@ def _decode_way_or_rel_batch(msgs, strings, kind: str, date_gran: int):
     refs_col = [None] * n
     members_col = [None] * n
     empty = np.empty(0, np.int64)
-    for i, data in enumerate(msgs):
-        view = memoryview(data)
+    for i, view in enumerate(msgs):
         pos, end = 0, len(view)
         keys = vals = empty
         refs = roles = memids = types = empty
         while pos < end:
-            tag, pos = _read_varint(view, pos)
-            field, wt = tag >> 3, tag & 7
-            if wt == _WT_VARINT:
-                val, pos = _read_varint(view, pos)
-            elif wt == _WT_LEN:
-                ln, pos = _read_varint(view, pos)
-                val = view[pos : pos + ln]
-                pos += ln
-            elif wt == _WT_I64:
-                pos += 8
-                continue
-            elif wt == _WT_I32:
-                pos += 4
-                continue
-            else:  # pragma: no cover - malformed input
-                raise ValueError(f"unsupported wire type {wt}")
+            field, _wt, val, pos = read_field(view, pos, end)
             if field == 1:
                 ids[i] = val
             elif field == 2:
@@ -593,20 +473,10 @@ def _decode_way_or_rel_batch(msgs, strings, kind: str, date_gran: int):
             elif field == 3:
                 vals = decode_packed_u64(val).astype(np.int64)
             elif field == 4:
-                # inlined Info walk (version/ts/changeset/user/visible)
-                iv, ip, iend = memoryview(val), 0, len(val)
+                # Info: version/ts/changeset/user/visible
+                ip, iend = 0, len(val)
                 while ip < iend:
-                    itag, ip = _read_varint(iv, ip)
-                    ifld, iwt = itag >> 3, itag & 7
-                    if iwt == _WT_VARINT:
-                        ival, ip = _read_varint(iv, ip)
-                    elif iwt == _WT_LEN:
-                        iln, ip = _read_varint(iv, ip)
-                        ip += iln
-                        continue
-                    else:  # pragma: no cover - not emitted in Info
-                        ip += 8 if iwt == _WT_I64 else 4
-                        continue
+                    ifld, _iwt, ival, ip = read_field(val, ip, iend)
                     if ifld == 1:
                         versions[i] = ival
                     elif ifld == 2:
@@ -661,7 +531,7 @@ def decode_block(block: bytes) -> pd.DataFrame:
     strings: list[str] = []
     groups = []
     gran, date_gran, lat_off, lon_off = 100, 1000, 0, 0
-    for field, _wt, val in _fields(block):
+    for field, _wt, val in fields(block):
         if field == 1:
             strings = _decode_strings(val)
         elif field == 2:
@@ -677,7 +547,7 @@ def decode_block(block: bytes) -> pd.DataFrame:
     frames = []
     for g in groups:
         way_msgs, rel_msgs = [], []
-        for field, _wt, val in _fields(g):
+        for field, _wt, val in fields(g):
             if field == 2:
                 frames.append(
                     _decode_dense(val, strings, gran, lat_off, lon_off, date_gran)
@@ -706,8 +576,7 @@ def decode_file(path: str) -> pd.DataFrame:
         for off, size, btype in index_blob_spans(path):
             if btype != "OSMData":
                 continue
-            f.seek(off)
-            frames.append(decode_block(_blob_block(f.read(size))))
+            frames.append(_read_blob(f, off, size))
     if not frames:
         return _no_elements()
     return pd.concat(frames, ignore_index=True)
@@ -756,8 +625,7 @@ def read_pbf(spark, path: str, blob_partitions: int | None = None):
             for p, group in pdf.groupby("path", sort=False):
                 with open(p, "rb") as f:
                     for off, size in zip(group["offset"], group["size"]):
-                        f.seek(int(off))
-                        out = decode_block(_blob_block(f.read(int(size))))
+                        out = _read_blob(f, int(off), int(size))
                         if len(out):
                             yield out
 

@@ -39,7 +39,7 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .wikipages import LANG_ORDER, parse_template
+from .wikipages import LANG_ORDER, _split_top_level, parse_template
 
 # languages the engine recognizes in title prefixes (subset of the
 # reference's 100+ entry list — consts.py:36-70)
@@ -167,7 +167,7 @@ def _extract_templates(text: str) -> list[tuple[str, dict]]:
         if depth != 0:
             break
         inner = text[i + 2 : j]
-        parts = _split_parts(inner)
+        parts = _split_top_level(inner)
         name = parts[0].strip()
         params: dict[str, str] = {}
         pos = 0
@@ -181,29 +181,6 @@ def _extract_templates(text: str) -> list[tuple[str, dict]]:
         out.append((name, params))
         i = j + 2
     return out
-
-
-def _split_parts(inner: str) -> list[str]:
-    parts, buf, depth, i = [], [], 0, 0
-    while i < len(inner):
-        two = inner[i : i + 2]
-        if two in ("{{", "[["):
-            depth += 1
-            buf.append(two)
-            i += 2
-        elif two in ("}}", "]]"):
-            depth -= 1
-            buf.append(two)
-            i += 2
-        elif inner[i] == "|" and depth == 0:
-            parts.append("".join(buf))
-            buf = []
-            i += 1
-        else:
-            buf.append(inner[i])
-            i += 1
-    parts.append("".join(buf))
-    return parts
 
 
 def _parse_tag_template(name: str, params: dict, messages: list) -> list:

@@ -105,10 +105,17 @@ def parse_template(text: str, names: tuple[str, ...]) -> dict | None:
     inner = _find_template(text, names)
     if inner is None:
         return None
-    parts = _split_top_level(inner)
+    return _template_params(_split_top_level(inner)[1:], lower=True)
+
+
+def _template_params(parts: list[str], lower: bool) -> dict[str, str]:
+    """Template parts after the name → {param: value}. A named part splits
+    at its first ``=`` at nesting depth 0 w.r.t. ``{{ }}`` and ``[[ ]]``
+    (both sides whitespace-stripped, the name lower-cased when ``lower``);
+    positional parts get keys ``1``, ``2``, …"""
     params: dict[str, str] = {}
     pos = 0
-    for part in parts[1:]:
+    for part in parts:
         eq = -1
         depth = 0
         for i in range(len(part)):
@@ -121,7 +128,8 @@ def parse_template(text: str, names: tuple[str, ...]) -> dict | None:
                 eq = i
                 break
         if eq >= 0:
-            params[part[:eq].strip().lower()] = part[eq + 1 :].strip()
+            name = part[:eq].strip()
+            params[name.lower() if lower else name] = part[eq + 1 :].strip()
         else:
             pos += 1
             params[str(pos)] = part.strip()
@@ -274,26 +282,7 @@ def extract_all_templates(text: str) -> list[tuple[str, dict]]:
         name = parts[0].strip()
         if not name:
             continue
-        params: dict[str, str] = {}
-        pos = 0
-        for part in parts[1:]:
-            eq = -1
-            depth = 0
-            for j in range(len(part)):
-                two = part[j : j + 2]
-                if two in ("{{", "[["):
-                    depth += 1
-                elif two in ("}}", "]]"):
-                    depth -= 1
-                elif part[j] == "=" and depth == 0:
-                    eq = j
-                    break
-            if eq >= 0:
-                params[part[:eq].strip()] = part[eq + 1 :].strip()
-            else:
-                pos += 1
-                params[str(pos)] = part.strip()
-        out.append((name, params))
+        out.append((name, _template_params(parts[1:], lower=False)))
     return out
 
 

@@ -1,6 +1,11 @@
 """Mapbox Vector Tile codec (operators/mvt.py) — encoder pinned to
 hand-assembled spec bytes, decoder the independent check."""
 
+import os
+import subprocess
+import sys
+from pathlib import Path
+
 import numpy as np
 import pytest
 
@@ -92,12 +97,35 @@ class TestFailLoud:
     def test_truncated_fixed32_field(self):
         # field 15, wire type 5 (fixed32) with only 2 payload bytes
         with pytest.raises(mvt.MvtFormatError, match="truncated fixed"):
-            list(mvt._walk_fields(bytes([0x7D, 0x01, 0x02])))
+            mvt.decode_tile(bytes([0x7D, 0x01, 0x02]))
 
     def test_truncated_fixed64_field(self):
         # field 15, wire type 1 (fixed64) with only 3 payload bytes
         with pytest.raises(mvt.MvtFormatError, match="truncated fixed"):
-            list(mvt._walk_fields(bytes([0x79, 0x01, 0x02, 0x03])))
+            mvt.decode_tile(bytes([0x79, 0x01, 0x02, 0x03]))
+
+    def test_feature_id_outside_uint64(self):
+        # a negative id once looped forever in the varint encoder, so the
+        # call runs in a child process that a timeout can stop
+        code = (
+            "import numpy as np\n"
+            "from sophox_spark.operators import mvt\n"
+            "ring = np.array([[0, 0], [10, 0], [10, 10]])\n"
+            "for fid in (-1, 2**64):\n"
+            "    try:\n"
+            "        mvt.encode_tile([(fid, [ring])])\n"
+            "    except mvt.MvtFormatError as e:\n"
+            "        print(e)\n"
+        )
+        root = str(Path(__file__).resolve().parents[1])
+        env = {**os.environ, "PYTHONPATH": root}
+        out = subprocess.run([sys.executable, "-c", code], env=env,
+                             capture_output=True, text=True, timeout=120)
+        assert out.returncode == 0, out.stderr
+        assert out.stdout.splitlines() == [
+            "feature id -1 is not a uint64",
+            f"feature id {2**64} is not a uint64",
+        ]
 
 
 def test_tile_blobs_and_roundtrip_spark(spark):

@@ -13,6 +13,7 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from sophox_spark.functions import protobuf
 from sophox_spark.sources import pbf
 
 
@@ -175,14 +176,14 @@ def test_vectorized_varint_roundtrip():
             np.array([0, 1, 127, 128, 2**64 - 1, 2**63], np.uint64),
         ]
     )
-    payload = b"".join(pbf._varint(int(v)) for v in vals)
-    np.testing.assert_array_equal(pbf.decode_packed_u64(payload), vals)
+    payload = b"".join(protobuf.varint(int(v)) for v in vals)
+    np.testing.assert_array_equal(protobuf.decode_packed_u64(payload), vals)
 
 
 def test_zigzag_roundtrip():
     vals = np.array([0, -1, 1, -2**62, 2**62, 12345, -98765], np.int64)
-    payload = b"".join(pbf._varint(pbf._zigzag(int(v))) for v in vals)
-    out = pbf._unzigzag64(pbf.decode_packed_u64(payload))
+    payload = b"".join(protobuf.varint(protobuf.zigzag(int(v))) for v in vals)
+    out = protobuf.unzigzag64(protobuf.decode_packed_u64(payload))
     np.testing.assert_array_equal(out, vals)
 
 
@@ -243,6 +244,72 @@ def test_roundtrip_uncompressed_and_granularity_one(tmp_path):
     pbf.write_pbf(path, nodes, granularity=1, compress=False)
     out = pbf.decode_file(path)
     _assert_nodes_roundtrip(nodes, out)
+
+
+# ---------------------------------------------------------------------------
+# truncated files fail loud
+# ---------------------------------------------------------------------------
+
+
+def _two_ways_pdf():
+    return pd.DataFrame(
+        {
+            "id": np.array([1, 2], np.int64),
+            "version": np.ones(2, np.int64),
+            "user": ["mapper"] * 2,
+            "ts": pd.to_datetime([1_600_000_000, 1_600_000_001], unit="s"),
+            "changeset": np.array([5, 6], np.int64),
+            "deleted": np.zeros(2, bool),
+            "refs": [[0, 1, 2, 3], [4, 5, 6, 7]],
+            "tags": [{"highway": "residential"}] * 2,
+        }
+    )
+
+
+@pytest.fixture
+def small_raw_pbf(tmp_path):
+    path = str(tmp_path / "small.osm.pbf")
+    pbf.write_pbf(path, _nodes_pdf(50), _two_ways_pdf(), granularity=1,
+                  compress=False)
+    return path
+
+
+@pytest.mark.parametrize("cut", [1, 3, 10, 40])
+def test_truncated_file_raises(small_raw_pbf, cut):
+    # a 10-byte cut once decoded way 2's refs [4, 5, 6, 7] as [4]; the
+    # others failed inside numpy with an IndexError
+    with open(small_raw_pbf, "rb") as f:
+        data = f.read()
+    with open(small_raw_pbf, "wb") as f:
+        f.write(data[:-cut])
+    with pytest.raises(protobuf.DecodeError, match="truncated blob"):
+        pbf.decode_file(small_raw_pbf)
+
+
+def test_every_prefix_raises_or_ends_at_a_blob(small_raw_pbf, tmp_path):
+    with open(small_raw_pbf, "rb") as f:
+        data = f.read()
+    spans = pbf.index_blob_spans(small_raw_pbf)
+    # each data blob's elements, decoded from the whole file
+    blob_rows = {
+        off + size: pbf.decode_block(pbf._blob_block(data[off:off + size]))
+        for off, size, btype in spans if btype == "OSMData"
+    }
+    boundaries = {0} | {off + size for off, size, _t in spans}
+    assert len(blob_rows) == 2 and max(boundaries) == len(data)
+    prefix = str(tmp_path / "prefix.osm.pbf")
+    for n in range(len(data) + 1):
+        with open(prefix, "wb") as f:
+            f.write(data[:n])
+        if n not in boundaries:
+            with pytest.raises(protobuf.DecodeError, match="truncated"):
+                pbf.decode_file(prefix)
+            continue
+        got = pbf.decode_file(prefix)
+        frames = [rows for end, rows in blob_rows.items() if end <= n]
+        want = (pd.concat(frames, ignore_index=True) if frames
+                else pbf._no_elements())
+        pd.testing.assert_frame_equal(got, want)
 
 
 # ---------------------------------------------------------------------------

@@ -357,25 +357,26 @@ class TestCodecProperties:
                     min_size=0, max_size=50))
     @settings(max_examples=300, deadline=None)
     def test_pbf_packed_varint_roundtrip(self, vals):
-        from sophox_spark.sources import pbf
+        from sophox_spark.functions import protobuf
 
-        payload = b"".join(pbf._varint(v) for v in vals)
-        got = pbf.decode_packed_u64(payload)
+        payload = b"".join(protobuf.varint(v) for v in vals)
+        got = protobuf.decode_packed_u64(payload)
         assert got.tolist() == [v & (2**64 - 1) for v in vals]
 
     @given(st.lists(st.integers(min_value=-(2**62), max_value=2**62),
                     min_size=1, max_size=40))
     @settings(max_examples=300, deadline=None)
     def test_pbf_signed_delta_roundtrip(self, vals):
+        from sophox_spark.functions import protobuf
         from sophox_spark.sources import pbf
 
         # encode as delta+zigzag the way the writer does, decode via the
         # reader's combined path (covers both the tiny and numpy branches)
-        payload = pbf._packed(1, vals, signed=True, delta=True)
+        payload = protobuf.packed(1, vals, signed=True, delta=True)
         # strip the field key + length prefix
         view = memoryview(payload)
-        _, pos = pbf._read_varint(view, 0)
-        n, pos = pbf._read_varint(view, pos)
+        _, pos = protobuf.read_varint(view, 0)
+        n, pos = protobuf.read_varint(view, pos)
         got = pbf._packed_i64(view[pos:pos + n], signed=True, delta=True)
         assert got.tolist() == vals
 
