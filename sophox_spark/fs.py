@@ -42,3 +42,22 @@ def stamps(spark: SparkSession, paths) -> tuple:
 
 def any_file_with_suffix(spark: SparkSession, path: str, suffix: str) -> bool:
     return any(n.endswith(suffix) for n in list_names(spark, path))
+
+
+def write_renamed(spark: SparkSession, tmp_path: str, path: str, data: bytes) -> None:
+    """Write ``data`` to ``tmp_path``, then rename it to ``path``.
+
+    Readers that skip ``_``-prefixed names see the file appear whole or
+    not at all when ``tmp_path`` is one. Hadoop's ``rename`` reports
+    failure by returning ``False``, so a failed rename raises ``OSError``
+    here (and the temp file is deleted)."""
+    fs, tmp = _fs_and_path(spark, tmp_path)
+    dst = spark._jvm.org.apache.hadoop.fs.Path(path)
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+    if not fs.rename(tmp, dst):
+        fs.delete(tmp, False)
+        raise OSError(f"rename {tmp_path} -> {path} failed")

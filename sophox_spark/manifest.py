@@ -16,23 +16,59 @@ and correctness under replay comes from idempotent MERGE semantics
 (ST3/ST4): re-applying a batch whose manifest row is missing is a
 no-op row-for-row. ``completed_units`` drives mid-job resume: finished
 cells/batches are skipped without recomputation.
+
+Append protocol: each row is its own parquet file, written by the
+driver with pyarrow (no Spark job) under a ``_``-prefixed temp name and
+then renamed to ``part-<commit_id>.parquet`` through the Hadoop
+FileSystem API (``fs.write_renamed``). Spark's file listing skips
+``_`` names, so a reader sees a row whole or not at all.
 """
 
 from __future__ import annotations
 
-import os
 import uuid
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 MANIFEST_SCHEMA = (
     "job string, unit string, seqid long, watermark timestamp, "
     "row_count long, commit_id string"
 )
+_UTC_MICROS = pa.timestamp("us", tz="UTC")
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("job", pa.string()),
+        ("unit", pa.string()),
+        ("seqid", pa.int64()),
+        ("watermark", _UTC_MICROS),
+        ("row_count", pa.int64()),
+        ("commit_id", pa.string()),
+    ]
+)
+
+
+def _watermark_array(spark: SparkSession, watermark) -> pa.Array:
+    """The watermark as Spark stores a ``timestamp``: a UTC instant in
+    microseconds. A naive value is read in the session time zone (DST
+    ambiguity resolved to standard time), the same conversion as
+    ``createDataFrame`` of a pandas frame under Arrow."""
+    if watermark is None:
+        return pa.nulls(1, _UTC_MICROS)
+    ts = pd.Timestamp(watermark)
+    if ts.tzinfo is None:
+        tz = spark.conf.get("spark.sql.session.timeZone")
+        ts = ts.tz_localize(tz, ambiguous=False)
+    return pa.Array.from_pandas(pd.Series([ts.tz_convert("UTC")]), type=_UTC_MICROS, safe=False)
 
 
 class Manifest:
+    """Append-only lineage table at ``path``: one parquet file per
+    recorded row, appended by temp file then rename (module docstring),
+    read back as one Spark DataFrame."""
+
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
@@ -49,23 +85,31 @@ class Manifest:
         return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
 
     def record(self, job: str, unit: str, seqid: int, watermark, row_count: int) -> str:
-        """Append one lineage row; returns the commit id."""
+        """Append one lineage row; returns the commit id. Runs no Spark
+        job: the driver writes the row's file and renames it into place."""
+        from . import fs
+
         commit_id = uuid.uuid4().hex
-        pdf = pd.DataFrame(
+        row = pa.Table.from_arrays(
             [
-                {
-                    "job": job,
-                    "unit": unit,
-                    "seqid": seqid,
-                    "watermark": pd.Timestamp(watermark) if watermark is not None else None,
-                    "row_count": row_count,
-                    "commit_id": commit_id,
-                }
-            ]
+                pa.array([job], pa.string()),
+                pa.array([unit], pa.string()),
+                pa.array([seqid], pa.int64()),
+                _watermark_array(self.spark, watermark),
+                pa.array([row_count], pa.int64()),
+                pa.array([commit_id], pa.string()),
+            ],
+            schema=_ARROW_SCHEMA,
         )
-        self.spark.createDataFrame(pdf, MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.path)
+        buf = pa.BufferOutputStream()
+        # the parquet types carry the schema; an Arrow schema copy only adds bytes
+        pq.write_table(row, buf, store_schema=False)
+        fs.write_renamed(
+            self.spark,
+            f"{self.path}/_tmp-{commit_id}",
+            f"{self.path}/part-{commit_id}.parquet",
+            buf.getvalue().to_pybytes(),
+        )
         return commit_id
 
     def completed_units(self, job: str) -> set[str]:

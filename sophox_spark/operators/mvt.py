@@ -24,7 +24,7 @@ checked field reader) is ``functions/protobuf.py``, shared with the OSM
 PBF source; this module holds the MVT message layout. Decoding fails
 loud: truncated or over-long wire data, unknown wire types and unknown
 geometry commands raise ``MvtFormatError``, and so does encoding a
-feature id outside uint64.
+feature id outside uint64 or a layer extent outside uint32.
 
 Subset notes (documented): one layer per tile, empty tag tables,
 polygon features only, rings emitted in input order (winding left to
@@ -87,7 +87,10 @@ def encode_tile(
     features, layer_name: str = "layer", extent: int = 4096,
 ) -> bytes:
     """``features``: iterable of (feature_id, rings) → one-layer MVT
-    tile bytes. A feature id is a uint64."""
+    tile bytes. A feature id is a uint64, the layer ``extent`` a uint32."""
+    extent = int(extent)
+    if not 0 <= extent < 1 << 32:
+        raise MvtFormatError(f"extent {extent} is not a uint32")
     body = bytearray()
     body += key(15, VARINT) + varint(2)  # version
     body += len_delim(1, layer_name.encode("utf-8"))

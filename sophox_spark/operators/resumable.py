@@ -14,7 +14,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..manifest import Manifest
 from .spatial_join import cell_expr, point_in_polygon_join
@@ -63,8 +63,12 @@ def resumable_pip_join(
             subset, polygons_df, res=res, lon_col=lon_col, lat_col=lat_col
         )
         path = os.path.join(out_dir, f"bucket={b}")
-        joined.write.mode("overwrite").parquet(path)
-        n = spark.read.parquet(path).count()
+        # count the rows as the write emits them: no read-back jobs
+        obs = Observation()
+        joined.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(path)
+        n = obs.get["n"]
         manifest.record(job, unit, seqid=b, watermark=None, row_count=n)
         fresh += 1
         if fail_after_units is not None and fresh >= fail_after_units:

@@ -369,16 +369,35 @@ def _no_elements() -> pd.DataFrame:
     return pd.DataFrame(columns=_ELEMENT_COLS).astype(_ELEMENT_DTYPES)
 
 
+def _check_sids(sids: np.ndarray, strings: list[str], what: str) -> None:
+    """Every string id of ``sids`` must index the block's string table."""
+    if sids.size and (sids.min() < 0 or sids.max() >= len(strings)):
+        bad = sids[(sids < 0) | (sids >= len(strings))][0]
+        raise DecodeError(
+            f"{what} string id {bad} outside a {len(strings)}-entry string table"
+        )
+
+
+def _same_length(what: str, **runs) -> None:
+    """Parallel packed runs of one message must have equal lengths."""
+    lens = {k: len(v) for k, v in runs.items()}
+    if len(set(lens.values())) > 1:
+        raise DecodeError(f"{what} runs differ in length: {lens}")
+
+
 def _split_keys_vals(kv: np.ndarray, n: int, strings: list[str]) -> list[dict]:
     """DenseNodes keys_vals: k,v pairs per node, 0-terminated runs."""
     if kv.size == 0:
         return [{} for _ in range(n)]
+    _check_sids(kv[kv != 0], strings, "keys_vals")  # 0 ends a node's run
     tags: list[dict] = []
     pos = 0
     arr = kv.tolist()
     for _ in range(n):
         cur = {}
         while pos < len(arr) and arr[pos] != 0:
+            if pos + 1 == len(arr):
+                raise DecodeError("keys_vals key without a value")
             cur[strings[arr[pos]]] = strings[arr[pos + 1]]
             pos += 2
         pos += 1  # skip terminator
@@ -387,7 +406,7 @@ def _split_keys_vals(kv: np.ndarray, n: int, strings: list[str]) -> list[dict]:
 
 
 def _decode_dense(data, strings, gran, lat_off, lon_off, date_gran) -> pd.DataFrame:
-    ids = lat = lon = kv = None
+    ids = lat = lon = kv = np.empty(0, np.int64)
     info = {}
     for field, _wt, val in fields(data):
         if field == 1:
@@ -401,6 +420,7 @@ def _decode_dense(data, strings, gran, lat_off, lon_off, date_gran) -> pd.DataFr
             lon = _packed_i64(val, signed=True, delta=True)
         elif field == 10:
             kv = decode_packed_u64(val).astype(np.int64)
+    _same_length("DenseNodes id/lat/lon", id=ids, lat=lat, lon=lon)
     n = len(ids)
     lat_nano = lat_off + gran * lat
     lon_nano = lon_off + gran * lon
@@ -414,8 +434,10 @@ def _decode_dense(data, strings, gran, lat_off, lon_off, date_gran) -> pd.DataFr
                  if 5 in info else np.zeros(n, np.int64))
     visible = (_packed_i64(info[6], signed=False, delta=False).astype(bool)
                if 6 in info else np.ones(n, bool))
-    tags = _split_keys_vals(kv if kv is not None else np.empty(0, np.int64),
-                            n, strings)
+    _same_length("DenseNodes id/DenseInfo", id=ids, version=versions, timestamp=ts,
+                 changeset=changesets, user_sid=user_sids, visible=visible)
+    _check_sids(user_sids, strings, "user_sid")
+    tags = _split_keys_vals(kv, n, strings)
     return pd.DataFrame(
         {
             "kind": "node",
@@ -464,46 +486,64 @@ def _decode_way_or_rel_batch(msgs, strings, kind: str, date_gran: int):
         pos, end = 0, len(view)
         keys = vals = empty
         refs = roles = memids = types = empty
-        while pos < end:
-            field, _wt, val, pos = read_field(view, pos, end)
-            if field == 1:
-                ids[i] = val
-            elif field == 2:
-                keys = decode_packed_u64(val).astype(np.int64)
-            elif field == 3:
-                vals = decode_packed_u64(val).astype(np.int64)
-            elif field == 4:
-                # Info: version/ts/changeset/user/visible
-                ip, iend = 0, len(val)
-                while ip < iend:
-                    ifld, _iwt, ival, ip = read_field(val, ip, iend)
-                    if ifld == 1:
-                        versions[i] = ival
-                    elif ifld == 2:
-                        ts_ms[i] = ival * date_gran
-                    elif ifld == 3:
-                        changesets[i] = ival
-                    elif ifld == 5:
-                        users[i] = strings[ival]
-                    elif ifld == 6:
-                        deleted[i] = not ival
-            elif field == 8 and kind == "way":
-                refs = _packed_i64(val, signed=True, delta=True)
-            elif field == 8:
-                roles = decode_packed_u64(val).astype(np.int64)
-            elif field == 9:
-                memids = _packed_i64(val, signed=True, delta=True)
-            elif field == 10:
-                types = decode_packed_u64(val).astype(np.int64)
-        tags_col[i] = {strings[int(k)]: strings[int(v)] for k, v in zip(keys, vals)}
-        if kind == "way":
-            refs_col[i] = refs.tolist()
-        else:
-            members_col[i] = [
-                {"type": str(_MEMBER_TYPE_NAMES[t]), "ref": int(m),
-                 "role": strings[int(r)]}
-                for r, m, t in zip(roles, memids, types)
-            ]
+        user_sid = None
+        try:
+            while pos < end:
+                field, _wt, val, pos = read_field(view, pos, end)
+                if field == 1:
+                    ids[i] = val
+                elif field == 2:
+                    keys = decode_packed_u64(val)
+                elif field == 3:
+                    vals = decode_packed_u64(val)
+                elif field == 4:
+                    # Info: version/ts/changeset/user/visible
+                    ip, iend = 0, len(val)
+                    while ip < iend:
+                        ifld, _iwt, ival, ip = read_field(val, ip, iend)
+                        if ifld == 1:
+                            versions[i] = ival
+                        elif ifld == 2:
+                            ts_ms[i] = ival * date_gran
+                        elif ifld == 3:
+                            changesets[i] = ival
+                        elif ifld == 5:
+                            user_sid = ival
+                            users[i] = strings[ival]
+                        elif ifld == 6:
+                            deleted[i] = not ival
+                elif field == 8 and kind == "way":
+                    refs = _packed_i64(val, signed=True, delta=True)
+                elif field == 8:
+                    roles = decode_packed_u64(val)
+                elif field == 9:
+                    memids = _packed_i64(val, signed=True, delta=True)
+                elif field == 10:
+                    types = decode_packed_u64(val)
+            if len(keys) != len(vals):
+                _same_length(kind, keys=keys, vals=vals)
+            # string ids stay uint64, so an id past the table raises
+            # IndexError here (never a negative index from the end)
+            tags_col[i] = {strings[int(k)]: strings[int(v)] for k, v in zip(keys, vals)}
+            if kind == "way":
+                refs_col[i] = refs.tolist()
+            else:
+                if not len(roles) == len(memids) == len(types):
+                    _same_length(kind, roles_sid=roles, memids=memids, types=types)
+                members_col[i] = [
+                    {"type": str(_MEMBER_TYPE_NAMES[t]), "ref": int(m),
+                     "role": strings[int(r)]}
+                    for r, m, t in zip(roles, memids, types)
+                ]
+        except IndexError:
+            if user_sid is not None:
+                _check_sids(np.array([user_sid], np.uint64), strings, "user_sid")
+            _check_sids(keys, strings, f"{kind} key")
+            _check_sids(vals, strings, f"{kind} val")
+            _check_sids(roles, strings, "relation role")
+            if types.size and types.max() >= len(_MEMBER_TYPE_NAMES):
+                raise DecodeError(f"relation member type outside 0-2: {types.tolist()}")
+            raise
     no_nano = pd.array([None] * n, dtype="Int64")
     no_deg = np.full(n, np.nan)
     return pd.DataFrame(

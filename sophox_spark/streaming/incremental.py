@@ -28,8 +28,7 @@ chains and cycles, updateRelLoc.py:62-88,159-161) lives here too.
 
 from __future__ import annotations
 
-import re
-
+import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
 from ..manifest import Manifest
@@ -65,7 +64,9 @@ def merge_upsert(
         inserts = inserts.filter(~F.col(delete_col)).drop(delete_col)
     if base_df is None:
         return inserts
-    kept = base_df.join(batch_df.select(*keys).distinct(), keys, "left_anti")
+    # a left-anti join drops the same base rows whether or not the
+    # batch repeats a key, so the keys need no distinct()
+    kept = base_df.join(batch_df.select(*keys), keys, "left_anti")
     return kept.unionByName(inserts.select(*base_df.columns))
 
 
@@ -82,12 +83,15 @@ class PartitionedSnapshotTable:
     ``commit_batch`` (and ``apply_change_batches``) merge by them.
     ``commit`` is a full replace: a version that rewrites every bucket.
 
-    Layout: ``{path}/v={N}/__bucket={b}/…`` — version N's directory
-    holds files ONLY for the buckets it touched. The manifest unit
-    string encodes the touched set (``v3@0,5,12``), so the current
-    snapshot (per-bucket latest version) is reconstructible from the
-    manifest alone; a data write without its manifest row is invisible
-    (write data → write manifest, same protocol as Manifest docstring).
+    Layout: ``{path}/v={N}/__bucket={b}/part-….parquet`` — version N's
+    directory holds ONLY the buckets it touched, and each of them is
+    ONE file: a write first distributes its rows by bucket, so later
+    base reads, snapshot reads and scans open one file per bucket.
+    The manifest unit string encodes the touched set (``v3@0,5,12``),
+    so the current snapshot (per-bucket latest version) is
+    reconstructible from the manifest alone; a data write without its
+    manifest row is invisible (write data → write manifest, same
+    protocol as Manifest docstring).
 
     SNAPSHOT COMPACTION: every ``compact_every`` delta commits the
     commit also writes a snapshot unit (``snap5@0:3,1:5,…`` — the full
@@ -99,6 +103,17 @@ class PartitionedSnapshotTable:
     (sophox_spark/fs.py), so the same code path serves file://, hdfs://
     and s3a:// table locations, and a read lists them on the driver
     only (no Spark listing job).
+
+    HELD SCHEMA: the handle keeps the table's data schema (set by each
+    write from what it wrote, inferred once by the first read of a
+    fresh handle, cleared by ``refresh()``) and hands it to
+    ``spark.read.schema``, so reads run no schema-inference job.
+
+    Jobs per warm commit: ``commit_batch`` of an in-memory batch runs
+    4 — one ``toArrow()`` of the batch's bucket column to name the
+    touched buckets, the batch-key broadcast of the merge, the shuffle
+    by bucket and the write. The manifest rows are appended without a
+    job, and ``read()`` runs none.
     """
 
     def __init__(
@@ -124,11 +139,13 @@ class PartitionedSnapshotTable:
         # handle on the same path sees new commits after refresh().
         self._bv_cache: dict[int, int] | None = None
         self._cv_cache: int | None = None
+        self._schema = None  # the data schema, see HELD SCHEMA
 
     def refresh(self) -> None:
-        """Drop the cached snapshot state (re-read manifest on next use)."""
+        """Drop the cached snapshot state and schema (re-read on next use)."""
         self._bv_cache = None
         self._cv_cache = None
+        self._schema = None
 
     def _bucket_col(self):
         return F.pmod(F.xxhash64(*self.keys), F.lit(self.n_buckets)).cast("int")
@@ -215,7 +232,11 @@ class PartitionedSnapshotTable:
         old = self.spark.conf.get(_LISTING_THRESHOLD, None)
         self.spark.conf.set(_LISTING_THRESHOLD, str(len(paths)))
         try:
-            return self.spark.read.parquet(*paths)
+            if self._schema is None:
+                df = self.spark.read.parquet(*paths)
+                self._schema = df.schema
+                return df
+            return self.spark.read.schema(self._schema).parquet(*paths)
         finally:
             if old is None:
                 self.spark.conf.unset(_LISTING_THRESHOLD)
@@ -241,9 +262,9 @@ class PartitionedSnapshotTable:
         """Delta commit: MERGE ``batch_df`` into only the buckets its
         keys hash to. Returns the new version number."""
         batch = batch_df.withColumn("__bucket", self._bucket_col())
-        touched = sorted(
-            r[0] for r in batch.select("__bucket").distinct().collect()
-        )
+        # one job, no shuffle: the bucket column (4 B a row) to the driver
+        buckets = batch.select("__bucket").toArrow().column(0).to_numpy()
+        touched = np.unique(buckets).tolist()
         base = self._read_buckets(set(touched))
         if base is not None:
             base = base.withColumn("__bucket", self._bucket_col())
@@ -253,13 +274,17 @@ class PartitionedSnapshotTable:
     def _write(self, merged: DataFrame, touched, seqid: int, watermark) -> int:
         """Write the next version (the ``touched`` buckets of ``merged``),
         then record it. The manifest row counts the rows as the write
-        emits them, so nothing is read back."""
+        emits them, so nothing is read back. Rows are distributed by
+        bucket first, so each bucket dir gets exactly one file."""
         v = (self.current_version() or 0) + 1
         obs = Observation()
-        merged.observe(obs, F.count(F.lit(1)).alias("n")).write.partitionBy(
-            "__bucket"
-        ).mode("errorifexists").parquet(f"{self.path}/v={v}")
+        merged.repartition("__bucket").observe(
+            obs, F.count(F.lit(1)).alias("n")
+        ).write.partitionBy("__bucket").mode("errorifexists").parquet(
+            f"{self.path}/v={v}"
+        )
         n = obs.get["n"]
+        self._schema = merged.drop("__bucket").schema
         unit = f"v{v}@{','.join(map(str, touched))}"
         self.manifest.record(f"table:{self.name}", unit, seqid, watermark, n)
         if self._bv_cache is not None:

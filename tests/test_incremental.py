@@ -444,3 +444,147 @@ class TestOneSnapshotTable:
         row = committed(4, lambda: table.commit(full, seqid=4))
         assert row.unit == "v4@0,1,2,3" and row.row_count == 2
         assert {r.id: r.val for r in table.read().collect()} == {7: 1, 8: 2}
+
+
+class TestCommitPath:
+    """A delta commit does only the work its data needs: one file per
+    touched bucket, a fixed small number of Spark jobs, no job to read
+    the snapshot or to append a manifest row."""
+
+    SCHEMA = "id long, val long"
+
+    @staticmethod
+    def _batch(spark, ids, val):
+        return spark.createDataFrame(
+            pd.DataFrame({"id": list(ids), "val": [val] * len(ids)}), TestCommitPath.SCHEMA
+        )
+
+    def _table(self, spark, tmp_path, **kw):
+        man = Manifest(spark, str(tmp_path / "manifest"))
+        return incremental.PartitionedSnapshotTable(
+            spark, str(tmp_path / "tbl"), man, "t", n_buckets=16, **kw
+        )
+
+    def test_one_file_per_bucket_dir(self, spark, tmp_path):
+        import glob
+        import os
+
+        table = self._table(spark, tmp_path)
+        for i in range(1, 8):
+            # 8 input partitions spread over every bucket
+            table.commit_batch(self._batch(spark, range(i * 37, i * 37 + 300), i), seqid=i)
+        table.commit(self._batch(spark, range(500), 0), seqid=8)
+        dirs = glob.glob(str(tmp_path / "tbl" / "v=*" / "__bucket=*"))
+        assert len(dirs) >= 8 * 16
+        files = {d: len(glob.glob(os.path.join(d, "*.parquet"))) for d in dirs}
+        assert set(files.values()) == {1}, files
+
+    def test_jobs_of_warm_commit_and_read(self, spark, tmp_path, jobs_of):
+        """A warm ``commit_batch`` of an in-memory batch runs at most 4
+        jobs (the bucket probe, the batch-key broadcast, the shuffle by
+        bucket and the write), and ``read()`` runs none."""
+        table = self._table(spark, tmp_path)
+        table.commit_batch(self._batch(spark, range(200), 0), seqid=1)
+        for i in range(2, 5):
+            v, jobs = jobs_of(lambda: table.commit_batch(
+                self._batch(spark, range(i * 10, i * 10 + 50), i), seqid=i))
+            assert v == i
+            assert len(jobs) <= 4, jobs
+            snap, jobs = jobs_of(table.read)
+            assert jobs == []
+        assert snap.count() == 200
+
+    def test_fresh_and_refreshed_handles_read_same_rows(self, spark, tmp_path):
+        table = self._table(spark, tmp_path, compact_every=3)
+        want = {}
+        for i in range(1, 6):
+            ids = range(i * 13, i * 13 + 40)
+            table.commit_batch(self._batch(spark, ids, i), seqid=i)
+            want.update({k: i for k in ids})
+        fresh = self._table(spark, tmp_path, compact_every=3)
+        refreshed = self._table(spark, tmp_path, compact_every=3)
+        refreshed.read()
+        refreshed.refresh()
+        for t in (table, fresh, refreshed):
+            assert {r.id: r.val for r in t.read().collect()} == want
+            assert t.read().schema == table.read().schema
+
+    def test_duplicate_keys_merge_like_deduplicated(self, spark, tmp_path):
+        schema = "id long, val long, __del boolean"
+        rows = [(2, 20, False), (5, 50, False)] + [(1, None, True)] * 3 + [(3, None, True)] * 2
+        results = []
+        for name, batch_rows in (("dups", rows), ("dedup", sorted(set(rows), key=str))):
+            t = incremental.PartitionedSnapshotTable(
+                spark, str(tmp_path / name), Manifest(spark, str(tmp_path / f"m_{name}")),
+                "t", n_buckets=4,
+            )
+            t.commit(self._batch(spark, range(8), 0), seqid=1)
+            batch = spark.createDataFrame(
+                pd.DataFrame(batch_rows, columns=["id", "val", "__del"]), schema
+            )
+            t.commit_batch(batch, seqid=2, delete_col="__del")
+            results.append(sorted((r.id, r.val) for r in t.read().collect()))
+        assert results[0] == results[1] == [
+            (0, 0), (2, 20), (4, 0), (5, 50), (6, 0), (7, 0)
+        ]
+
+
+class TestManifestAppend:
+    """``Manifest.record`` appends its row without a Spark job, and the
+    row reads back with the types and watermark instant that
+    ``createDataFrame(pdf, MANIFEST_SCHEMA)`` used to write."""
+
+    def test_round_trip_watermarks(self, spark, tmp_path, jobs_of):
+        import datetime as dt
+        import os
+
+        from sophox_spark.manifest import MANIFEST_SCHEMA
+
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        man = Manifest(spark, str(tmp_path / "manifest"))
+        plus2 = dt.timezone(dt.timedelta(hours=2))
+        ids, jobs = jobs_of(lambda: [
+            man.record("j", "none", 1, None, 10),
+            man.record("j", "naive", 3, pd.Timestamp("2024-03-10 12:34:56.789012"), 20),
+            man.record("j", "aware", 2, dt.datetime(2024, 3, 10, 12, 0, tzinfo=plus2), 30),
+            man.record("k", "other", 9, dt.datetime(2024, 1, 1), 0),
+        ])
+        assert jobs == []
+        assert sorted(os.listdir(man.path)) == sorted(
+            n for c in ids for n in (f"part-{c}.parquet", f".part-{c}.parquet.crc")
+        )
+        got = (
+            man.read()
+            .filter("job = 'j'")
+            .select(
+                "unit", "seqid", "row_count", "commit_id",
+                F.unix_micros("watermark").alias("us"),
+                F.date_format("watermark", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("text"),
+            )
+            .orderBy("seqid")
+            .collect()
+        )
+        assert [tuple(r) for r in got] == [
+            ("none", 1, 10, ids[0], None, None),
+            ("aware", 2, 30, ids[2], 1710064800000000, "2024-03-10 10:00:00.000000"),
+            ("naive", 3, 20, ids[1], 1710074096789012, "2024-03-10 12:34:56.789012"),
+        ]
+        assert man.last_seqid("j") == 3 and man.last_seqid("k") == 9
+        assert man.last_seqid("absent") is None
+        # the files themselves hold the manifest's types
+        inferred = spark.read.parquet(man.path).schema
+        declared = spark.createDataFrame([], MANIFEST_SCHEMA).schema
+        assert [(f.name, f.dataType) for f in inferred] == [
+            (f.name, f.dataType) for f in declared
+        ]
+
+    def test_naive_watermark_read_in_session_zone(self, spark, tmp_path):
+        key = "spark.sql.session.timeZone"
+        man = Manifest(spark, str(tmp_path / "manifest"))
+        spark.conf.set(key, "America/New_York")
+        try:
+            man.record("j", "u", 1, pd.Timestamp("2024-07-01 08:00:00"), 0)
+        finally:
+            spark.conf.set(key, "UTC")
+        (row,) = man.read().select(F.unix_micros("watermark").alias("us")).collect()
+        assert row.us == 1719835200000000  # 2024-07-01 12:00:00Z (EDT = UTC-4)

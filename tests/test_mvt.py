@@ -127,6 +127,15 @@ class TestFailLoud:
             f"feature id {2**64} is not a uint64",
         ]
 
+    def test_extent_outside_uint32(self):
+        for extent in (-1, 1 << 32):
+            with pytest.raises(mvt.MvtFormatError, match=f"extent {extent} is not a uint32"):
+                mvt.encode_tile([(7, [SQUARE])], "L", extent)
+        # the edges of the range still encode and decode
+        for extent in (0, (1 << 32) - 1):
+            (lyr,) = mvt.decode_tile(mvt.encode_tile([(7, [SQUARE])], "L", extent))
+            assert lyr["extent"] == extent
+
 
 def test_tile_blobs_and_roundtrip_spark(spark):
     import pandas as pd

@@ -130,6 +130,89 @@ def test_decode_hand_encoded_dense_block():
     assert np.allclose(out["lat"], [0.5, 0.5000001])
 
 
+def _ld(field: int, payload: bytes) -> bytes:
+    """One length-delimited field with a single-byte key and length."""
+    assert field < 16 and len(payload) < 128
+    return bytes([field << 3 | 2, len(payload)]) + payload
+
+
+def _dense_block(dense: bytes) -> bytes:
+    """A PrimitiveBlock holding one DenseNodes group and the 2-entry
+    string table ["", "a"]."""
+    st = _ld(1, b"") + _ld(1, b"a")
+    return _ld(1, st) + _ld(2, _ld(2, dense))
+
+
+class TestMessageLayerErrors:
+    """String ids past the table and parallel runs of unequal length
+    raise ``DecodeError`` instead of an IndexError, a pandas error or a
+    wrong row."""
+
+    IDS = _ld(1, b"\x14\x04")    # ids delta zz [20, 4] => [10, 12]
+    LATS = _ld(8, b"\x02\x02")   # lat delta zz [2, 2] => [1, 2]
+    LONS = _ld(9, b"\x02\x02")
+
+    def test_valid_block_decodes(self):
+        kv = _ld(10, b"\x01\x01\x00\x00")  # node 10: a=a
+        out = pbf.decode_block(_dense_block(self.IDS + self.LATS + self.LONS + kv))
+        assert out["tags"].tolist() == [{"a": "a"}, {}]
+
+    def test_keys_vals_past_string_table(self):
+        kv = _ld(10, b"\x09\x01\x00")
+        with pytest.raises(protobuf.DecodeError, match="keys_vals string id 9 outside a 2-entry"):
+            pbf.decode_block(_dense_block(self.IDS + self.LATS + self.LONS + kv))
+
+    def test_keys_vals_key_without_value(self):
+        kv = _ld(10, b"\x01")
+        with pytest.raises(protobuf.DecodeError, match="key without a value"):
+            pbf.decode_block(_dense_block(self.IDS + self.LATS + self.LONS + kv))
+
+    def test_ids_and_lats_differ_in_length(self):
+        one_lat = _ld(8, b"\x02")
+        with pytest.raises(protobuf.DecodeError, match="runs differ in length"):
+            pbf.decode_block(_dense_block(self.IDS + one_lat + self.LONS))
+
+    def test_negative_user_sid(self):
+        # user_sid delta zz [1, 0] => [-1, -1]: would name strings[-1]
+        info = _ld(5, b"\x01\x00")
+        with pytest.raises(protobuf.DecodeError, match="user_sid string id -1"):
+            pbf.decode_block(_dense_block(self.IDS + _ld(5, info) + self.LATS + self.LONS))
+
+    @pytest.mark.parametrize("field, what", [(2, "way key"), (3, "way val")])
+    def test_way_tag_past_string_table(self, field, what):
+        other = 3 if field == 2 else 2
+        way = b"\x08\x05" + _ld(field, b"\x07") + _ld(other, b"\x01")
+        st = _ld(1, b"") + _ld(1, b"a")
+        block = _ld(1, st) + _ld(2, _ld(3, way))
+        with pytest.raises(protobuf.DecodeError, match=f"{what} string id 7"):
+            pbf.decode_block(block)
+
+    def test_way_user_sid_past_string_table(self):
+        way = b"\x08\x05" + _ld(4, b"\x28\x02")  # Info user_sid 2
+        st = _ld(1, b"") + _ld(1, b"a")
+        with pytest.raises(protobuf.DecodeError, match="user_sid string id 2"):
+            pbf.decode_block(_ld(1, st) + _ld(2, _ld(3, way)))
+
+    def test_relation_role_past_string_table(self):
+        # one member: role 5, memid 1, type 0
+        rel = b"\x08\x05" + _ld(8, b"\x05") + _ld(9, b"\x02") + _ld(10, b"\x00")
+        st = _ld(1, b"") + _ld(1, b"a")
+        with pytest.raises(protobuf.DecodeError, match="relation role string id 5"):
+            pbf.decode_block(_ld(1, st) + _ld(2, _ld(4, rel)))
+
+    def test_relation_member_type_outside_enum(self):
+        rel = b"\x08\x05" + _ld(8, b"\x01") + _ld(9, b"\x02") + _ld(10, b"\x05")
+        st = _ld(1, b"") + _ld(1, b"a")
+        with pytest.raises(protobuf.DecodeError, match="member type outside 0-2"):
+            pbf.decode_block(_ld(1, st) + _ld(2, _ld(4, rel)))
+
+    def test_way_keys_and_vals_differ_in_length(self):
+        way = b"\x08\x05" + _ld(2, b"\x01\x01") + _ld(3, b"\x01")
+        st = _ld(1, b"") + _ld(1, b"a")
+        with pytest.raises(protobuf.DecodeError, match="way runs differ in length"):
+            pbf.decode_block(_ld(1, st) + _ld(2, _ld(3, way)))
+
+
 def test_decode_hand_encoded_file_framing(tmp_path):
     """Framing + zlib blob hand-built: header blob then one raw data blob."""
     header_block = b"\x22\x0eOsmSchema-V0.6"  # required_features

@@ -356,6 +356,37 @@ class TestResumable:
         want = {(r.pt_id, r.polygon_id) for r in direct.collect()}
         assert got == want
 
+    def test_row_counts_match_unit_files(self, spark, tmp_path, monkeypatch):
+        """Each unit's manifest row counts what its write emitted, and no
+        unit's output is read back to count it."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.readwriter import DataFrameReader
+
+        lon, lat = synth.random_points(600, salt=3)
+        pts = spark.createDataFrame(
+            pd.DataFrame({"pt_id": np.arange(600, dtype=np.int64), "lon": lon, "lat": lat}),
+            "pt_id long, lon double, lat double",
+        )
+        polygons = synth.admin_polygons_df(spark, 20)
+        out_dir = str(tmp_path / "out")
+        man = Manifest(spark, str(tmp_path / "manifest"))
+        reads = []
+        real_parquet = DataFrameReader.parquet
+
+        def spy(self, *paths, **kw):
+            reads.extend(paths)
+            return real_parquet(self, *paths, **kw)
+
+        monkeypatch.setattr(DataFrameReader, "parquet", spy)
+        result = resumable.resumable_pip_join(spark, pts, polygons, out_dir, man, bucket_bits=2)
+        assert reads == [os.path.join(out_dir, "bucket=*")]
+        rows = {r.unit: r.row_count for r in man.read().filter("job = 'pip'").collect()}
+        assert set(rows) == {f"cellpfx={b}" for b in range(4)}
+        for b in range(4):
+            files = glob.glob(os.path.join(out_dir, f"bucket={b}", "*.parquet"))
+            assert rows[f"cellpfx={b}"] == sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+        assert sum(rows.values()) == result.count() > 0
+
 
 if __name__ == "__main__":
     pytest.main([__file__, "-x", "-q"])
